@@ -31,8 +31,10 @@ def cached_cols(key: tuple, build: Callable[[], T]) -> T:
     full = (key, app)
     got = _CACHE.get(full)
     if got is None:
-        for stale in [k for k in _CACHE if k[1] != app]:
-            del _CACHE[stale]
+        # list() snapshots the keys in one step, and pop() tolerates a
+        # key another thread evicted first: pool threads share this dict
+        for stale in [k for k in list(_CACHE) if k[1] != app]:
+            _CACHE.pop(stale, None)
         got = build()
         _CACHE[full] = got
     return got

@@ -7,17 +7,22 @@ INSERT…SELECT sinks (S5) → ``write_partitioned``.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .session import tune
 
-#: Columns stored as parquet TIMESTAMP(NANOS) in the driver test data; Spark
-#: reads them as epoch-nano longs (spark.sql.legacy.parquet.nanosAsLong) and we
-#: convert to TimestampType via integer division (no float round-trip — epoch
-#: nanos exceed double's 2^53 integer range).
+#: Timestamp columns of the driver test tables.  Should a table arrive with
+#: them stored as parquet TIMESTAMP(NANOS), Spark reads epoch-nano longs
+#: (spark.sql.legacy.parquet.nanosAsLong) and ``load_table`` converts them
+#: to TimestampType via integer division (no float round-trip — epoch nanos
+#: exceed double's 2^53 integer range).  Every committed fixture stores
+#: microsecond timestamps without a UTC adjustment, which Spark reads as
+#: ``timestamp_ntz``, so the conversion never fires on them.
 NANO_TS_COLUMNS: dict[str, list[str]] = {
     "orders": ["o_orderdate"],
     "lineitem": ["l_shipdate"],
@@ -31,10 +36,94 @@ TEST_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: footer key under which Spark stores the exact schema of a frame it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def first_parquet(*paths: str) -> str | None:
+    """The first parquet data file under ``paths`` (a file path is its own
+    first file).  Hidden ``_``/``.`` entries are skipped, as Spark's file
+    index skips them (``_SUCCESS``, a table's ``_deletes``/``_patches``)."""
+    for root in paths:
+        if os.path.isfile(root):
+            return root
+        for dirpath, dirs, files in os.walk(root):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for f in sorted(files):
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    return os.path.join(dirpath, f)
+    return None
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Spark's ``DataType.asNullable``: a file source reads every field,
+    element and map value as nullable, whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _arrow_to_spark(at) -> T.DataType:
+    """Arrow → Spark type as this session's parquet reader maps it:
+    TIMESTAMP(NANOS) reads as epoch-nano ``bigint`` (nanosAsLong), and a
+    timestamp without a UTC adjustment as ``timestamp_ntz``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pa.types.is_timestamp(at) and at.unit == "ns":
+        return T.LongType()
+    return from_arrow_type(at, prefer_timestamp_ntz=True)
+
+
+def parquet_schema(path: str) -> T.StructType:
+    """Spark data schema of the parquet data at ``path`` (a file or a
+    directory), read from ONE footer — the first parquet file's — with no
+    Spark job and no cache.  Files this program writes carry Spark's exact
+    schema in the footer; other files map their arrow schema.  Partition
+    columns (``k=v`` directories) are not part of it: Spark's partition
+    discovery appends them to an explicit-schema read with the types an
+    inferred read gives.  A missing file or an unreadable footer raises."""
+    import pyarrow.parquet as pq
+
+    fp = first_parquet(path)
+    if fp is None:
+        raise FileNotFoundError(f"no parquet file under {path!r}")
+    meta = pq.read_metadata(fp)
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        schema = T.StructType.fromJson(json.loads(spark_json))
+    else:
+        schema = T.StructType([
+            T.StructField(f.name, _arrow_to_spark(f.type))
+            for f in meta.schema.to_arrow_schema()
+        ])
+    return _as_nullable(schema)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from the first
+    footer (:func:`parquet_schema`) instead of a schema-inference job.
+    Paths holding no parquet file at all are left to Spark, which raises
+    its own error."""
+    fp = first_parquet(*paths)
+    if fp is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(parquet_schema(fp)).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table with timestamps normalized to TimestampType."""
     tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for c in NANO_TS_COLUMNS.get(name, []):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))

@@ -67,13 +67,16 @@ def _assign(df: DataFrame, cent: DataFrame) -> DataFrame:
     already driver-side between rounds)."""
     import numpy as np
 
+    out_schema = "vec_id long, q array<long>, cl int, d long"
     rows = sorted(cent.collect(), key=lambda r: r["cl"])
+    if not rows:
+        # empty corpus → no seed centroids: nothing can be assigned
+        return df.sparkSession.createDataFrame([], out_schema)
     cls_arr_src = [int(r["cl"]) for r in rows]
     C = np.stack([np.asarray(r["cq"], dtype=np.int64) for r in rows])
     dims = C.shape[1]
     cmax = int(np.abs(C).max(initial=0))
     c2 = np.einsum("ij,ij->i", C, C)
-    out_schema = "vec_id long, q array<long>, cl int, d long"
 
     def fn(batches):
         import numpy as np

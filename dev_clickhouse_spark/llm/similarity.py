@@ -686,13 +686,16 @@ def ivf_build(
         sorted by cid, preserving the lower-cid tie-break."""
         import numpy as np
 
-        cent_rows = sorted(cent_rows, key=lambda r: int(r[0]))
-        cids_src = [int(r[0]) for r in cent_rows]
-        C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
         schema = (
             "id long, cid int, cv array<double>" if keep_cv
             else "id long, cid int"
         )
+        if not cent_rows:
+            # empty corpus → no seed centroids: nothing can be assigned
+            return points.sparkSession.createDataFrame([], schema)
+        cent_rows = sorted(cent_rows, key=lambda r: int(r[0]))
+        cids_src = [int(r[0]) for r in cent_rows]
+        C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
 
         def fn(batches):
             import numpy as np

@@ -50,6 +50,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..io import parquet_schema, read_parquet
 from .warehouse import Warehouse
 
 #: tokenizer shared by index build and query: lowercase, split on
@@ -137,7 +138,7 @@ class SkipIndex:
 
     def _build_member(self, member: str) -> None:
         mpath = os.path.join(self.wh.path(self.table), member)
-        df = self.wh.spark.read.parquet(mpath)
+        df = read_parquet(self.wh.spark, mpath)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in self.minmax_cols:
             aggs += [
@@ -305,7 +306,9 @@ class SkipIndex:
         parts = []
         for member, files in surv.items():
             mpath = os.path.join(self.wh.path(self.table), member)
-            reader = spark.read.option("basePath", mpath)
+            reader = spark.read.option("basePath", mpath).schema(
+                parquet_schema(mpath)
+            )
             if files == ["*"]:
                 part = reader.parquet(mpath)
             else:
@@ -326,7 +329,8 @@ class SkipIndex:
             for p in parts[1:]:
                 df = df.unionByName(p, allowMissingColumns=True)
             if dv_files:
-                dv = spark.read.parquet(
+                dv = read_parquet(
+                    spark,
                     *[
                         os.path.join(self.wh._dv_dir(self.table), f)
                         for f in dv_files

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io import first_parquet, parquet_schema, read_parquet
 from ..schemas import BRONZE_SCHEMAS, CORPUS_SCHEMAS, GOLD_SCHEMAS
 
 
@@ -121,18 +122,7 @@ class Warehouse:
         #: mtime-keyed cache of parsed schema overrides — read()/read_window()
         #: consult the override several times per call and run ~30×/tick
         self._override_cache: dict[str, tuple[float, T.StructType]] = {}
-        self._footer_cols_cache: dict[str, tuple[float, set]] = {}
-        self._footer_types_cache: dict[str, tuple[float, dict]] = {}
         self._json_meta_cache: dict[str, tuple] = {}
-        #: inferred-schema cache for plain parquet dirs, keyed by path →
-        #: (dir mtime_ns, schema).  Schema inference is the expensive part
-        #: of ``spark.read.parquet`` (r14 measured 185 ms inferred vs 49 ms
-        #: with an explicit schema per read; a gold refresh issues ~27
-        #: reads).  Every Spark write to a dir touches files in its root
-        #: (_SUCCESS, new part/member/batch dirs), bumping the root mtime,
-        #: so the mtime key invalidates across Warehouse instances AND
-        #: processes — stale entries cannot serve a post-write read.
-        self._inferred_schema_cache: dict[str, tuple[tuple, T.StructType]] = {}
 
     def _sort_path(self, table: str) -> str:
         return os.path.join(self.root, "_schemas", table + ".sort.json")
@@ -542,22 +532,6 @@ class Warehouse:
             json.dump(cols, fh, indent=1)
         os.replace(tmp, p)
 
-    def _parquet_column_names(self, fpath: str) -> set:
-        """Footer column set of one parquet file, cached by (path, mtime) —
-        O(1) metadata read, never a data scan."""
-        try:
-            mtime = os.path.getmtime(fpath)
-        except OSError:
-            return set()
-        hit = self._footer_cols_cache.get(fpath)
-        if hit is not None and hit[0] == mtime:
-            return hit[1]
-        import pyarrow.parquet as pq
-
-        cols = set(pq.read_schema(fpath).names)
-        self._footer_cols_cache[fpath] = (mtime, cols)
-        return cols
-
     @staticmethod
     def _member_is_flat(p: str) -> bool:
         """True when the member dir holds no partition subdirs (k=v)."""
@@ -569,40 +543,6 @@ class Warehouse:
         except OSError:
             return False
         return True
-
-    def _first_parquet(self, root: str) -> str | None:
-        """First parquet file under ``root`` (a member is ONE write
-        generation, so one footer answers type/column questions for the
-        member — the same O(1) fast path as ``_computed_cols_lacking``)."""
-        for dirpath, _dirs, files in os.walk(root):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    return os.path.join(dirpath, f)
-        return None
-
-    def _parquet_field_types(self, fpath: str) -> dict:
-        """Footer column → Spark DataType of one parquet file, cached by
-        (path, mtime) — O(1) metadata read, never a data scan.  Columns
-        whose arrow type has no Spark mapping are omitted (read as
-        declared)."""
-        try:
-            mtime = os.path.getmtime(fpath)
-        except OSError:
-            return {}
-        hit = self._footer_types_cache.get(fpath)
-        if hit is not None and hit[0] == mtime:
-            return hit[1]
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_type
-
-        out: dict = {}
-        for fld in pq.read_schema(fpath):
-            try:
-                out[fld.name] = from_arrow_type(fld.type)
-            except Exception:
-                pass
-        self._footer_types_cache[fpath] = (mtime, out)
-        return out
 
     def _computed_cols_lacking(
         self, root: str, names: list, first_file_only: bool = False
@@ -625,8 +565,8 @@ class Warehouse:
                 break
             for f in sorted(files):
                 if f.endswith(".parquet"):
-                    lacking -= self._parquet_column_names(
-                        os.path.join(dirpath, f)
+                    lacking -= set(
+                        parquet_schema(os.path.join(dirpath, f)).names
                     )
                     if first_file_only:
                         return lacking
@@ -1048,9 +988,7 @@ class Warehouse:
                 for dirpath, _dirs, files in os.walk(root):
                     for f in files:
                         if f.endswith(".parquet") and name not in (
-                            self._parquet_column_names(
-                                os.path.join(dirpath, f)
-                            )
+                            parquet_schema(os.path.join(dirpath, f)).names
                         ):
                             lacking.append(
                                 os.path.abspath(os.path.join(dirpath, f))
@@ -1239,41 +1177,6 @@ class Warehouse:
             )
         return schema
 
-    def _read_parquet_inferred(self, path: str) -> DataFrame:
-        """``spark.read.parquet`` with the inferred schema memoized per
-        (path, dir mtime): repeat reads of an unchanged dir skip Spark's
-        schema-inference pass (the dominant driver-side cost of a read —
-        see ``_inferred_schema_cache``).  Semantics identical: the schema
-        WAS inferred from this exact dir state.  The key pairs the dir
-        mtime (catches new/removed entries: part files, member/batch dirs)
-        with the _SUCCESS marker's mtime (every Spark write job rewrites
-        it, catching appends that only add files inside existing partition
-        subdirs)."""
-        sch = self._inferred_schema(path)
-        if sch is not None:
-            return self.spark.read.schema(sch).parquet(path)
-        return self.spark.read.parquet(path)
-
-    def _inferred_schema(self, path: str) -> T.StructType | None:
-        """The memoized inferred schema of ``path`` (see
-        ``_read_parquet_inferred``); None when the dir is unstatable.  A
-        miss pays one real inference; hits are a pair of stats."""
-        try:
-            mt = os.stat(path).st_mtime_ns
-            try:
-                success = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
-            except OSError:
-                success = 0
-            key = (mt, success)
-        except OSError:
-            return None
-        hit = self._inferred_schema_cache.get(path)
-        if hit is not None and hit[0] == key:
-            return hit[1]
-        sch = self.spark.read.parquet(path).schema
-        self._inferred_schema_cache[path] = (key, sch)
-        return sch
-
     def read(self, table: str) -> DataFrame:
         """Read a table; a missing table reads as empty with its declared
         schema, so every pipeline is total on a fresh warehouse.  The
@@ -1293,10 +1196,10 @@ class Warehouse:
             )
         override = self.schema_override(table)
         if override is None:
-            df = self._read_parquet_inferred(self.path(table))
+            df = read_parquet(self.spark, self.path(table))
         else:
             # post-ALTER the directory mixes pre- and post-migration files;
-            # an inferred read would adopt ONE file's schema and could hide
+            # a footer-schema read would adopt ONE file's schema and hide
             # the added column in the others.  Reading with the declared
             # schema is authoritative and free: missing columns surface as
             # NULLs, widened types use the parquet reader's type promotion.
@@ -1395,8 +1298,8 @@ class Warehouse:
         }
         live = [
             m for m in members
-            # zero-row member (empty-batch append / bootstrap): no files
-            # to infer a schema from, and nothing to scan
+            # zero-row member (empty-batch append / bootstrap): no footer
+            # to read a schema from, and nothing to scan
             if self._count_parquet(os.path.join(self.path(table), m)) > 0
         ]
         # FUSED member scan (r14, VERDICT r13 #2): when no per-member
@@ -1417,32 +1320,10 @@ class Warehouse:
             # partition discovery — a multi-path scan raises
             # CONFLICTING_DIRECTORY_STRUCTURES without a single basePath,
             # and the table root is not one (member names are not k=v)
-            flat = all(self._member_is_flat(p) for p in paths)
-            fps = (
-                [self._first_parquet(p) for p in paths] if flat else [None]
-            )
-            if all(fp is not None for fp in fps):
-                names = [self._parquet_column_names(fp) for fp in fps]
-                sigs = [
-                    sorted(
-                        self._parquet_field_types(fp).items(),
-                        key=lambda kv: kv[0],
-                    )
-                    for fp in fps
-                ]
-                uniform = (
-                    all(n == names[0] for n in names)
-                    and all(len(s) == len(names[0]) for s in sigs)
-                    and all(s == sigs[0] for s in sigs)
-                )
-                if uniform:
-                    first = self._inferred_schema(paths[0])
-                    if first is not None:
-                        sch = T.StructType([
-                            T.StructField(f.name, f.dataType, True)
-                            for f in first.fields
-                        ])
-                        fused = self.spark.read.schema(sch).parquet(*paths)
+            if all(self._member_is_flat(p) for p in paths):
+                schemas = [parquet_schema(p) for p in paths]
+                if all(sch == schemas[0] for sch in schemas):
+                    fused = self.spark.read.schema(schemas[0]).parquet(*paths)
         dfs = []
         if fused is not None:
             if tag:
@@ -1458,8 +1339,7 @@ class Warehouse:
             read_schema = legacy_schema
             member_casts: dict = {}
             if check_casts:
-                fp = self._first_parquet(p)
-                ftypes = self._parquet_field_types(fp) if fp else {}
+                ftypes = {f.name: f.dataType for f in parquet_schema(p).fields}
                 for fld in legacy_schema.fields:
                     ft = ftypes.get(fld.name)
                     if ft is not None and (
@@ -1475,7 +1355,7 @@ class Warehouse:
                         for f in legacy_schema.fields
                     ])
             if override is None:
-                df = self._read_parquet_inferred(p)
+                df = read_parquet(self.spark, p)
             elif read_schema is not legacy_schema:
                 df = self.spark.read.schema(read_schema).parquet(p)
             else:
@@ -1549,23 +1429,21 @@ class Warehouse:
             # originals live outside the scan.
             # patch dirs are immutable once renamed into place and normally
             # share one schema (each patch writer selects the full tagged
-            # row), so the first dir's memoized inferred schema serves the
-            # multi-path read without a per-read inference pass (r14) —
-            # guarded by the same footer-uniformity check as the fused
-            # member scan (an ALTER between patches changes patch columns)
-            ppaths = [
-                os.path.join(self._patch_dir(table), f) for f in patch_files
+            # row), so one multi-path scan reads them all.  An ALTER between
+            # patches changes the patch columns or their types: then each
+            # schema group is read with its own footer schema and the
+            # groups are unioned by name (types widen in the union).
+            by_schema: dict = {}
+            for f in patch_files:
+                pp = os.path.join(self._patch_dir(table), f)
+                by_schema.setdefault(parquet_schema(pp), []).append(pp)
+            pats = [
+                self.spark.read.schema(sch).parquet(*pps)
+                for sch, pps in by_schema.items()
             ]
-            psch = None
-            pfps = [self._first_parquet(p) for p in ppaths]
-            if all(fp is not None for fp in pfps):
-                pnames = [self._parquet_column_names(fp) for fp in pfps]
-                if all(n == pnames[0] for n in pnames):
-                    psch = self._inferred_schema(ppaths[0])
-            if psch is not None:
-                pat = self.spark.read.schema(psch).parquet(*ppaths)
-            else:
-                pat = self.spark.read.parquet(*ppaths)
+            pat = pats[0]
+            for more in pats[1:]:
+                pat = pat.unionByName(more, allowMissingColumns=True)
             in_scan = F.lit(False)
             for m in members:
                 # scheme-agnostic ('file:/x' vs 'file:///x'): match on the
@@ -2233,8 +2111,8 @@ class Warehouse:
 
         # -- plain layout: staging + rename swap (single-writer) -----------
         # go through read(): on a migrated table it reads with the declared
-        # schema — a raw inferred read over mixed pre/post-ALTER files could
-        # adopt an old file's schema and silently drop the added column
+        # schema — a raw footer-schema read over mixed pre/post-ALTER files
+        # could adopt an old file's schema and silently drop the added column
         df = self.read(table)
         if ttl_cond is not None:
             df = df.filter(ttl_cond)
@@ -2395,10 +2273,12 @@ class Warehouse:
         if casts:
             stale: set = set()
             for m in live:
-                fp = self._first_parquet(os.path.join(self.path(table), m))
+                fp = first_parquet(os.path.join(self.path(table), m))
                 if fp is None:
                     continue
-                ftypes = self._parquet_field_types(fp)
+                ftypes = {
+                    f.name: f.dataType for f in parquet_schema(fp).fields
+                }
                 for c, ddl in casts.items():
                     if c in ftypes and ftypes[c].simpleString() != ddl:
                         stale.add(c)
@@ -2741,7 +2621,7 @@ class Warehouse:
             for name in names:
                 src = os.path.join(d, name)
                 old_paths.append(src)
-                df = self.spark.read.parquet(src)
+                df = read_parquet(self.spark, src)
                 col = F.col("__dv_file")
                 for old_p, new_p in pairs:
                     col = F.regexp_replace(col, re.escape(old_p), new_p)
@@ -3173,7 +3053,7 @@ class Warehouse:
                 # remap from the OWNING backup's source path — chain
                 # links may have been taken from different table roots
                 old_root = owner["source_table_path"]
-                df_ = self.spark.read.parquet(sp)
+                df_ = read_parquet(self.spark, sp)
                 remapped = df_.withColumn(
                     "__dv_file",
                     F.regexp_replace(

@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
+
 _MONITOR_TABLES = {
     "lag_metrics": (
         "pipeline_id string, observed_at string, max_event_ts string, "
@@ -72,7 +74,7 @@ class Monitor:
         p = os.path.join(self.root, table)
         if not os.path.exists(p):
             return self.spark.createDataFrame([], _MONITOR_TABLES[table])
-        return self.spark.read.parquet(p)
+        return read_parquet(self.spark, p)
 
     # -- observations ------------------------------------------------------
 

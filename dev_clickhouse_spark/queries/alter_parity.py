@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.ch_compat import round_half_up as rnd
-from ..io import load_table
+from ..io import first_parquet, load_table
 from ..plans.warehouse import Warehouse
 from .registry import register
 
@@ -235,7 +235,7 @@ def materialize_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh.append(t, ev.filter(F.col("event_id") % 2 == 1), batch_id=1)
     wh.materialize_column(t, "value_cents")
     for m in wh.load_manifest(t)["members"]:
-        fp = wh._first_parquet(os.path.join(wh.path(t), m))
+        fp = first_parquet(os.path.join(wh.path(t), m))
         if fp is not None and "value_cents" not in pq.read_schema(fp).names:
             raise AssertionError(
                 f"member {m} footer lacks value_cents after MATERIALIZE"

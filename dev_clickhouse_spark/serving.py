@@ -35,6 +35,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from .io import read_parquet
+
 #: statement keywords that may START a served query
 _QUERY_STARTERS = ("select", "with", "values", "table", "explain")
 
@@ -286,13 +288,13 @@ class SqlServingEndpoint:
         for name, src in self._views.items():
             # a (path, StructType) value reads with the DECLARED schema —
             # required for tables with an applied schema migration, where
-            # an inferred read over mixed pre/post-ALTER files could adopt
-            # one file's footer and hide the added column
+            # a footer-schema read over mixed pre/post-ALTER files would
+            # adopt one file's footer and hide the added column
             if isinstance(src, tuple):
                 path, schema = src
                 df = sess.read.schema(schema).parquet(path)
             else:
-                df = sess.read.parquet(src)
+                df = read_parquet(sess, src)
             table_policies = self._policies.get(name)
             if role is not None and table_policies is not None:
                 conds = table_policies.get(role, [])

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dev_clickhouse_spark.io import first_parquet
 from dev_clickhouse_spark.plans.warehouse import Warehouse
 from dev_clickhouse_spark.quality import SchemaMigrator
 
@@ -99,7 +100,7 @@ def test_compact_materializes_cast_and_retires_chain(spark, tmp_path):
     wh.compact("alt_events")
     assert wh.column_casts("alt_events") == {}  # retired: footers agree
     man = wh.load_manifest("alt_events")
-    fp = wh._first_parquet(
+    fp = first_parquet(
         os.path.join(wh.path("alt_events"), man["members"][0])
     )
     assert str(pq.read_schema(fp).field("user_id").type) in (
@@ -240,7 +241,7 @@ def test_materialize_column_targets_lacking_members(spark, tmp_path):
     # the post-ALTER member is untouched; the pre-ALTER one was rewritten
     assert len(set(after) & before) == 1
     for m in after:
-        fp = wh._first_parquet(os.path.join(wh.path("alt_events"), m))
+        fp = first_parquet(os.path.join(wh.path("alt_events"), m))
         assert "value_cents" in pq.read_schema(fp).names
     out = {r["event_id"]: r["value_cents"]
            for r in wh.read("alt_events").collect()}
@@ -292,7 +293,7 @@ def test_append_conforms_types_after_modify(spark, tmp_path):
     # writer unaware of the ALTER: supplies bigint user_id
     wh.append("alt_events", _rows(spark, [(2, _D2)]), batch_id=1)
     man = wh.load_manifest("alt_events")
-    fp = wh._first_parquet(os.path.join(
+    fp = first_parquet(os.path.join(
         wh.path("alt_events"),
         next(m for m in man["members"] if "1" in m.split("=")[-1]),
     ))

@@ -301,3 +301,10 @@ def test_sharded_pairs_recall_with_coarse_assignment(spark, monkeypatch):
     within = {k for k, v in exact.items() if v[1]}
     assert within <= set(shd)
     assert len(shd) / len(exact) >= 0.85, (len(shd), len(exact))
+
+
+def test_ivf_topk_on_empty_corpus_returns_typed_empty(spark):
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(0)
+    out = ivf_topk(emb, emb, k=5, n_centroids=16, n_probe=4)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "neighbor_id", "rank", "cosine"]

@@ -91,3 +91,10 @@ def test_cluster_dups_blocked_gemm_matches_single_block(monkeypatch):
     blocked = cl_mod._cluster_dups(pdf.copy())
     assert full.values.tolist() == blocked.values.tolist()
     assert int(full["n_dup_pairs"].iloc[0]) >= 4  # the planted dups scored
+
+
+def test_kmeans_on_empty_corpus_returns_typed_empty(spark):
+    empty = _toy(spark).limit(0)
+    out = kmeans_rounds(spark, empty, k=2, n_rounds=2, keep_vec=True)
+    assert out.collect() == []
+    assert out.columns == ["vec_id", "cl", "d", "q"]

@@ -4,11 +4,19 @@ format X must read back through read_ch_format(X) with equal rows."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import types as T
 
-from dev_clickhouse_spark.io import read_ch_format
+from dev_clickhouse_spark.io import (
+    TEST_TABLES,
+    load_table,
+    parquet_schema,
+    read_ch_format,
+    read_parquet,
+)
 
 SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
@@ -108,3 +116,93 @@ def test_order_by_only_layout(spark, tmp_path):
     ]
     assert not any(d.startswith("event_date=") for d in dirs)
     assert wh.read("dim_tag").count() == 2
+
+
+# -- footer schema (io.parquet_schema / io.read_parquet) ---------------------
+
+SF = "/root/testdata/sf0.001"
+
+
+def _assert_footer_read_matches_inference(spark, *paths):
+    got = read_parquet(spark, *paths)
+    want = spark.read.parquet(*paths)
+    assert got.schema == want.schema, paths  # names, types, nullability
+    return got
+
+
+def test_footer_schema_matches_inference_on_fixtures(spark):
+    for name in TEST_TABLES:
+        _assert_footer_read_matches_inference(
+            spark, os.path.join(SF, f"{name}.parquet")
+        )
+
+
+def test_footer_schema_matches_inference_on_warehouse_layouts(
+    spark, tmp_path
+):
+    from pyspark.sql import functions as F
+
+    from dev_clickhouse_spark.plans.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    ev = load_table(spark, SF, "events").withColumn(
+        "event_date", F.to_date("ts")
+    )
+    for t in ("plain_ev", "batch_ev"):
+        wh.set_partitioning(t, ["ts", "event_id"])  # event_date=… dirs
+    wh.append("plain_ev", ev)
+    for b in range(2):
+        wh.append(
+            "batch_ev", ev.filter(F.col("event_id") % 2 == b), batch_id=b
+        )
+    wh.update_where_lightweight(
+        "batch_ev", {"event_type": F.lit("tap")}, "event_type = 'click'"
+    )
+    member = wh.load_manifest("batch_ev")["members"][0]
+    patch = wh._patch_files("batch_ev")[0]
+    for path, partition_cols in (
+        (wh.path("plain_ev"), ["event_date"]),
+        (wh.path("batch_ev"), ["ingest_batch", "event_date"]),
+        (os.path.join(wh.path("batch_ev"), member), ["event_date"]),
+        (os.path.join(wh._patch_dir("batch_ev"), patch), []),
+    ):
+        got = _assert_footer_read_matches_inference(spark, path)
+        # partition columns come from directory discovery, not the footer
+        data_cols = parquet_schema(path).names
+        assert got.columns == data_cols + partition_cols
+    assert read_parquet(spark, wh.path("plain_ev")).count() == ev.count()
+
+
+def test_footer_schema_maps_nanos_to_bigint(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({
+        "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+        "k": pa.array([1], pa.int32()),
+    }), p)
+    assert pq.read_schema(p).field("ts").type == pa.timestamp("ns")
+    got = _assert_footer_read_matches_inference(spark, p)
+    assert dict(got.dtypes) == {"ts": "bigint", "k": "int"}
+    assert got.first()["ts"] == 1_700_000_000_123_456_789
+
+
+def test_footer_schema_fails_loudly(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    p = tmp_path / "cut.parquet"
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(p))
+    p.write_bytes(p.read_bytes()[:-12])  # truncated footer
+    with pytest.raises(pa.ArrowInvalid):
+        parquet_schema(str(p))
+    with pytest.raises(pa.ArrowInvalid):
+        read_parquet(spark, str(p))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError):
+        parquet_schema(str(empty))
+    with pytest.raises(AnalysisException):  # Spark's own no-file error
+        read_parquet(spark, str(empty))

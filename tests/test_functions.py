@@ -249,3 +249,50 @@ def test_scd2_not_fired_by_ip_formatting(spark):
     assert len(cur3) == 2
     live = [r for r in cur3 if r.is_current == 1]
     assert len(live) == 1 and live[0].agent_ip == "5.6.7.8"
+
+
+def test_colcache_eviction_is_thread_safe():
+    """Stale-app entries are evicted by whichever pool thread misses
+    first; concurrent lookups must neither see the dict change size
+    mid-iteration nor fail on a key another thread already evicted.
+    A tiny switch interval makes the threads interleave inside the
+    eviction scan."""
+    import sys
+    import threading
+
+    from dev_clickhouse_spark.functions import colcache
+
+    saved = dict(colcache._CACHE)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for round_no in range(5):
+            for i in range(5000):
+                colcache._CACHE[(("stale", round_no, i), "dead-app")] = i
+            barrier = threading.Barrier(8)
+            errors = []
+
+            def lookup(n, round_no=round_no, barrier=barrier, errors=errors):
+                try:
+                    barrier.wait(timeout=30)
+                    for j in range(100):
+                        colcache.cached_cols(
+                            ("fresh", round_no, n, j), lambda: object()
+                        )
+                except Exception as exc:  # noqa: BLE001 — the race under test
+                    errors.append(exc)
+
+            threads = [
+                threading.Thread(target=lookup, args=(n,)) for n in range(8)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+            assert not any(t.is_alive() for t in threads)
+            assert errors == []
+            assert not any(k[1] == "dead-app" for k in colcache._CACHE)
+    finally:
+        sys.setswitchinterval(interval)
+        colcache._CACHE.clear()
+        colcache._CACHE.update(saved)

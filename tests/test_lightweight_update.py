@@ -180,3 +180,37 @@ def test_parts_reports_overlays(spark, wh):
     wh.compact("ev")
     kinds = {r["kind"] for r in wh.parts("ev").collect()}
     assert "patch" not in kinds and "deletion_vector" not in kinds
+
+
+def test_patches_across_a_widening_modify_read_with_own_schemas(
+    spark, tmp_path
+):
+    """MODIFY COLUMN between two lightweight UPDATEs: the two patch dirs
+    share column names but not types, so each is read with its own footer
+    schema (reusing the first patch's int schema for the bigint patch
+    fails the parquet scan)."""
+    from pyspark.sql import types as T
+
+    from dev_clickhouse_spark.quality import SchemaMigrator
+
+    narrow = T.StructType([
+        T.StructField("event_id", T.LongType()),
+        T.StructField("n", T.IntegerType()),
+    ])
+    w = Warehouse(spark, str(tmp_path / "wh"))
+    w.save_schema_override("nums", narrow)
+    rows = [(i, i * 10) for i in range(1, 7)]
+    for b in range(2):
+        w.append("nums", spark.createDataFrame(
+            [r for r in rows if r[0] % 2 == b], narrow), batch_id=b)
+    w.update_where_lightweight("nums", {"n": F.lit(-1)}, "event_id = 1")
+    SchemaMigrator(w).modify_column_type("nums", "n", T.LongType())
+    w.update_where_lightweight(
+        "nums", {"n": F.lit(5_000_000_000)}, "event_id = 2"
+    )
+    assert len(w._patch_files("nums")) == 2
+    got = w.read("nums")
+    assert dict(got.dtypes) == {"event_id": "bigint", "n": "bigint"}
+    assert sorted(map(tuple, got.collect())) == [
+        (1, -1), (2, 5_000_000_000), (3, 30), (4, 40), (5, 50), (6, 60),
+    ]

@@ -3,7 +3,7 @@
 
 RENAME COLUMN adds a legacy-name schema extension + a coalesce fold per
 member scan; DEFAULT-column back-fill adds ONE parquet-footer read per
-member per read (cached by mtime); metadata DROP COLUMN narrows the
+member per read (uncached); metadata DROP COLUMN narrows the
 projection.  All three must be ~free: the fold is whole-stage-codegen
 expressions, the footer check is O(members) driver-side metadata.  This
 probe builds a many-member manifest table, measures a full-scan

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Round-13 optimization harness: capture ``.explain("formatted")`` + noop-sink
-timings for the bench registry queries (guide §1.4: time the computation, not
-the collect; §7.2: read the plan).
+"""Plan-audit harness: capture ``.explain("formatted")`` + noop-sink timings
+for the bench registry queries (time the computation, not the collect; read
+the plan).
 
-Writes ``plans/r13/<name>_<tag>.txt`` (the judge-checkable plan artifact) and
+Writes ``plans/<round>/<name>_<tag>.txt`` (the committed plan artifact) and
 prints a JSON timing line per query.  Usage:
 
-    python tools/explain_r13.py before [name ...]   # default: all bench names
+    python tools/explain_plans.py <round> before|after [name ...]
+    # e.g. ``r15 before``; default names: all bench names
 """
 
 from __future__ import annotations
@@ -23,22 +24,24 @@ from bench import BENCH_QUERIES  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_QUERIES
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    label, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or BENCH_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from dev_clickhouse_spark.queries import REGISTRY
     from dev_clickhouse_spark.session import get_spark
 
-    spark = get_spark(app_name=f"explain_r13_{tag}")
+    spark = get_spark(app_name=f"explain_{label}_{tag}")
     spark.sparkContext.setLogLevel("ERROR")
-    outdir = os.path.join(REPO, "plans", "r13")
+    outdir = os.path.join(REPO, "plans", label)
     os.makedirs(outdir, exist_ok=True)
 
     timings = {}
     for name in names:
         fn = REGISTRY[name].fn
-        spark.sparkContext.setJobDescription(f"r13 {tag}: {name}")
+        spark.sparkContext.setJobDescription(f"{label} {tag}: {name}")
         runs = []
         df = None
         for _ in range(3):
