@@ -40,7 +40,6 @@ BENCH_QUERIES = [
     "dedup_minhash_lsh_pairs",
     "dedup_keep_list",
     "lang_id_char_ngrams",
-    "lang_id_char_ngrams_arrow",  # map-only production twin, same oracle
     "ann_cosine_topk",
     "ann_lsh_bucket_topk",   # ANN scale path #1 (hyperplane buckets)
     "ann_ivf_topk",          # ANN scale path #2 (IVF lists)

@@ -8,22 +8,24 @@ DataFrame ops, small enough state driver-side to stay honest at 100 TB.
 
 Scale shape per round (N vectors, k clusters, d dims):
 
-- assignment: ONE broadcast of the k×d centroid table against the corpus
-  (`crossJoin(broadcast(...))` → JVM-side ``zip_with``/``aggregate``
-  distance fold → ``min(struct(d, cl))`` per vector).  No shuffle of the
-  embedding column itself beyond its initial partitioning; the k-factor
-  row blowup never leaves the map side because the min-by folds it
-  partially per partition.
+- assignment: one map-only ``mapInPandas`` pass of ``centroids.nearest``
+  (the shared nearest-centroid kernel): the k×d centroid rows ride in the
+  task closure and each Arrow batch ranks its vectors with an exact int64
+  GEMM filter plus sequential-fold refine.  No join, no exchange: the
+  embedding column is never shuffled by the assignment.
 - update: ``posexplode`` of the assigned vectors → groupBy (cluster,
   pos) mean — a k·d-sized aggregate, collected to the driver (512 rows
   at k=8, d=64) exactly like every production k-means broadcasts its
-  centroids between rounds.
+  centroids between rounds; the collected rows are the next round's
+  centroids as they are.
 
 Determinism contract (the cross-engine gate needs bit-equal results):
 components are quantized to integer micro-units BEFORE any arithmetic,
 distances are exact BIGINT sums, argmin ties break on the lower cluster
 id, and centroid updates round half-up on an exact integer-by-integer
-division — so both engines walk identical centroid sequences.
+division — so both engines walk identical centroid sequences.  (From
+``centroids.COARSE_MIN_K`` clusters up, assignment is the kernel's
+two-level search: exact within the probed cells, not oracle-replayable.)
 """
 
 from __future__ import annotations
@@ -33,7 +35,10 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..queries.registry import register
+from .centroids import nearest
 
+#: must stay below ``centroids.COARSE_MIN_K`` (1024) for the exact,
+#: oracle-replayable assignment the determinism contract promises
 K_CLUSTERS = 8
 N_ROUNDS = 2
 QUANT = 1_000_000
@@ -51,64 +56,6 @@ def _quantize(col):
     )
 
 
-def _assign(df: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, q) × centroids → (vec_id, q, cl, d).
-
-    r14 (guide §4.2): exact int64 numpy assignment via ``mapInPandas`` —
-    MAP-ONLY, where the old shape paid a crossJoin row blowup, an
-    interpreted ``zip_with``/``aggregate`` distance fold per (vector,
-    centroid), and a groupBy exchange that shuffled the q column every
-    round.  Distances use the GEMM identity Σ(a-b)² = |a|² + |b|² - 2a·b
-    — algebraically identical in exact integer arithmetic, and numpy
-    int64 ops are exact, so the assignment (and the oracle-pinned
-    centroid walk) is bit-identical.  ``np.argmin`` takes the FIRST
-    minimum; centroid rows are sorted by cl, preserving the lower-cl
-    tie-break.  The k×d centroid table ships in the task closure (it is
-    already driver-side between rounds)."""
-    import numpy as np
-
-    out_schema = "vec_id long, q array<long>, cl int, d long"
-    rows = sorted(cent.collect(), key=lambda r: r["cl"])
-    if not rows:
-        # empty corpus → no seed centroids: nothing can be assigned
-        return df.sparkSession.createDataFrame([], out_schema)
-    cls_arr_src = [int(r["cl"]) for r in rows]
-    C = np.stack([np.asarray(r["cq"], dtype=np.int64) for r in rows])
-    dims = C.shape[1]
-    cmax = int(np.abs(C).max(initial=0))
-    c2 = np.einsum("ij,ij->i", C, C)
-
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        cls_arr = np.asarray(cls_arr_src, dtype=np.int32)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["q"]])
-            m = max(int(np.abs(Q).max(initial=0)), cmax, 1)
-            if 4 * m * m * dims >= (1 << 63):
-                raise ValueError(
-                    "quantized components too large for exact int64 "
-                    f"distances (max |q|={m}, d={dims})"
-                )
-            d2 = (
-                np.einsum("ij,ij->i", Q, Q)[:, None]
-                + c2[None, :]
-                - 2 * (Q @ C.T)
-            )
-            best = np.argmin(d2, axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "q": pdf["q"],
-                "cl": cls_arr[best],
-                "d": d2[np.arange(len(best)), best],
-            })
-
-    return df.mapInPandas(fn, out_schema)
-
-
 def kmeans_rounds(
     spark: SparkSession, df: DataFrame, k: int, n_rounds: int,
     keep_vec: bool = False,
@@ -119,17 +66,13 @@ def kmeans_rounds(
     ``q`` when ``keep_vec`` (consumers that need components again avoid
     an N×N re-join against the source; at corpus scale that join is a
     full shuffle of the embedding column)."""
-    seed_rows = (
-        df.orderBy("vec_id").limit(k)
-        .select("vec_id", "q").collect()
-    )
-    cent = spark.createDataFrame(
-        [(i, list(r["q"])) for i, r in enumerate(seed_rows)],
-        "cl int, cq array<long>",
-    )
+    seed_rows = df.orderBy("vec_id").limit(k).select("q").collect()
+    cents = [(i, r["q"]) for i, r in enumerate(seed_rows)]
     assigned = None
     for rnd_no in range(n_rounds):
-        assigned = _assign(df, cent).localCheckpoint()
+        assigned = nearest(df, "q", cents).select(
+            "vec_id", "q", F.col("label").alias("cl"), F.col("dist").alias("d")
+        ).localCheckpoint()
         if rnd_no == n_rounds - 1:
             break
         upd = (
@@ -149,18 +92,15 @@ def kmeans_rounds(
                 ).cast("long").alias("cq"),
             )
         )
-        # k·d rows — the canonical driver-side centroid exchange
-        rows = upd.collect()
+        # k·d rows — the canonical driver-side centroid exchange; the
+        # centroid rows go straight into the next round's task closure
         by_cl: dict[int, dict[int, int]] = {}
-        for r in rows:
+        for r in upd.collect():
             by_cl.setdefault(r["cl"], {})[r["pos"]] = r["cq"]
-        cent = spark.createDataFrame(
-            [
-                (cl, [pos_map[p] for p in sorted(pos_map)])
-                for cl, pos_map in sorted(by_cl.items())
-            ],
-            "cl int, cq array<long>",
-        )
+        cents = [
+            (cl, [pos_map[p] for p in sorted(pos_map)])
+            for cl, pos_map in by_cl.items()
+        ]
     if keep_vec:
         return assigned.select("vec_id", "cl", "d", "q")
     return assigned.select("vec_id", "cl", "d")

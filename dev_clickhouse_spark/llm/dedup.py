@@ -16,10 +16,8 @@ Scale design (the point of each variant at 100 TB):
   distance; bucketing by signature prefix bounds the search.
 
 Hashes are md5-based so the DuckDB oracle can replicate signatures
-bit-for-bit.  The production path (`minhash_signatures_jvm`) uses Spark's
-built-in xxhash64 entirely JVM-side — whole-stage codegen, no Python workers;
-`tests/test_llm.py` property-checks both paths produce the same verified
-pair set.  The correctness gate stays on md5.
+bit-for-bit; the map-only Arrow signature pass is the one path that runs,
+gated by that oracle.
 """
 
 from __future__ import annotations
@@ -122,43 +120,6 @@ def minhash_signatures(
     if inp.rdd.getNumPartitions() < par:
         inp = inp.repartition(par)
     return inp.mapInPandas(compute, schema=_SIG_SCHEMA)
-
-
-def minhash_signatures_jvm(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = MINHASH_K, bands: int = LSH_BANDS,
-) -> DataFrame:
-    """PRODUCTION signature path: same output shape as minhash_signatures but
-    entirely JVM-side on xxhash64 — shingles explode once, ONE groupBy(doc_id)
-    computes all k minima as partial-agg-friendly aggregates (map-side
-    combine), band hash = xxhash64 over the band's row minima.  No Python
-    workers, whole-stage codegen end to end.
-
-    Not oracle-parity (different hash family than the md5 gate path); the
-    VERIFIED pair set is property-tested equal to the md5 path in
-    tests/test_llm.py — candidates differ, the exact-Jaccard filter makes the
-    output hash-independent for pairs above threshold recall."""
-    rows_per_band = k // bands
-    sh = ngram_shingles(docs, id_col, text_col)
-    mins = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_shingles"),
-        *[F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"h{i}") for i in range(k)],
-    )
-    sig = F.array(*[F.col(f"h{i}").cast("string") for i in range(k)])
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).cast("string")
-            for b in range(bands)
-        ]
-    )
-    return mins.select(
-        "doc_id",
-        "n_shingles",
-        sig.alias("minhash"),
-        band_hashes.alias("bands"),
-    )
 
 
 def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
@@ -691,12 +652,11 @@ lsh_pairs AS (
 )"""
 
 
-def minhash_lsh_pairs(docs: DataFrame, use_jvm_hash: bool = False) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """MinHash → LSH banding → bucket join → exact verify: the scalable
-    near-dup pipeline.  ``use_jvm_hash=False`` (default) is the md5 path the
-    DuckDB oracle replicates bit-for-bit; ``use_jvm_hash=True`` is the
-    xxhash64 production path (all-JVM, no Python workers)."""
-    sigs = (minhash_signatures_jvm if use_jvm_hash else minhash_signatures)(docs)
+    near-dup pipeline, on the md5 signatures the DuckDB oracle replicates
+    bit-for-bit."""
+    sigs = minhash_signatures(docs)
     cands = lsh_candidate_pairs(sigs)
     verified = verify_jaccard(cands, docs)
     return verified.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(

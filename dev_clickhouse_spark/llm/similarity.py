@@ -12,7 +12,6 @@
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 import pandas as pd
@@ -23,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.ch_compat import round_half_up as rnd
 from ..io import load_table
 from ..queries.registry import register
+from .centroids import _coarse_index, nearest, top_p
 
 N_PLANES = 8
 
@@ -270,175 +270,36 @@ def shard_of(key, shards: int):
     return (h.cast("long") % shards).cast("int")
 
 
-#: below this many centroids a flat n×k GEMM assignment is already cheap;
-#: the two-level coarse index only pays off past it.  The crossover is
-#: MEASURED, not aesthetic: per-batch A/B on 64-dim gaussian vectors
-#: (10k-row batches, the mapInPandas shape) has flat winning at k=156/468
-#: (0.50/2.52 s vs 0.70/4.58 s per 50k/150k rows), parity at k≈800, and
-#: coarse 2.2× faster at k=1950 (45.2 s vs 20.9 s per 250k rows) — BLAS
-#: throughput on the dense n×k GEMM beats the gather-heavy two-level
-#: search until the candidate cut (≈3× fewer scored pairs at wc=kc/3)
-#: overcomes the per-FLOP gap.  With k sized ∝ n (n_probe·n/1024), the
-#: flat regime below the crossover is the n² term SCALE_X50 flags on
-#: dedup_cosine_pairs_sharded — documented there; past k=1024 this index
-#: caps the assignment at n·√k ~ n^1.5.
-COARSE_MIN_K = 1024
-
-
-def _sqdist_np(E: np.ndarray, C: np.ndarray) -> np.ndarray:
-    return (
-        (E * E).sum(axis=1)[:, None]
-        - 2.0 * (E @ C.T)
-        + (C * C).sum(axis=1)[None, :]
-    )
-
-
-def _coarse_index(C: np.ndarray, n_probe: int, iters: int = 5,
-                  cell_frac: float = 0.0, min_k: int | None = None):
-    """Two-level (coarse) quantizer over a centroid matrix, the standard
-    IVF answer to assignment cost at scale (FAISS's IVF-on-IVF / IMI
-    shape): cluster the k centroids into kc ≈ √k coarse cells with a
-    driver-side numpy Lloyd (deterministic lowest-index seeds — C is in
-    cid-label order, so this is reproducible), and search a vector by
-    ranking the kc coarse cells first, then scoring only the children of
-    the ``wc`` nearest cells.  Assignment work per vector drops from
-    O(k·dim) to O((kc + wc·k/kc)·dim) ≈ O(√k·dim) — with k sized ∝ n (the
-    probe-list memory bound), the total assignment cost falls from the n²
-    term the ×30→×50 rehearsal measured (α≈2.1 on
-    ``dedup_cosine_pairs_sharded``) to n^1.5.
-
-    Returns (Cc, children, wc): coarse matrix, per-cell child C-row-index
-    arrays (every cell non-empty), and the number of cells to probe — the
-    smallest w whose worst-case candidate union still holds ≥ n_probe
-    children (so the per-row top-p gather below never underflows), floored
-    at 4 for recall headroom and at ``cell_frac`` of the cells.  The
-    fraction is the recall/speed dial: assignment-slot recall against the
-    flat scan is data-dependent (clustered corpora rank cells decisively;
-    an unstructured cloud — the worst case, and what the synthetic
-    embeddings table approximates — needs more cells: measured 0.69 @
-    wc=kc/5, 0.99 @ wc=kc·0.6 on gaussian vectors at k=400).  Near-dup
-    PAIR recall degrades far less than slot recall, because two
-    near-duplicate vectors mis-rank the same boundary cells together.
-    Returns None when k < ``min_k`` (default COARSE_MIN_K — the measured
-    flat-GEMM crossover; tests pass a lower floor to exercise the
-    two-level machinery on small fixtures)."""
-    k = C.shape[0]
-    if k < (COARSE_MIN_K if min_k is None else min_k):
-        return None
-    kc = max(1, int(math.isqrt(k)))
-    Cc = C[:kc].copy()
-    for _ in range(iters):
-        a = _sqdist_np(C, Cc).argmin(axis=1)
-        for j in range(kc):
-            m = a == j
-            if m.any():
-                Cc[j] = C[m].mean(axis=0)
-    a = _sqdist_np(C, Cc).argmin(axis=1)
-    children = [np.nonzero(a == j)[0] for j in range(kc)]
-    children = [ch for ch in children if len(ch)]
-    Cc = np.array(
-        [C[ch].mean(axis=0) for ch in children], dtype=np.float64
-    )
-    sizes = np.sort(np.array([len(ch) for ch in children]))
-    cum = np.cumsum(sizes)
-    wc = int(np.searchsorted(cum, n_probe) + 1)
-    wc = min(
-        len(children),
-        max(4, wc, int(math.ceil(len(children) * cell_frac))),
-    )
-    return Cc, children, wc
-
-
-def _topp_assign(E: np.ndarray, C: np.ndarray, p: int, coarse) -> np.ndarray:
-    """Top-``p`` nearest C-rows per E-row with the (distance, cid)
-    tie-break, flat GEMM when ``coarse`` is None, else the two-level
-    search (exact within the candidate union of the ``wc`` nearest coarse
-    cells; near-boundary vectors may rank cells differently than the flat
-    scan — consumers of this path are recall-gated, never parity-gated).
-    Returns an (n, p) int array of C-row indices, distance-ascending."""
-    n = len(E)
-    if coarse is None:
-        d = _sqdist_np(E, C)
-        top = np.argpartition(d, p - 1, axis=1)[:, :p]
-        rows = np.arange(n)[:, None]
-        order = np.lexsort((top, d[rows, top]))
-        return top[rows, order]
-    Cc, children, wc = coarse
-    dc = _sqdist_np(E, Cc)
-    wc = min(wc, len(children))
-    topc = np.argpartition(dc, wc - 1, axis=1)[:, :wc]
-    # Score candidates cell-by-cell (one BLAS call per touched cell over
-    # the rows that probe it) and keep only each cell's LOCAL top-p per
-    # row before the merge — any global top-p member is inside its own
-    # cell's top-p (cells are disjoint), so this is exact over the same
-    # candidate set while shrinking the merge sort from
-    # n·wc·(k/kc) entries to ≤ n·wc·p (the first cut of this function
-    # merged every scored candidate and the lexsort dominated — measured
-    # 5-12× SLOWER than the flat GEMM it was meant to beat).
-    row_all, cid_all, d_all = [], [], []
-    flat_rows = np.repeat(np.arange(n), wc)
-    flat_cells = topc.reshape(-1)
-    for j in np.unique(flat_cells):
-        rows_j = flat_rows[flat_cells == j]
-        ch = children[j]
-        dj = _sqdist_np(E[rows_j], C[ch])
-        pj = min(p, len(ch))
-        if pj < len(ch):
-            loc = np.argpartition(dj, pj - 1, axis=1)[:, :pj]
-        else:
-            loc = np.broadcast_to(
-                np.arange(len(ch)), (len(rows_j), len(ch))
-            )
-        rr = np.arange(len(rows_j))[:, None]
-        row_all.append(np.repeat(rows_j, pj))
-        cid_all.append(ch[loc].reshape(-1))
-        d_all.append(dj[rr, loc].reshape(-1))
-    row_a = np.concatenate(row_all)
-    cid_a = np.concatenate(cid_all)
-    d_a = np.concatenate(d_all)
-    order = np.lexsort((cid_a, d_a, row_a))
-    row_s, cid_s = row_a[order], cid_a[order]
-    first = np.searchsorted(row_s, np.arange(n), side="left")
-    # wc sizing guarantees ≥ p candidates per row even after the local
-    # truncation: a cell clipped to p already contributes p, and unclipped
-    # cells contribute everything the sizing counted (cells are disjoint,
-    # so no duplicate cids inflate the count)
-    sel = (first[:, None] + np.arange(p)).reshape(-1)
-    return cid_s[sel].reshape(n, p)
-
-
 def _gemm_ivf_probes(base: DataFrame, n_centroids: int, n_probe: int,
                      dim: int) -> DataFrame:
-    """IVF centroid build + probe assignment as two Arrow GEMM passes.
+    """IVF centroid build + probe assignment as two map-only passes of the
+    nearest-centroid kernel (``centroids.top_p``).
 
-    ``ivf_build``'s JVM crossJoin assignment is exact and oracle-replicable
-    (``ann_ivf_topk`` keeps it), but its cost is n × k interpreted fold
-    evaluations — the sharded pair query sizes k ~ n·n_probe/1024, so at
-    ×30 that is ~13e9 lambda steps and it made this branch the rehearsal's
-    slowest and noisiest entry (45–126 s run-to-run).  Here the same
-    ALGORITHM runs as BLAS: seeds = the lowest-id vectors (ivf_build's
-    deterministic choice), ONE Lloyd refinement where each partition emits
-    per-centroid partial sums (≤ k rows per partition, elementwise-summed
-    JVM-side), memberless seeds dropped exactly as ivf_build's groupBy
-    drops them, then a probe pass ranking centroids per vector with
-    argpartition and a stable (distance, cid) tie-break.  NOT bit-exact
-    with ivf_build: the GEMM expands ‖x‖²−2x·y+‖y‖² while the JVM fold
-    sums (x−y)², so the two round differently and probe sets can diverge
-    under near-ties — acceptable here because every consumer is
-    recall-gated, never parity-gated, on this path.  The centroid matrix rides in the
-    task closure (k × dim doubles — ~3.6 MB at k=7031, dim=64); collecting
-    it is the index-build planning job, same note as ivf_build's
-    materialization.  Returns (id, sh, e, cid) probe rows, ≤ n_probe per
-    id."""
+    The same ALGORITHM as ``ivf_build``: seeds = the lowest-id vectors,
+    ONE Lloyd refinement, memberless seeds dropped exactly as
+    ``ivf_build``'s groupBy drops them, then a probe pass ranking centroids
+    per vector by (distance, cid).  Only the mean refinement differs: each
+    partition emits per-centroid partial sums (≤ k rows per partition,
+    elementwise-summed JVM-side) instead of ``ivf_build``'s per-dimension
+    ``avg``, because the sharded pair query sizes k ~ n·n_probe/1024 and
+    the (cid, pos) explode would be n·dim rows.  Partial sums round in a
+    partition-dependent order, so the refined centroids — and, under
+    near-ties, the probe sets — are not bit-replayable; every consumer of
+    this path is recall-gated, never parity-gated.  Past
+    ``COARSE_MIN_K`` centroids both passes take the kernel's two-level
+    search (the flat n×k filter is this path's only superlinear term),
+    each over a coarse index built once here on the driver.
+    The centroid matrix rides in the task closure (k × dim doubles —
+    ~3.6 MB at k=7031, dim=64); collecting it is the index-build planning
+    job, same note as ivf_build's materialization.  Returns
+    (id, e, sh, cid) probe rows, ≤ n_probe per id."""
     seed_rows = base.orderBy("id").limit(n_centroids).select("e").collect()
     C0 = np.array([r.e for r in seed_rows], dtype=np.float64)
     k = C0.shape[0]
-    # two-level coarse quantizer for BOTH assignment passes (built on the
-    # driver once, rides in the closures like the centroid matrices): past
-    # COARSE_MIN_K centroids the flat n×k GEMM is the path's only
-    # superlinear term (k ∝ n ⇒ n² — the ×30→×50 α≈2.1 SPILL_PROBE.json
-    # measured), and the coarse search cuts it to n·√k.
-    coarse0 = _coarse_index(C0, 1)
+    # the build pass only needs argmin-quality assignment for the mean
+    # refinement, so past COARSE_MIN_K it probes the sizing floor of
+    # cells, not the third the probe pass below takes
+    coarse0 = _coarse_index(C0, 1, cell_frac=0)
 
     def partial_sums(batches):
         sums = np.zeros_like(C0)
@@ -449,8 +310,7 @@ def _gemm_ivf_probes(base: DataFrame, n_centroids: int, n_probe: int,
                 continue
             seen = True
             E = np.array(pdf["e"].tolist(), dtype=np.float64)
-            # ties → lowest cid (both branches of _topp_assign)
-            a = _topp_assign(E, C0, 1, coarse0)[:, 0]
+            a = top_p(E, C0, 1, coarse0)[0][:, 0]  # ties → lowest cid
             np.add.at(sums, a, E)
             np.add.at(counts, a, 1)
         if seen:
@@ -470,40 +330,14 @@ def _gemm_ivf_probes(base: DataFrame, n_centroids: int, n_probe: int,
     ).collect()
     # ivf_build's mean recompute is a groupBy over the first assignment, so
     # a seed that attracts no members simply DISAPPEARS from the refined
-    # centroid set (ADVICE r7: C0.copy() kept such seeds alive here and
-    # could diverge).  Mirror that: keep only member-bearing cids, original
-    # 1-based labels, label-ascending order so the (distance, cid)
-    # tie-break below ranks identically.
-    live = sorted(r.cid for r in mean_rows)
-    by_cid = {r.cid: r for r in mean_rows}
-    C1 = np.array(
-        [[by_cid[c][f"s{i}"] for i in range(dim)] for c in live],
-        dtype=np.float64,
-    ) / np.array([[by_cid[c].cnt] for c in live], dtype=np.float64)
-    cid_labels = np.array(live, dtype=np.int64) + 1  # 1-based like ivf_build
-    k_live = len(live)
-    p = min(n_probe, k_live)
-    # probe pass gets a wider cell budget than the build pass (which only
-    # needs argmin-quality assignment for the mean refinement): a third of
-    # the coarse cells keeps slot recall ≳0.9 even on unstructured data
-    # while still cutting the dominant n×k term ~3× (and √k-fold on
-    # clustered corpora where the sizing floor, not the fraction, binds)
-    coarse1 = _coarse_index(C1, p, cell_frac=1 / 3)
-
-    def probe(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["e"].tolist(), dtype=np.float64)
-            # stable (distance, cid) order inside the top set; C1-row
-            # order == cid label order because `live` is sorted ascending
-            cids = _topp_assign(E, C1, p, coarse1)
-            out = pdf.loc[pdf.index.repeat(p)].reset_index(drop=True)
-            out["cid"] = cid_labels[cids.reshape(-1)]
-            yield out
-
-    return base.mapInPandas(
-        probe, "id long, e array<double>, sh int, cid long"
+    # centroid set (ADVICE r7).  Mirror that: only member-bearing cids,
+    # with their original 1-based labels.
+    cents = [
+        (r.cid + 1, [r[f"s{i}"] / r.cnt for i in range(dim)])
+        for r in mean_rows
+    ]
+    return nearest(base, "e", cents, p=n_probe).select(
+        "id", "e", "sh", F.col("label").alias("cid")
     )
 
 
@@ -576,9 +410,7 @@ def cosine_threshold_pairs_sharded(
     )
 
     # branch 2: cross-shard candidates from shared IVF probe lists, with
-    # GEMM centroid build + assignment (_gemm_ivf_probes: the JVM crossJoin
-    # fold is n x k interpreted steps — prohibitive at the k ~ n/256 this
-    # query sizes)
+    # the centroid build + assignment as kernel passes (_gemm_ivf_probes)
     probes = _gemm_ivf_probes(base, n_centroids, n_probe, dim).select(
         "id", "sh", "e", "cid"
     )
@@ -658,73 +490,31 @@ def ivf_build(
     """Build an IVF index: deterministic seed centroids (lowest ids — no RNG),
     one Lloyd refinement (assign → per-dimension mean), inverted lists.
 
-    Returns (centroids[cid, cv], assignments[id, cid]).  Assignment is a
-    MAP-ONLY numpy pass per partition (r14 — see ``assign``; the distances
-    replicate the old JVM fold's arithmetic bit-for-bit, and the old
-    crossJoin + row_number shape shuffled the corpus per assignment); the
-    mean recompute stays a JVM posexplode → groupBy(cid, pos) avg →
+    Returns (centroid rows (cid, cv), assignments[id, cid]).  Both assignments
+    are MAP-ONLY passes of the nearest-centroid kernel
+    (``centroids.nearest``), whose distances are the exact sequential fold
+    the DuckDB oracle sums, with the lower-cid tie-break (exact below
+    ``centroids.COARSE_MIN_K`` centroids; past it the kernel's two-level
+    search, which no oracle replays); the mean
+    recompute stays a JVM posexplode → groupBy(cid, pos) avg →
     re-assemble, single-shuffle on (cid, pos).
 
-    Both outputs are MATERIALIZED (localCheckpoint): an IVF index is a
-    persisted structure by nature — without this every search branch
-    re-runs the whole build.  At 100 TB the production move is the same
-    idea durable: write assignments to parquet once, search many times.
+    Both outputs are MATERIALIZED — the centroids collected to the
+    driver, the assignments localCheckpointed: an IVF index is a persisted
+    structure by nature — without this every search branch re-runs the
+    whole build.  At 100 TB the production move is the same idea durable:
+    write assignments to parquet once, search many times.
     """
     c = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("cv")
     )
-
-    def assign(points: DataFrame, cent_rows: list, keep_cv: bool) -> DataFrame:
-        """Nearest-centroid assignment as ONE numpy map pass (r14, guide
-        §4.2): the old shape paid a crossJoin k-fold row blowup, an
-        interpreted zip_with/aggregate distance fold per (vector,
-        centroid), and a row_number window SHUFFLE of the corpus per
-        assignment — twice per build.  Distances accumulate per DIMENSION
-        (acc += (x_j − y_j)²), the exact left-fold order and IEEE double
-        ops of the old JVM ``aggregate`` lambda, so every distance is
-        bit-identical; ``np.argmin`` takes the first minimum over rows
-        sorted by cid, preserving the lower-cid tie-break."""
-        import numpy as np
-
-        schema = (
-            "id long, cid int, cv array<double>" if keep_cv
-            else "id long, cid int"
-        )
-        if not cent_rows:
-            # empty corpus → no seed centroids: nothing can be assigned
-            return points.sparkSession.createDataFrame([], schema)
-        cent_rows = sorted(cent_rows, key=lambda r: int(r[0]))
-        cids_src = [int(r[0]) for r in cent_rows]
-        C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-
-        def fn(batches):
-            import numpy as np
-            import pandas as pd
-
-            cids = np.asarray(cids_src, dtype=np.int32)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Q = np.stack(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["cv"]]
-                )
-                acc = np.zeros((len(Q), len(C)))
-                for j in range(C.shape[1]):
-                    t = Q[:, j, None] - C[None, :, j]
-                    acc += t * t
-                best = np.argmin(acc, axis=1)
-                out = {"id": pdf["id"].to_numpy(), "cid": cids[best]}
-                if keep_cv:
-                    out["cv"] = pdf["cv"]
-                yield pd.DataFrame(out)
-
-        return points.mapInPandas(fn, schema)
-
-    seed_rows = [
+    seeds = [
         (i + 1, r["cv"])
         for i, r in enumerate(c.orderBy("id").limit(n_centroids).collect())
     ]
-    first = assign(c, seed_rows, keep_cv=True)
+    first = nearest(c, "cv", seeds).select(
+        "id", F.col("label").alias("cid"), "cv"
+    )
     means = (
         first.select("cid", F.posexplode("cv").alias("pos", "val"))
         .groupBy("cid", "pos")
@@ -733,22 +523,16 @@ def ivf_build(
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s.m
-            ).alias("cv_centroid")
+            ).alias("cv")
         )
-        # n_centroids rows, but the subtree above them (seed assign + window
-        # + per-dim means) re-executes once per downstream REFERENCE —
-        # second assign, query probes, candidate join all branch from here.
-        # Materializing turns ~4 recomputes of the build into 1.
-        .localCheckpoint(eager=True)
+        .collect()  # n_centroids rows: the index-build planning job
     )
-    mean_rows = [
-        (r["cid"], r["cv_centroid"]) for r in means.collect()
-    ]  # n_centroids rows off an eager checkpoint — a driver-side no-op
     assignments = (
-        assign(c, mean_rows, keep_cv=False)
-        .localCheckpoint(eager=True)  # same: probed by every query branch
+        nearest(c, "cv", means)
+        .select("id", F.col("label").alias("cid"))
+        .localCheckpoint(eager=True)  # probed by every query branch
     )
-    return means.withColumnRenamed("cv_centroid", "cv"), assignments
+    return means, assignments
 
 
 def ivf_topk(
@@ -763,17 +547,9 @@ def ivf_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    qd = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "__d",
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, v: acc + v,
-        ),
+    probes = nearest(q, "qv", centroids, p=n_probe).select(
+        "query_id", "qv", F.col("label").alias("cid")
     )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("__d"), F.asc("cid"))
-    probes = qd.withColumn("__rn", F.row_number().over(wq)).filter(
-        F.col("__rn") <= n_probe
-    ).select("query_id", "qv", "cid")
 
     # r13: per-vector norms hoisted out of the pair projection (same double
     # arithmetic — bit-identical rounded scores).  No _spread here: the
@@ -1219,7 +995,9 @@ def pq_build(
     The vector splits into ``m`` contiguous subspaces; each subspace gets a
     ``k``-codeword codebook (deterministic seeds = the k lowest ids'
     sub-vectors, one Lloyd refinement — the same no-RNG recipe as
-    ``ivf_build``); a vector's code is its nearest codeword per subspace.
+    ``ivf_build``); a vector's code is its nearest codeword per subspace —
+    exact below ``centroids.COARSE_MIN_K`` codewords, the kernel's
+    two-level search past it.
     Memory is the point: dim-64 float32 = 256 B/vector; m=8, k=16 codes =
     8 half-byte indices = 4-8 B/vector, a 30-60× index shrink — what makes
     a billion-vector in-memory ANN index fit a cluster at all (IVF lists
@@ -1232,57 +1010,41 @@ def pq_build(
     Returns (codebooks[s, code, cv], codes[id, s, code]), both
     materialized (an index is a persisted structure; at 100 TB both are
     parquet written once, searched many)."""
-    sub = (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("e"),
-        )
-        .withColumn(
-            "e",
-            F.transform("e", lambda x: x / F.sqrt(
-                F.aggregate("e", F.lit(0.0), lambda a, v: a + v * v)
-            )),
-        )
-        .select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.struct(
-                        s.alias("s"),
-                        F.slice(
-                            "e", s * (F.size("e") / m).cast("int") + 1,
-                            (F.size("e") / m).cast("int"),
-                        ).alias("sv"),
-                    ),
-                )
-            ).alias("x"),
-        )
-        .select("id", "x.s", "x.sv")
+    unit = corpus.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("e"),
+    ).withColumn(
+        "e",
+        F.transform("e", lambda x: x / F.sqrt(
+            F.aggregate("e", F.lit(0.0), lambda a, v: a + v * v)
+        )),
     )
-    w_seed = Window.partitionBy("s").orderBy("id")
-    seeds = (
-        sub.withColumn("rn", F.row_number().over(w_seed))
-        .filter(F.col("rn") <= k)
-        .select("s", F.col("rn").alias("code"), F.col("sv").alias("cv"))
+    sub = unit.select(
+        "id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda s: F.struct(
+                    s.alias("s"),
+                    F.slice(
+                        "e", s * (F.size("e") / m).cast("int") + 1,
+                        (F.size("e") / m).cast("int"),
+                    ).alias("sv"),
+                ),
+            )
+        ).alias("x"),
+    ).select("id", "x.s", "x.sv")
+    # every subspace's seeds are the sub-vectors of the same k lowest ids
+    seeds = []
+    for code, r in enumerate(unit.orderBy("id").limit(k).collect(), start=1):
+        ds = len(r["e"]) // m
+        seeds += [(s, code, r["e"][s * ds:(s + 1) * ds]) for s in range(m)]
+
+    # both assignments are map-only kernel passes, each sub-vector ranked
+    # against its own subspace's codebook
+    first = nearest(sub, "sv", seeds, key_col="s").select(
+        "id", "s", F.col("label").alias("code"), "sv"
     )
-
-    def assign(points: DataFrame, books: DataFrame) -> DataFrame:
-        scored = points.join(F.broadcast(books), "s").withColumn(
-            "__d",
-            F.aggregate(
-                F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda acc, v: acc + v,
-            ),
-        )
-        w = Window.partitionBy("id", "s").orderBy(F.asc("__d"), F.asc("code"))
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("id", "s", "code", "sv")
-        )
-
-    first = assign(sub, seeds)
     books = (
         first.select("s", "code", F.posexplode("sv").alias("pos", "val"))
         .groupBy("s", "code", "pos")
@@ -1296,8 +1058,10 @@ def pq_build(
         )
         .localCheckpoint(eager=True)
     )
-    codes = assign(sub, books).select("id", "s", "code").localCheckpoint(
-        eager=True
+    codes = (
+        nearest(sub, "sv", books.collect(), key_col="s")
+        .select("id", "s", F.col("label").alias("code"))
+        .localCheckpoint(eager=True)
     )
     return books, codes
 

@@ -484,7 +484,6 @@ def _char_trigrams(text: Column | str) -> Column:
 
 def _char_trigram_rows(
     docs: DataFrame, id_col: str, text_col: str, out_col: str,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, trigram) rows — the exploded form of :func:`_char_trigrams`,
     built for speed (r13, guide §4.1/§2.6): explode a POSITION sequence and
@@ -494,14 +493,11 @@ def _char_trigram_rows(
     a single-partition input across cores first — a one-file table otherwise
     runs the whole corpus explode as ONE task (at real scale the input is
     already split).  Emits exactly the same row multiset, docs under 3 chars
-    drop out (they contribute no trigrams either way).  ``spread=False``
-    skips the round-robin when the caller repartitions by key right after
-    (one shuffle instead of two)."""
+    drop out (they contribute no trigrams either way)."""
     inp = docs.select(F.col(id_col), F.col(text_col))
-    if spread:
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if inp.rdd.getNumPartitions() < par:
-            inp = inp.repartition(par)
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if inp.rdd.getNumPartitions() < par:
+        inp = inp.repartition(par)
     return (
         inp.select(F.col(id_col), F.lower(F.col(text_col)).alias("__s"))
         .filter(F.length("__s") >= 3)
@@ -517,90 +513,16 @@ def _char_trigram_rows(
 def lang_id_predict(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Cavnar–Trenkle out-of-place language ID: rank the document's own top
-    trigrams, measure rank displacement against each language profile
-    (missing trigram = fixed penalty), argmin with lang-code tie order.
+    trigrams (count desc, trigram asc), measure rank displacement against
+    each language profile (missing trigram = fixed penalty), argmin with
+    lang-code tie order.  Docs too short for any trigram deterministically
+    fall back to the first language code.
 
-    Shapes at scale: trigram explode + per-doc count (ONE shuffle on doc_id),
-    window rank within doc, broadcast join against the 4×K profile table,
-    narrow groupBy — linear in corpus size.  Docs too short for any trigram
-    deterministically fall back to the first language code."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
-    langs = sorted(LANG_PROFILES)
-    fallback = langs[0]
-
-    prof = spark.createDataFrame(
-        [
-            (lang, tg, r)
-            for lang, p in LANG_PROFILES.items()
-            for tg, r in p.items()
-        ],
-        "plang string, ptg string, pr int",
-    )
-    lang_df = spark.createDataFrame([(lg,) for lg in langs], "plang string")
-
-    # r13 (guide §2.4): ONE exchange on doc_id serves the whole pipeline —
-    # hash partitioning on doc_id satisfies the (doc_id, tg) aggregation,
-    # both doc_id windows AND the (doc_id, plang) distance aggregation, so
-    # none of them inserts its own shuffle (the old shape paid three: the
-    # (doc_id, tg) groupBy, the rank window, and the final join).  The
-    # repartition moves raw trigram rows instead of per-partition-collapsed
-    # ones — a modest byte increase traded for two fewer shuffle rounds.
-    tg = (
-        _char_trigram_rows(docs, id_col, text_col, "tg", spread=False)
-        .select(F.col(id_col).alias("doc_id"), "tg")
-        .repartition("doc_id")
-    )
-    cnt = tg.groupBy("doc_id", "tg").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), F.asc("tg"))
-    doc_rank = (
-        cnt.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= DOC_PROFILE_K)
-        .select("doc_id", "tg", "rn")
-    )
-    dist = (
-        doc_rank.crossJoin(F.broadcast(lang_df))
-        .join(
-            F.broadcast(prof.withColumnRenamed("plang", "pplang")),
-            (F.col("pplang") == F.col("plang")) & (F.col("ptg") == F.col("tg")),
-            "left",
-        )
-        .groupBy("doc_id", "plang")
-        .agg(
-            F.sum(
-                F.when(F.col("pr").isNull(), F.lit(_OOP_PENALTY)).otherwise(
-                    F.abs(F.col("rn") - F.col("pr"))
-                )
-            ).cast("long").alias("dist")
-        )
-    )
-    bw = Window.partitionBy("doc_id").orderBy(F.asc("dist"), F.asc("plang"))
-    best = (
-        dist.withColumn("brn", F.row_number().over(bw))
-        .filter(F.col("brn") == 1)
-        .select("doc_id", F.col("plang").alias("predicted"))
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), *(
-            [c for c in docs.columns if c != id_col]
-        ))
-        .join(best, "doc_id", "left")
-        .withColumn("predicted_lang", F.coalesce("predicted", F.lit(fallback)))
-        .drop("predicted")
-    )
-
-
-def lang_id_predict_arrow(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
-    """Production twin of :func:`lang_id_predict` — identical predictions
-    (property-tested), different scale shape: the explode path shuffles
-    corpus-CHARS worth of (doc_id, trigram) rows to rank per-doc profiles;
-    this one computes each document's profile and rank distance inside an
-    Arrow ``mapInPandas`` batch, emitting one row per doc with ZERO shuffle.
-    The oracle-anchored explode path stays registered (bit-replayable SQL);
-    at 100 TB this is the path a production pipeline runs — same trade as
-    ``minhash_signatures_jvm`` vs the md5 oracle path."""
+    Map-only: each document's profile and distances are computed inside an
+    Arrow ``mapInPandas`` batch, one output row per doc, zero shuffle.  The
+    DuckDB oracle replays the same rank/score/argmin as an explode +
+    window pipeline in SQL.  Output: the id column renamed to ``doc_id``
+    and moved first, the remaining columns, then ``predicted_lang``."""
     from collections import Counter
 
     import pandas as pd
@@ -623,7 +545,7 @@ def lang_id_predict_arrow(docs: DataFrame, id_col: str = "doc_id",
         top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         top = top[:DOC_PROFILE_K]
         best_lang, best_dist = fallback, None
-        for lang in langs:  # asc lang order = the JVM path's tie-break
+        for lang in langs:  # asc lang order = the oracle's tie-break
             prof = profiles[lang]
             dist = 0
             for rn, (tg, _c) in enumerate(top, start=1):
@@ -642,9 +564,6 @@ def lang_id_predict_arrow(docs: DataFrame, id_col: str = "doc_id",
             )
             yield pdf
 
-    # mirror the JVM twin's output shape exactly: id column renamed to
-    # doc_id and moved first, remaining columns, then the prediction —
-    # code written against either twin sees the same frame
     others = [c for c in docs.columns if c != id_col]
     return docs.mapInPandas(run, out_schema).select(
         F.col(id_col).alias("doc_id"), *others, "predicted_lang"
@@ -709,15 +628,10 @@ def lang_id_char_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lang_id_char_ngrams_arrow", oracle=_LANG_NGRAM_ORACLE, tags=["llm-text"]
 )
 def lang_id_char_ngrams_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME oracle served by the map-only Arrow production twin
-    (:func:`lang_id_predict_arrow`): the driver gate itself proves the twin
-    predicts identically to the SQL-replayed explode path — the strongest
-    form of the twin-parity property test, and the path a 100 TB run uses
-    (zero shuffle vs corpus-chars of (doc_id, trigram) rows)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return lang_id_predict_arrow(docs).select(
-        "doc_id", "lang", "predicted_lang"
-    )
+    """Registry alias of ``lang_id_char_ngrams`` (the same
+    :func:`lang_id_predict`, the same oracle), kept so existing callers of
+    the name keep working."""
+    return lang_id_char_ngrams(spark, sf_dir)
 
 
 @register(

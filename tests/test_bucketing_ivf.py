@@ -60,7 +60,8 @@ def test_ivf_assignment_margins_dominate_float_noise(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     centroids, _ = ivf_build(emb, n_centroids=16)
     C = np.array(
-        [r.cv for r in centroids.orderBy("cid").collect()], dtype=np.float64
+        [r.cv for r in sorted(centroids, key=lambda r: r.cid)],
+        dtype=np.float64,
     )
     E = np.array(
         [r.embedding for r in emb.select("embedding").collect()],
@@ -227,40 +228,41 @@ def test_pq_adc_rerank_recall_and_code_size(spark):
     assert r_rr > r_adc  # the re-rank must actually help
 
 
-def test_coarse_assignment_matches_flat_on_separated_clusters():
-    """Two-level coarse assignment (_coarse_index/_topp_assign): on
-    well-separated clusters the two-level search must EQUAL the flat n x k
-    scan (cells are decisive), and on any data the machinery must be
-    deterministic, emit exactly p disjoint slots per row, and cover every
-    centroid exactly once across the children lists."""
+def test_coarse_assignment_matches_flat_on_separated_clusters(monkeypatch):
+    """Two-level coarse branch of the kernel (_coarse_index, top_p past
+    COARSE_MIN_K): on well-separated clusters the two-level search must
+    EQUAL the flat n x k scan (cells are decisive), and on any data the
+    machinery must be deterministic, emit exactly p disjoint slots per
+    row, and cover every centroid exactly once across the children
+    lists."""
     import numpy as np
 
-    from dev_clickhouse_spark.llm.similarity import (
-        _coarse_index,
-        _topp_assign,
-    )
+    from dev_clickhouse_spark.llm import centroids
+    from dev_clickhouse_spark.llm.centroids import _coarse_index, top_p
 
     rng = np.random.RandomState(11)
     # 100 well-separated cluster centers, centroids jittered around them
     centers = rng.randn(100, 16) * 50.0
     C = np.repeat(centers, 4, axis=0) + rng.randn(400, 16)
     E = np.repeat(centers, 10, axis=0) + rng.randn(1000, 16)
-    # min_k=64 forces the two-level machinery on this small fixture (the
-    # production floor COARSE_MIN_K=1024 is the measured flat-GEMM
-    # crossover, far above any unit-test size)
-    coarse = _coarse_index(C, 4, min_k=64)
+    assert _coarse_index(C, 4) is None  # 400 < COARSE_MIN_K: flat search
+    # COARSE_MIN_K=64 forces the two-level branch on this small fixture
+    # (the production floor 1024 is the measured flat-GEMM crossover, far
+    # above any unit-test size)
+    monkeypatch.setattr(centroids, "COARSE_MIN_K", 64)
+    coarse = _coarse_index(C, 4)
     Cc, children, wc = coarse
     covered = sorted(i for ch in children for i in ch)
     assert covered == list(range(400))  # disjoint, complete
-    flat = _topp_assign(E, C, 4, None)
-    two = _topp_assign(E, C, 4, coarse)
+    flat = top_p(E, C, 4)[0]
+    two = top_p(E, C, 4, coarse)[0]
     agree = (flat == two).all(axis=1).mean()
     assert agree >= 0.99, agree
     # p slots per row, no duplicates
     assert two.shape == (1000, 4)
     assert all(len(set(row)) == 4 for row in two)
     # determinism
-    two2 = _topp_assign(E, C, 4, _coarse_index(C, 4, min_k=64))
+    two2 = top_p(E, C, 4, _coarse_index(C, 4))[0]
     assert (two == two2).all()
 
 
@@ -273,14 +275,25 @@ def test_sharded_pairs_recall_with_coarse_assignment(spark, monkeypatch):
     config (100 centroids over 200 unstructured vectors, cells of ~2) is
     the coarse search's worst case and measures 0.898 (53/59; every miss
     cross-shard); the flat path's own test keeps the 0.9 floor."""
-    from dev_clickhouse_spark.llm import similarity as sim
+    from dev_clickhouse_spark.llm import centroids
     from dev_clickhouse_spark.llm.similarity import (
         cosine_threshold_pairs,
         cosine_threshold_pairs_sharded,
         shard_of,
     )
 
-    monkeypatch.setattr(sim, "COARSE_MIN_K", 64)
+    monkeypatch.setattr(centroids, "COARSE_MIN_K", 64)
+    # the index is built on the driver, where the patch applies; record
+    # that the probe pass really searched a two-level index
+    built = []
+    coarse_index = centroids._coarse_index
+
+    def spy(C, n_probe, **kw):
+        out = coarse_index(C, n_probe, **kw)
+        built.append((len(C), out is not None))
+        return out
+
+    monkeypatch.setattr(centroids, "_coarse_index", spy)
 
     sf = "/root/testdata/sf0.01"
     emb = load_table(spark, sf, "embeddings")
@@ -301,6 +314,7 @@ def test_sharded_pairs_recall_with_coarse_assignment(spark, monkeypatch):
     within = {k for k, v in exact.items() if v[1]}
     assert within <= set(shd)
     assert len(shd) / len(exact) >= 0.85, (len(shd), len(exact))
+    assert built and all(two_level for _, two_level in built), built
 
 
 def test_ivf_topk_on_empty_corpus_returns_typed_empty(spark):
@@ -308,3 +322,44 @@ def test_ivf_topk_on_empty_corpus_returns_typed_empty(spark):
     out = ivf_topk(emb, emb, k=5, n_centroids=16, n_probe=4)
     assert out.collect() == []
     assert out.columns == ["query_id", "neighbor_id", "rank", "cosine"]
+
+
+def test_kernel_queries_invariant_to_batch_and_partition_counts(spark):
+    """k-means, IVF and PQ answers must not depend on how rows are cut
+    into Arrow batches or shuffle partitions: identical sorted rows under
+    the defaults and under 7-row batches with 37 shuffle partitions.  The
+    three queries of one setting run concurrently (as the runner's thread
+    pools run registry queries)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dev_clickhouse_spark.queries import REGISTRY
+
+    names = [
+        "semantic_cluster_kmeans", "ann_ivf_topk", "ann_pq_recall_contract",
+    ]
+    sf = "/root/testdata/sf0.001"
+
+    def rows(name):
+        return sorted(map(tuple, REGISTRY[name].fn(spark, sf).collect()))
+
+    def run():
+        with ThreadPoolExecutor(len(names)) as pool:
+            return dict(zip(names, pool.map(rows, names)))
+
+    keys = [
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.shuffle.partitions",
+    ]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    base = run()
+    try:
+        spark.conf.set(keys[0], "7")
+        spark.conf.set(keys[1], "37")
+        cut = run()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert cut == base

@@ -206,33 +206,6 @@ def test_ngram_df_cap_bounds_boilerplate(spark):
     assert 0.5 < verified[0].jaccard < 1.0
 
 
-def test_minhash_jvm_hash_path_same_verified_pairs(spark):
-    from dev_clickhouse_spark.llm.dedup import minhash_lsh_pairs, minhash_signatures_jvm
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    rows = [
-        (0, base),
-        (1, base),                               # exact dup of 0
-        (2, base.replace("dog", "cat")),         # near dup of 0/1
-        (3, "completely different content about spark query engines at scale"),
-        (4, "tiny doc"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    md5_pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()}
-    jvm_pairs = {
-        (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs, use_jvm_hash=True).collect()
-    }
-    # exact duplicates collide in every band under ANY hash; verified output
-    # is post-exact-Jaccard so both paths agree on what IS a near-dup
-    assert (0, 1) in md5_pairs and (0, 1) in jvm_pairs
-    assert md5_pairs == jvm_pairs
-
-    # JVM path emits the same signature shape the bucketer consumes
-    sig = minhash_signatures_jvm(docs)
-    assert [f[0] for f in sig.dtypes] == ["doc_id", "n_shingles", "minhash", "bands"]
-
-
 def test_dedup_clusters_warns_on_non_convergence(spark):
     import warnings as w
 
@@ -873,43 +846,22 @@ def test_training_export_shards_cover_all_docs(spark):
 
 
 def test_lang_id_arrow_twin_matches_explode_path(spark):
-    """The map-only Arrow twin must predict IDENTICALLY to the oracle-anchored
-    explode path — same profiles, same rank math, same tie-breaks — on the
-    driver corpus plus the edge shapes (sub-trigram docs → fallback)."""
-    from dev_clickhouse_spark.io import load_table
-    from dev_clickhouse_spark.llm.text import (
-        lang_id_predict,
-        lang_id_predict_arrow,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    jvm = {
-        r.doc_id: r.predicted_lang for r in lang_id_predict(docs).collect()
-    }
-    arrow = {
-        r.doc_id: r.predicted_lang
-        for r in lang_id_predict_arrow(docs).collect()
-    }
-    assert arrow == jvm and len(arrow) == docs.count()
+    """Edge shapes of the map-only language ID, pinned as literals (the
+    DuckDB oracle pins the documents table): sub-trigram, empty and NULL
+    texts take the first-language fallback, and a non-default id column
+    comes out renamed to doc_id and first, then the other columns, then
+    the prediction."""
+    from dev_clickhouse_spark.llm.text import lang_id_predict
 
     edge = spark.createDataFrame(
-        [(1, "ab"), (2, ""), (3, None), (4, "der die das und ist nicht")],
-        "doc_id long, text string",
+        [(1, "ab"), (2, ""), (3, None), (4, "der die das und ist nicht"),
+         (5, "the people and the children")],
+        "vec_id long, text string",
     )
-    jvm_e = {r.doc_id: r.predicted_lang for r in lang_id_predict(edge).collect()}
-    arrow_e = {
-        r.doc_id: r.predicted_lang for r in lang_id_predict_arrow(edge).collect()
-    }
-    assert arrow_e == jvm_e
-
-    # non-default id_col: both twins emit the SAME shape (id renamed to
-    # doc_id and first) — column contract parity, not just predictions
-    renamed = edge.withColumnRenamed("doc_id", "vec_id")
-    j = lang_id_predict(renamed, id_col="vec_id")
-    a = lang_id_predict_arrow(renamed, id_col="vec_id")
-    assert j.columns == a.columns
-    assert {r.doc_id: r.predicted_lang for r in j.collect()} == {
-        r.doc_id: r.predicted_lang for r in a.collect()
+    out = lang_id_predict(edge, id_col="vec_id")
+    assert out.columns == ["doc_id", "text", "predicted_lang"]
+    assert {r.doc_id: r.predicted_lang for r in out.collect()} == {
+        1: "de", 2: "de", 3: "de", 4: "de", 5: "en",
     }
 
 

@@ -267,7 +267,7 @@ KNOWN_SUPERLINEAR_TAIL: dict[str, dict] = {
             "(n_probe·n/1024) — locally n² BELOW the two-level "
             "coarse-quantizer crossover COARSE_MIN_K=1024, where dense "
             "BLAS beats the gather-bound coarse search (measured A/B in "
-            "similarity.COARSE_MIN_K's docstring: flat wins at k≤781, "
+            "centroids.COARSE_MIN_K's comment: flat wins at k≤781, "
             "coarse 2.2× faster at k=1950); past the crossover the "
             "assignment caps at n·√k ~ n^1.5, so the n² regime is "
             "bounded to k<1024 ≈ 131k vectors per probe job"
