@@ -9,6 +9,7 @@ approximate the primary-key skip index; small gold dims unpartitioned.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -33,15 +34,23 @@ def _strip_scheme(p: str) -> str:
     return p
 
 
-def _rename_exchange(p1: str, p2: str) -> bool:
-    """Atomically EXCHANGE two directory entries via Linux
+def _move_file(src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` (creating ``dst``'s directory) when it
+    exists — how a table's metadata document follows its data."""
+    if os.path.exists(src):
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+
+
+def _rename_exchange(p1: str, p2: str) -> None:
+    """Swap two directory entries.  Atomic via Linux
     ``renameat2(RENAME_EXCHANGE)`` — the syscall ClickHouse's Atomic
     database uses for ``EXCHANGE TABLES``, leaving no instant where
     either name is missing (the r12 soak's concurrent readers caught
     the 3-rename fallback's window: a reader planning a query exactly
-    between two renames served declared-empty).  Returns False when the
-    syscall is unavailable (non-Linux / old kernel / cross-device) so
-    the caller can fall back."""
+    between two renames served declared-empty).  Where the syscall is
+    unavailable (non-Linux / old kernel / cross-device) it falls back to
+    three renames, which leave a µs window where ``p1`` is missing."""
     try:
         import ctypes
         import ctypes.util
@@ -53,9 +62,42 @@ def _rename_exchange(p1: str, p2: str) -> bool:
             AT_FDCWD, os.fsencode(p1), AT_FDCWD, os.fsencode(p2),
             RENAME_EXCHANGE,
         )
-        return rc == 0
+        if rc == 0:
+            return
     except Exception:
-        return False
+        pass
+    tmp = os.path.join(
+        os.path.dirname(p1), f".exchange-{uuid.uuid4().hex[:8]}"
+    )
+    os.rename(p1, tmp)
+    os.rename(p2, p1)
+    os.rename(tmp, p2)
+
+
+@contextlib.contextmanager
+def _file_lock(lock: str, timeout: float = 30.0):
+    """Exclusive read-modify-write section via an O_EXCL lockfile — the
+    local-fs stand-in for a metastore transaction.  A crash inside the
+    section leaves the lockfile behind; the TimeoutError names it so an
+    operator can clear it (what it guards is never torn: every commit is
+    a whole file flipped into place atomically)."""
+    deadline = time.monotonic() + timeout
+    while True:
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            break
+        except FileExistsError:
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"lock busy for {timeout}s: {lock} "
+                    "(remove it if the holder crashed)"
+                ) from None
+            time.sleep(0.02)
+    try:
+        yield
+    finally:
+        os.close(fd)
+        os.unlink(lock)
 
 
 def conform_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -75,6 +117,13 @@ def conform_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.col(f.name))
     return df.select(*cols)
+
+
+def _declared_schema(meta: dict) -> T.StructType | None:
+    """The ALTERed schema a metadata document declares, else None."""
+    s = meta.get("schema")
+    return None if s is None else T.StructType.fromJson(s)
+
 
 #: tables partitioned by event_date + their in-partition sort key
 _PARTITIONED_SORT: dict[str, list[str]] = {
@@ -103,7 +152,16 @@ class Warehouse:
     WHILE appends land — the ClickHouse-parts/Iceberg-snapshot discipline
     instead of a single-writer maintenance window.  On a real deployment the
     pointer flip maps to a metastore row or an object-store conditional PUT;
-    here it is a rename on the local filesystem."""
+    here it is a rename on the local filesystem.
+
+    Every DECLARATION of a table (ALTERed schema, sort key, engine, skip
+    indexes, projections, computed columns, rename and cast chains, TTLs,
+    CLEAR COLUMN overlays, STOP MERGES) lives in ONE JSON document,
+    ``_schemas/<table>.json``.  :meth:`_meta` reads it (a missing document
+    means "no declarations": the in-code schema applies; a damaged one
+    raises), :meth:`_commit_meta` rewrites it whole under a lock and flips
+    it into place with ``os.replace``, so one ALTER is one atomic commit
+    and a read resolves one consistent set of declarations."""
 
     #: version files kept after a flip (debugging/undo); older ones pruned
     _MANIFEST_KEEP = 10
@@ -119,13 +177,53 @@ class Warehouse:
         #: ``codec="zstd"`` trades CPU for the 1.5-2x storage/IO cut the
         #: reference gets from its column codecs.
         self.codec = codec
-        #: mtime-keyed cache of parsed schema overrides — read()/read_window()
-        #: consult the override several times per call and run ~30×/tick
-        self._override_cache: dict[str, tuple[float, T.StructType]] = {}
-        self._json_meta_cache: dict[str, tuple] = {}
 
-    def _sort_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".sort.json")
+    # -- the per-table metadata document -------------------------------------
+
+    def _meta_path(self, table: str) -> str:
+        return os.path.join(self.root, "_schemas", table + ".json")
+
+    def _meta(self, table: str) -> dict:
+        """The table's metadata document: ``{}`` when it has none.  An
+        unreadable or damaged document raises — a silently defaulted
+        rename or cast chain would change query answers."""
+        p = self._meta_path(table)
+        try:
+            with open(p) as fh:
+                doc = json.load(fh)
+        except FileNotFoundError:
+            return {}
+        except (OSError, ValueError) as e:
+            raise ValueError(f"unreadable table metadata {p}: {e}") from e
+        if not isinstance(doc, dict):
+            raise ValueError(f"table metadata {p} is not a JSON object")
+        return doc
+
+    def _commit_meta(self, table: str, **changes) -> None:
+        """Read-modify-write the metadata document under its lock and flip
+        it into place atomically: readers see the old or the new document,
+        never a part.  A callable value maps the key's current value (None
+        when absent) to its new one inside the lock, so concurrent
+        declarations never lose each other's updates; a None or empty
+        value removes the key."""
+        p = self._meta_path(table)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with _file_lock(p + ".lock"):
+            old = self._meta(table)
+            doc = dict(old)
+            for k, v in changes.items():
+                if callable(v):
+                    v = v(doc.get(k))
+                if v is None or v == {} or v == []:
+                    doc.pop(k, None)
+                else:
+                    doc[k] = v
+            if doc == old:
+                return
+            tmp = p + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(doc, fh, indent=1)
+            os.replace(tmp, p)
 
     def set_partitioning(
         self, table: str, sort_key: list[str], partitioned: bool = True
@@ -139,22 +237,14 @@ class Warehouse:
         no ``event_date=`` directory level is minted.  Must be called
         before the first append; the two layouts don't mix.
 
-        PERSISTED (r12): the declaration lives under ``_schemas/`` like
-        every other per-table metadata, so a DDL-created table keeps its
-        layout across process restarts and the declaration travels with
-        the table through DETACH/EXCHANGE/DROP-to-trash."""
-        p = self._sort_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"sort": list(sort_key), "partitioned": bool(partitioned)},
-                fh, indent=1,
-            )
-        os.replace(tmp, p)
-
-    def _sort_decl(self, table: str) -> dict | None:
-        return self._load_json_meta(self._sort_path(table), None)
+        PERSISTED: the declaration is the ``sort`` key of the table's
+        metadata document, so a DDL-created table keeps its layout across
+        process restarts and the declaration travels with the table
+        through DETACH/EXCHANGE/DROP-to-trash."""
+        self._commit_meta(
+            table,
+            sort={"sort": list(sort_key), "partitioned": bool(partitioned)},
+        )
 
     def modify_order_by(self, table: str, sort_key: list[str]) -> None:
         """``ALTER TABLE … MODIFY ORDER BY`` — extend the sort key.  The
@@ -190,17 +280,22 @@ class Warehouse:
             f"MODIFY ORDER BY ({', '.join(sort_key)})",
         )
 
-    def _is_date_partitioned(self, table: str) -> bool:
+    def _is_date_partitioned(
+        self, table: str, meta: dict | None = None
+    ) -> bool:
         """Declared layout check: sorted tables are date-partitioned
-        unless explicitly declared ORDER-BY-only."""
-        decl = self._sort_decl(table)
+        unless explicitly declared ORDER-BY-only.  ``meta`` is the
+        already-resolved metadata document (resolved here when None)."""
+        decl = (self._meta(table) if meta is None else meta).get("sort")
         if decl is not None:
             return bool(decl.get("partitioned", True))
         return table in _PARTITIONED_SORT
 
-    def _sort_key(self, table: str) -> list[str] | None:
+    def _sort_key(
+        self, table: str, meta: dict | None = None
+    ) -> list[str] | None:
         """Sort key for a date-partitioned table, else None."""
-        decl = self._sort_decl(table)
+        decl = (self._meta(table) if meta is None else meta).get("sort")
         if decl is not None:
             return list(decl["sort"])
         return _PARTITIONED_SORT.get(table)
@@ -242,15 +337,13 @@ class Warehouse:
             raise ValueError(f"table {table!r} is already detached")
         os.makedirs(self._detached_dir(), exist_ok=True)
         os.rename(src, dst)
-        # schema overrides / computed-column metadata travel WITH the
-        # table: left under _schemas/ they would be inherited by a new
-        # table created under the same name while this one is detached
-        meta_dst = os.path.join(self._detached_dir(), "_schemas")
-        for p in self._table_meta_paths(table):
-            if os.path.exists(p):
-                os.makedirs(meta_dst, exist_ok=True)
-                os.rename(p, os.path.join(meta_dst, os.path.basename(p)))
-        self._override_cache.pop(table, None)
+        # the metadata document travels WITH the table: left under
+        # _schemas/ it would be inherited by a new table created under
+        # the same name while this one is detached
+        _move_file(
+            self._meta_path(table),
+            os.path.join(self._detached_dir(), "_schemas", table + ".json"),
+        )
 
     def attach_table(self, table: str) -> None:
         """``ATTACH TABLE`` — re-register a detached table (the reverse
@@ -266,14 +359,11 @@ class Warehouse:
                 f"cannot attach {table!r}: a live table directory exists"
             )
         os.rename(src, dst)
-        # restore schema/computed metadata detached alongside the data
-        meta_src = os.path.join(self._detached_dir(), "_schemas")
-        for p in self._table_meta_paths(table):
-            cand = os.path.join(meta_src, os.path.basename(p))
-            if os.path.exists(cand):
-                os.makedirs(os.path.dirname(p), exist_ok=True)
-                os.rename(cand, p)
-        self._override_cache.pop(table, None)
+        # restore the metadata document detached alongside the data
+        _move_file(
+            os.path.join(self._detached_dir(), "_schemas", table + ".json"),
+            self._meta_path(table),
+        )
 
     def detached_tables(self) -> list[str]:
         """Names currently under ``_detached/`` (the ``system.detached_
@@ -286,28 +376,7 @@ class Warehouse:
         except OSError:
             return []
 
-    def _table_meta_paths(self, table: str) -> tuple:
-        """Every per-table metadata file under ``_schemas/`` — the set
-        that must travel with the table through DETACH/ATTACH."""
-        return (
-            self._schema_override_path(table),
-            self._computed_cols_path(table),
-            self._ttl_path(table),
-            self._renames_path(table),
-            self._casts_path(table),
-            self._cleared_path(table),
-            self._colttl_path(table),
-            self._stop_merges_path(table),
-            self._engine_path(table),
-            self._indexes_path(table),
-            self._projections_path(table),
-            self._sort_path(table),
-        )
-
     # -- declared MergeTree engine family (CREATE TABLE ENGINE = …) ---------
-
-    def _engine_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".engine.json")
 
     def set_table_engine(
         self,
@@ -331,28 +400,14 @@ class Warehouse:
             spec["sign_col"] = sign_col
         if sum_cols:
             spec["sum_cols"] = list(sum_cols)
-        p = self._engine_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(spec, fh, indent=1)
-        os.replace(tmp, p)
+        self._commit_meta(table, engine=spec)
 
     def table_engine(self, table: str) -> dict | None:
         """The declared engine spec ({"engine", "version_col", …}) or None
         for plain-MergeTree/undeclared tables."""
-        spec = self._load_json_meta(self._engine_path(table), None)
-        return spec if spec else None
+        return self._meta(table).get("engine")
 
     # -- declared skip indexes / projections (CREATE TABLE INDEX/PROJECTION) --
-
-    def _indexes_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".indexes.json")
-
-    def _projections_path(self, table: str) -> str:
-        return os.path.join(
-            self.root, "_schemas", table + ".projections.json"
-        )
 
     def declare_skip_index(
         self,
@@ -367,20 +422,16 @@ class Warehouse:
         :meth:`skip_index_for` materializes the live SkipIndex whose
         ``ensure()`` builds sidecars lazily — exactly CH's deferred
         ``MATERIALIZE INDEX`` discipline."""
-        idx = self._load_json_meta(self._indexes_path(table), {})
-        idx[name] = {
+        spec = {
             "col": col, "type": index_type.lower(),
             "params": list(params or []),
         }
-        p = self._indexes_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(idx, fh, indent=1)
-        os.replace(tmp, p)
+        self._commit_meta(
+            table, indexes=lambda idx: {**(idx or {}), name: spec}
+        )
 
     def declared_skip_indexes(self, table: str) -> dict:
-        return self._load_json_meta(self._indexes_path(table), {})
+        return self._meta(table).get("indexes", {})
 
     def skip_index_for(self, table: str):
         """The live SkipIndex built from this table's declarations, or
@@ -418,18 +469,13 @@ class Warehouse:
         declaration; :meth:`projection_set_for` materializes the live
         ProjectionSet (ensure() folds states incrementally, answer()
         rewrites matching rollups onto it)."""
-        projs = self._load_json_meta(self._projections_path(table), {})
-        projs[name] = {"dims": list(dims),
-                       "measures": [list(m) for m in measures]}
-        p = self._projections_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(projs, fh, indent=1)
-        os.replace(tmp, p)
+        spec = {"dims": list(dims), "measures": [list(m) for m in measures]}
+        self._commit_meta(
+            table, projections=lambda projs: {**(projs or {}), name: spec}
+        )
 
     def declared_projections(self, table: str) -> dict:
-        return self._load_json_meta(self._projections_path(table), {})
+        return self._meta(table).get("projections", {})
 
     def projection_set_for(self, table: str):
         """The live ProjectionSet over this table's declared
@@ -453,84 +499,25 @@ class Warehouse:
 
     # -- declared-schema registry (ALTER target) ---------------------------
 
-    def _schema_override_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".json")
-
     def schema_override(self, table: str) -> T.StructType | None:
         """The persisted post-ALTER schema, if a migration has been applied
-        (quality/migrate.py writes it); None = the in-code declaration.
-        Parsed once per (file, mtime) — the atomic replace in
-        ``save_schema_override`` bumps the mtime, invalidating the cache."""
-        p = self._schema_override_path(table)
-        try:
-            mtime = os.path.getmtime(p)
-        except OSError:
-            return None
-        hit = self._override_cache.get(table)
-        if hit is not None and hit[0] == mtime:
-            return hit[1]
-        with open(p) as fh:
-            schema = T.StructType.fromJson(json.load(fh))
-        self._override_cache[table] = (mtime, schema)
-        return schema
+        (quality/migrate.py writes it); None = the in-code declaration."""
+        return _declared_schema(self._meta(table))
 
     def save_schema_override(self, table: str, schema: T.StructType) -> None:
         """Persist an ALTERed declared schema — the migration COMMIT.  Only
         quality/migrate.SchemaMigrator should call this (it validates the
         change is additive/widening first)."""
-        p = self._schema_override_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema.jsonValue(), fh, indent=1)
-        os.replace(tmp, p)  # atomic: readers see old or new, never partial
+        self._commit_meta(table, schema=schema.jsonValue())
 
     # -- computed columns (DEFAULT / MATERIALIZED / ALIAS) ------------------
-
-    def _computed_cols_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".computed.json")
-
-    def _load_json_meta(self, path: str, default):
-        """mtime-cached JSON metadata loader (computed columns, rename
-        chains, TTL specs): table reads consult these per member, so a
-        30-member scan must not open the same file 30 times.  The atomic
-        replace every writer uses bumps the mtime, invalidating the
-        entry; a missing file caches the default against mtime None."""
-        try:
-            mtime = os.path.getmtime(path)
-        except OSError:
-            mtime = None
-        import copy
-
-        hit = self._json_meta_cache.get(path)
-        if hit is not None and hit[0] == mtime:
-            # copy out: callers mutate these dicts before re-saving
-            return copy.deepcopy(hit[1])
-        if mtime is None:
-            val = default
-        else:
-            try:
-                with open(path) as fh:
-                    val = json.load(fh)
-            except (OSError, ValueError):
-                val = default
-        self._json_meta_cache[path] = (mtime, val)
-        return copy.deepcopy(val)
 
     def computed_columns(self, table: str) -> dict[str, dict]:
         """Computed-column metadata applied by this warehouse's read/write
         paths: ``{name: {"kind": default|materialized|alias, "expr": sql,
         "type": ddl}}`` in declaration order.  Written only by
         ``quality/migrate.SchemaMigrator.add_computed_column``."""
-        return self._load_json_meta(self._computed_cols_path(table), {})
-
-    def save_computed_columns(self, table: str, cols: dict) -> None:
-        p = self._computed_cols_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(cols, fh, indent=1)
-        os.replace(tmp, p)
+        return self._meta(table).get("computed", {})
 
     @staticmethod
     def _member_is_flat(p: str) -> bool:
@@ -574,24 +561,21 @@ class Warehouse:
                         break
         return lacking
 
-    def _stored_computed(self, table: str) -> dict:
+    @staticmethod
+    def _stored_computed(meta: dict) -> dict:
         return {
-            n: m for n, m in self.computed_columns(table).items()
+            n: m for n, m in meta.get("computed", {}).items()
             if m["kind"] != "alias"
         }
 
     def _backfill_member_computed(
-        self, table: str, member_root: str, df: DataFrame,
-        stored: dict | None = None,
+        self, member_root: str, df: DataFrame, stored: dict
     ) -> DataFrame:
         """Per-member read-side back-fill of DEFAULT/MATERIALIZED columns:
         only members whose files PREDATE the ALTER (footer lacks the
         column) compute the expression; post-ALTER members serve stored
         values verbatim, preserving explicitly inserted NULLs.  ONE
         projection per member (see ``_apply_renames``)."""
-        stored = (
-            self._stored_computed(table) if stored is None else stored
-        )
         if not stored:
             return df
         lacking = self._computed_cols_lacking(
@@ -610,9 +594,6 @@ class Warehouse:
 
     # -- column renames (ALTER TABLE … RENAME COLUMN) ------------------------
 
-    def _renames_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".renames.json")
-
     def renames(self, table: str) -> dict:
         """Live rename chains: ``{new_name: [old_name, older_name, …]}``.
         Old parquet files keep the old column name in their footer; reads
@@ -620,21 +601,13 @@ class Warehouse:
         ``coalesce(new, old…)`` — metadata-only at any table size, the
         ClickHouse RENAME COLUMN contract.  Compaction writes the new
         name, so chains retire as merges touch old files."""
-        return self._load_json_meta(self._renames_path(table), {})
+        return self._meta(table).get("renames", {})
 
-    def save_renames(self, table: str, ren: dict) -> None:
-        p = self._renames_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(ren, fh, indent=1)
-        os.replace(tmp, p)
-
-    def _legacy_read_schema(self, table: str) -> T.StructType:
+    def _legacy_read_schema(self, table: str, meta: dict) -> T.StructType:
         """Declared schema extended with the legacy (pre-rename) field
         names, so old files' values surface instead of reading as NULL."""
-        schema = self.schema_for(table)
-        ren = self.renames(table)
+        schema = self.schema_for(table, meta)
+        ren = meta.get("renames", {})
         if not ren:
             return schema
         by_name = {f.name: f for f in schema.fields}
@@ -648,16 +621,14 @@ class Warehouse:
                     extra.append(T.StructField(old, f.dataType, True))
         return T.StructType([*schema.fields, *extra])
 
-    def _apply_renames(
-        self, table: str, df: DataFrame, ren: dict | None = None
-    ) -> DataFrame:
+    @staticmethod
+    def _apply_renames(df: DataFrame, ren: dict) -> DataFrame:
         """Fold legacy columns into their renamed successor and drop
         them.  A file carries a value under exactly ONE of the chain's
         names, so the coalesce is a disjoint merge, not a preference.
         ONE projection, not a withColumn chain — reads apply this per
         member, and N members × chained analysis passes is real driver
         latency."""
-        ren = self.renames(table) if ren is None else ren
         if not ren:
             return df
         repl, drops = {}, set()
@@ -675,9 +646,6 @@ class Warehouse:
         )
 
     # -- declared table TTL (ALTER TABLE … MODIFY TTL) -----------------------
-
-    def _ttl_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".ttl.json")
 
     def set_table_ttl(
         self,
@@ -722,12 +690,7 @@ class Warehouse:
         if group_by is not None:
             spec["group_by"] = list(group_by)
             spec["aggregates"] = dict(aggregates)
-        p = self._ttl_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(spec, fh, indent=1)
-        os.replace(tmp, p)
+        self._commit_meta(table, ttl=spec)
         self._log_mutation(
             table, "modify_ttl",
             f"MODIFY TTL {ttl_col} + INTERVAL {interval_days} DAY"
@@ -736,19 +699,13 @@ class Warehouse:
 
     def table_ttl(self, table: str) -> dict | None:
         """The declared TTL spec, or None (``REMOVE TTL`` state)."""
-        return self._load_json_meta(self._ttl_path(table), None)
+        return self._meta(table).get("ttl")
 
     def remove_table_ttl(self, table: str) -> None:
         """``ALTER TABLE … REMOVE TTL``."""
-        try:
-            os.remove(self._ttl_path(table))
-        except OSError:
-            pass
+        self._commit_meta(table, ttl=None)
 
     # -- MODIFY COLUMN type (cast-on-read chains) ----------------------------
-
-    def _casts_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".casts.json")
 
     def column_casts(self, table: str) -> dict:
         """Live ``ALTER TABLE … MODIFY COLUMN col type`` retype chains:
@@ -760,20 +717,9 @@ class Warehouse:
         new type materializes as merges rewrite members (the same lazy
         discipline as RENAME COLUMN), and entries retire once no live
         member's footer disagrees (``_gc_alter_overlays``)."""
-        return self._load_json_meta(self._casts_path(table), {})
-
-    def save_column_casts(self, table: str, casts: dict) -> None:
-        p = self._casts_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(casts, fh, indent=1)
-        os.replace(tmp, p)
+        return self._meta(table).get("casts", {})
 
     # -- CLEAR COLUMN IN PARTITION (member-scoped reset overlays) ------------
-
-    def _cleared_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".cleared.json")
 
     def cleared_entries(self, table: str) -> list:
         """Live ``CLEAR COLUMN … IN PARTITION`` overlays:
@@ -783,15 +729,7 @@ class Warehouse:
         contract).  Reads mask the column to its DEFAULT (or typed
         NULL) for the addressed members' rows in that partition;
         compaction materializes the mask and retires the entry."""
-        return self._load_json_meta(self._cleared_path(table), [])
-
-    def save_cleared_entries(self, table: str, entries: list) -> None:
-        p = self._cleared_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entries, fh, indent=1)
-        os.replace(tmp, p)
+        return self._meta(table).get("cleared", [])
 
     def clear_column_in_partition(self, table: str, col: str, date) -> dict:
         """``ALTER TABLE … CLEAR COLUMN col IN PARTITION 'date'`` — O(1)
@@ -838,9 +776,7 @@ class Warehouse:
                 "compact() to materialize them before CLEAR COLUMN"
             )
         entry = {"col": col, "date": str(date), "members": list(man["members"])}
-        entries = self.cleared_entries(table)
-        entries.append(entry)
-        self.save_cleared_entries(table, entries)
+        self._commit_meta(table, cleared=lambda es: [*(es or []), entry])
         self._log_mutation(
             table, "clear_column",
             f"CLEAR COLUMN {col} IN PARTITION '{date}'",
@@ -848,17 +784,17 @@ class Warehouse:
         )
         return entry
 
-    def _reset_value(self, table: str, col: str):
+    def _reset_value(self, table: str, col: str, meta: dict):
         """Reset value for CLEAR COLUMN / column TTL: the column's
         declared DEFAULT expression when one exists (ClickHouse resets
         to the column default), else a typed NULL."""
-        meta = self.computed_columns(table).get(col)
-        if meta is not None and meta["kind"] == "default":
-            return F.expr(meta["expr"]).cast(meta["type"])
+        cc = meta.get("computed", {}).get(col)
+        if cc is not None and cc["kind"] == "default":
+            return F.expr(cc["expr"]).cast(cc["type"])
         dtype = next(
             (
                 f.dataType
-                for f in self.schema_for(table).fields
+                for f in self.schema_for(table, meta).fields
                 if f.name == col
             ),
             None,
@@ -867,16 +803,13 @@ class Warehouse:
 
     # -- column-level TTL (ALTER TABLE … MODIFY COLUMN col … TTL expr) -------
 
-    def _colttl_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".colttl.json")
-
     def column_ttls(self, table: str) -> dict:
         """Declared column TTLs: ``{col: {"ttl_col", "interval_days"}}``.
         Enforced by ``compact`` (the merge) like table TTL: expired rows
         keep the row but the column resets to its DEFAULT/NULL — the
         ClickHouse column-TTL storage reclaim for wide columns whose
         value stops mattering before the row does."""
-        return self._load_json_meta(self._colttl_path(table), {})
+        return self._meta(table).get("colttl", {})
 
     def set_column_ttl(
         self,
@@ -899,16 +832,10 @@ class Warehouse:
             )
         if ttl_col not in names:
             raise ValueError(f"TTL column {ttl_col!r} not on {table!r}")
-        ttls = self.column_ttls(table)
-        ttls[col] = {
-            "ttl_col": ttl_col, "interval_days": float(interval_days)
-        }
-        p = self._colttl_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(ttls, fh, indent=1)
-        os.replace(tmp, p)
+        spec = {"ttl_col": ttl_col, "interval_days": float(interval_days)}
+        self._commit_meta(
+            table, colttl=lambda ttls: {**(ttls or {}), col: spec}
+        )
         self._log_mutation(
             table, "modify_column_ttl",
             f"MODIFY COLUMN {col} TTL {ttl_col} + "
@@ -916,26 +843,20 @@ class Warehouse:
         )
 
     def remove_column_ttl(self, table: str, col: str) -> None:
-        ttls = self.column_ttls(table)
-        if ttls.pop(col, None) is not None:
-            if ttls:
-                p = self._colttl_path(table)
-                tmp = p + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(ttls, fh, indent=1)
-                os.replace(tmp, p)
-            else:
-                try:
-                    os.remove(self._colttl_path(table))
-                except OSError:
-                    pass
+        self._commit_meta(
+            table,
+            colttl=lambda ttls: {
+                c: s for c, s in (ttls or {}).items() if c != col
+            },
+        )
 
     def _column_ttl_transform(self, table: str, specs: dict, now_dt):
         """Merge-fold for declared column TTLs: ONE projection resetting
         each expired column to its DEFAULT/NULL; row count unchanged."""
         import datetime
 
-        resets = {c: self._reset_value(table, c) for c in specs}
+        meta = self._meta(table)
+        resets = {c: self._reset_value(table, c, meta) for c in specs}
 
         def transform(df: DataFrame) -> DataFrame:
             cols = []
@@ -960,7 +881,8 @@ class Warehouse:
         return transform
 
     def _apply_computed_read(
-        self, table: str, df: DataFrame, stored_mode: str = "verbatim"
+        self, table: str, df: DataFrame, meta: dict,
+        stored_mode: str = "verbatim",
     ) -> DataFrame:
         """Read-side computed columns, ClickHouse part semantics:
 
@@ -976,9 +898,9 @@ class Warehouse:
           and the decision keys on ``input_file_name()`` (safe there: one
           scan, no joins to break file lineage).
         """
-        for name, meta in self.computed_columns(table).items():
-            expr = F.expr(meta["expr"]).cast(meta["type"])
-            if meta["kind"] == "alias":
+        for name, cc in meta.get("computed", {}).items():
+            expr = F.expr(cc["expr"]).cast(cc["type"])
+            if cc["kind"] == "alias":
                 df = df.withColumn(name, expr)
             elif name not in df.columns:
                 df = df.withColumn(name, expr)
@@ -1090,40 +1012,13 @@ class Warehouse:
                 except OSError:
                     pass
 
-    def _manifest_lock(self, table: str, timeout: float = 30.0):
-        """Exclusive manifest read-modify-write section via an O_EXCL
-        lockfile — the local-fs stand-in for a metastore transaction.  A
-        crash inside the section leaves the lockfile behind; the TimeoutError
-        names it so an operator can clear it (the manifest itself is never
-        torn: version files are whole and CURRENT flips atomically)."""
-        import contextlib
-        import time as _time
-
+    def _manifest_lock(self, table: str):
+        """Exclusive manifest read-modify-write section (the manifest is
+        never torn: version files are whole and CURRENT flips
+        atomically)."""
         d = self._manifest_dir(table)
         os.makedirs(d, exist_ok=True)
-        lock = os.path.join(d, "LOCK")
-
-        @contextlib.contextmanager
-        def _held():
-            deadline = _time.monotonic() + timeout
-            while True:
-                try:
-                    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    break
-                except FileExistsError:
-                    if _time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"manifest lock busy for {timeout}s: {lock} "
-                            "(remove it if the holder crashed)"
-                        ) from None
-                    _time.sleep(0.02)
-            try:
-                yield
-            finally:
-                os.close(fd)
-                os.unlink(lock)
-
-        return _held()
+        return _file_lock(os.path.join(d, "LOCK"))
 
     def _manifest_commit_batch(self, table: str, batch_id: int) -> None:
         """Register a fully-written ``ingest_batch=<id>`` dir as live +
@@ -1167,9 +1062,14 @@ class Warehouse:
         return {"version": 0, "members": members,
                 "committed_batches": committed}
 
-    def schema_for(self, table: str) -> T.StructType:
-        schema = self.schema_override(table) or _ALL_SCHEMAS[table]
-        if self._is_date_partitioned(table) and not any(
+    def schema_for(
+        self, table: str, meta: dict | None = None
+    ) -> T.StructType:
+        """The declared schema (the ALTERed one when a migration has been
+        applied); ``meta`` is the already-resolved metadata document."""
+        meta = self._meta(table) if meta is None else meta
+        schema = _declared_schema(meta) or _ALL_SCHEMAS[table]
+        if self._is_date_partitioned(table, meta) and not any(
             f.name == "event_date" for f in schema.fields
         ):
             return T.StructType(
@@ -1184,17 +1084,21 @@ class Warehouse:
         appends is an implementation detail and is hidden from readers.
         After an applied migration the read conforms to the ALTERed schema
         (typed NULLs for added columns, casts for widened ones) — old files
-        are served through the new schema without rewrite."""
+        are served through the new schema without rewrite.  The metadata
+        document is resolved ONCE and every step below uses that copy."""
+        meta = self._meta(table)
         if not self.exists(table):
-            return self._apply_computed_read(
-                table, self.spark.createDataFrame([], self.schema_for(table))
+            empty = self.spark.createDataFrame(
+                [], self.schema_for(table, meta)
             )
+            return self._apply_computed_read(table, empty, meta)
         man = self.load_manifest(table)
         if man is not None:
             return self._apply_computed_read(
-                table, self._read_members(table, man["members"])
+                table, self._read_members(table, man["members"], meta=meta),
+                meta,
             )
-        override = self.schema_override(table)
+        override = meta.get("schema")
         if override is None:
             df = read_parquet(self.spark, self.path(table))
         else:
@@ -1203,18 +1107,20 @@ class Warehouse:
             # the added column in the others.  Reading with the declared
             # schema is authoritative and free: missing columns surface as
             # NULLs, widened types use the parquet reader's type promotion.
-            expected = self._legacy_read_schema(table)
+            expected = self._legacy_read_schema(table, meta)
             if self._batch_layout(table):
                 expected = T.StructType(
                     [*expected.fields, T.StructField("ingest_batch", T.LongType())]
                 )
             df = self.spark.read.schema(expected).parquet(self.path(table))
-            df = self._apply_renames(table, df)
+            df = self._apply_renames(df, meta.get("renames", {}))
         if "ingest_batch" in df.columns:
             df = df.drop("ingest_batch")
         if override is not None:
-            df = conform_to_schema(df, self.schema_for(table))
-        return self._apply_computed_read(table, df, stored_mode="by_file")
+            df = conform_to_schema(df, self.schema_for(table, meta))
+        return self._apply_computed_read(
+            table, df, meta, stored_mode="by_file"
+        )
 
     def read_at_version(self, table: str, version: int) -> DataFrame:
         """Snapshot read: the table EXACTLY as manifest version ``version``
@@ -1245,12 +1151,14 @@ class Warehouse:
             )
         # computed columns apply to snapshots too — ALIAS/back-fill are
         # read-time semantics, not part of the stored member set
+        meta = self._meta(table)
         return self._apply_computed_read(
-            table, self._read_members(table, man["members"])
+            table, self._read_members(table, man["members"], meta=meta), meta
         )
 
     def _read_members(
-        self, table: str, members: list[str], keep_dv_tag: bool = False
+        self, table: str, members: list[str], keep_dv_tag: bool = False,
+        meta: dict | None = None,
     ) -> DataFrame:
         """Scan exactly the manifest's live member dirs.  Each member is its
         own parquet root (event_date partition dirs inside), so a pointer
@@ -1264,8 +1172,10 @@ class Warehouse:
         position) BEFORE the union — the hidden column only resolves on a
         raw scan — and the DV anti-join masks deleted rows; with
         ``keep_dv_tag`` the position columns stay visible (the
-        delete-writer needs them)."""
-        override = self.schema_override(table)
+        delete-writer needs them).  ``meta`` is the caller's resolved
+        metadata document (resolved here when None)."""
+        meta = self._meta(table) if meta is None else meta
+        override = meta.get("schema")
         dv_files = self._dv_files(table)
         patch_files = self._patch_files(table)
         tag = bool(dv_files) or bool(patch_files) or keep_dv_tag
@@ -1275,10 +1185,11 @@ class Warehouse:
         # probe measured the chained per-member build at ~1.3 s driver
         # time for 30 members before this hoist)
         legacy_schema = (
-            self._legacy_read_schema(table) if override is not None else None
+            self._legacy_read_schema(table, meta)
+            if override is not None else None
         )
-        ren = self.renames(table)
-        stored = self._stored_computed(table)
+        ren = meta.get("renames", {})
+        stored = self._stored_computed(meta)
         # MODIFY COLUMN cast-on-read + CLEAR COLUMN overlays (both
         # member-addressed, both metadata-only until merges materialize
         # them).  The cast decision is taken per member from the parquet
@@ -1291,9 +1202,9 @@ class Warehouse:
             if legacy_schema is not None
             else {}
         )
-        cleared = self.cleared_entries(table)
+        cleared = meta.get("cleared", [])
         clear_resets = {
-            e["col"]: self._reset_value(table, e["col"])
+            e["col"]: self._reset_value(table, e["col"], meta)
             for e in cleared
         }
         live = [
@@ -1372,7 +1283,7 @@ class Warehouse:
             # stored values verbatim, explicit NULLs included.  Doing it
             # here — before the union and any DV/patch join — keeps the
             # decision on the member scan where file lineage is exact.
-            df = self._backfill_member_computed(table, p, df, stored=stored)
+            df = self._backfill_member_computed(p, df, stored)
             # CLEAR COLUMN overlays addressed to this member (mask rows of
             # the cleared partition to the column DEFAULT/NULL) + MODIFY
             # COLUMN casts — folded as ONE projection per affected member,
@@ -1409,7 +1320,9 @@ class Warehouse:
                 )
             dfs.append(df)
         if not dfs:
-            return self.spark.createDataFrame([], self.schema_for(table))
+            return self.spark.createDataFrame(
+                [], self.schema_for(table, meta)
+            )
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
@@ -1417,7 +1330,7 @@ class Warehouse:
         # holds a value in pre-rename members and NULL in post-rename
         # ones, so coalesce(new, old…) is exact here, and patch rows
         # (written post-read, new names only) pass through untouched
-        out = self._apply_renames(table, out, ren=ren)
+        out = self._apply_renames(out, ren)
         if patch_files:
             # lightweight UPDATE (patch parts): replace each patched row
             # address with its LATEST patch row — the patch keeps the
@@ -1479,7 +1392,7 @@ class Warehouse:
         if tag and not keep_dv_tag:
             out = out.drop("__dv_file", "__dv_pos")
         if override is not None:
-            target = self.schema_for(table)
+            target = self.schema_for(table, meta)
             if tag and keep_dv_tag:
                 # the delete-writer needs the position tag to survive the
                 # declared-schema projection
@@ -2268,28 +2181,30 @@ class Warehouse:
         man = self.load_manifest(table)
         if man is None:
             return
-        live = list(man["members"])
-        casts = self.column_casts(table)
-        if casts:
-            stale: set = set()
-            for m in live:
-                fp = first_parquet(os.path.join(self.path(table), m))
-                if fp is None:
-                    continue
-                ftypes = {
-                    f.name: f.dataType for f in parquet_schema(fp).fields
-                }
-                for c, ddl in casts.items():
-                    if c in ftypes and ftypes[c].simpleString() != ddl:
-                        stale.add(c)
-            kept = {c: d for c, d in casts.items() if c in stale}
-            if kept != casts:
-                self.save_column_casts(table, kept)
-        entries = self.cleared_entries(table)
-        if entries:
-            kept_e = [e for e in entries if set(e["members"]) & set(live)]
-            if len(kept_e) != len(entries):
-                self.save_cleared_entries(table, kept_e)
+        live = set(man["members"])
+        meta = self._meta(table)
+        casts = meta.get("casts", {})
+        if not casts and not meta.get("cleared"):
+            return
+        stale: set = set()
+        for m in live if casts else ():
+            fp = first_parquet(os.path.join(self.path(table), m))
+            if fp is None:
+                continue
+            ftypes = {f.name: f.dataType for f in parquet_schema(fp).fields}
+            for c, ddl in casts.items():
+                if c in ftypes and ftypes[c].simpleString() != ddl:
+                    stale.add(c)
+        retired = {c: d for c, d in casts.items() if c not in stale}
+        self._commit_meta(
+            table,
+            casts=lambda cs: {
+                c: d for c, d in (cs or {}).items() if retired.get(c) != d
+            },
+            cleared=lambda es: [
+                e for e in (es or []) if set(e["members"]) & live
+            ],
+        )
 
     def materialize_column(self, table: str, name: str) -> dict:
         """``ALTER TABLE … MATERIALIZE COLUMN name`` — rewrite ONLY the
@@ -2300,7 +2215,7 @@ class Warehouse:
         ClickHouse materialize-mutation contract (mutations address the
         parts that need them).  Returns ``{"members_rewritten",
         "members_kept"}``."""
-        stored = self._stored_computed(table)
+        stored = self._stored_computed(self._meta(table))
         if name not in stored:
             raise ValueError(
                 f"column {name!r} of {table!r} is not a stored "
@@ -2725,10 +2640,9 @@ class Warehouse:
         # clones carry the same (unmasked) bytes under new names, so each
         # entry's member list must follow the rename or the mask silently
         # stops applying (dropped-away members leave the list)
-        entries = self.cleared_entries(table)
-        if entries:
+        def remap(entries):
             remapped = []
-            for e in entries:
+            for e in entries or []:
                 ms = [
                     replaced.get(m, m)
                     for m in e["members"]
@@ -2736,7 +2650,9 @@ class Warehouse:
                 ]
                 if ms:
                     remapped.append({**e, "members": ms})
-            self.save_cleared_entries(table, remapped)
+            return remapped
+
+        self._commit_meta(table, cleared=remap)
         with self._manifest_lock(table):
             cur = self.load_manifest(table)
             members = []
@@ -2854,7 +2770,9 @@ class Warehouse:
     ) -> dict:
         """``BACKUP TABLE … TO Disk(…)`` analog: a CONSISTENT snapshot of
         the current manifest state — live members, deletion vectors,
-        patches, schema override and the replay ledger — hardlink-cloned
+        patches, the replay ledger and the table's whole metadata
+        document (schema, rename/cast chains, computed columns, CLEAR
+        overlays, engine, TTLs) — hardlink-cloned
         (copy across filesystems).  Taken under the manifest lock so a
         concurrent append/compaction pointer flip cannot tear it;
         O(files) + O(overlay bytes), zero data rows rewritten.  Restore
@@ -2981,9 +2899,7 @@ class Warehouse:
                 meta["base_backup"] = base_abs
                 meta["base_members"] = base_members
                 meta["base_overlays"] = base_overlays
-            ov = self.schema_override(table)
-            if ov is not None:
-                meta["schema_override"] = ov.jsonValue()
+            meta["table_meta"] = self._meta(table)
         with open(os.path.join(dest, "backup.json"), "w") as fh:
             json.dump(meta, fh, indent=1)
         return {
@@ -3063,10 +2979,7 @@ class Warehouse:
                 remapped.coalesce(1).write.mode("overwrite").parquet(
                     os.path.join(new_root, sub, entry)
                 )
-        if "schema_override" in meta:
-            self.save_schema_override(
-                table, T.StructType.fromJson(meta["schema_override"])
-            )
+        self._commit_meta(table, **meta["table_meta"])
         with self._manifest_lock(table):
             self._write_manifest(
                 table,
@@ -3555,7 +3468,7 @@ class Warehouse:
 
     def drop_table(self, table: str) -> str:
         """``DROP TABLE`` — the data moves to a timestamped trash entry
-        (with its per-table metadata) instead of vanishing, the CH Atomic
+        (with its metadata document) instead of vanishing, the CH Atomic
         database behavior (``database_atomic_delay_before_drop_table``):
         ``undrop_table`` restores it until ``purge_dropped`` reclaims the
         space.  Returns the trash entry name."""
@@ -3563,14 +3476,9 @@ class Warehouse:
             raise ValueError(f"no table {table!r} to drop")
         entry = f"{table}@{int(time.time() * 1000)}"
         dst = os.path.join(self._trash_dir(), entry)
-        os.makedirs(os.path.join(dst, "_meta"), exist_ok=True)
+        os.makedirs(dst, exist_ok=True)
         os.rename(self.path(table), os.path.join(dst, "data"))
-        for p in self._table_meta_paths(table):
-            if os.path.exists(p):
-                os.rename(
-                    p, os.path.join(dst, "_meta", os.path.basename(p))
-                )
-        self._override_cache.pop(table, None)
+        _move_file(self._meta_path(table), os.path.join(dst, "meta.json"))
         return entry
 
     def dropped_tables(self) -> list[str]:
@@ -3597,16 +3505,8 @@ class Warehouse:
             raise LookupError(f"no dropped table {table!r} in the trash")
         src = os.path.join(self._trash_dir(), entry)
         os.rename(os.path.join(src, "data"), self.path(table))
-        meta = os.path.join(src, "_meta")
-        if os.path.isdir(meta):
-            os.makedirs(os.path.join(self.root, "_schemas"), exist_ok=True)
-            for f in os.listdir(meta):
-                os.rename(
-                    os.path.join(meta, f),
-                    os.path.join(self.root, "_schemas", f),
-                )
+        _move_file(os.path.join(src, "meta.json"), self._meta_path(table))
         shutil.rmtree(src, ignore_errors=True)
-        self._override_cache.pop(table, None)
 
     def purge_dropped(self, older_than_sec: float = 8 * 3600) -> list[str]:
         """Reclaim trash entries older than the retention window (the CH
@@ -3637,10 +3537,11 @@ class Warehouse:
 
     def exchange_tables(self, a: str, b: str) -> None:
         """``EXCHANGE TABLES a AND b`` — swap the two tables' data AND
-        their per-table metadata (the blue/green cutover primitive; CH
+        their metadata documents (the blue/green cutover primitive; CH
         does this atomically in the Atomic database engine).  Here it is
-        three renames per artifact under the single-maintenance-writer
-        discipline — readers resolve manifests per query, and
+        one exchange of the directories and one of the documents under
+        the single-maintenance-writer discipline — readers resolve
+        manifests per query, and
         ``load_manifest`` re-resolves when the swap lands between its
         CURRENT read and the version-file open (the r12 soak's
         readers-active drill caught that crash).  Residual window,
@@ -3656,33 +3557,16 @@ class Warehouse:
         RENAME-based swaps."""
         if not self.exists(a) or not self.exists(b):
             raise ValueError(f"EXCHANGE needs both tables ({a!r}, {b!r})")
-        if not _rename_exchange(self.path(a), self.path(b)):
-            # non-Linux fallback: three renames leave a µs window where
-            # name `a` is missing; concurrent readers there serve
-            # declared-empty (the atomic path above has no such window)
-            tmp = self.path(f".exchange-{uuid.uuid4().hex[:8]}")
-            os.rename(self.path(a), tmp)
-            os.rename(self.path(b), self.path(a))
-            os.rename(tmp, self.path(b))
-        for pa, pb in zip(self._table_meta_paths(a),
-                          self._table_meta_paths(b)):
-            ea, eb = os.path.exists(pa), os.path.exists(pb)
-            if not (ea or eb):
-                continue
-            t = pa + ".xchg"
-            if ea:
-                os.rename(pa, t)
-            if eb:
-                os.rename(pb, pa)
-            if ea:
-                os.rename(t, pb)
-        self._override_cache.pop(a, None)
-        self._override_cache.pop(b, None)
+        _rename_exchange(self.path(a), self.path(b))
+        ma, mb = self._meta_path(a), self._meta_path(b)
+        if os.path.exists(ma) and os.path.exists(mb):
+            _rename_exchange(ma, mb)
+        elif os.path.exists(ma):
+            os.rename(ma, mb)
+        else:
+            _move_file(mb, ma)
 
     # -- SYSTEM STOP/START MERGES --------------------------------------------
-
-    def _stop_merges_path(self, table: str) -> str:
-        return os.path.join(self.root, "_schemas", table + ".stopmerges")
 
     def stop_merges(self, table: str) -> None:
         """``SYSTEM STOP MERGES table`` — background merges (``compact``)
@@ -3690,22 +3574,17 @@ class Warehouse:
         mutations continue (the CH maintenance freeze ops use around
         delicate operations).  Persisted so a restarted maintenance loop
         honors it."""
-        p = self._stop_merges_path(table)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as fh:
-            fh.write("stopped\n")
+        self._commit_meta(table, merges_stopped=True)
         self._log_mutation(table, "stop_merges", "SYSTEM STOP MERGES")
 
     def start_merges(self, table: str) -> None:
         """``SYSTEM START MERGES table``."""
-        try:
-            os.remove(self._stop_merges_path(table))
+        if self.merges_stopped(table):
+            self._commit_meta(table, merges_stopped=None)
             self._log_mutation(table, "start_merges", "SYSTEM START MERGES")
-        except OSError:
-            pass
 
     def merges_stopped(self, table: str) -> bool:
-        return os.path.exists(self._stop_merges_path(table))
+        return self._meta(table).get("merges_stopped", False)
 
     # -- predicate → member pruning (mutation fast path) ---------------------
 
@@ -4170,8 +4049,9 @@ class Warehouse:
         # supplying the old type must not mint new old-type files forever —
         # the cast chain could then never retire.  Names/extra columns are
         # left alone; only same-name type mismatches are cast.
+        meta = self._meta(table)
         try:
-            declared_fields = self.schema_for(table).fields
+            declared_fields = self.schema_for(table, meta).fields
         except KeyError:
             # internal side table (projection state, staging) without a
             # declared schema: nothing to conform to
@@ -4191,10 +4071,10 @@ class Warehouse:
                     for c in df.columns
                 ]
             )
-        sort_key = self._sort_key(table)
+        sort_key = self._sort_key(table, meta)
         if sort_key is not None:
             if (
-                self._is_date_partitioned(table)
+                self._is_date_partitioned(table, meta)
                 and "event_date" not in df.columns
             ):
                 df = df.withColumn("event_date", F.to_date("event_ts"))

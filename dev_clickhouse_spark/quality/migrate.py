@@ -7,7 +7,9 @@ drift, this module APPLIES the change.  Spark-first semantics for
 parquet-backed tables:
 
 - **additive column** (new nullable field) — metadata-only: the declared
-  schema is updated and persisted (``Warehouse.save_schema_override``);
+  schema is updated and persisted (``Warehouse.save_schema_override``;
+  an ALTER that also records a chain commits both in ONE
+  ``Warehouse._commit_meta`` write, so no reader sees half of it);
   reads conform old files through the new schema (typed NULLs), writes
   carry the column.  Instant at any scale — no 100 TB rewrite, the same
   reason ClickHouse ADD COLUMN is O(1).
@@ -124,13 +126,17 @@ class SchemaMigrator:
         if not p.destructive:
             # metadata-only commit; validate old data serves through the
             # new schema before persisting it
-            if self.wh.exists(table):
-                probe = conform_to_schema(self.wh.read(table), target)
-                probe.limit(1).collect()
+            self._probe(table, target)
             self.wh.save_schema_override(table, target)
             return p
         self._rewrite(table, target)
         return p
+
+    def _probe(self, table: str, target: T.StructType) -> None:
+        """Check the table's data serves through ``target`` (plan and one
+        row) before the schema commits."""
+        if self.wh.exists(table):
+            conform_to_schema(self.wh.read(table), target).limit(1).collect()
 
     def modify_column_type(
         self, table: str, name: str, dtype: T.DataType
@@ -202,10 +208,8 @@ class SchemaMigrator:
                 f"table {table!r} has pending lightweight-UPDATE patches "
                 "(rows stored with the old type); compact() first"
             )
-        casts = wh.column_casts(table)
-        casts[name] = dtype.simpleString()
-        wh.save_schema_override(table, target)
-        wh.save_column_casts(table, casts)
+        casts = {**wh.column_casts(table), name: dtype.simpleString()}
+        wh._commit_meta(table, schema=target.jsonValue(), casts=casts)
         if wh.exists(table):
             # validate old data serves through the cast chain
             wh.read(table).limit(1).collect()
@@ -244,8 +248,7 @@ class SchemaMigrator:
         # transfer to `new`
         legacy = [old] + ren.pop(old, [])
         ren[new] = legacy
-        self.wh.save_schema_override(table, target)
-        self.wh.save_renames(table, ren)
+        self.wh._commit_meta(table, schema=target.jsonValue(), renames=ren)
         # validate old data serves through the renamed declaration
         if self.wh.exists(table):
             self.wh.read(table).limit(1).collect()
@@ -280,8 +283,7 @@ class SchemaMigrator:
             return
         ren = self.wh.renames(table)
         ren.pop(name, None)  # dropping a renamed column retires its chain
-        self.wh.save_schema_override(table, target)
-        self.wh.save_renames(table, ren)
+        self.wh._commit_meta(table, schema=target.jsonValue(), renames=ren)
         if self.wh.exists(table):
             # validates no computed expression references the column
             self.wh.read(table).limit(1).collect()
@@ -350,17 +352,21 @@ class SchemaMigrator:
 
         probe = self.wh.spark.createDataFrame([], current)
         probe.select(F.expr(expr).cast(dtype).alias(name)).schema
-        if kind in ("default", "materialized"):
-            target = T.StructType(
-                [*current.fields, T.StructField(name, dtype, True)]
-            )
-            self.apply(table, target)
         computed[name] = {
             "kind": kind,
             "expr": expr,
             "type": dtype.simpleString(),
         }
-        self.wh.save_computed_columns(table, computed)
+        changes = {"computed": computed}
+        if kind != "alias":
+            # stored kinds add the column to the declared schema, in the
+            # same commit as the computed metadata
+            target = T.StructType(
+                [*current.fields, T.StructField(name, dtype, True)]
+            )
+            self._probe(table, target)
+            changes["schema"] = target.jsonValue()
+        self.wh._commit_meta(table, **changes)
 
     def _rewrite(self, table: str, target: T.StructType) -> None:
         """Destructive path: project/cast every row to the target shape and

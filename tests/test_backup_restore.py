@@ -61,6 +61,32 @@ def test_restore_into_other_warehouse(spark, wh, tmp_path):
     assert wh.read("ev").filter("event_type = 'tap'").count() > 0
 
 
+def test_backup_restore_carries_every_declaration(spark, tmp_path):
+    """The backup stores the table's whole metadata document: a restored
+    table keeps its rename chain (old members still name the column
+    ``event_type``), engine and TTL, not just the schema."""
+    from dev_clickhouse_spark.quality import SchemaMigrator
+
+    w = Warehouse(spark, str(tmp_path / "wh"))
+    ev = load_table(spark, SF, "events").withColumn(
+        "event_date", F.to_date("ts")
+    )
+    w.save_schema_override("ev", ev.schema)
+    for b in range(2):
+        w.append("ev", ev.filter(F.col("event_id") % 2 == b), batch_id=b)
+    SchemaMigrator(w).rename_column("ev", "event_type", "kind")
+    w.set_table_engine("ev", "ReplacingMergeTree", version_col="ts")
+    w.set_table_ttl("ev", 30, ttl_col="ts")
+    w.backup_table("ev", str(tmp_path / "bak"))
+    w.restore_table(str(tmp_path / "bak"), "ev2")
+    assert w.read("ev").filter("kind IS NULL").count() == 0
+    assert w.read("ev2").filter("kind IS NULL").count() == 0
+    assert _snapshot(w, "ev2") == _snapshot(w, "ev")
+    assert w.renames("ev2") == {"kind": ["event_type"]}
+    assert w.table_engine("ev2") == w.table_engine("ev")
+    assert w.table_ttl("ev2") == w.table_ttl("ev")
+
+
 def test_restore_refuses_existing_table(spark, wh, tmp_path):
     wh.backup_table("ev", str(tmp_path / "bak3"))
     with pytest.raises(ValueError, match="already exists"):

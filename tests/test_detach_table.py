@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -62,11 +63,22 @@ def test_detach_carries_schema_metadata(spark, tmp_path):
         "dim_tag", "tag_upper", T.StringType(), "upper(tag_value)",
         kind="default",
     )
+    SchemaMigrator(wh).rename_column("dim_tag", "updated_at", "seen_at")
+    wh.set_table_engine("dim_tag", "ReplacingMergeTree", version_col="seen_at")
+    wh.declare_skip_index("dim_tag", "idx_key", "tag_key")
+    wh.stop_merges("dim_tag")
     assert "tag_upper" in wh.computed_columns("dim_tag")
+    schemas = os.path.join(wh.root, "_schemas")
+    assert os.listdir(schemas) == ["dim_tag.json"]
     wh.detach_table("dim_tag")
     # metadata is gone from the live surface with the table
     assert wh.computed_columns("dim_tag") == {}
     assert wh.schema_override("dim_tag") is None
+    assert wh.renames("dim_tag") == {}
+    assert wh.table_engine("dim_tag") is None
+    assert wh.declared_skip_indexes("dim_tag") == {}
+    assert not wh.merges_stopped("dim_tag")
+    assert os.listdir(schemas) == []
     # a fresh same-name table has the pristine declared shape
     wh.append("dim_tag", spark.createDataFrame(
         [(9, "zeta", _TS)], wh.schema_for("dim_tag")
@@ -78,8 +90,14 @@ def test_detach_carries_schema_metadata(spark, tmp_path):
     shutil.rmtree(wh.path("dim_tag"))
     wh.attach_table("dim_tag")
     assert "tag_upper" in wh.computed_columns("dim_tag")
+    assert wh.renames("dim_tag") == {"seen_at": ["updated_at"]}
+    assert wh.table_engine("dim_tag")["version_col"] == "seen_at"
+    assert list(wh.declared_skip_indexes("dim_tag")) == ["idx_key"]
+    assert wh.merges_stopped("dim_tag")
+    assert os.listdir(schemas) == ["dim_tag.json"]
     rows = {r.tag_key: r for r in wh.read("dim_tag").collect()}
     assert rows[1].tag_upper == "ALPHA"
+    assert rows[1].seen_at == _TS
 
 
 def test_detach_attach_refusals(spark, tmp_path):
@@ -103,7 +121,6 @@ def test_detach_attach_refusals(spark, tmp_path):
 def test_freeze_partition_snapshot(spark, tmp_path):
     """FREEZE PARTITION: hardlink snapshot of one partition, immune to a
     later mutation (which mints new members instead of rewriting)."""
-    import os
 
     from pyspark.sql import functions as F
 

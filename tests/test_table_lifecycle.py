@@ -5,6 +5,7 @@ metadata."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -82,9 +83,16 @@ def test_truncate_keeps_declared_shape(spark, tmp_path):
 
 def test_exchange_tables_swaps_data_and_metadata(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
+    mig = SchemaMigrator(wh)
     _mk(spark, wh, "blue", [1])
     _mk(spark, wh, "green", [2, 3])
-    SchemaMigrator(wh).modify_column_type("green", "v", T.StringType())
+    mig.apply("blue", T.StructType(
+        [*_SCHEMA.fields, T.StructField("tag", T.StringType())]))
+    mig.rename_column("blue", "tag", "label")
+    mig.modify_column_type("green", "v", T.StringType())
+    wh.set_table_engine("green", "ReplacingMergeTree", version_col="v")
+    wh.declare_skip_index("green", "idx_v", "v")
+    wh.stop_merges("green")
     wh.exchange_tables("blue", "green")
     assert wh.read("blue").count() == 2            # green's rows
     assert wh.read("green").count() == 1
@@ -93,5 +101,16 @@ def test_exchange_tables_swaps_data_and_metadata(spark, tmp_path):
     assert wh.column_casts("green") == {}
     assert dict(wh.read("blue").dtypes)["v"] == "string"
     assert dict(wh.read("green").dtypes)["v"] == "bigint"
+    # ... and so did every other declaration, in both directions
+    assert wh.table_engine("blue")["engine"] == "ReplacingMergeTree"
+    assert wh.table_engine("green") is None
+    assert list(wh.declared_skip_indexes("blue")) == ["idx_v"]
+    assert wh.declared_skip_indexes("green") == {}
+    assert wh.merges_stopped("blue") and not wh.merges_stopped("green")
+    assert wh.renames("green") == {"label": ["tag"]}
+    assert wh.renames("blue") == {}
+    assert "label" in wh.read("green").columns
+    assert sorted(os.listdir(tmp_path / "wh" / "_schemas")) == [
+        "blue.json", "green.json"]
     with pytest.raises(ValueError, match="both tables"):
         wh.exchange_tables("blue", "nope")
