@@ -38,7 +38,7 @@ def build_bridge_event_tag(
     if existing is None:
         return out
     return out.join(
-        existing.select("event_id", "event_ts", "tag_key").distinct(),
+        existing.select("event_id", "event_ts", "tag_key"),
         on=["event_id", "event_ts", "tag_key"],
         how="left_anti",
     )

@@ -42,10 +42,14 @@ def _new_rows(built: DataFrame, current: DataFrame | None, key: str) -> DataFram
     No broadcast hint on purpose: most dims stay tiny and AQE broadcasts
     them at runtime, but an accumulated high-cardinality dim (dim_tag,
     dim_time over years) must be allowed to fall back to a shuffled join
-    instead of a forced driver-sized broadcast."""
+    instead of a forced driver-sized broadcast.
+
+    No ``distinct()`` on the target's keys either: duplicate keys on the
+    probe side cannot change an anti-join's result, so it would only add a
+    shuffle."""
     if current is None:
         return built
-    return built.join(current.select(key).distinct(), on=key, how="left_anti")
+    return built.join(current.select(key), on=key, how="left_anti")
 
 
 def build_dim_date(

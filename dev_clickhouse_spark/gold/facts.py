@@ -32,10 +32,12 @@ def _date_time_keys(local_ts) -> list[F.Column]:
 
 
 def _anti_existing(new: DataFrame, existing: DataFrame | None) -> DataFrame:
+    """Drop rows already in the fact.  The existing keys are not
+    de-duplicated: duplicates cannot change an anti-join's result."""
     if existing is None:
         return new
     return new.join(
-        existing.select("event_id", "event_ts").distinct(),
+        existing.select("event_id", "event_ts"),
         on=["event_id", "event_ts"],
         how="left_anti",
     )

@@ -22,10 +22,11 @@ def scd1_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFr
         FROM src s LEFT JOIN target d ON d.key = s.key WHERE d.key IS NULL
 
     Returns target ∪ (source rows whose key is absent from target).  The
-    anti-join probe side is the (small) new-rows set; Spark broadcast-joins the
-    smaller side automatically under AQE.
+    target's keys are the anti-join's probe side and are not de-duplicated:
+    duplicate keys cannot change an anti-join's result.  AQE broadcasts the
+    smaller side at runtime.
     """
-    new_rows = source.join(target.select(*keys).distinct(), on=keys, how="left_anti")
+    new_rows = source.join(target.select(*keys), on=keys, how="left_anti")
     return target.unionByName(new_rows)
 
 

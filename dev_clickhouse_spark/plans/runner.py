@@ -2,25 +2,39 @@
 
 Replaces the reference's Airflow + Jinja + clickhouse_connect machinery
 (airflow/dags/generator/gold_pipeline.py:169-282) with a plain Python module:
-resolve the ``[start_ts, end_ts)`` window, run pipelines in topological waves
-(intra-wave thread pool ≈ max_active_tasks), record per-run row-count metrics
-(the reference's observability-as-assertions, gold_pipeline.py:221-280), and
-stay idempotent under reruns and overlapping windows (every writer anti-joins
-its target).
+resolve the ``[start_ts, end_ts)`` window, start each pipeline as soon as its
+own dependencies have finished (Airflow's per-task trigger rule, at most
+max_active_tasks at once), record per-run row-count metrics (the reference's
+observability-as-assertions, gold_pipeline.py:221-280), and stay idempotent
+under reruns and overlapping windows (every writer anti-joins its target).
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.json_events import extract_all
 from ..gold import bridges, dims, facts
 from .spec import PIPELINES, PipelineSpec, topo_sorted_waves
 from .warehouse import Warehouse
+
+
+def _write_counted(write, df: DataFrame) -> int:
+    """Run ``write(df)`` and return how many rows it wrote, observed inside
+    the write's own job(s) rather than by a separate count job.  The
+    observation is filled by the first action over ``df`` (the write, or a
+    materialization the writer runs first), so it is read only after
+    ``write`` has returned."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
 
 
 class PipelineRunner:
@@ -87,7 +101,9 @@ class PipelineRunner:
         The parsed struct is materialized ONCE (localCheckpoint) before the
         three per-stream writes — without it each write job would re-run the
         from_json parse over the whole batch (ClickHouse gets the same effect
-        by pushing one consumed block through all three MVs in-process)."""
+        by pushing one consumed block through all three MVs in-process).
+        With ``collect_counts`` the per-table row counts are observed during
+        the writes themselves (no extra count job)."""
         from ..sources.json_events import with_parsed
 
         raw_df = with_parsed(raw_df).localCheckpoint(eager=True)
@@ -101,14 +117,13 @@ class PipelineRunner:
         # pipelines the jobs instead of idling between three serial commits
         def write(item):
             table, df = item
+            if collect_counts:
+                return _write_counted(lambda d: self.wh.append(table, d), df)
             self.wh.append(table, df)
-            return df.count() if collect_counts else None
 
         with ThreadPoolExecutor(max_workers=len(extracted)) as pool:
             results = list(pool.map(write, extracted.items()))
-        return {
-            t: n for t, n in zip(extracted, results) if collect_counts
-        }
+        return dict(zip(extracted, results)) if collect_counts else {}
 
     # -- gold --------------------------------------------------------------
 
@@ -121,6 +136,14 @@ class PipelineRunner:
     ) -> list[dict]:
         """One scheduled gold refresh over [start_ts, end_ts) — the reference's
         */5-cron DAG run with a 10-minute window (gold_pipeline.py:27-49).
+        Returns one metrics row per pipeline, in topological order.
+
+        Scheduling is dependency-driven, as Airflow's per-task trigger rule:
+        a pipeline starts as soon as every pipeline it ``depends_on`` has
+        finished (a dependency outside ``pipeline_ids`` counts as done), at
+        most ``max_active_tasks`` at once, so a fact never waits for a dim
+        it does not read.  After a failure nothing new starts; the error is
+        re-raised once the running pipelines have finished.
 
         ``honor_pipeline_windows=True`` (the scheduled-tick path,
         :meth:`run_latest`) gives each pipeline its OWN trailing window
@@ -137,9 +160,12 @@ class PipelineRunner:
         page cache; Spark needs the explicit materialization).  A trailing
         window is small by construction (~200k events at the reference
         envelope), so pinning it is safe even when the table is 100 TB."""
-        run_metrics: list[dict] = []
         from ..schemas import BRONZE_SCHEMAS
 
+        order = [
+            s for wave in topo_sorted_waves(self.pipelines) for s in wave
+            if pipeline_ids is None or s.pipeline_id in pipeline_ids
+        ]
         starts = {
             s.pipeline_id: (
                 end_ts - dt.timedelta(minutes=s.window_minutes)
@@ -165,47 +191,22 @@ class PipelineRunner:
                 BRONZE_SCHEMAS, pool.map(materialize, BRONZE_SCHEMAS)
             ):
                 cache[t] = df
-        # the cache is threaded explicitly (not stashed on self): two
-        # overlapping run_window calls on one runner (scheduled tick +
-        # backfill) must not clobber each other's cache or unpersist
-        # DataFrames the other run is still executing against
+        # run-scoped input-dim reads, shared by the pipelines that read the
+        # same dim (dim_tag by all three bridges, sensor/protocol/event by
+        # two facts each; each read costs ~100 ms of driver-side listing).
+        # Every table rd() reads is a declared depends_on edge, so it is
+        # first read after its writer has finished.  Both dicts are threaded
+        # explicitly (not stashed on self): two overlapping run_window calls
+        # on one runner (scheduled tick + backfill) must not clobber each
+        # other's or unpersist DataFrames the other run still executes on
+        reads: dict[str, DataFrame] = {}
         try:
-            for wave in topo_sorted_waves(self.pipelines):
-                todo = [
-                    s for s in wave
-                    if pipeline_ids is None or s.pipeline_id in pipeline_ids
-                ]
-                if not todo:
-                    continue
-                # wave-scoped dim-read cache: pipelines in one wave re-read
-                # the same (already-written) dims — dim_tag three times for
-                # the bridges, sensor/protocol/event twice for the facts —
-                # and each spark.read costs ~100 ms of driver-side file
-                # listing + footer schema inference (r13 profile).  Scoped
-                # to the wave: a later wave must re-read tables an earlier
-                # wave just wrote.
-                reads: dict[str, DataFrame] = {}
-                if len(todo) == 1:
-                    results = [
-                        self._run_one(
-                            todo[0], starts[todo[0].pipeline_id], end_ts,
-                            cache=cache, reads=reads,
-                        )
-                    ]
-                else:
-                    with ThreadPoolExecutor(
-                        max_workers=min(self.max_active_tasks, len(todo))
-                    ) as pool:
-                        results = list(
-                            pool.map(
-                                lambda s: self._run_one(
-                                    s, starts[s.pipeline_id], end_ts,
-                                    cache=cache, reads=reads,
-                                ),
-                                todo,
-                            )
-                        )
-                run_metrics.extend(results)
+            run_metrics = self._schedule(
+                order,
+                lambda s: self._run_one(
+                    s, starts[s.pipeline_id], end_ts, cache=cache, reads=reads
+                ),
+            )
         finally:
             for df in cache.values():
                 try:
@@ -216,28 +217,63 @@ class PipelineRunner:
         self._persist_metrics(run_metrics)
         return run_metrics
 
+    def _schedule(self, order: list[PipelineSpec], run) -> list[dict]:
+        """Run ``run(spec)`` for every spec of ``order`` (topologically
+        sorted), each once all of its dependencies inside ``order`` are done,
+        with at most ``max_active_tasks`` running.  Ready specs start in
+        ``order``; results come back in ``order``."""
+        ids = {s.pipeline_id for s in order}
+        pending = list(order)
+        done: dict[str, dict] = {}
+        running: dict = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=self.max_active_tasks) as pool:
+            while True:
+                if error is None:
+                    for s in list(pending):
+                        if len(running) >= self.max_active_tasks:
+                            break
+                        if all(d in done or d not in ids for d in s.depends_on):
+                            pending.remove(s)
+                            running[pool.submit(run, s)] = s
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in finished:
+                    s = running.pop(f)
+                    try:
+                        done[s.pipeline_id] = f.result()
+                    except BaseException as e:
+                        error = error or e
+        if error is not None:
+            raise error
+        return [done[s.pipeline_id] for s in order]
+
     def _persist_metrics(self, rows: list[dict]) -> None:
         """Append per-pipeline run rows to the ``pipeline_runs`` table — the
         reference's monitoring.pipeline_runs observability
         (postgres/init/04_monitoring_tables.sql:1-9; row-count logging
-        gold_pipeline.py:221-280)."""
+        gold_pipeline.py:221-280).  One parquet file per run, written with
+        pyarrow (no Spark job): a hidden tmp name, then ``os.replace``, so a
+        reader never sees a partial file."""
         if not rows:
             return
-        import os
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        df = self.spark.createDataFrame(
-            [
-                (
-                    m["pipeline_id"], m["target_table"], m["start_ts"], m["end_ts"],
-                    m["rows_before"], m["rows_after"], m["rows_delta"], m["seconds"],
-                )
-                for m in rows
-            ],
-            "pipeline_id string, target_table string, start_ts string, "
-            "end_ts string, rows_before long, rows_after long, rows_delta long, "
-            "seconds double",
+        cols = [("pipeline_id", pa.string()), ("target_table", pa.string()),
+                ("start_ts", pa.string()), ("end_ts", pa.string()),
+                ("rows_before", pa.int64()), ("rows_after", pa.int64()),
+                ("rows_delta", pa.int64()), ("seconds", pa.float64())]
+        table = pa.table(
+            {c: [m[c] for m in rows] for c, _ in cols}, schema=pa.schema(cols)
         )
-        df.write.mode("append").parquet(os.path.join(self.wh.root, "pipeline_runs"))
+        d = os.path.join(self.wh.root, "pipeline_runs")
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, name))
 
     def resolve_window(
         self,
@@ -345,10 +381,10 @@ class PipelineRunner:
         reads: dict[str, DataFrame] | None = None,
     ) -> dict:
         t0 = time.time()
-        # row counts are tracked incrementally: count the (small) written
-        # delta, never rescan the whole target — the reference's
-        # rows-before/after logging (gold_pipeline.py:221-280) without the
-        # full-table counts that would not survive 100 TB targets.
+        # row counts are tracked incrementally: the written delta is
+        # observed during the write, never a rescan of the target — the
+        # reference's rows-before/after logging (gold_pipeline.py:221-280)
+        # without the full-table counts that would not survive 100 TB targets.
         table = spec.target_table
         if table not in self._row_counts:
             self._row_counts[table] = (
@@ -358,14 +394,14 @@ class PipelineRunner:
         out, mode = self._build(
             spec, start_ts, end_ts, cache=cache, reads=reads
         )
-        out = out.localCheckpoint(eager=True)  # materialize once: count + write
-        written = out.count()
         if mode == "append":
-            self.wh.append(table, out)
-            rows_after = rows_before + written
+            rows_after = rows_before + _write_counted(
+                lambda df: self.wh.append(table, df), out
+            )
         else:
-            self.wh.overwrite(table, out)
-            rows_after = written
+            rows_after = _write_counted(
+                lambda df: self.wh.overwrite(table, df), out
+            )
         self._row_counts[table] = rows_after
         return {
             "pipeline_id": spec.pipeline_id,
@@ -383,8 +419,6 @@ class PipelineRunner:
         cache: dict[str, DataFrame] | None = None,
         reads: dict[str, DataFrame] | None = None,
     ) -> tuple[DataFrame, str]:
-        from pyspark.sql import functions as F
-
         cache = cache or {}
         # the cache holds the WIDEST window of the run; a pipeline with a
         # narrower window filters the in-memory copy (no new scan)
@@ -394,13 +428,13 @@ class PipelineRunner:
             else self.wh.read_window(t, start_ts, end_ts)
         )
         cur = lambda t: (self.wh.read(t) if self.wh.exists(t) else None)  # noqa: E731
-        # wave-scoped INPUT-dim read sharing (never used for cur(): a
+        # run-scoped INPUT-dim read sharing (never used for cur(): a
         # pipeline's own pre-write target read must stay private)
         if reads is None:
             reads = {}
 
         def rd(t: str) -> DataFrame:
-            # setdefault: rd() is called from the wave's ThreadPoolExecutor
+            # setdefault: rd() is called from the run's ThreadPoolExecutor
             # workers; the single dict op is atomic under the GIL, so two
             # racing readers at worst both build the read and one wins —
             # never a torn entry (r14, ADVICE: make the thread-safety

@@ -96,11 +96,14 @@ def load_pipelines_yml(path: str | None = None) -> tuple[dict, list[PipelineSpec
 def topo_sorted_waves(
     pipelines: list[PipelineSpec] | None = None,
 ) -> list[list[PipelineSpec]]:
-    """Kahn topological sort into dependency waves; pipelines inside a wave
-    are independent and may run concurrently (reference max_active_tasks=8,
-    gold_pipeline.py:471).  Deterministic order inside each wave
-    (pipeline_id — reference sorts by (pipeline_order, pipeline_id),
-    gold_pipeline.py:422-425)."""
+    """Validate the dependency graph and give its deterministic order: a
+    Kahn topological sort into levels, where level k holds the pipelines
+    whose longest dependency chain has length k, sorted by pipeline_id
+    inside a level (the reference sorts by (pipeline_order, pipeline_id),
+    gold_pipeline.py:422-425).  An unknown ``depends_on`` id or a cycle
+    raises.  The runner flattens the levels into its start order; it does
+    not wait for a level to finish, each pipeline starts once its own
+    dependencies are done."""
     specs = list(pipelines if pipelines is not None else PIPELINES)
     by_id = {s.pipeline_id: s for s in specs}
     for s in specs:

@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dev_clickhouse_spark.plans import PipelineRunner, topo_sorted_waves
 from dev_clickhouse_spark.sources import extract_suricata, extract_wazuh, extract_zeek
@@ -194,7 +196,7 @@ def _mk_runner(spark, tmp_path):
     runner_raw = raw_df(spark, payloads).union(
         spark.createDataFrame([("not json at all",)], "raw string")
     )
-    runner.ingest_raw(runner_raw)
+    runner.ingested = runner.ingest_raw(runner_raw)
     return runner
 
 
@@ -294,6 +296,56 @@ def test_pipeline_runs_metrics_persisted(gold, spark):
     total_mem = sum(m["rows_delta"] for m in gold.metrics)
     total_tbl = runs.agg(F.sum("rows_delta")).first()[0]
     assert total_mem == total_tbl
+
+
+W_EMPTY = (dt.datetime(2026, 1, 9, 9, 0), dt.datetime(2026, 1, 9, 10, 0))
+
+
+def test_observed_row_counts_and_run_log(spark, tmp_path):
+    """Row counts are observed during the writes (ingest and every gold
+    pipeline): a first refresh, a rerun that writes nothing and a window
+    with no bronze rows all report the tables' true sizes, including 0.
+    Each run adds ONE file to ``pipeline_runs``, read back with the same
+    schema as the Spark-written log it replaces."""
+    from dev_clickhouse_spark import io
+
+    runner = _mk_runner(spark, tmp_path)
+    assert runner.ingested == {
+        "suricata_events_raw": 2, "wazuh_events_raw": 4, "zeek_events_raw": 1,
+    }
+    topo = [s.pipeline_id for wave in topo_sorted_waves() for s in wave]
+
+    def check(metrics, zero: bool):
+        assert [m["pipeline_id"] for m in metrics] == topo
+        for m in metrics:
+            assert m["rows_after"] == runner.wh.read(m["target_table"]).count(), m
+            assert m["rows_delta"] == m["rows_after"] - m["rows_before"], m
+            if zero:
+                assert m["rows_delta"] == 0, m
+
+    first = runner.run_window(*W1)
+    check(first, zero=False)
+    assert sum(m["rows_delta"] > 0 for m in first) == 15  # all but zeek tags
+    check(runner.run_window(*W1), zero=True)  # already refreshed
+
+    d = runner.wh.path("pipeline_runs")
+    files = sorted(os.listdir(d))
+    assert len(files) == 2 and all(f.endswith(".parquet") for f in files)
+    runs = spark.read.parquet(d)
+    assert runs.schema == T.StructType(
+        [T.StructField(c, T.StringType()) for c in
+         ("pipeline_id", "target_table", "start_ts", "end_ts")]
+        + [T.StructField(c, T.LongType()) for c in
+           ("rows_before", "rows_after", "rows_delta")]
+        + [T.StructField("seconds", T.DoubleType())]
+    )
+    assert runs.schema == io.parquet_schema(d)
+    assert runs.count() == 32
+    assert runs.agg(F.sum("rows_delta")).first()[0] == sum(
+        m["rows_delta"] for m in first
+    )
+
+    check(runner.run_window(*W_EMPTY), zero=True)  # no bronze rows
 
 
 def test_topo_waves():
