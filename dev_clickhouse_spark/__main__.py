@@ -19,9 +19,8 @@ catalog when one exists):
 - ``set-window NAME MIN``  — change a pipeline's trailing window
 - ``seed-store``           — bootstrap + seed the metadata store
 - ``migrate TABLE SCHEMA`` — apply a declared-schema migration (JSON file)
-- ``compact TABLE``        — small-file compaction (manifest tables may
-                             overlap live appends; plain tables need the
-                             single-writer window)
+- ``compact TABLE``        — small-file compaction (may overlap live
+                             appends and reads)
 - ``corpus-ingest FILES...``— parquet document batches → deduped training
                              corpus (inline near-dup rejection)
 - ``serve``                — BI/HTTP endpoint over the gold tables
@@ -364,20 +363,17 @@ def cmd_set_ttl(args) -> None:
 
 
 def gold_views(wh) -> dict:
-    """The serving view map for a warehouse: every EXISTING declared gold
-    table (catalog-driven, not directory prefixes), with migrated tables
-    read through their declared schema so an applied ALTER's column stays
-    visible over pre-migration files."""
+    """The serving view map for a warehouse: every declared gold table
+    (catalog-driven, not directory prefixes), each read through
+    ``Warehouse.read`` in the serving session — its committed members only,
+    conformed to the declared (ALTERed) schema; a table with no rows
+    committed yet serves as empty."""
+    from .plans import Warehouse
     from .schemas import GOLD_SCHEMAS
 
     return {
-        t: (
-            (wh.path(t), wh.schema_for(t))
-            if wh.schema_override(t) is not None
-            else wh.path(t)
-        )
+        t: lambda sess, t=t: Warehouse(sess, wh.root).read(t)
         for t in GOLD_SCHEMAS
-        if wh.exists(t)
     }
 
 
@@ -491,8 +487,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_migrate)
 
     p = sub.add_parser("compact",
-                       help="small-file compaction (manifest tables may "
-                            "overlap appends; plain tables: single writer)")
+                       help="small-file compaction (may overlap appends "
+                            "and reads)")
     p.add_argument("table")
     p.set_defaults(fn=cmd_compact)
 

@@ -56,7 +56,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.ch_compat import round_half_up as _rnd
-from .warehouse import Warehouse
+from .warehouse import Warehouse, batch_member, member_kind
 
 #: measure kinds -> state columns they materialize (suffix -> builder).
 #: "moments" quantizes to integer cents (DECIMAL sums are exact and
@@ -180,7 +180,7 @@ def _plan_folds(
 
     The full rebuild survives only for a legacy (pre-r10) sidecar and for
     a compacted projection table (the fold↔member map lives in the proj
-    manifest's ingest_batch dirs).  Returns (folds, fold_seq, rebuilt,
+    manifest's batch members).  Returns (folds, fold_seq, rebuilt,
     refolded_members, changed); ``rebuilt`` means the caller must rmtree
     the projection table before folding; ``changed`` means fold batches
     were dropped and the sidecar must persist even with nothing new to
@@ -193,9 +193,10 @@ def _plan_folds(
     if folds is None or seen is None:
         # legacy sidecar: one-time migration rebuild
         return [], 0, True, 0, True
-    proj_man = wh.load_manifest(proj_table)
-    proj_members = proj_man["members"] if proj_man else []
-    if any(not m.startswith("ingest_batch=") for m in proj_members):
+    if any(
+        member_kind(m) != "batch"
+        for m in wh.load_manifest(proj_table)["members"]
+    ):
         return [], 0, True, 0, True
     live_set = set(live)
     folded = {m for f in folds for m in f["members"]}
@@ -203,7 +204,7 @@ def _plan_folds(
     if removed:
         for f in list(folds):
             if set(f["members"]) & removed:
-                wh.drop_member(proj_table, f"ingest_batch={f['seq']}")
+                wh.drop_member(proj_table, batch_member(f["seq"]))
                 folds.remove(f)
         folded = {m for f in folds for m in f["members"]}
     new_ov = [o for o in overlay_now if o not in set(seen)]
@@ -216,7 +217,7 @@ def _plan_folds(
         if affected:
             for f in list(folds):
                 if set(f["members"]) & affected:
-                    wh.drop_member(proj_table, f"ingest_batch={f['seq']}")
+                    wh.drop_member(proj_table, batch_member(f["seq"]))
                     folds.remove(f)
                     refolded += len(f["members"])
     return folds, fold_seq, False, refolded, bool(removed) or refolded > 0
@@ -274,12 +275,7 @@ class ProjectionSet:
         rebuild was a full-table re-aggregation per projection at
         100 TB)."""
         rep = ProjectionReport()
-        man = self.wh.load_manifest(self.base)
-        if man is None:
-            raise ValueError(
-                f"projections need the manifest layout; {self.base!r} has none"
-            )
-        live = list(man["members"])
+        live = list(self.wh.load_manifest(self.base)["members"])
         overlay_now = self.wh.overlay_files(self.base)
         affected_cache: dict = {}
         for spec in self.specs:
@@ -506,12 +502,7 @@ class SortProjection:
 
     def ensure(self) -> ProjectionReport:
         rep = ProjectionReport()
-        man = self.wh.load_manifest(self.base)
-        if man is None:
-            raise ValueError(
-                f"projections need the manifest layout; {self.base!r} has none"
-            )
-        live = list(man["members"])
+        live = list(self.wh.load_manifest(self.base)["members"])
         try:
             with open(self._sidecar_path()) as fh:
                 side = json.load(fh)

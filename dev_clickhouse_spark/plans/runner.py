@@ -17,24 +17,13 @@ import time
 import uuid
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.json_events import extract_all
 from ..gold import bridges, dims, facts
 from .spec import PIPELINES, PipelineSpec, topo_sorted_waves
 from .warehouse import Warehouse
-
-
-def _write_counted(write, df: DataFrame) -> int:
-    """Run ``write(df)`` and return how many rows it wrote, observed inside
-    the write's own job(s) rather than by a separate count job.  The
-    observation is filled by the first action over ``df`` (the write, or a
-    materialization the writer runs first), so it is read only after
-    ``write`` has returned."""
-    obs = Observation()
-    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return obs.get["n"]
 
 
 class PipelineRunner:
@@ -102,8 +91,9 @@ class PipelineRunner:
         three per-stream writes — without it each write job would re-run the
         from_json parse over the whole batch (ClickHouse gets the same effect
         by pushing one consumed block through all three MVs in-process).
-        With ``collect_counts`` the per-table row counts are observed during
-        the writes themselves (no extra count job)."""
+        With ``collect_counts`` the per-table row counts the appends return
+        (read from the new members' parquet footers, no Spark job) are
+        returned."""
         from ..sources.json_events import with_parsed
 
         raw_df = with_parsed(raw_df).localCheckpoint(eager=True)
@@ -115,15 +105,11 @@ class PipelineRunner:
         # the three typed writes share the one materialized parse and target
         # disjoint directories — submit them concurrently so the cluster
         # pipelines the jobs instead of idling between three serial commits
-        def write(item):
-            table, df = item
-            if collect_counts:
-                return _write_counted(lambda d: self.wh.append(table, d), df)
-            self.wh.append(table, df)
-
         with ThreadPoolExecutor(max_workers=len(extracted)) as pool:
-            results = list(pool.map(write, extracted.items()))
-        return dict(zip(extracted, results)) if collect_counts else {}
+            counts = dict(zip(extracted, pool.map(
+                lambda item: self.wh.append(*item), extracted.items()
+            )))
+        return counts if collect_counts else {}
 
     # -- gold --------------------------------------------------------------
 
@@ -381,8 +367,8 @@ class PipelineRunner:
         reads: dict[str, DataFrame] | None = None,
     ) -> dict:
         t0 = time.time()
-        # row counts are tracked incrementally: the written delta is
-        # observed during the write, never a rescan of the target — the
+        # row counts are tracked incrementally: the written delta is what
+        # the write returns, never a rescan of the target — the
         # reference's rows-before/after logging (gold_pipeline.py:221-280)
         # without the full-table counts that would not survive 100 TB targets.
         table = spec.target_table
@@ -395,13 +381,9 @@ class PipelineRunner:
             spec, start_ts, end_ts, cache=cache, reads=reads
         )
         if mode == "append":
-            rows_after = rows_before + _write_counted(
-                lambda df: self.wh.append(table, df), out
-            )
+            rows_after = rows_before + self.wh.append(table, out)
         else:
-            rows_after = _write_counted(
-                lambda df: self.wh.overwrite(table, df), out
-            )
+            rows_after = self.wh.overwrite(table, out)
         self._row_counts[table] = rows_after
         return {
             "pipeline_id": spec.pipeline_id,

@@ -1,4 +1,4 @@
-"""Data-skipping indexes over manifest-layout warehouse tables.
+"""Data-skipping indexes over warehouse tables.
 
 ClickHouse ships file-skipping as a first-class MergeTree feature —
 ``INDEX … TYPE minmax`` and the token bloom ``TYPE tokenbf_v1`` (stock
@@ -9,8 +9,8 @@ footer statistics, but at 100 TB the cost that matters comes earlier:
 listing and opening tens of thousands of files to discover their footers.
 The lake-format answer (Iceberg/Delta) is file-level column statistics in
 the table's own metadata, consulted on the driver BEFORE any file is
-opened — this module is that answer for plans/warehouse.py's
-manifest-layout tables.
+opened — this module is that answer for plans/warehouse.py's tables
+(every one of them is a manifest of member directories).
 
 Design:
 
@@ -19,8 +19,8 @@ Design:
   (``input_file_name()`` group-by — min/max/null-count per indexed
   column, plus an m-bit/k-hash token bloom over one string column,
   OR-folded JVM-side as distinct bit positions).  Sidecars are keyed by
-  member name; compaction and mutations always mint NEW member names
-  (``compacted-*``/``mutated-*``), so a rewritten member's stale sidecar
+  member name; every write, compaction and mutation mints a NEW member
+  name (``member=<kind>-<id>``), so a rewritten member's stale sidecar
   simply stops matching and ``ensure()`` builds the fresh one — no hook
   into the write path, no coordination with the manifest lock.
 - Pruning is CONSERVATIVE: a file is dropped only when the predicate is
@@ -115,13 +115,7 @@ class SkipIndex:
         return os.path.join(self._sidecar_dir(), f"{member}.json")
 
     def _live_members(self) -> list[str]:
-        man = self.wh.load_manifest(self.table)
-        if man is None:
-            raise ValueError(
-                f"skip index requires the manifest layout; {self.table!r} "
-                "has none (append with batch_id to create one)"
-            )
-        return list(man["members"])
+        return list(self.wh.load_manifest(self.table)["members"])
 
     def ensure(self) -> int:
         """Build sidecars for live members that lack one.  Returns the
@@ -283,8 +277,7 @@ class SkipIndex:
     def read(self, predicates: list[tuple]) -> DataFrame:
         """Pruned scan with the residual predicate applied — always equal
         to ``wh.read(table).filter(<predicates>)``, just touching fewer
-        files.  The ``ingest_batch`` implementation column is hidden, as
-        in ``Warehouse.read``."""
+        files."""
         if self.wh._patch_files(self.table):
             # lightweight UPDATEs overlay new column values the per-file
             # minmax/bloom sidecars don't know about — a patched row could
@@ -339,8 +332,6 @@ class SkipIndex:
                 df = df.join(dv, ["__dv_file", "__dv_pos"], "left_anti").drop(
                     "__dv_file", "__dv_pos"
                 )
-        if "ingest_batch" in df.columns:
-            df = df.drop("ingest_batch")
         return df.filter(self._residual(predicates, df))
 
     def _residual(self, predicates: list[tuple], df: DataFrame):

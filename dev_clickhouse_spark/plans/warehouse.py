@@ -140,19 +140,45 @@ _ALL_SCHEMAS: dict[str, T.StructType] = {
     **BRONZE_SCHEMAS, **GOLD_SCHEMAS, **CORPUS_SCHEMAS,
 }
 
+#: the one directory key every member is named by (``member=<kind>-<id>``):
+#: a single hive-style level under the table root, so one multi-path scan
+#: with ``basePath`` = the table root reads any member set (the key column
+#: it discovers is dropped).  Not ``_``/``.``-prefixed: Spark hides those.
+_MEMBER_KEY = "member"
+
+
+def batch_member(batch_id: int) -> str:
+    """Member directory of ``append(..., batch_id=batch_id)``."""
+    return f"{_MEMBER_KEY}=batch-{batch_id}"
+
+
+def _new_member(kind: str) -> str:
+    """A fresh member directory name: ``insert`` (append without a batch id,
+    overwrite), ``compacted``, ``mutated``, ``materialized`` or
+    ``attached``."""
+    return f"{_MEMBER_KEY}={kind}-{uuid.uuid4().hex[:8]}"
+
+
+def member_kind(member: str) -> str:
+    """The kind a member name encodes (``batch``, ``insert``, …)."""
+    return member.split("=", 1)[1].split("-", 1)[0]
+
 
 class Warehouse:
     """Path-rooted table registry with append / overwrite / read.
 
-    Batch-append (streaming) tables use a MANIFEST layout: the live member
-    directories are listed in ``_manifest/v<K>.json`` and a ``CURRENT``
-    pointer file names the live version (flipped with an atomic
-    ``os.replace``).  Readers resolve CURRENT once and scan exactly the
-    listed members, so compaction can rewrite members and flip the pointer
-    WHILE appends land — the ClickHouse-parts/Iceberg-snapshot discipline
-    instead of a single-writer maintenance window.  On a real deployment the
-    pointer flip maps to a metastore row or an object-store conditional PUT;
-    here it is a rename on the local filesystem.
+    Every table has ONE layout, the MANIFEST: each write lands a new member
+    directory (``member=<kind>-<id>``), and the live members are listed in
+    ``_manifest/v<K>.json``, whose name a ``CURRENT`` pointer file holds
+    (flipped with an atomic ``os.replace`` under the manifest lock).
+    Readers resolve CURRENT once and scan exactly the listed members, so
+    compaction, mutations and overwrites can write new members and flip the
+    pointer WHILE appends land and readers run — the ClickHouse-parts/
+    Iceberg-snapshot discipline instead of a single-writer maintenance
+    window.  A member is never rewritten in place, and a zero-row write
+    lists no member.  On a real deployment the pointer flip maps to a
+    metastore row or an object-store conditional PUT; here it is a rename
+    on the local filesystem.
 
     Every DECLARATION of a table (ALTERed schema, sort key, engine, skip
     indexes, projections, computed columns, rename and cast chains, TTLs,
@@ -520,46 +546,15 @@ class Warehouse:
         return self._meta(table).get("computed", {})
 
     @staticmethod
-    def _member_is_flat(p: str) -> bool:
-        """True when the member dir holds no partition subdirs (k=v)."""
-        try:
-            with os.scandir(p) as it:
-                for e in it:
-                    if e.is_dir() and "=" in e.name:
-                        return False
-        except OSError:
-            return False
-        return True
-
-    def _computed_cols_lacking(
-        self, root: str, names: list, first_file_only: bool = False
-    ) -> set:
-        """Which of ``names`` are absent from parquet footers under
-        ``root``.  A file that physically lacks the column predates the
-        ALTER and must serve the computed expression; a file that has it
-        serves the stored value VERBATIM — including an explicitly
-        inserted NULL (the ClickHouse per-part contract).
-
-        ``first_file_only`` is the member fast path: a member is ONE
-        write generation (one job wrote every file), so a single footer
-        answers for the member — O(1) metadata per member per read
-        instead of O(files), which matters when a 100 TB member holds
-        thousands of files.  The full walk (default) takes the
-        conservative intersection for mixed-generation directories."""
-        lacking = set(names)
-        for dirpath, _dirs, files in os.walk(root):
-            if not lacking:
-                break
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    lacking -= set(
-                        parquet_schema(os.path.join(dirpath, f)).names
-                    )
-                    if first_file_only:
-                        return lacking
-                    if not lacking:
-                        break
-        return lacking
+    def _computed_cols_lacking(member_root: str, names: list) -> set:
+        """Which of ``names`` the member's parquet footer lacks.  A file
+        that physically lacks the column predates the ALTER and must serve
+        the computed expression; a file that has it serves the stored value
+        VERBATIM — including an explicitly inserted NULL (the ClickHouse
+        per-part contract).  A member is ONE write generation (one job
+        wrote every file), so its first footer answers for it — O(1)
+        metadata per member per read, not O(files)."""
+        return set(names) - set(parquet_schema(member_root).names)
 
     @staticmethod
     def _stored_computed(meta: dict) -> dict:
@@ -578,9 +573,7 @@ class Warehouse:
         projection per member (see ``_apply_renames``)."""
         if not stored:
             return df
-        lacking = self._computed_cols_lacking(
-            member_root, list(stored), first_file_only=True
-        )
+        lacking = self._computed_cols_lacking(member_root, list(stored))
         if not lacking:
             return df
         exprs = {
@@ -739,10 +732,10 @@ class Warehouse:
         that partition and merges materialize the reset, exactly where
         ClickHouse applies the mutation (reference evolves live bronze
         tables with point ALTERs, scripts/alter_bronze_timezone_asia_
-        jakarta.sql:1-16).  Requires the manifest layout (the member
-        snapshot IS the mutation address) and no pending patch overlays
-        (a lightweight UPDATE's rows would escape a member-scoped mask —
-        compact first, as ClickHouse serializes mutations)."""
+        jakarta.sql:1-16).  The live member snapshot IS the mutation
+        address.  Requires no pending patch overlays (a lightweight
+        UPDATE's rows would escape a member-scoped mask — compact first,
+        as ClickHouse serializes mutations)."""
         schema = self.schema_for(table)
         names = {f.name for f in schema.fields}
         if col not in names:
@@ -756,26 +749,15 @@ class Warehouse:
                 f"CLEAR COLUMN IN PARTITION needs a date-partitioned "
                 f"table; {table!r} has no event_date column"
             )
-        man = self.load_manifest(table)
-        if man is None and self._batch_layout(table):
-            with self._manifest_lock(table):
-                if self.load_manifest(table) is None:
-                    boot = self._bootstrap_manifest(table)
-                    boot["version"] = 1
-                    self._write_manifest(table, boot)
-            man = self.load_manifest(table)
-        if man is None:
-            raise ValueError(
-                f"CLEAR COLUMN needs the manifest (batch) layout on "
-                f"{table!r} — plain tables are rebuilt wholesale by their "
-                "writer"
-            )
         if self._patch_files(table):
             raise ValueError(
                 f"table {table!r} has pending lightweight-UPDATE patches; "
                 "compact() to materialize them before CLEAR COLUMN"
             )
-        entry = {"col": col, "date": str(date), "members": list(man["members"])}
+        entry = {
+            "col": col, "date": str(date),
+            "members": list(self.load_manifest(table)["members"]),
+        }
         self._commit_meta(table, cleared=lambda es: [*(es or []), entry])
         self._log_mutation(
             table, "clear_column",
@@ -880,51 +862,23 @@ class Warehouse:
 
         return transform
 
-    def _apply_computed_read(
-        self, table: str, df: DataFrame, meta: dict,
-        stored_mode: str = "verbatim",
-    ) -> DataFrame:
+    @staticmethod
+    def _apply_computed_read(df: DataFrame, meta: dict) -> DataFrame:
         """Read-side computed columns, ClickHouse part semantics:
 
         - ALIAS is never stored — always computed here.
         - DEFAULT/MATERIALIZED values ARE stored for rows written after
-          the ALTER; files that predate the column serve the expression.
-          Which rows those are is decided per FILE from the parquet
-          footer (the column is physically absent pre-ALTER) — an
-          explicitly inserted NULL in a post-ALTER file is preserved, as
-          ClickHouse preserves it.  Manifest reads do the back-fill per
-          member inside ``_read_members`` (``stored_mode='verbatim'``
-          here); single-directory scans pass ``stored_mode='by_file'``
-          and the decision keys on ``input_file_name()`` (safe there: one
-          scan, no joins to break file lineage).
+          the ALTER; members that predate the column serve the expression.
+          ``_read_members`` decides that per member from the parquet footer
+          (the column is physically absent pre-ALTER), so an explicitly
+          inserted NULL in a post-ALTER member is preserved, as ClickHouse
+          preserves it; here only a column no member stores is computed.
         """
         for name, cc in meta.get("computed", {}).items():
-            expr = F.expr(cc["expr"]).cast(cc["type"])
-            if cc["kind"] == "alias":
-                df = df.withColumn(name, expr)
-            elif name not in df.columns:
-                df = df.withColumn(name, expr)
-            elif stored_mode == "by_file":
-                root = self.path(table)
-                lacking = []
-                for dirpath, _dirs, files in os.walk(root):
-                    for f in files:
-                        if f.endswith(".parquet") and name not in (
-                            parquet_schema(os.path.join(dirpath, f)).names
-                        ):
-                            lacking.append(
-                                os.path.abspath(os.path.join(dirpath, f))
-                            )
-                if lacking:
-                    scheme_less = F.regexp_replace(
-                        F.input_file_name(), "^[a-z]+:/+", "/"
-                    )
-                    df = df.withColumn(
-                        name,
-                        F.when(
-                            scheme_less.isin(lacking), expr
-                        ).otherwise(F.col(name)),
-                    )
+            if cc["kind"] == "alias" or name not in df.columns:
+                df = df.withColumn(
+                    name, F.expr(cc["expr"]).cast(cc["type"])
+                )
         return df
 
     def _apply_computed_write(self, table: str, df: DataFrame) -> DataFrame:
@@ -945,22 +899,23 @@ class Warehouse:
                 df = df.withColumn(name, expr)
         return df
 
-    # -- manifest / version pointer (batch-append tables) ------------------
+    # -- manifest / version pointer ------------------------------------------
 
     def _manifest_dir(self, table: str) -> str:
         return os.path.join(self.path(table), "_manifest")
 
-    def load_manifest(self, table: str) -> dict | None:
-        """The CURRENT manifest, or None when the table has no manifest
-        layout (plain tables, or legacy batch dirs from before the manifest).
+    def load_manifest(self, table: str) -> dict:
+        """The CURRENT manifest; a table never written has the empty
+        version-0 manifest.
 
         {"version": K, "members": [dir, ...], "committed_batches": [id, ...]}
 
         ``members`` are the live data directories (scanned by read());
-        ``committed_batches`` is the replay-skip ledger — it SURVIVES
-        compaction, so a replayed micro-batch whose ``ingest_batch=`` dir was
-        long since compacted away still skips instead of re-appending rows
-        that now live inside a compacted member."""
+        ``committed_batches`` is the replay-skip ledger of
+        ``append(..., batch_id=)`` — it SURVIVES compaction, so a replayed
+        micro-batch whose member was long since compacted away still skips
+        instead of re-appending rows that now live inside a compacted
+        member."""
         cur = os.path.join(self._manifest_dir(table), "CURRENT")
         # EXCHANGE TABLES swaps the whole table directory between the
         # CURRENT read and the version-file open — the resolved v<K>.json
@@ -973,7 +928,7 @@ class Warehouse:
                 with open(cur) as fh:
                     version_file = fh.read().strip()
             except OSError:
-                return None
+                return {"version": 0, "members": [], "committed_batches": []}
             try:
                 with open(
                     os.path.join(self._manifest_dir(table), version_file)
@@ -1020,47 +975,81 @@ class Warehouse:
         os.makedirs(d, exist_ok=True)
         return _file_lock(os.path.join(d, "LOCK"))
 
-    def _manifest_commit_batch(self, table: str, batch_id: int) -> None:
-        """Register a fully-written ``ingest_batch=<id>`` dir as live +
-        committed (the COMMIT POINT of a streaming append)."""
-        member = f"ingest_batch={batch_id}"
+    def _flip(self, table: str, edit) -> bool:
+        """THE commit point of every write: under the manifest lock,
+        ``edit(man)`` changes the CURRENT manifest in place and returns
+        True, and the next version is written and CURRENT flips to it; a
+        False return leaves the manifest as it is.  Returns what ``edit``
+        returned."""
         with self._manifest_lock(table):
             man = self.load_manifest(table)
-            changed = man is None  # first manifest: always persist
-            if man is not None and batch_id in man["committed_batches"]:
-                # Already committed in a PERSISTED manifest: the batch's
-                # rows may since have been folded into a compacted member
-                # and its dir deleted — re-registering the member here
-                # would resurrect a stale (or duplicate) dir.  The ledger
-                # entry is the commit.  (A freshly-bootstrapped manifest
-                # adopts the dir just written and must still persist.)
-                return
-            if man is None:
-                man = self._bootstrap_manifest(table)
-            if member not in man["members"]:
-                man["members"].append(member)
-                changed = True
-            if batch_id not in man["committed_batches"]:
-                man["committed_batches"].append(batch_id)
-                changed = True
+            changed = edit(man)
             if changed:
                 man["version"] += 1
                 self._write_manifest(table, man)
+        return changed
 
-    def _bootstrap_manifest(self, table: str) -> dict:
-        """First manifest for a table: adopt any legacy ``ingest_batch=``
-        dirs already on disk (committed = job-level _SUCCESS present)."""
-        members, committed = [], []
-        p = self.path(table)
-        if os.path.isdir(p):
-            for e in sorted(os.listdir(p)):
-                if e.startswith("ingest_batch=") and os.path.exists(
-                    os.path.join(p, e, "_SUCCESS")
-                ):
-                    members.append(e)
-                    committed.append(int(e.split("=", 1)[1]))
-        return {"version": 0, "members": members,
-                "committed_batches": committed}
+    def _swap_members(
+        self, table: str, replaced: dict[str, str | None]
+    ) -> bool:
+        """Flip to the live members with each key of ``replaced`` swapped
+        for its value (None = removed) — the commit of a compaction,
+        mutation or partition drop.  All or nothing: when a replaced member
+        is no longer live (an overwrite or another rewrite replaced it
+        since the caller's snapshot), the manifest is left unchanged, the
+        new members are deleted and False returned — swapping the rewrite
+        in would resurrect the rows it replaced."""
+
+        def edit(man: dict) -> bool:
+            if not set(replaced) <= set(man["members"]):
+                return False
+            man["members"] = [
+                r for r in (replaced.get(m, m) for m in man["members"])
+                if r is not None
+            ]
+            return True
+
+        if self._flip(table, edit):
+            return True
+        for m in replaced.values():
+            if m is not None:
+                shutil.rmtree(
+                    os.path.join(self.path(table), m), ignore_errors=True
+                )
+        return False
+
+    def _commit_rewrite(
+        self, table: str, replaced: dict[str, str | None], retain_old: bool
+    ) -> None:
+        """Commit a mutation's member rewrite (``_swap_members``) and delete
+        the replaced members unless ``retain_old``.  Raises when the
+        snapshot went stale: the mutation then changed nothing."""
+        if not self._swap_members(table, replaced):
+            raise RuntimeError(
+                f"members of {table!r} were replaced while the mutation "
+                "ran; nothing was changed — retry it"
+            )
+        if not retain_old:
+            for m in replaced:
+                shutil.rmtree(
+                    os.path.join(self.path(table), m), ignore_errors=True
+                )
+
+    def _write_member(self, table: str, df: DataFrame, member: str) -> int:
+        """Write ``df`` as the (not yet listed) member directory ``member``
+        in the table's declared layout; returns its row count, taken from
+        the parquet footers (no Spark job).  A zero-row member directory is
+        removed: Spark still writes one schema-only file for an empty
+        frame, and a listed empty member would cost every read a scan."""
+        target = os.path.join(self.path(table), member)
+        w = self._writer(df).mode("overwrite")
+        if self._is_date_partitioned(table):
+            w = w.partitionBy("event_date")
+        w.parquet(target)
+        n = self._count_rows_parquet(target)
+        if n == 0:
+            shutil.rmtree(target, ignore_errors=True)
+        return n
 
     def schema_for(
         self, table: str, meta: dict | None = None
@@ -1078,48 +1067,19 @@ class Warehouse:
         return schema
 
     def read(self, table: str) -> DataFrame:
-        """Read a table; a missing table reads as empty with its declared
-        schema, so every pipeline is total on a fresh warehouse.  The
-        ``ingest_batch`` directory level used by exactly-once streaming
-        appends is an implementation detail and is hidden from readers.
-        After an applied migration the read conforms to the ALTERed schema
-        (typed NULLs for added columns, casts for widened ones) — old files
-        are served through the new schema without rewrite.  The metadata
-        document is resolved ONCE and every step below uses that copy."""
+        """Read a table: exactly the CURRENT manifest's members.  A table
+        with no members reads as empty with its declared schema, so every
+        pipeline is total on a fresh warehouse.  After an applied migration
+        the read conforms to the ALTERed schema (typed NULLs for added
+        columns, casts for widened ones) — old members are served through
+        the new schema without rewrite.  The metadata document is resolved
+        ONCE and every step below uses that copy."""
         meta = self._meta(table)
-        if not self.exists(table):
-            empty = self.spark.createDataFrame(
-                [], self.schema_for(table, meta)
-            )
-            return self._apply_computed_read(table, empty, meta)
-        man = self.load_manifest(table)
-        if man is not None:
-            return self._apply_computed_read(
-                table, self._read_members(table, man["members"], meta=meta),
-                meta,
-            )
-        override = meta.get("schema")
-        if override is None:
-            df = read_parquet(self.spark, self.path(table))
-        else:
-            # post-ALTER the directory mixes pre- and post-migration files;
-            # a footer-schema read would adopt ONE file's schema and hide
-            # the added column in the others.  Reading with the declared
-            # schema is authoritative and free: missing columns surface as
-            # NULLs, widened types use the parquet reader's type promotion.
-            expected = self._legacy_read_schema(table, meta)
-            if self._batch_layout(table):
-                expected = T.StructType(
-                    [*expected.fields, T.StructField("ingest_batch", T.LongType())]
-                )
-            df = self.spark.read.schema(expected).parquet(self.path(table))
-            df = self._apply_renames(df, meta.get("renames", {}))
-        if "ingest_batch" in df.columns:
-            df = df.drop("ingest_batch")
-        if override is not None:
-            df = conform_to_schema(df, self.schema_for(table, meta))
         return self._apply_computed_read(
-            table, df, meta, stored_mode="by_file"
+            self._read_members(
+                table, self.load_manifest(table)["members"], meta=meta
+            ),
+            meta,
         )
 
     def read_at_version(self, table: str, version: int) -> DataFrame:
@@ -1153,19 +1113,18 @@ class Warehouse:
         # read-time semantics, not part of the stored member set
         meta = self._meta(table)
         return self._apply_computed_read(
-            table, self._read_members(table, man["members"], meta=meta), meta
+            self._read_members(table, man["members"], meta=meta), meta
         )
 
     def _read_members(
         self, table: str, members: list[str], keep_dv_tag: bool = False,
         meta: dict | None = None,
     ) -> DataFrame:
-        """Scan exactly the manifest's live member dirs.  Each member is its
-        own parquet root (event_date partition dirs inside), so a pointer
-        flip mid-query cannot mix generations.  Compaction keeps the member
-        count at 1 + (batches since last compact), so the union stays a
-        handful of scans, not thousands — and each scan still prunes
-        event_date partitions and pushes filters independently.
+        """Scan exactly the given member dirs — normally one fused scan
+        (below); a pointer flip mid-query cannot mix generations.  Members
+        that need a per-member transform are scanned one by one and
+        unioned; each scan still prunes event_date partitions and pushes
+        filters independently.
 
         When the table carries deletion vectors (lightweight DELETE),
         every scan is tagged with the parquet ``_metadata`` (file, row
@@ -1207,44 +1166,38 @@ class Warehouse:
             e["col"]: self._reset_value(table, e["col"], meta)
             for e in cleared
         }
-        live = [
-            m for m in members
-            # zero-row member (empty-batch append / bootstrap): no footer
-            # to read a schema from, and nothing to scan
-            if self._count_parquet(os.path.join(self.path(table), m)) > 0
-        ]
-        # FUSED member scan (r14, VERDICT r13 #2): when no per-member
-        # transform applies — no ALTER override, no stored computed
-        # columns, no CLEAR overlays — and every member's parquet footer
-        # carries the same (name, type) set, the N member scans collapse
-        # into ONE multi-path scan.  The overlay-read profile showed the
-        # 3-5× patch/DV read penalty was ~95% driver-side plan
-        # analysis/optimization of the member-union tree (executing a
-        # fixed plan cost ~50 ms); one scan node is also the right shape
-        # at scale (§6: one shared file index, one split planning pass).
-        # Row multiset and _metadata tags are identical to the union by
+        # FUSED member scan: when no per-member transform applies — no
+        # ALTER override, no stored computed columns, no CLEAR overlays —
+        # and every member's parquet footer carries the same (name, type)
+        # set, the N member scans are ONE multi-path scan.  Members are all
+        # named ``member=<kind>-<id>``, so the table root is the basePath:
+        # partition discovery sees ``member=…/event_date=…`` and prunes
+        # event_date as a per-member read would; the discovered key column
+        # is dropped.  The overlay-read profile showed the 3-5× patch/DV
+        # read penalty was ~95% driver-side plan analysis/optimization of
+        # the member-union tree; one scan node is also the right shape at
+        # scale (one shared file index, one split planning pass).  Row
+        # multiset and _metadata tags are identical to the union by
         # construction; footer disagreement of any kind falls back.
-        fused = None
-        if override is None and not stored and not cleared and len(live) > 1:
-            paths = [os.path.join(self.path(table), m) for m in live]
-            # partitioned members (event_date=… subdirs) need per-member
-            # partition discovery — a multi-path scan raises
-            # CONFLICTING_DIRECTORY_STRUCTURES without a single basePath,
-            # and the table root is not one (member names are not k=v)
-            if all(self._member_is_flat(p) for p in paths):
-                schemas = [parquet_schema(p) for p in paths]
-                if all(sch == schemas[0] for sch in schemas):
-                    fused = self.spark.read.schema(schemas[0]).parquet(*paths)
+        live = list(members)
         dfs = []
-        if fused is not None:
-            if tag:
-                fused = fused.select(
-                    F.col("_metadata.file_path").alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                    *[F.col(c) for c in fused.columns],
+        if override is None and not stored and not cleared and live:
+            paths = [os.path.join(self.path(table), m) for m in live]
+            schemas = [parquet_schema(p) for p in paths]
+            if all(sch == schemas[0] for sch in schemas):
+                fused = (
+                    self.spark.read.schema(schemas[0])
+                    .option("basePath", self.path(table))
+                    .parquet(*paths)
                 )
-            dfs.append(fused)
-            live = []
+                if tag:
+                    fused = fused.select(
+                        F.col("_metadata.file_path").alias("__dv_file"),
+                        F.col("_metadata.row_index").alias("__dv_pos"),
+                        "*",
+                    )
+                dfs.append(fused.drop(_MEMBER_KEY))
+                live = []
         for m in live:
             p = os.path.join(self.path(table), m)
             read_schema = legacy_schema
@@ -1316,7 +1269,7 @@ class Warehouse:
                 df = df.select(
                     F.col("_metadata.file_path").alias("__dv_file"),
                     F.col("_metadata.row_index").alias("__dv_pos"),
-                    *[F.col(c) for c in df.columns],
+                    "*",
                 )
             dfs.append(df)
         if not dfs:
@@ -1361,7 +1314,7 @@ class Warehouse:
             for m in members:
                 # scheme-agnostic ('file:/x' vs 'file:///x'): match on the
                 # absolute member path; the trailing '/' stops a member
-                # name prefixing another ('attached-ab' vs 'attached-abc')
+                # name prefixing another ('member=insert-ab' vs '…-abc')
                 frag = os.path.abspath(
                     os.path.join(self.path(table), m)
                 ) + "/"
@@ -1584,16 +1537,10 @@ class Warehouse:
         compose (latest patch per row wins), and a later DELETE of
         patched rows masks them through the preserved original address."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        man = self.load_manifest(table)
-        if man is None:
-            raise ValueError(
-                "lightweight update needs the manifest layout; "
-                f"{table!r} has none (append with batch_id to create one)"
-            )
         # footer-stats member pruning (VERDICT r11 #4; soundness-guarded
         # against live patches inside _prune_members_for_mutation)
         members, _ = self._prune_members_for_mutation(
-            table, man["members"], cond
+            table, self.load_manifest(table)["members"], cond
         )
         if not members:
             cols = self.read(table).columns
@@ -1679,16 +1626,10 @@ class Warehouse:
         the CURRENT table state: like ClickHouse lightweight deletes they
         apply to every read, including ``read_at_version`` snapshots."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        man = self.load_manifest(table)
-        if man is None:
-            raise ValueError(
-                "lightweight delete needs the manifest layout; "
-                f"{table!r} has none (append with batch_id to create one)"
-            )
         # footer-stats member pruning (VERDICT r11 #4): the predicate scan
         # reads only members whose parquet metadata admits a match
         members, _ = self._prune_members_for_mutation(
-            table, man["members"], cond
+            table, self.load_manifest(table)["members"], cond
         )
         if not members:
             self._log_mutation(
@@ -1802,43 +1743,32 @@ class Warehouse:
             (F.col("event_ts") >= F.lit(start_ts)) & (F.col("event_ts") < F.lit(end_ts))
         )
 
-    def append(self, table: str, df: DataFrame, batch_id: int | None = None) -> None:
-        """Append rows.  With ``batch_id`` the write is IDEMPOTENT: rows land
-        under a ``ingest_batch=<id>`` directory that is atomically replaced on
-        replay, so a micro-batch retried after a partial write converges to
-        exactly-once end state instead of duplicating (streaming callers pass
-        the foreachBatch id).  A table must be written consistently with or
-        without batch ids — the two directory layouts don't mix, and mixing
-        them makes ``spark.read`` fail on conflicting partition structures —
-        so a mismatch against the existing layout is REFUSED here rather than
-        discovered at read time."""
-        df = self._apply_computed_write(table, df)
-        existing = self._batch_layout(table)
-        if existing is True and batch_id is None:
-            raise ValueError(
-                f"table {table!r} uses the ingest_batch layout; "
-                "append() without batch_id would corrupt it"
-            )
-        if existing is False and batch_id is not None:
-            raise ValueError(
-                f"table {table!r} uses the plain layout; "
-                f"append(batch_id={batch_id}) would corrupt it"
-            )
+    def append(
+        self, table: str, df: DataFrame, batch_id: int | None = None
+    ) -> int:
+        """Append rows as a new member and commit it; returns the number of
+        rows written (0 commits no member).
+
+        With ``batch_id`` the write is IDEMPOTENT (streaming callers pass
+        the foreachBatch id): rows land in the member ``member=batch-<id>``,
+        which a replay after a partial write overwrites, and the commit
+        records the id in the manifest's replay ledger, so a replay of a
+        committed id is skipped entirely.  Appends with and without batch
+        ids mix freely on one table."""
         if batch_id is not None and self.batch_committed(table, batch_id):
             # Replay of an already-committed batch: skip ENTIRELY.  The
-            # ledger outlives compaction folding the batch dir into a
-            # compacted member, so re-writing + re-registering here would
+            # ledger outlives compaction folding the batch member into a
+            # compacted one, so re-writing + re-registering here would
             # duplicate every row of the batch (the rows already live in
             # the compacted member).  Skipping is safe because a replayed
             # micro-batch re-derives the identical rows by construction.
-            return
-        writer_df = self._prep(table, df)
+            return 0
+        df = self._prep(table, self._apply_computed_write(table, df))
         if batch_id is None:
-            target, mode = self.path(table), "append"
+            member = _new_member("insert")
         else:
-            target = os.path.join(self.path(table), f"ingest_batch={batch_id}")
-            mode = "overwrite"
-            if self._is_date_partitioned(table) and "event_date" in writer_df.columns:
+            member = batch_member(batch_id)
+            if self._is_date_partitioned(table) and "event_date" in df.columns:
                 # ONE part per (batch, date) — the MergeTree
                 # one-part-per-insert shape.  A micro-batch is bounded (a
                 # 10-min window at the reference envelope ≈ 200k events),
@@ -1847,54 +1777,68 @@ class Warehouse:
                 # 32 ~300-row files per table per batch — the small-file
                 # flood the ingest soak measured (1900+ live files between
                 # compactions, ~2.4k ev/s); coalesced appends write 3/batch.
-                writer_df = writer_df.repartition("event_date").sortWithinPartitions(
+                df = df.repartition("event_date").sortWithinPartitions(
                     *self._sort_key(table)
                 )
-        if self._is_date_partitioned(table):
-            self._writer(writer_df).mode(mode).partitionBy("event_date").parquet(target)
-        else:
-            self._writer(writer_df).mode(mode).parquet(target)
-        if batch_id is not None:
-            # COMMIT: register the member in the manifest.  Data lands first,
-            # pointer flips second — a crash between the two leaves an
-            # uncommitted dir that the replay overwrite converges.
-            self._manifest_commit_batch(table, batch_id)
+        n = self._write_member(table, df, member)
 
-    def _batch_layout(self, table: str) -> bool | None:
-        """True = existing table uses the batch-append layout (manifest or
-        legacy ``ingest_batch=`` dirs), False = plain layout, None = no data
-        yet (either layout may start)."""
-        if self.load_manifest(table) is not None:
+        def commit(man: dict) -> bool:
+            # data lands first, the pointer flips second — a crash between
+            # the two leaves an unlisted dir (a batch replay overwrites it,
+            # gc() sweeps any other)
+            if batch_id is not None:
+                if batch_id in man["committed_batches"]:
+                    # a concurrent replay committed first; its rows may
+                    # since live in a compacted member, so listing this
+                    # member again would duplicate them
+                    return False
+                man["committed_batches"].append(batch_id)
+            if n:
+                man["members"].append(member)
             return True
-        if not self.exists(table):
-            return None
-        entries = [
-            f for f in os.listdir(self.path(table)) if not f.startswith((".", "_"))
-        ]
-        return any(e.startswith("ingest_batch=") for e in entries)
+
+        if not self._flip(table, commit):
+            return 0
+        return n
 
     def batch_committed(self, table: str, batch_id: int) -> bool:
         """True when ``append(..., batch_id=...)`` has fully committed for
-        this id (the replay-skip marker of the streaming sink).  The manifest
-        ledger is authoritative — it survives compaction deleting the batch
-        dir, so a late replay cannot re-append rows that now live inside a
-        compacted member.  Legacy (pre-manifest) tables fall back to the
-        job-level ``_SUCCESS`` marker; task files alone never count — they
-        move into place BEFORE job commit, and a crash in that gap must make
-        the replay reprocess, not skip and lose rows."""
-        man = self.load_manifest(table)
-        if man is not None:
-            return batch_id in man["committed_batches"]
-        p = os.path.join(self.path(table), f"ingest_batch={batch_id}")
-        return os.path.exists(os.path.join(p, "_SUCCESS"))
+        this id (the replay-skip marker of the streaming sink).  The
+        manifest ledger is the only record — it survives compaction deleting
+        the batch member, so a late replay cannot re-append rows that now
+        live inside a compacted member, and files of a write that crashed
+        before its commit never count."""
+        return batch_id in self.load_manifest(table)["committed_batches"]
 
-    def overwrite(self, table: str, df: DataFrame) -> None:
-        """Full-snapshot replace (SCD2 dims).  The input may derive from the
-        table being overwritten, so materialize first (localCheckpoint) —
-        dims are small."""
-        df = self._apply_computed_write(table, df)
-        writer_df = self._prep(table, df).localCheckpoint(eager=True)
-        self._writer(writer_df).mode("overwrite").parquet(self.path(table))
+    def overwrite(self, table: str, df: DataFrame) -> int:
+        """Full-snapshot replace (SCD2 dims, refreshable views); returns the
+        number of rows written.  The new member is written from the lazy
+        plan first, then the manifest flips to it alone (to no member for a
+        0-row snapshot) and the superseded members are deleted — so the
+        input may read the table it replaces, with no checkpoint."""
+        return self._replace(
+            table, self._prep(table, self._apply_computed_write(table, df))
+        )
+
+    def _replace(self, table: str, df: DataFrame) -> int:
+        """``overwrite`` of rows already in the stored shape."""
+        member = _new_member("insert")
+        n = self._write_member(table, df, member)
+        old: list[str] = []
+
+        def replace(man: dict) -> bool:
+            old.extend(man["members"])
+            man["members"] = [member] if n else []
+            return True
+
+        self._flip(table, replace)
+        for m in old:
+            shutil.rmtree(os.path.join(self.path(table), m), ignore_errors=True)
+        # overlays and CLEAR entries addressed to the replaced members are
+        # spent
+        self.gc_deletes(table)
+        self._gc_alter_overlays(table)
+        return n
 
     def compact(
         self,
@@ -1912,46 +1856,32 @@ class Warehouse:
         number of data files after compaction.
 
         ``mode="full"`` (default) rewrites the whole live set — the
-        OPTIMIZE TABLE FINAL analog; ``mode="tiered"`` folds only the batch
-        dirs appended since the last compaction into a new generation
+        OPTIMIZE TABLE FINAL analog; ``mode="tiered"`` folds only the
+        members appended since the last compaction into a new generation
         (major-merging the generations once ``max_generations`` exist), so
         the production maintenance cadence costs O(ingest window), not
         O(table) — the actual MergeTree background-merge discipline.
 
-        Batch-append (manifest) tables compact CONCURRENT-SAFELY: the live
-        member set is snapshotted from the manifest, rewritten to one sorted
-        file per event_date partition in a NEW ``compacted-*`` member, and
-        the pointer flips to [new member] + [members that appended since the
-        snapshot].  Appends landing mid-compaction register themselves in
-        the manifest and survive the flip; readers resolve the pointer once
-        and never see a half-swapped table.  Only compactors must not run
+        Compaction is CONCURRENT-SAFE: the live member set is snapshotted
+        from the manifest, rewritten to one sorted file per event_date
+        partition in a NEW ``compacted`` member, and the pointer flips to
+        [new member] + [members that appended since the snapshot].  Appends
+        landing mid-compaction register themselves in the manifest and
+        survive the flip; readers resolve the pointer once and never see a
+        half-swapped table.  When a snapshot member is no longer live at
+        the flip (an overwrite replaced it), the new member is discarded
+        and the manifest left as it is.  Only compactors must not run
         concurrently with each other (one compactor + N appenders is the
         supported discipline — same as ClickHouse merges owning parts).
         With ``retain_old`` the superseded members stay on disk (set it when
         long-running readers may still hold a pre-flip plan; a later compact
-        run prunes them once unreferenced).
-
-        Plain-layout tables (gold dims/facts refreshed by the single-writer
-        runner) keep the staging + rename swap and the single-writer
-        discipline: their writer is the scheduler, which never overlaps
-        itself."""
-        import shutil
-        import uuid
-
+        run prunes them once unreferenced)."""
         if not self.exists(table):
             return 0
         if self.merges_stopped(table):
             # SYSTEM STOP MERGES: the background merge is a no-op until
             # START MERGES; appends/reads/mutations continue unaffected
             return self._count_parquet(self.path(table))
-        if self.load_manifest(table) is None and self._batch_layout(table):
-            # legacy ingest_batch dirs from before the manifest layout:
-            # adopt them into a first manifest, then compact through it
-            with self._manifest_lock(table):
-                if self.load_manifest(table) is None:
-                    man = self._bootstrap_manifest(table)
-                    man["version"] = 1
-                    self._write_manifest(table, man)
         ttl_cond = None
         if ttl_older_than is not None:
             # TTL folded into the merge — ClickHouse applies TTL exactly
@@ -2016,33 +1946,49 @@ class Warehouse:
             # every row
             mode = "full"
         man = self.load_manifest(table)
-        if man is not None:
-            return self._compact_manifest(
-                table, man, retain_old, ttl_cond, mode, max_generations,
-                transform,
-            )
-
-        # -- plain layout: staging + rename swap (single-writer) -----------
-        # go through read(): on a migrated table it reads with the declared
-        # schema — a raw footer-schema read over mixed pre/post-ALTER files
-        # could adopt an old file's schema and silently drop the added column
-        df = self.read(table)
-        if ttl_cond is not None:
-            df = df.filter(ttl_cond)
-        if transform is not None:
-            df = transform(df)
-        staging = self.path(f".{table}.compact-{uuid.uuid4().hex[:8]}")
-        self._write_compacted(table, df, staging)
-        final = self.path(table)
-        backup = self.path(f".{table}.old-{uuid.uuid4().hex[:8]}")
-        os.rename(final, backup)
-        try:
-            os.rename(staging, final)
-        except BaseException:
-            os.rename(backup, final)  # restore — never leave the table missing
-            raise
-        shutil.rmtree(backup)
-        return self._count_parquet(final)
+        snapshot = list(man["members"])
+        if mode == "tiered":
+            # ClickHouse-merge discipline: a background (minor) merge folds
+            # only the NEW parts — members since the last compaction —
+            # into one generation, so its cost is ∝ the ingest window, NOT
+            # the table (the full-rewrite default's cost grows with every
+            # cycle: the ingest soak measured 8.5 s → 12.8 s over 100
+            # batches).  Generations are capped: when ``max_generations``
+            # compacted members exist, the next pass folds them too (a
+            # major merge — LSM-style amortized O(table/k) per cycle).
+            # ``mode="full"`` remains the OPTIMIZE TABLE FINAL analog.
+            gens = [m for m in snapshot if member_kind(m) == "compacted"]
+            fresh = [m for m in snapshot if m not in gens]
+            snapshot = fresh + (gens if len(gens) >= max_generations else [])
+        if snapshot:
+            merged = self._read_members(table, snapshot)
+            if ttl_cond is not None:
+                merged = merged.filter(ttl_cond)
+            if transform is not None:
+                merged = transform(merged)
+            new_member = self._rewrite_member(table, merged, "compacted")
+            # the new member takes the first folded member's place
+            if self._swap_members(
+                table, {m: None for m in snapshot} | {snapshot[0]: new_member}
+            ):
+                if not retain_old:
+                    for m in snapshot:
+                        shutil.rmtree(
+                            os.path.join(self.path(table), m),
+                            ignore_errors=True,
+                        )
+                # the rewrite materialized any deletion-vector mask for the
+                # folded members (the merged read applies DVs); DVs that now
+                # reference no live file are spent
+                self.gc_deletes(table)
+                # cast chains / CLEAR overlays addressed to the folded
+                # members are now physically materialized — retire spent
+                # entries (footer metadata only, no data scan)
+                self._gc_alter_overlays(table)
+        return sum(
+            self._count_parquet(os.path.join(self.path(table), m))
+            for m in self.load_manifest(table)["members"]
+        )
 
     def optimize_deduplicate(
         self, table: str, by: list[str] | None = None,
@@ -2101,76 +2047,19 @@ class Warehouse:
         else:
             self._writer(df.coalesce(1)).mode("overwrite").parquet(target)
 
-    def _compact_manifest(
-        self,
-        table: str,
-        man: dict,
-        retain_old: bool,
-        ttl_cond=None,
-        mode: str = "full",
-        max_generations: int = 4,
-        transform=None,
-    ) -> int:
-        import shutil
-        import uuid
-
-        snapshot = list(man["members"])
-        if mode == "tiered":
-            # ClickHouse-merge discipline: a background (minor) merge folds
-            # only the NEW parts — batch dirs since the last compaction —
-            # into one generation, so its cost is ∝ the ingest window, NOT
-            # the table (the full-rewrite default's cost grows with every
-            # cycle: the ingest soak measured 8.5 s → 12.8 s over 100
-            # batches).  Generations are capped: when ``max_generations``
-            # compacted members exist, the next pass folds them too (a
-            # major merge — LSM-style amortized O(table/k) per cycle).
-            # ``mode="full"`` remains the OPTIMIZE TABLE FINAL analog.
-            gens = [m for m in snapshot if m.startswith("compacted-")]
-            fresh = [m for m in snapshot if not m.startswith("compacted-")]
-            snapshot = fresh + (gens if len(gens) >= max_generations else [])
-        if not snapshot:
-            live = man["members"]
-            return sum(
-                self._count_parquet(os.path.join(self.path(table), m))
-                for m in live
-            )
-        new_member = f"compacted-{uuid.uuid4().hex[:8]}"
-        merged = self._read_members(table, snapshot)
-        if ttl_cond is not None:
-            merged = merged.filter(ttl_cond)
-        if transform is not None:
-            merged = transform(merged)
-        self._write_compacted(
-            table,
-            merged,
-            os.path.join(self.path(table), new_member),
-        )
-        with self._manifest_lock(table):
-            cur = self.load_manifest(table)
-            gone = set(snapshot)
-            cur["members"] = [new_member] + [
-                m for m in cur["members"] if m not in gone
-            ]
-            cur["version"] += 1
-            self._write_manifest(table, cur)
-        if not retain_old:
-            for m in snapshot:
-                shutil.rmtree(
-                    os.path.join(self.path(table), m), ignore_errors=True
-                )
-        # the rewrite materialized any deletion-vector mask for the folded
-        # members (the merged read applies DVs); DVs that now reference no
-        # live file are spent
-        self.gc_deletes(table)
-        # cast chains / CLEAR overlays addressed to the folded members are
-        # now physically materialized — retire spent entries (footer
-        # metadata only, no data scan)
-        self._gc_alter_overlays(table)
-        live = self.load_manifest(table)["members"]
-        return sum(
-            self._count_parquet(os.path.join(self.path(table), m))
-            for m in live
-        )
+    def _rewrite_member(
+        self, table: str, df: DataFrame, kind: str
+    ) -> str | None:
+        """Write ``df`` as a new, not yet listed member of ``kind`` in the
+        merge layout (``_write_compacted``); None — and no directory — when
+        it holds no rows."""
+        member = _new_member(kind)
+        target = os.path.join(self.path(table), member)
+        self._write_compacted(table, df, target)
+        if self._count_rows_parquet(target) == 0:
+            shutil.rmtree(target, ignore_errors=True)
+            return None
+        return member
 
     def _gc_alter_overlays(self, table: str) -> None:
         """Retire MODIFY-COLUMN cast chains whose every live member
@@ -2178,10 +2067,7 @@ class Warehouse:
         addressed members have all been rewritten away — both become
         physical as merges rewrite members, after which the metadata is
         dead weight on every read.  Footer metadata only, no data scan."""
-        man = self.load_manifest(table)
-        if man is None:
-            return
-        live = set(man["members"])
+        live = set(self.load_manifest(table)["members"])
         meta = self._meta(table)
         casts = meta.get("casts", {})
         if not casts and not meta.get("cleared"):
@@ -2221,49 +2107,20 @@ class Warehouse:
                 f"column {name!r} of {table!r} is not a stored "
                 "(DEFAULT/MATERIALIZED) computed column"
             )
-        if not self.exists(table):
-            return {"members_rewritten": 0, "members_kept": 0}
-        man = self.load_manifest(table)
-        if man is None:
-            # plain layout: one staged rewrite through the back-filling read
-            out = self.read(table).localCheckpoint(eager=True)
-            self.overwrite(table, out)
-            self._log_mutation(
-                table, "materialize_column", f"MATERIALIZE COLUMN {name}",
-                members_rewritten=1,
-            )
-            return {"members_rewritten": 1, "members_kept": 0}
-        snapshot = list(man["members"])
-        rewritten: dict[str, str] = {}
+        snapshot = list(self.load_manifest(table)["members"])
+        rewritten: dict[str, str | None] = {}
         for m in snapshot:
-            root = os.path.join(self.path(table), m)
-            if self._count_parquet(root) == 0:
-                continue
             if not self._computed_cols_lacking(
-                root, [name], first_file_only=True
+                os.path.join(self.path(table), m), [name]
             ):
                 continue  # column already stored in this member
-            new_member = f"materialized-{uuid.uuid4().hex[:8]}"
             # the member read back-fills the expression (and applies any
             # DV/patch/cast overlays, which materialize along the way)
-            self._write_compacted(
-                table,
-                self._read_members(table, [m]),
-                os.path.join(self.path(table), new_member),
+            rewritten[m] = self._rewrite_member(
+                table, self._read_members(table, [m]), "materialized"
             )
-            rewritten[m] = new_member
         if rewritten:
-            with self._manifest_lock(table):
-                cur = self.load_manifest(table)
-                cur["members"] = [
-                    rewritten.get(m, m) for m in cur["members"]
-                ]
-                cur["version"] += 1
-                self._write_manifest(table, cur)
-            for m in rewritten:
-                shutil.rmtree(
-                    os.path.join(self.path(table), m), ignore_errors=True
-                )
+            self._commit_rewrite(table, rewritten, retain_old=False)
             self.gc_deletes(table)
             self._gc_alter_overlays(table)
         self._log_mutation(
@@ -2280,8 +2137,8 @@ class Warehouse:
     # ClickHouse mutations rewrite only the PARTS that contain matching rows
     # and commit by swapping the part set (clickhouse/init/01_bronze_tables
     # MergeTree tables are mutated this way by ALTER … DELETE/UPDATE).  The
-    # manifest layout gives the same discipline: snapshot the live members,
-    # rewrite only members the predicate touches into new ``mutated-*``
+    # manifest gives the same discipline: snapshot the live members,
+    # rewrite only members the predicate touches into new ``mutated``
     # members, flip the pointer.  Appends landing mid-mutation register
     # themselves and survive the flip; the ``committed_batches`` ledger is
     # untouched, so exactly-once replay semantics survive mutations exactly
@@ -2353,9 +2210,6 @@ class Warehouse:
         retain_old: bool,
         partition=None,
     ) -> dict:
-        import shutil
-        import uuid
-
         verb = "rows_updated" if assignments is not None else "rows_deleted"
         if not self.exists(table):
             return {verb: 0, "members_rewritten": 0, "members_kept": 0}
@@ -2374,54 +2228,24 @@ class Warehouse:
                     f"UPDATE of {table!r} assigns unknown columns {missing}"
                 )
 
-        def rewrite(df: DataFrame, target: str) -> None:
+        def rewrite(df: DataFrame) -> DataFrame:
             if assignments is None:
-                out = df.filter(~cond)
-            else:
-                sets = {
-                    k: F.expr(v) if isinstance(v, str) else v
-                    for k, v in assignments.items()
-                }
-                out = df.select(
-                    *[
-                        F.when(cond, sets[c]).otherwise(F.col(c)).alias(c)
-                        if c in sets
-                        else F.col(c)
-                        for c in df.columns
-                    ]
-                )
-            self._write_compacted(table, out, target)
+                return df.filter(~cond)
+            sets = {
+                k: F.expr(v) if isinstance(v, str) else v
+                for k, v in assignments.items()
+            }
+            return df.select(
+                *[
+                    F.when(cond, sets[c]).otherwise(F.col(c)).alias(c)
+                    if c in sets
+                    else F.col(c)
+                    for c in df.columns
+                ]
+            )
 
-        man = self.load_manifest(table)
-        if man is None and self._batch_layout(table):
-            with self._manifest_lock(table):
-                if self.load_manifest(table) is None:
-                    boot = self._bootstrap_manifest(table)
-                    boot["version"] = 1
-                    self._write_manifest(table, boot)
-            man = self.load_manifest(table)
-
-        if man is None:
-            # plain layout: single-writer staging + rename swap (compact's)
-            df = self.read(table)
-            n = df.filter(cond).count()
-            if n == 0:
-                return {verb: 0, "members_rewritten": 0, "members_kept": 1}
-            staging = self.path(f".{table}.mutate-{uuid.uuid4().hex[:8]}")
-            rewrite(df, staging)
-            final = self.path(table)
-            backup = self.path(f".{table}.old-{uuid.uuid4().hex[:8]}")
-            os.rename(final, backup)
-            try:
-                os.rename(staging, final)
-            except BaseException:
-                os.rename(backup, final)
-                raise
-            shutil.rmtree(backup)
-            return {verb: n, "members_rewritten": 1, "members_kept": 0}
-
-        # manifest layout: rewrite ONLY affected members, flip the pointer
-        snapshot = list(man["members"])
+        # rewrite ONLY affected members, flip the pointer
+        snapshot = list(self.load_manifest(table)["members"])
         rewritten: dict[str, str | None] = {}
         total = 0
         skipped_by_partition = 0
@@ -2460,37 +2284,14 @@ class Warehouse:
             if n == 0:
                 continue
             total += n
-            new_member = f"mutated-{uuid.uuid4().hex[:8]}"
-            target = os.path.join(self.path(table), new_member)
-            rewrite(mdf, target)
-            if self._count_parquet(target) == 0:
-                # a DELETE matched every row of the member: drop the member
-                # instead of keeping an empty parquet dir (unreadable)
-                shutil.rmtree(target, ignore_errors=True)
-                rewritten[m] = None
-            else:
-                rewritten[m] = new_member
+            # a DELETE matching every row of the member drops it (None)
+            rewritten[m] = self._rewrite_member(table, rewrite(mdf), "mutated")
         if not rewritten:
             return {verb: 0, "members_rewritten": 0,
                     "members_kept": len(snapshot),
                     "members_skipped_by_partition": skipped_by_partition,
                     "members_skipped_by_stats": skipped_by_stats}
-        with self._manifest_lock(table):
-            cur = self.load_manifest(table)
-            members = []
-            for m in cur["members"]:
-                if m not in rewritten:
-                    members.append(m)
-                elif rewritten[m] is not None:
-                    members.append(rewritten[m])
-            cur["members"] = members
-            cur["version"] += 1
-            self._write_manifest(table, cur)
-        if not retain_old:
-            for m in rewritten:
-                shutil.rmtree(
-                    os.path.join(self.path(table), m), ignore_errors=True
-                )
+        self._commit_rewrite(table, rewritten, retain_old)
         return {
             verb: total,
             "members_rewritten": len(rewritten),
@@ -2568,20 +2369,7 @@ class Warehouse:
         dropped partition directory (metadata-only, O(files) not O(rows) —
         the reason ClickHouse DROP PARTITION is instant at any size), and
         the pointer flips.  Returns the number of members affected."""
-        import shutil
-        import uuid
-
-        if not self.exists(table):
-            return 0
         part = f"event_date={date}"
-        man = self.load_manifest(table)
-        if man is None and self._batch_layout(table):
-            with self._manifest_lock(table):
-                if self.load_manifest(table) is None:
-                    boot = self._bootstrap_manifest(table)
-                    boot["version"] = 1
-                    self._write_manifest(table, boot)
-            man = self.load_manifest(table)
 
         def clone_excluding(src: str, dst: str) -> bool:
             """Hardlink every data file of ``src`` into ``dst`` except those
@@ -2601,30 +2389,13 @@ class Warehouse:
                         kept = True
             return kept
 
-        if man is None:
-            src = self.path(table)
-            if not os.path.isdir(os.path.join(src, part)):
-                return 0
-            staging = self.path(f".{table}.drop-{uuid.uuid4().hex[:8]}")
-            os.makedirs(staging, exist_ok=True)
-            clone_excluding(src, staging)
-            backup = self.path(f".{table}.old-{uuid.uuid4().hex[:8]}")
-            os.rename(src, backup)
-            try:
-                os.rename(staging, src)
-            except BaseException:
-                os.rename(backup, src)
-                raise
-            shutil.rmtree(backup)
-            return 1
-
-        snapshot = list(man["members"])
+        snapshot = list(self.load_manifest(table)["members"])
         replaced: dict[str, str | None] = {}
         for m in snapshot:
             src = os.path.join(self.path(table), m)
             if not os.path.isdir(os.path.join(src, part)):
                 continue
-            new_member = f"mutated-{uuid.uuid4().hex[:8]}"
+            new_member = _new_member("mutated")
             dst = os.path.join(self.path(table), new_member)
             os.makedirs(dst, exist_ok=True)
             has_data = clone_excluding(src, dst)
@@ -2653,24 +2424,9 @@ class Warehouse:
             return remapped
 
         self._commit_meta(table, cleared=remap)
-        with self._manifest_lock(table):
-            cur = self.load_manifest(table)
-            members = []
-            for m in cur["members"]:
-                if m not in replaced:
-                    members.append(m)
-                elif replaced[m] is not None:
-                    members.append(replaced[m])
-            cur["members"] = members
-            cur["version"] += 1
-            self._write_manifest(table, cur)
+        self._commit_rewrite(table, replaced, retain_old)
         for p in old_overlays:
             shutil.rmtree(p, ignore_errors=True)
-        if not retain_old:
-            for m in replaced:
-                shutil.rmtree(
-                    os.path.join(self.path(table), m), ignore_errors=True
-                )
         return len(replaced)
 
     def drop_member(self, table: str, member: str) -> bool:
@@ -2682,14 +2438,13 @@ class Warehouse:
         without a version bump.  The replay ledger is left untouched —
         callers mint monotonically increasing batch ids, so a dropped
         batch id is never reused."""
-        changed = False
-        with self._manifest_lock(table):
-            man = self.load_manifest(table)
-            if man is not None and member in man["members"]:
-                man["members"] = [m for m in man["members"] if m != member]
-                man["version"] += 1
-                self._write_manifest(table, man)
-                changed = True
+        def remove(man: dict) -> bool:
+            if member not in man["members"]:
+                return False
+            man["members"].remove(member)
+            return True
+
+        changed = self._flip(table, remove)
         shutil.rmtree(
             os.path.join(self.path(table), member), ignore_errors=True
         )
@@ -2717,22 +2472,13 @@ class Warehouse:
                 "patches; compact() it first so the overlay is "
                 "materialized"
             )
-        src_man = self.load_manifest(src_table)
-        if src_man is not None:
-            src_roots = [
-                os.path.join(self.path(src_table), m)
-                for m in src_man["members"]
-            ]
-        else:
-            src_roots = [self.path(src_table)]
-        if self.load_manifest(dst_table) is None:
-            raise ValueError(
-                f"attach needs a manifest-layout destination; {dst_table!r} "
-                "has none (append with batch_id to create one)"
-            )
+        src_roots = [
+            os.path.join(self.path(src_table), m)
+            for m in self.load_manifest(src_table)["members"]
+        ]
         if replace:
             self.drop_partition(dst_table, date)
-        new_member = f"attached-{uuid.uuid4().hex[:8]}"
+        new_member = _new_member("attached")
         dst = os.path.join(self.path(dst_table), new_member, part)
         linked = 0
         for root in src_roots:
@@ -2758,11 +2504,11 @@ class Warehouse:
                 ignore_errors=True,
             )
             return 0
-        with self._manifest_lock(dst_table):
-            cur = self.load_manifest(dst_table)
-            cur["members"] = cur["members"] + [new_member]
-            cur["version"] += 1
-            self._write_manifest(dst_table, cur)
+        def add(man: dict) -> bool:
+            man["members"].append(new_member)
+            return True
+
+        self._flip(dst_table, add)
         return linked
 
     def backup_table(
@@ -2785,7 +2531,7 @@ class Warehouse:
         hardlink clones are RECORDED, not re-cloned, so the new backup's
         size is ∝ what changed since the base.  The inode check is
         exact, not name-trust: writers replace whole files (a replayed
-        ``ingest_batch=`` dir re-minted under the same name fails
+        batch member re-minted under the same name fails
         ``samefile`` and is cloned fully).  Restores resolve the chain
         transparently."""
         if os.path.exists(dest) and os.listdir(dest):
@@ -2859,10 +2605,6 @@ class Warehouse:
 
         with self._manifest_lock(table):
             man = self.load_manifest(table)
-            if man is None:
-                raise ValueError(
-                    f"backup needs the manifest layout; {table!r} has none"
-                )
             files = 0
             base_members: list[str] = []
             for m in man["members"]:
@@ -3075,9 +2817,7 @@ class Warehouse:
                 f"({', '.join(args)})" if args else ""
             )
         else:
-            engine = "MergeTree (manifest parquet)" if (
-                self.load_manifest(table) is not None
-            ) else "MergeTree (parquet)"
+            engine = "MergeTree (manifest parquet)"
         ddl.append(f"ENGINE = {engine}")
         if sort is not None:
             # a table can be sorted without being date-partitioned
@@ -3162,15 +2902,12 @@ class Warehouse:
             default=0,
         )
         dst_root = os.path.join(shadow_root, str(inc), table)
-        man = self.load_manifest(table)
-        members = man["members"] if man is not None else [""]
         n_linked = 0
-        for m in members:
+        for m in self.load_manifest(table)["members"]:
             src = os.path.join(self.path(table), m, f"event_date={date_str}")
             if not os.path.isdir(src):
                 continue
-            dst = os.path.join(dst_root, m or "flat",
-                               f"event_date={date_str}")
+            dst = os.path.join(dst_root, m, f"event_date={date_str}")
             os.makedirs(dst, exist_ok=True)
             for f in os.listdir(src):
                 s = os.path.join(src, f)
@@ -3361,11 +3098,7 @@ class Warehouse:
             stats_sink=stats if want_stats else None,
         )
 
-        if self.load_manifest(table) is not None:
-            self.compact(table, transform=transform)
-        else:
-            out = transform(self.read(table)).localCheckpoint(eager=True)
-            self.overwrite(table, out)
+        self.compact(table, transform=transform)
         if want_stats:
             after = self.read(table)
             stats["rows_after"] = after.count()
@@ -3393,16 +3126,8 @@ class Warehouse:
         import datetime
 
         dates: set = set()
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return []
-        man = self.load_manifest(table)
-        roots = (
-            [os.path.join(root, m) for m in man["members"]]
-            if man is not None
-            else [root]
-        )
-        for r in roots:
+        for m in self.load_manifest(table)["members"]:
+            r = os.path.join(self.path(table), m)
             if not os.path.isdir(r):
                 continue
             for e in os.listdir(r):
@@ -3417,8 +3142,8 @@ class Warehouse:
 
     def gc(self, table: str, min_age_sec: float = 3600.0) -> list[str]:
         """Sweep data directories no RETAINED manifest version references —
-        the leftovers of (a) a compactor that crashed between writing its
-        ``compacted-*`` member and flipping the pointer, and (b) superseded
+        the leftovers of (a) a writer or compactor that crashed between
+        writing its member and flipping the pointer, and (b) superseded
         members kept by ``compact(retain_old=True)`` whose snapshots have
         since been pruned from the version window.
 
@@ -3428,9 +3153,6 @@ class Warehouse:
         seconds.  Only dirs untouched for the window are swept, under the
         manifest lock so no flip can race the re-check.  Returns the swept
         directory names."""
-        import shutil
-        import time as _time
-
         d = self._manifest_dir(table)
         if not os.path.isdir(d):
             return []
@@ -3441,16 +3163,14 @@ class Warehouse:
                 if f.startswith("v") and f.endswith(".json"):
                     with open(os.path.join(d, f)) as fh:
                         referenced.update(json.load(fh)["members"])
-            now = _time.time()
+            now = time.time()
             for e in sorted(os.listdir(self.path(table))):
                 full = os.path.join(self.path(table), e)
                 if (
-                    e.startswith((".", "_"))
+                    not e.startswith(_MEMBER_KEY + "=")
                     or not os.path.isdir(full)
                     or e in referenced
                 ):
-                    continue
-                if not e.startswith(("ingest_batch=", "compacted-", "mutated-")):
                     continue
                 try:
                     age = now - os.path.getmtime(full)
@@ -3547,7 +3267,7 @@ class Warehouse:
         readers-active drill caught that crash).  Residual window,
         documented: a reader that resolved a manifest BEFORE the swap
         lists member paths under the swapped directory — missing members
-        are skipped and a same-named member (``ingest_batch=<id>`` names
+        are skipped and a same-named member (``member=batch-<id>`` names
         can collide across tables) would serve the OTHER side's rows for
         that member.  The supported concurrent-reader pattern is the
         blue/green cutover this op exists for — the green side is a
@@ -3697,11 +3417,9 @@ class Warehouse:
         circuited on the first surviving row group).  Conservative: a
         missing column, absent stats, or type mismatch counts as a
         match."""
-        root = (
-            os.path.join(self.path(table), member) if member
-            else self.path(table)
+        return self._path_matches_stats(
+            os.path.join(self.path(table), member), preds
         )
-        return self._path_matches_stats(root, preds)
 
     def _path_matches_stats(self, root: str, preds: list[tuple]) -> bool:
         import pyarrow.parquet as pq
@@ -3794,11 +3512,6 @@ class Warehouse:
         import pyarrow.parquet as pq
 
         preds = predicates or []
-        man = self.load_manifest(table)
-        members = (
-            man["members"] if man is not None
-            else ([""] if self.exists(table) else [])
-        )
         total = {"parts": 0, "files": 0, "row_groups": 0, "rows": 0}
         est = {"parts": 0, "files": 0, "row_groups": 0, "rows": 0}
 
@@ -3832,8 +3545,8 @@ class Warehouse:
                     continue
             return True, nrows
 
-        for m in members:
-            root = os.path.join(self.path(table), m) if m else self.path(table)
+        for m in self.load_manifest(table)["members"]:
+            root = os.path.join(self.path(table), m)
             part_hit = False
             for r, _dirs, files in os.walk(root):
                 for f in sorted(files):
@@ -3875,13 +3588,8 @@ class Warehouse:
         import pyarrow.parquet as pq
 
         agg: dict[tuple, list] = {}
-        man = self.load_manifest(table)
-        members = (
-            man["members"] if man is not None
-            else ([""] if self.exists(table) else [])
-        )
-        for m in members:
-            root = os.path.join(self.path(table), m) if m else self.path(table)
+        for m in self.load_manifest(table)["members"]:
+            root = os.path.join(self.path(table), m)
             for r, _dirs, files in os.walk(root):
                 for f in sorted(files):
                     if not f.endswith(".parquet"):
@@ -3891,7 +3599,7 @@ class Warehouse:
                         rg = md.row_group(rg_i)
                         for ci in range(md.num_columns):
                             col = rg.column(ci)
-                            key = (m or "(root)", md.schema.column(ci).name)
+                            key = (m, md.schema.column(ci).name)
                             s = agg.setdefault(key, [0, 0, 0])
                             s[0] += rg.num_rows
                             s[1] += col.total_compressed_size
@@ -3912,19 +3620,14 @@ class Warehouse:
 
     def parts(self, table: str) -> DataFrame:
         """``system.parts`` analog: one row per live member (part) with its
-        file count, on-disk bytes, partition count, and whether it's an
-        ingest batch, a compacted generation, or a mutation rewrite — the
+        file count, on-disk bytes, partition count, and its kind (batch,
+        insert, compacted, mutated, materialized or attached) — the
         operational view ClickHouse admins query to watch merge health
         (reference monitoring reads system.parts for part counts).  Pure
         directory metadata — no data scan at any table size."""
         rows = []
-        man = self.load_manifest(table)
-        members = (
-            man["members"] if man is not None
-            else ([""] if self.exists(table) else [])
-        )
-        for m in members:
-            root = os.path.join(self.path(table), m) if m else self.path(table)
+        for m in self.load_manifest(table)["members"]:
+            root = os.path.join(self.path(table), m)
             n_files, n_bytes, dates = 0, 0, set()
             for r, _dirs, files in os.walk(root):
                 rel = os.path.relpath(r, root)
@@ -3938,14 +3641,7 @@ class Warehouse:
                             n_bytes += os.path.getsize(os.path.join(r, f))
                         except OSError:
                             pass
-            kind = (
-                "batch" if m.startswith("ingest_batch=")
-                else "compacted" if m.startswith("compacted-")
-                else "mutated" if m.startswith("mutated-")
-                else "attached" if m.startswith("attached-")
-                else "plain"
-            )
-            rows.append((table, m or "(root)", kind, n_files, n_bytes,
+            rows.append((table, m, member_kind(m), n_files, n_bytes,
                          len(dates)))
         # overlay rows: live deletion vectors and patches are part state an
         # operator must see (they mask/replace rows until a merge folds
@@ -3978,10 +3674,10 @@ class Warehouse:
 
     def tables(self) -> DataFrame:
         """``system.tables`` analog: one row per warehouse table with its
-        layout (manifest vs plain), live manifest version, member count,
-        replay-ledger size, file count and on-disk bytes — directory
-        metadata only, no data scan (reference admins join system.tables
-        to system.parts for merge health; same shape here)."""
+        live manifest version, member count, replay-ledger size, file count
+        and on-disk bytes — directory metadata only, no data scan
+        (reference admins join system.tables to system.parts for merge
+        health; same shape here)."""
         rows = []
         try:
             names = sorted(
@@ -4006,14 +3702,13 @@ class Warehouse:
                             pass
             rows.append((
                 t,
-                "manifest" if man is not None else "plain",
-                man["version"] if man is not None else 0,
-                len(man["members"]) if man is not None else 1,
-                len(man.get("committed_batches", [])) if man else 0,
+                man["version"],
+                len(man["members"]),
+                len(man["committed_batches"]),
                 n_files, n_bytes,
             ))
         schema = (
-            "table string, layout string, version long, n_members long,"
+            "table string, version long, n_members long,"
             " n_committed_batches long, n_files long, bytes long"
         )
         return self.spark.createDataFrame(rows, schema)

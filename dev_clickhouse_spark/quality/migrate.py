@@ -19,7 +19,8 @@ parquet-backed tables:
 - **destructive change** (drop column, narrow/ incompatible retype,
   rename) — REFUSED with the full reason list; destructive migrations are
   a rewrite the operator must run deliberately (``rewrite=True`` is the
-  explicit opt-in, staged + atomic-swap like ``Warehouse.compact``).
+  explicit opt-in: a new member plus a manifest flip, like
+  ``Warehouse.compact``).
 
 The reference's timezone MODIFY specifically is a display-level concern in
 this engine (timestamps are stored as UTC instants, SURVEY.md §1.2) — the
@@ -112,9 +113,9 @@ class SchemaMigrator:
         """Apply the migration.  Safe plans (additive/widening) commit as a
         metadata-only declared-schema update, validated by reading the table
         through the new schema first.  Destructive plans raise unless
-        ``rewrite=True`` — the explicit opt-in that rewrites the data
-        (staged, atomic swap) to the new shape, dropping/retyping columns.
-        Single-writer discipline as with ``compact``."""
+        ``rewrite=True`` — the explicit opt-in that rewrites the data into
+        one new member of the new shape, dropping/retyping columns, and
+        flips the manifest to it."""
         p = self.plan(table, target)
         if p.destructive and not rewrite:
             raise ValueError(
@@ -157,9 +158,9 @@ class SchemaMigrator:
           ALTER to live bronze tables,
           scripts/alter_bronze_timezone_asia_jakarta.sql:1-16).
 
-        Non-widening retypes need the manifest layout (the per-member
-        footer decides the scan type) and no pending lightweight-UPDATE
-        patches (their rows carry the old type — compact first)."""
+        The per-member footer decides the scan type.  Non-widening
+        retypes need no pending lightweight-UPDATE patches (their rows
+        carry the old type — compact first)."""
         wh = self.wh
         current = wh.schema_for(table)
         cur = {f.name: f for f in current.fields}
@@ -188,21 +189,6 @@ class SchemaMigrator:
 
         probe = wh.spark.createDataFrame([], current)
         probe.select(F.col(name).cast(dtype)).schema
-        if wh.exists(table) and wh.load_manifest(table) is None:
-            if wh._batch_layout(table):
-                # adopt legacy batch dirs into a manifest: the cast chain
-                # is member-addressed, so reads need the member read path
-                with wh._manifest_lock(table):
-                    if wh.load_manifest(table) is None:
-                        boot = wh._bootstrap_manifest(table)
-                        boot["version"] = 1
-                        wh._write_manifest(table, boot)
-            else:
-                raise ValueError(
-                    f"non-widening MODIFY COLUMN needs the manifest "
-                    f"(batch) layout on {table!r}; use apply(..., "
-                    "rewrite=True) for a plain-table rewrite"
-                )
         if wh._patch_files(table):
             raise ValueError(
                 f"table {table!r} has pending lightweight-UPDATE patches "
@@ -369,13 +355,9 @@ class SchemaMigrator:
         self.wh._commit_meta(table, **changes)
 
     def _rewrite(self, table: str, target: T.StructType) -> None:
-        """Destructive path: project/cast every row to the target shape and
-        swap the rewritten table in (same staged-rename discipline as
-        ``Warehouse.compact`` — single-writer maintenance window)."""
-        import os
-        import shutil
-        import uuid
-
+        """Destructive path: project/cast every row to the target shape
+        into one new member and flip the manifest to it alone
+        (``Warehouse.overwrite``'s commit), then commit the schema."""
         wh = self.wh
         if wh._sort_key(table) is not None and not any(
             f.name == "event_date" for f in target.fields
@@ -384,21 +366,5 @@ class SchemaMigrator:
                 [*target.fields, T.StructField("event_date", T.DateType())]
             )
         if wh.exists(table):
-            df = conform_to_schema(wh.read(table), target)
-            staging = wh.path(f".{table}.migrate-{uuid.uuid4().hex[:8]}")
-            if "event_date" in df.columns:
-                df.write.mode("overwrite").partitionBy("event_date").parquet(
-                    staging
-                )
-            else:
-                df.write.mode("overwrite").parquet(staging)
-            final = wh.path(table)
-            backup = wh.path(f".{table}.old-{uuid.uuid4().hex[:8]}")
-            os.rename(final, backup)
-            try:
-                os.rename(staging, final)
-            except BaseException:
-                os.rename(backup, final)
-                raise
-            shutil.rmtree(backup)
+            wh._replace(table, conform_to_schema(wh.read(table), target))
         wh.save_schema_override(table, target)

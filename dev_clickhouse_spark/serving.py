@@ -202,9 +202,12 @@ def _mask_quoted(sql: str, mask_backticks: bool) -> str:
 class SqlServingEndpoint:
     """Serve registered gold views over HTTP SQL, read-only.
 
-    ``views`` maps view name → parquet path; the paths are read in a fresh
-    ``newSession()`` so the serving catalog holds ONLY these views (plus the
-    shared persistent catalog, which this engine does not use).
+    ``views`` maps view name → parquet path, or → a function of the serving
+    session returning the view's DataFrame (how warehouse tables are served:
+    a raw scan of a table directory would see uncommitted and superseded
+    members).  The views are built in a fresh ``newSession()`` so the
+    serving catalog holds ONLY these views (plus the shared persistent
+    catalog, which this engine does not use).
     """
 
     #: cap on per-role isolated sessions (LRU-evicted beyond) — without a
@@ -286,15 +289,7 @@ class SqlServingEndpoint:
         from pyspark.sql import functions as F
 
         for name, src in self._views.items():
-            # a (path, StructType) value reads with the DECLARED schema —
-            # required for tables with an applied schema migration, where
-            # a footer-schema read over mixed pre/post-ALTER files would
-            # adopt one file's footer and hide the added column
-            if isinstance(src, tuple):
-                path, schema = src
-                df = sess.read.schema(schema).parquet(path)
-            else:
-                df = read_parquet(sess, src)
+            df = src(sess) if callable(src) else read_parquet(sess, src)
             table_policies = self._policies.get(name)
             if role is not None and table_policies is not None:
                 conds = table_policies.get(role, [])

@@ -6,10 +6,11 @@ through 3 materialized views into typed bronze tables
 ``foreachBatch`` that runs the same extraction expression layer
 (sources/json_events.extract_all) and appends 3 partitioned parquet tables per
 micro-batch.  Exactly-once = checkpointed source offsets + genuinely
-idempotent per-batch writes: every table (and ingest_metrics) lands under an
-``ingest_batch=<id>`` directory that a replayed batch OVERWRITES, so a
-failure after a partial write converges to the same end state instead of
-duplicating rows; fully-committed batch ids are skipped outright.
+idempotent per-batch writes: every table (and ingest_metrics) gets the batch
+as a ``Warehouse.append(..., batch_id=)`` member that a replayed batch
+OVERWRITES, so a failure after a partial write converges to the same end
+state instead of duplicating rows; fully-committed batch ids are skipped
+outright.
 
 Delivery semantics mapping:
 - consumer-group offsets (ST1)        → checkpointLocation
@@ -169,10 +170,10 @@ class BronzeStream:
         n_raw = batch.count()
 
         # the three typed writes share the one materialized parse and target
-        # disjoint per-batch directories — submit them CONCURRENTLY (same
-        # design as PipelineRunner.ingest_raw).  Partial failure is safe:
-        # each table's ``ingest_batch=<id>`` dir is replay-overwritten, the
-        # metrics marker below is only written when all three succeeded, so
+        # disjoint tables — submit them CONCURRENTLY (same design as
+        # PipelineRunner.ingest_raw).  Partial failure is safe: each table's
+        # batch member is replay-overwritten, the metrics marker below is
+        # only committed when all three succeeded, so
         # a failed write fails the batch and the replay converges every
         # table to exactly-once regardless of which subset committed.
         from concurrent.futures import ThreadPoolExecutor
@@ -182,10 +183,7 @@ class BronzeStream:
             df = df.filter(F.col("event_ts").isNotNull())
             if self.dedupe:
                 df = df.dropDuplicates(["event_id", "event_ts"])
-            n = df.count()
-            if n:
-                self.wh.append(table, df, batch_id=batch_id)
-            return n
+            return self.wh.append(table, df, batch_id=batch_id)
 
         extracted = extract_all(batch)
         with ThreadPoolExecutor(max_workers=len(extracted)) as pool:
@@ -205,10 +203,8 @@ class BronzeStream:
             "batch_id long, n_raw long, n_suricata long, n_wazuh long, "
             "n_zeek long, n_unrouted long",
         ).withColumn("processed_at", F.current_timestamp())
-        # written LAST and per-batch-overwritten: doubles as the commit marker
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(self.wh.root, "ingest_metrics", f"ingest_batch={batch_id}")
-        )
+        # committed LAST: its ledger entry doubles as the commit marker
+        self.wh.append("ingest_metrics", metrics, batch_id=batch_id)
 
 
 def windowed_event_counts(

@@ -67,8 +67,8 @@ class CorpusStream:
     # -- the per-batch dedup decision -------------------------------------
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # metrics are written LAST and per-batch-overwritten: they double as
-        # the commit marker (same pattern as BronzeStream's ingest_metrics)
+        # metrics are committed LAST: their ledger entry doubles as the
+        # commit marker (same pattern as BronzeStream's ingest_metrics)
         if self.wh.batch_committed("corpus_ingest_metrics", batch_id):
             return
         batch = batch.localCheckpoint(eager=True)
@@ -163,9 +163,4 @@ class CorpusStream:
             "batch_id long, n_in long, n_batch_exact long, "
             "n_batch_near long, n_corpus_near long, n_accepted long",
         ).withColumn("processed_at", F.current_timestamp())
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(
-                self.wh.root, "corpus_ingest_metrics",
-                f"ingest_batch={batch_id}",
-            )
-        )
+        self.wh.append("corpus_ingest_metrics", metrics, batch_id=batch_id)

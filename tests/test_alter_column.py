@@ -307,7 +307,7 @@ def test_append_conforms_types_after_modify(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pqw
 
-    rogue = os.path.join(wh.path("alt_events"), "ingest_batch=7",
+    rogue = os.path.join(wh.path("alt_events"), "member=batch-7",
                          "event_date=2026-01-03")
     os.makedirs(rogue)
     pqw.write_table(pa.table({
@@ -318,7 +318,7 @@ def test_append_conforms_types_after_modify(spark, tmp_path):
     }), os.path.join(rogue, "part-0.parquet"))
     with wh._manifest_lock("alt_events"):
         cur = wh.load_manifest("alt_events")
-        cur["members"].append("ingest_batch=7")
+        cur["members"].append("member=batch-7")
         cur["version"] += 1
         wh._write_manifest("alt_events", cur)
     out = {r["event_id"]: r["user_id"]

@@ -121,7 +121,7 @@ def test_cli_serve_views_respect_migrations(env, spark, tmp_path, capsys):
     ))
 
     views = gold_views(wh)
-    assert isinstance(views["dim_tag"], tuple)  # declared-schema read
+    assert callable(views["dim_tag"])  # resolved through Warehouse.read
     ep = SqlServingEndpoint(spark, views)
     rows = ep.execute(
         "SELECT tag_key, tag_category FROM dim_tag ORDER BY tag_key"

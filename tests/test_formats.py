@@ -161,8 +161,8 @@ def test_footer_schema_matches_inference_on_warehouse_layouts(
     member = wh.load_manifest("batch_ev")["members"][0]
     patch = wh._patch_files("batch_ev")[0]
     for path, partition_cols in (
-        (wh.path("plain_ev"), ["event_date"]),
-        (wh.path("batch_ev"), ["ingest_batch", "event_date"]),
+        (wh.path("plain_ev"), ["member", "event_date"]),
+        (wh.path("batch_ev"), ["member", "event_date"]),
         (os.path.join(wh.path("batch_ev"), member), ["event_date"]),
         (os.path.join(wh._patch_dir("batch_ev"), patch), []),
     ):

@@ -165,7 +165,7 @@ def test_continuous_pipeline_owns_maintenance_cadence(spark, tmp_path):
     assert {r.event_id for r in bron.collect()} == {"m2"}
     # maintenance compacted the manifest into one generation
     man = cp.wh.load_manifest("wazuh_events_raw")
-    assert any(m.startswith("compacted-") for m in man["members"])
+    assert any(m.startswith("member=compacted-") for m in man["members"])
     # second batch: appends keep working post-compaction and the next
     # tick folds them again
     _write_batch(inp, [

@@ -6,7 +6,7 @@ ALTER … DELETE/UPDATE, e.g. scripts/alter_bronze_timezone_asia_jakarta.sql
 runs point ALTERs against live tables); DROP PARTITION and
 ``ttl_only_drop_parts`` remove whole partitions without reading a row.
 The manifest layout reproduces all of it: affected members → new
-``mutated-*`` members, pointer flip, ledger untouched.
+``member=mutated-*`` members, pointer flip, ledger untouched.
 """
 
 from __future__ import annotations
@@ -71,8 +71,8 @@ def test_delete_where_manifest_rewrites_only_affected_members(spark, wh):
     # only the batch containing 2024-01-02 rows was rewritten
     assert res["members_rewritten"] == 1 and res["members_kept"] == 1
     man = wh.load_manifest(t)
-    assert any(m.startswith("mutated-") for m in man["members"])
-    assert "ingest_batch=1" in man["members"]
+    assert any(m.startswith("member=mutated-") for m in man["members"])
+    assert "member=batch-1" in man["members"]
     assert wh.read(t).count() == before - 3
     # the replay ledger is untouched: a replayed batch still skips
     assert wh.batch_committed(t, 2)
@@ -127,7 +127,7 @@ def test_drop_partition_is_metadata_only(spark, wh):
     wh.append(t, _mk_events(spark, {3: 2}), batch_id=2)
     # capture inodes of a kept partition's files: a hardlink clone must NOT
     # rewrite them (metadata-only guarantee)
-    member = "ingest_batch=1"
+    member = "member=batch-1"
     kept_dir = os.path.join(wh.path(t), member, "event_date=2024-01-01")
     inodes_before = {
         f: os.stat(os.path.join(kept_dir, f)).st_ino
@@ -140,7 +140,9 @@ def test_drop_partition_is_metadata_only(spark, wh):
     assert got.filter("event_date = DATE'2024-01-02'").count() == 0
     assert got.count() == 4 + 2
     man = wh.load_manifest(t)
-    new_member = [m for m in man["members"] if m.startswith("mutated-")][0]
+    new_member = [
+        m for m in man["members"] if m.startswith("member=mutated-")
+    ][0]
     new_kept = os.path.join(wh.path(t), new_member, "event_date=2024-01-01")
     inodes_after = {
         f: os.stat(os.path.join(new_kept, f)).st_ino
@@ -157,7 +159,7 @@ def test_drop_partition_entire_member_vanishes(spark, wh):
     assert wh.drop_partition(t, "2024-01-02") == 1
     man = wh.load_manifest(t)
     # batch 2 was ONLY the dropped date → member removed, not replaced
-    assert man["members"] == ["ingest_batch=1"]
+    assert man["members"] == ["member=batch-1"]
     assert wh.read(t).count() == 3
     assert wh.batch_committed(t, 2)  # ledger still prevents replay
 
@@ -198,9 +200,9 @@ def test_tiered_compaction_bounds_generations(spark, wh):
         if (b + 1) % 2 == 0:
             wh.compact(t, mode="tiered", max_generations=3)
             members = wh.load_manifest(t)["members"]
-            assert not any(m.startswith("ingest_batch=") for m in members)
+            assert not any(m.startswith("member=batch-") for m in members)
             n_gens.append(
-                sum(1 for m in members if m.startswith("compacted-"))
+                sum(1 for m in members if m.startswith("member=compacted-"))
             )
     # generations accumulate 1, 2, 3 then a major merge folds them to 1
     assert max(n_gens) <= 3
@@ -224,7 +226,7 @@ def test_tiered_noop_without_new_batches(spark, wh):
 def test_batch_append_writes_one_part_per_date(spark, wh):
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 50, 2: 50}), batch_id=0)
-    root = os.path.join(wh.path(t), "ingest_batch=0")
+    root = os.path.join(wh.path(t), "member=batch-0")
     for d in ("2024-01-01", "2024-01-02"):
         files = [
             f for f in os.listdir(os.path.join(root, f"event_date={d}"))
@@ -276,7 +278,9 @@ def test_gc_sweeps_superseded_mutated_members(spark, wh):
     swept = wh.gc(t, min_age_sec=0)
     live = set(wh.load_manifest(t)["members"])
     assert all(s not in live for s in swept)
-    assert any(s.startswith(("mutated-", "ingest_batch=")) for s in swept)
+    assert any(
+        s.startswith(("member=mutated-", "member=batch-")) for s in swept
+    )
     assert wh.read(t).count() == 0  # both severities deleted
 
 
@@ -287,7 +291,6 @@ def test_tables_reports_warehouse_inventory(spark, wh):
     got = {r["table"]: r for r in wh.tables().collect()}
     assert t in got
     row = got[t]
-    assert row["layout"] == "manifest"
     assert row["n_members"] == 2
     assert row["n_committed_batches"] == 2
     assert row["n_files"] >= 2 and row["bytes"] > 0

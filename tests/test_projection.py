@@ -144,14 +144,14 @@ def test_tiered_compaction_refolds_only_new_generation(spark, wh):
     proj = "ev__proj__" + SPEC.name
     man0 = set(wh.load_manifest(proj)["members"])
     gen_fold = min(
-        int(m.split("=")[1]) for m in man0
+        int(m.rsplit("-", 1)[1]) for m in man0
     )  # the generation's fold batch (folded first)
     wh.compact("ev", mode="tiered")  # folds ONLY batches 9+10 into gen 2
     df, rep = ps.answer(["event_type"], METRICS)
     assert not rep.rebuilt and rep.folded_now == 1  # just the new gen
     man1 = set(wh.load_manifest(proj)["members"])
     # the generation-1 fold batch survived untouched
-    assert f"ingest_batch={gen_fold}" in man1
+    assert f"member=batch-{gen_fold}" in man1
     assert _sorted_rows(df) == _sorted_rows(
         ps._base_scan(["event_type"], METRICS)
     )
@@ -265,10 +265,10 @@ def test_lightweight_delete_refolds_only_affected_member(spark, wh):
     assert rep.refolded == 1 and rep.folded_now == 1
     man1 = wh.load_manifest(proj)
     # fold batches 0 and 2 survive byte-identical; batch 1 was replaced
-    assert "ingest_batch=0" in man1["members"]
-    assert "ingest_batch=2" in man1["members"]
-    assert "ingest_batch=1" not in man1["members"]
-    assert "ingest_batch=3" in man1["members"]  # the refold, new seq
+    assert "member=batch-0" in man1["members"]
+    assert "member=batch-2" in man1["members"]
+    assert "member=batch-1" not in man1["members"]
+    assert "member=batch-3" in man1["members"]  # the refold, new seq
     # answers still match the masked base scan exactly
     base = ps._base_scan(["event_type"], METRICS)
     assert _sorted_rows(df) == _sorted_rows(base)

@@ -226,8 +226,7 @@ def test_commit_marker_requires_success(spark, tmp_path):
     """A crash between task-file moves and the commit point leaves .parquet
     files on disk — the batch must NOT count as committed, or the replayed
     batch would skip reprocessing and lose rows (ADVICE round-2 item).  The
-    commit point is now the manifest flip; a legacy (pre-manifest) table
-    falls back to the job-level _SUCCESS marker."""
+    commit point is the manifest flip."""
     import os
     import shutil
 
@@ -240,10 +239,10 @@ def test_commit_marker_requires_success(spark, tmp_path):
     wh.append("ingest_metrics", df, batch_id=7)
     assert wh.batch_committed("ingest_metrics", 7)
 
-    # simulate the crash window: task files moved into place, but neither
-    # the job commit marker nor the manifest flip happened
+    # simulate the crash window: the member's files are in place, but the
+    # manifest flip never happened
     shutil.rmtree(os.path.join(wh.path("ingest_metrics"), "_manifest"))
-    os.remove(os.path.join(wh.path("ingest_metrics"), "ingest_batch=7", "_SUCCESS"))
+    assert os.listdir(os.path.join(wh.path("ingest_metrics"), "member=batch-7"))
     assert not wh.batch_committed("ingest_metrics", 7)
 
     # replay converges: the per-batch overwrite replaces the partial files
@@ -252,22 +251,24 @@ def test_commit_marker_requires_success(spark, tmp_path):
     assert wh.read("ingest_metrics").count() == 1
 
 
-def test_append_refuses_layout_mismatch(spark, tmp_path):
-    import pytest
-
+def test_append_mixes_batch_and_plain_appends(spark, tmp_path):
+    """Appends with and without a batch id land as members of the one
+    manifest layout: every row reads back, and a replay of a committed
+    batch id still skips."""
     from dev_clickhouse_spark.plans.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame([(1,)], "v long")
+    df = lambda v: spark.createDataFrame([(v,)], "v long")  # noqa: E731
 
-    wh.append("ingest_metrics", df)  # plain layout
-    with pytest.raises(ValueError, match="plain layout"):
-        wh.append("ingest_metrics", df, batch_id=1)
-
-    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
-    wh2.append("ingest_metrics", df, batch_id=1)  # batch layout
-    with pytest.raises(ValueError, match="ingest_batch layout"):
-        wh2.append("ingest_metrics", df)
+    assert wh.append("ingest_metrics", df(1)) == 1
+    assert wh.append("ingest_metrics", df(2), batch_id=1) == 1
+    assert wh.append("ingest_metrics", df(3)) == 1
+    assert wh.append("ingest_metrics", df(2), batch_id=1) == 0  # replay
+    assert sorted(
+        r.v for r in wh.read("ingest_metrics").collect()
+    ) == [1, 2, 3]
+    assert wh.batch_committed("ingest_metrics", 1)
+    assert len(wh.load_manifest("ingest_metrics")["members"]) == 3
 
 
 def _wazuh_bronze_df(spark, wh, event_ids, minute=5):
@@ -294,7 +295,7 @@ def test_compact_overlaps_appends_via_manifest(spark, tmp_path):
     wh.append(t, _wazuh_bronze_df(spark, wh, ["a0", "a1"]), batch_id=0)
     wh.append(t, _wazuh_bronze_df(spark, wh, ["b0"]), batch_id=1)
     assert sorted(wh.load_manifest(t)["members"]) == [
-        "ingest_batch=0", "ingest_batch=1"
+        "member=batch-0", "member=batch-1"
     ]
 
     # interleave deterministically: the concurrent append lands after the
@@ -317,8 +318,10 @@ def test_compact_overlaps_appends_via_manifest(spark, tmp_path):
     man = wh.load_manifest(t)
     # live set = the compacted member + the mid-compaction append
     assert len(man["members"]) == 2
-    compacted = [m for m in man["members"] if m.startswith("compacted-")]
-    assert compacted and "ingest_batch=2" in man["members"]
+    compacted = [
+        m for m in man["members"] if m.startswith("member=compacted-")
+    ]
+    assert compacted and "member=batch-2" in man["members"]
     # zero rows lost, served through the manifest
     got = {r.event_id for r in wh.read(t).collect()}
     assert got == {"a0", "a1", "b0", "c0", "c1"}
@@ -330,7 +333,7 @@ def test_compact_overlaps_appends_via_manifest(spark, tmp_path):
 
     for b in (0, 1):
         assert wh.batch_committed(t, b)
-        assert not os.path.exists(os.path.join(wh.path(t), f"ingest_batch={b}"))
+        assert not os.path.exists(os.path.join(wh.path(t), f"member=batch-{b}"))
     assert wh.batch_committed(t, 2)
 
     # a second compact folds the straggler in; data unchanged
@@ -375,26 +378,6 @@ def test_compact_concurrent_appender_thread(spark, tmp_path):
     got = {r.event_id for r in wh.read(t).collect()}
     assert got == {f"e{b}_{i}" for b in range(n_batches) for i in range(per)}
     assert all(wh.batch_committed(t, b) for b in range(n_batches))
-
-
-def test_legacy_batch_dirs_adopted_on_compact(spark, tmp_path):
-    """Pre-manifest tables (bare ingest_batch= dirs) adopt a manifest on
-    their first compact; committed ids carry over from _SUCCESS markers."""
-    import shutil
-
-    from dev_clickhouse_spark.plans.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "wazuh_events_raw"
-    wh.append(t, _wazuh_bronze_df(spark, wh, ["x0"]), batch_id=0)
-    wh.append(t, _wazuh_bronze_df(spark, wh, ["x1"]), batch_id=1)
-    shutil.rmtree(os.path.join(wh.path(t), "_manifest"))  # simulate legacy
-    assert wh.load_manifest(t) is None
-
-    assert wh.compact(t) == 1
-    man = wh.load_manifest(t)
-    assert man is not None and sorted(man["committed_batches"]) == [0, 1]
-    assert {r.event_id for r in wh.read(t).collect()} == {"x0", "x1"}
 
 
 def test_partial_bronze_write_failure_replays_exactly_once(
@@ -512,7 +495,7 @@ def test_gc_sweeps_only_unreferenced_members(spark, tmp_path):
 
     # a compactor crash between member write and pointer flip: the member
     # exists on disk but no manifest version references it
-    orphan = _os.path.join(wh.path(t), "compacted-deadbeef")
+    orphan = _os.path.join(wh.path(t), "member=compacted-deadbeef")
     _os.makedirs(orphan)
     with open(_os.path.join(orphan, "part-0.parquet"), "w") as fh:
         fh.write("x")
@@ -522,7 +505,7 @@ def test_gc_sweeps_only_unreferenced_members(spark, tmp_path):
     # …old ones are swept; referenced members are untouched
     old = _time.time() - 7200
     _os.utime(orphan, (old, old))
-    assert wh.gc(t, min_age_sec=3600) == ["compacted-deadbeef"]
+    assert wh.gc(t, min_age_sec=3600) == ["member=compacted-deadbeef"]
     assert not _os.path.exists(orphan)
     assert {r.event_id for r in wh.read(t).collect()} == {"a0", "b0"}
 
@@ -548,7 +531,7 @@ def test_replay_after_compaction_does_not_duplicate(spark, tmp_path):
     wh.append(t, _wazuh_bronze_df(spark, wh, ["b0"]), batch_id=1)
     wh.compact(t)
     man = wh.load_manifest(t)
-    assert all(m.startswith("compacted-") for m in man["members"])
+    assert all(m.startswith("member=compacted-") for m in man["members"])
 
     # late replay of batch 1 (identical rows by construction)
     wh.append(t, _wazuh_bronze_df(spark, wh, ["b0"]), batch_id=1)

@@ -40,6 +40,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from dev_clickhouse_spark.llm.dedup import minhash_lsh_pairs, minhash_signatures
+from dev_clickhouse_spark.plans.warehouse import batch_member
 from dev_clickhouse_spark.streaming import CorpusStream
 
 #: one batch = 3 novel docs + 1 near-dup of the PREVIOUS batch's first novel
@@ -115,12 +116,15 @@ def run_soak(spark: SparkSession, root: str, n_batches: int = 24) -> dict:
             cs = CorpusStream(spark, wh_root, os.path.join(root, "ck"))
             events.append({"after_batch": i, "reload": True})
         if i == (2 * n_batches) // 3:
-            # kill between the data appends and the metrics commit marker,
-            # then replay the SAME batch through the reloaded instance
-            shutil.rmtree(
-                os.path.join(cs.wh.root, "corpus_ingest_metrics",
-                             f"ingest_batch={i}")
-            )
+            # kill between the data appends and the metrics commit marker
+            # (roll the marker's commit back), then replay the SAME batch
+            # through the reloaded instance
+            def uncommit(man, i=i):
+                man["committed_batches"].remove(i)
+                man["members"].remove(batch_member(i))
+                return True
+
+            cs.wh._flip("corpus_ingest_metrics", uncommit)
             assert not cs.wh.batch_committed("corpus_ingest_metrics", i)
             cs._process_batch(batch, i)
             events.append({"after_batch": i, "kill_replay": True})
@@ -170,9 +174,8 @@ def run_soak(spark: SparkSession, root: str, n_batches: int = 24) -> dict:
 
     metrics = [
         r.asDict()
-        for r in spark.read.parquet(
-            os.path.join(cs.wh.root, "corpus_ingest_metrics")
-        ).orderBy("batch_id").collect()
+        for r in cs.wh.read("corpus_ingest_metrics")
+        .orderBy("batch_id").collect()
     ]
     for m in metrics:
         m["processed_at"] = str(m["processed_at"])
@@ -199,9 +202,12 @@ def run_soak(spark: SparkSession, root: str, n_batches: int = 24) -> dict:
 
 
 def main() -> None:
+    import argparse
     import tempfile
 
     from dev_clickhouse_spark.session import get_spark
+
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
 
     spark = get_spark()
     with tempfile.TemporaryDirectory(prefix="corpus_soak_") as root:

@@ -11,7 +11,7 @@ micro-batch forever?
 
 The soak: ≥100 micro-batches through the real streaming path — payload
 synth → ``with_parsed`` → ``extract_all`` 1→3 fan-out → idempotent
-``Warehouse.append(batch_id=…)`` into the manifest layout (the same commit
+``Warehouse.append(batch_id=…)`` batch members (the same commit
 protocol the foreachBatch sink uses, ``streaming/bronze_stream.py``) — with
 ``compact(retain_old=False)`` + ``gc(min_age_sec=0)`` every
 ``--compact-every`` batches on the busiest table, exactly the
@@ -21,7 +21,8 @@ Recorded per maintenance cycle: steady-state events/s (median per-batch
 over the window), live parquet-file count and manifest version BEFORE vs
 AFTER compaction, full-table read latency before vs after (the read-side
 payoff small-file compaction exists for), and the ledger length (replay
-protection must keep every batch id even as their dirs are folded away).
+protection must keep every batch id even as their members are folded
+away).
 
 Verdict: PASS iff (a) steady-state throughput over the LAST maintenance
 window ≥ 10× the reference's 333 ev/s floor, (b) the live file count right
@@ -102,12 +103,10 @@ def main() -> None:
         return n
 
     def manifest_version(table: str) -> int:
-        man = wh.load_manifest(table)
-        return man["version"] if man else 0
+        return wh.load_manifest(table)["version"]
 
     def ledger_len(table: str) -> int:
-        man = wh.load_manifest(table)
-        return len(man["committed_batches"]) if man else 0
+        return len(wh.load_manifest(table)["committed_batches"])
 
     batch_secs: list[float] = []
     cycles: list[dict] = []
