@@ -152,12 +152,10 @@ class ProjectionReport:
 
 def _plan_folds(
     wh: Warehouse,
-    base: str,
     proj_table: str,
     side: dict | None,
     live: list[str],
-    overlay_now: list[str],
-    affected_cache: dict,
+    overlays: list[dict],
 ) -> tuple[list[dict], int, bool, int]:
     """Shared fold-planning for aggregate and sort projections — both
     maintenance triggers are MEMBER-SCOPED:
@@ -169,11 +167,11 @@ def _plan_folds(
       the projection parts OF THE MERGED PARTS, and this is that: before
       round 10 EVERY compaction wholesale-rebuilt every projection.
     - lightweight DELETE/UPDATE: drop exactly the fold batches whose
-      members the new DV/patch entries address (overlays key (file,
-      position); a file belongs to one member) — a one-row delete
-      re-folds one member, not the table.
+      members the new DV/patch entries of the base manifest
+      (``overlays``) address — a one-row delete re-folds one member, not
+      the table.  Manifest metadata only, no Spark job.
 
-    Overlay files that VANISH (gc after a merge materialized them) are
+    Overlay entries that VANISH (gc after a merge materialized them) are
     pruned from the seen set: within the API lifecycle an overlay is only
     collected when every member it referenced was rewritten, and those
     members' fold batches are dropped by the membership rule above.
@@ -207,19 +205,16 @@ def _plan_folds(
                 wh.drop_member(proj_table, batch_member(f["seq"]))
                 folds.remove(f)
         folded = {m for f in folds for m in f["members"]}
-    new_ov = [o for o in overlay_now if o not in set(seen)]
+    seen = set(seen)
+    affected = folded & {
+        m for e in overlays if e["name"] not in seen for m in e["members"]
+    }
     refolded = 0
-    if new_ov:
-        key = frozenset(new_ov)
-        if key not in affected_cache:
-            affected_cache[key] = wh.overlay_member_refs(base, new_ov)
-        affected = affected_cache[key] & folded
-        if affected:
-            for f in list(folds):
-                if set(f["members"]) & affected:
-                    wh.drop_member(proj_table, batch_member(f["seq"]))
-                    folds.remove(f)
-                    refolded += len(f["members"])
+    for f in list(folds):
+        if set(f["members"]) & affected:
+            wh.drop_member(proj_table, batch_member(f["seq"]))
+            folds.remove(f)
+            refolded += len(f["members"])
     return folds, fold_seq, False, refolded, bool(removed) or refolded > 0
 
 
@@ -275,16 +270,15 @@ class ProjectionSet:
         rebuild was a full-table re-aggregation per projection at
         100 TB)."""
         rep = ProjectionReport()
-        live = list(self.wh.load_manifest(self.base)["members"])
-        overlay_now = self.wh.overlay_files(self.base)
-        affected_cache: dict = {}
+        man = self.wh.load_manifest(self.base)
+        live = man["members"]
+        overlay_now = sorted(e["name"] for e in man["overlays"])
         for spec in self.specs:
             if spec_name is not None and spec.name != spec_name:
                 continue
             side = self._load_sidecar(spec)
             folds, fold_seq, rebuilt, refolded, changed = _plan_folds(
-                self.wh, self.base, self._proj_table(spec), side, live,
-                overlay_now, affected_cache,
+                self.wh, self._proj_table(spec), side, live, man["overlays"],
             )
             if rebuilt:
                 shutil.rmtree(
@@ -299,7 +293,9 @@ class ProjectionSet:
             # crashed multi-member fold resumes at the ledger (members
             # fold in stable manifest order, so retried seqs line up)
             for m in new:
-                df = self.wh._read_members(self.base, [m])
+                df = self.wh._read_members(
+                    self.base, [m], overlays=man["overlays"]
+                )
                 states = df.groupBy(*spec.dims).agg(*spec.state_exprs())
                 self.wh.append(
                     self._proj_table(spec), states, batch_id=fold_seq
@@ -502,15 +498,16 @@ class SortProjection:
 
     def ensure(self) -> ProjectionReport:
         rep = ProjectionReport()
-        live = list(self.wh.load_manifest(self.base)["members"])
+        man = self.wh.load_manifest(self.base)
+        live = man["members"]
         try:
             with open(self._sidecar_path()) as fh:
                 side = json.load(fh)
         except OSError:
             side = None
-        overlay_now = self.wh.overlay_files(self.base)
+        overlay_now = sorted(e["name"] for e in man["overlays"])
         folds, fold_seq, rebuilt, refolded, changed = _plan_folds(
-            self.wh, self.base, self._table, side, live, overlay_now, {},
+            self.wh, self._table, side, live, man["overlays"],
         )
         if rebuilt:
             shutil.rmtree(self.wh.path(self._table), ignore_errors=True)
@@ -519,7 +516,7 @@ class SortProjection:
         folded = {m for f in folds for m in f["members"]}
         new = [m for m in live if m not in folded]
         for m in new:  # one fold batch per member (see ProjectionSet)
-            df = self.wh._read_members(self.base, [m])
+            df = self.wh._read_members(self.base, [m], overlays=man["overlays"])
             out = df.repartitionByRange(
                 self.files_per_fold, *self.sort_cols
             ).sortWithinPartitions(*self.sort_cols)

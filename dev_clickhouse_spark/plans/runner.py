@@ -305,7 +305,9 @@ class PipelineRunner:
         gc_min_age_sec: float = 3600.0,
         now: dt.datetime | None = None,
     ) -> dict[str, int]:
-        """One background-merge cycle over the bronze tables — the work
+        """One background-merge cycle over the bronze tables and the gold
+        tables the pipelines append to (SCD1 dims, facts, bridges; an SCD2
+        snapshot is overwritten to one member each run) — the work
         ClickHouse's merge scheduler owns: tiered compaction (folding the
         members appended since the last cycle), orphan GC, deletion-vector
         GC, and any DECLARED table TTL (``set_table_ttl``), which the
@@ -317,8 +319,12 @@ class PipelineRunner:
         cadence can be aggressive without rewriting the table."""
         from ..schemas import BRONZE_SCHEMAS
 
+        if tables is None:
+            tables = list(BRONZE_SCHEMAS) + [
+                s.target_table for s in self.pipelines if s.mode == "append"
+            ]
         out: dict[str, int] = {}
-        for table in tables if tables is not None else list(BRONZE_SCHEMAS):
+        for table in tables:
             if not self.wh.exists(table):
                 continue
             out[table] = self.wh.compact(table, mode=mode, now=now)

@@ -51,7 +51,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..io import parquet_schema, read_parquet
-from .warehouse import Warehouse
+from .warehouse import Warehouse, _addressing, _tag_rows
 
 #: tokenizer shared by index build and query: lowercase, split on
 #: non-alphanumeric runs — mirrors ClickHouse tokenbf_v1's "split by
@@ -278,7 +278,8 @@ class SkipIndex:
         """Pruned scan with the residual predicate applied — always equal
         to ``wh.read(table).filter(<predicates>)``, just touching fewer
         files."""
-        if self.wh._patch_files(self.table):
+        overlays = self.wh.load_manifest(self.table)["overlays"]
+        if any(e["kind"] == "patch" for e in overlays):
             # lightweight UPDATEs overlay new column values the per-file
             # minmax/bloom sidecars don't know about — a patched row could
             # enter the predicate range inside a pruned-away file.  Fall
@@ -294,44 +295,29 @@ class SkipIndex:
         surv = self.prune(predicates)
         stats = surv.pop("__stats__")
         self.last_stats = stats
-        spark = self.wh.spark
-        dv_files = self.wh._dv_files(self.table)
+        # lightweight deletes mask rows by (file, position): the pruned
+        # scan goes through the same overlay step as Warehouse.read
+        dvs = _addressing(overlays, surv)
         parts = []
         for member, files in surv.items():
             mpath = os.path.join(self.wh.path(self.table), member)
-            reader = spark.read.option("basePath", mpath).schema(
+            reader = self.wh.spark.read.option("basePath", mpath).schema(
                 parquet_schema(mpath)
             )
             if files == ["*"]:
                 part = reader.parquet(mpath)
             else:
                 part = reader.parquet(*[os.path.join(mpath, f) for f in files])
-            if dv_files:
-                # lightweight deletes mask rows by (file, position); the
-                # pruned scan must honor them exactly like Warehouse.read
-                part = part.select(
-                    F.col("_metadata.file_path").alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                    *[F.col(c) for c in part.columns],
-                )
-            parts.append(part)
+            parts.append(_tag_rows(part) if dvs else part)
         if not parts:
-            df = self.wh.read(self.table).limit(0)
-        else:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p, allowMissingColumns=True)
-            if dv_files:
-                dv = read_parquet(
-                    spark,
-                    *[
-                        os.path.join(self.wh._dv_dir(self.table), f)
-                        for f in dv_files
-                    ]
-                )
-                df = df.join(dv, ["__dv_file", "__dv_pos"], "left_anti").drop(
-                    "__dv_file", "__dv_pos"
-                )
+            return self.wh.read(self.table).limit(0)
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p, allowMissingColumns=True)
+        if dvs:
+            df = self.wh._apply_overlays(
+                self.table, df, list(surv), dvs
+            ).drop("__dv_file", "__dv_pos")
         return df.filter(self._residual(predicates, df))
 
     def _residual(self, predicates: list[tuple], df: DataFrame):

@@ -164,6 +164,30 @@ def member_kind(member: str) -> str:
     return member.split("=", 1)[1].split("-", 1)[0]
 
 
+#: directory (under the table root) of each overlay kind's entries
+_OVERLAY_DIRS = {"dv": "_deletes", "patch": "_patches"}
+
+
+_RETRY = ("members of {!r} were replaced while the mutation ran; "
+          "nothing was changed — retry it")
+
+
+def _addressing(overlays: list[dict], members) -> list[dict]:
+    """The overlay entries that address any of ``members``."""
+    ms = set(members)
+    return [e for e in overlays if ms.intersection(e["members"])]
+
+
+def _tag_rows(df: DataFrame) -> DataFrame:
+    """Prefix a raw member scan with the (file, row position) address
+    every overlay row keys on."""
+    return df.select(
+        F.col("_metadata.file_path").alias("__dv_file"),
+        F.col("_metadata.row_index").alias("__dv_pos"),
+        "*",
+    )
+
+
 class Warehouse:
     """Path-rooted table registry with append / overwrite / read.
 
@@ -749,15 +773,13 @@ class Warehouse:
                 f"CLEAR COLUMN IN PARTITION needs a date-partitioned "
                 f"table; {table!r} has no event_date column"
             )
-        if self._patch_files(table):
+        man = self.load_manifest(table)
+        if any(e["kind"] == "patch" for e in man["overlays"]):
             raise ValueError(
                 f"table {table!r} has pending lightweight-UPDATE patches; "
                 "compact() to materialize them before CLEAR COLUMN"
             )
-        entry = {
-            "col": col, "date": str(date),
-            "members": list(self.load_manifest(table)["members"]),
-        }
+        entry = {"col": col, "date": str(date), "members": man["members"]}
         self._commit_meta(table, cleared=lambda es: [*(es or []), entry])
         self._log_mutation(
             table, "clear_column",
@@ -908,14 +930,19 @@ class Warehouse:
         """The CURRENT manifest; a table never written has the empty
         version-0 manifest.
 
-        {"version": K, "members": [dir, ...], "committed_batches": [id, ...]}
+        {"version": K, "members": [dir, ...], "committed_batches": [id, ...],
+         "overlays": [{"name", "kind", "seq", "members"}, ...]}
 
         ``members`` are the live data directories (scanned by read());
         ``committed_batches`` is the replay-skip ledger of
         ``append(..., batch_id=)`` — it SURVIVES compaction, so a replayed
         micro-batch whose member was long since compacted away still skips
         instead of re-appending rows that now live inside a compacted
-        member."""
+        member.  ``overlays`` are the committed lightweight mutations, a
+        ``dv`` (deletion vector, ``_deletes/<name>``) or ``patch`` (updated
+        rows, ``_patches/<name>``) each, ``seq`` their commit order and
+        ``members`` the members their rows address; an overlay directory
+        no manifest lists is invisible, and ``gc()`` sweeps it."""
         cur = os.path.join(self._manifest_dir(table), "CURRENT")
         # EXCHANGE TABLES swaps the whole table directory between the
         # CURRENT read and the version-file open — the resolved v<K>.json
@@ -928,14 +955,18 @@ class Warehouse:
                 with open(cur) as fh:
                     version_file = fh.read().strip()
             except OSError:
-                return {"version": 0, "members": [], "committed_batches": []}
+                return {"version": 0, "members": [], "committed_batches": [],
+                        "overlays": []}
             try:
                 with open(
                     os.path.join(self._manifest_dir(table), version_file)
                 ) as fh:
-                    return json.load(fh)
+                    man = json.load(fh)
             except OSError:
                 continue
+            # a manifest written before overlays were committed lists none
+            man.setdefault("overlays", [])
+            return man
         raise FileNotFoundError(
             f"manifest {version_file!r} of {table!r} unreadable after "
             "5 re-resolves — not a concurrent swap"
@@ -990,45 +1021,63 @@ class Warehouse:
         return changed
 
     def _swap_members(
-        self, table: str, replaced: dict[str, str | None]
+        self, table: str, replaced: dict[str, str | None], snap: dict,
+        overlays: dict[str, dict | None] | None = None,
     ) -> bool:
         """Flip to the live members with each key of ``replaced`` swapped
         for its value (None = removed) — the commit of a compaction,
-        mutation or partition drop.  All or nothing: when a replaced member
-        is no longer live (an overwrite or another rewrite replaced it
-        since the caller's snapshot), the manifest is left unchanged, the
-        new members are deleted and False returned — swapping the rewrite
-        in would resurrect the rows it replaced."""
+        mutation or partition drop, whose rewrite read the manifest
+        ``snap``.  ``overlays`` swaps overlay entries by name the same way
+        (DROP PARTITION's remapped overlays).  All or nothing: when a
+        replaced member is no longer live (an overwrite or another rewrite
+        replaced it since the snapshot), or an overlay committed after the
+        snapshot addresses a replaced member (the rewrite never applied
+        it), the manifest is left unchanged, the new members and overlay
+        entries are deleted and False returned — swapping the rewrite in
+        would resurrect the rows it replaced or lose the overlay."""
+        seen = {e["name"] for e in snap["overlays"]}
+        overlays = overlays or {}
 
         def edit(man: dict) -> bool:
-            if not set(replaced) <= set(man["members"]):
+            if not set(replaced) <= set(man["members"]) or any(
+                e["name"] not in seen and set(e["members"]) & set(replaced)
+                for e in man["overlays"]
+            ):
                 return False
             man["members"] = [
                 r for r in (replaced.get(m, m) for m in man["members"])
                 if r is not None
             ]
+            man["overlays"] = [
+                r for r in (overlays.get(e["name"], e) for e in man["overlays"])
+                if r is not None
+            ]
             return True
 
-        if self._flip(table, edit):
-            return True
-        for m in replaced.values():
-            if m is not None:
-                shutil.rmtree(
-                    os.path.join(self.path(table), m), ignore_errors=True
-                )
-        return False
+        ok = self._flip(table, edit)
+        if ok:
+            # the swapped-out overlay entries are spent
+            doomed = [e for e in snap["overlays"] if e["name"] in overlays]
+        else:
+            doomed = [e for e in overlays.values() if e is not None]
+            for m in replaced.values():
+                if m is not None:
+                    shutil.rmtree(
+                        os.path.join(self.path(table), m), ignore_errors=True
+                    )
+        for e in doomed:
+            shutil.rmtree(self._overlay_path(table, e), ignore_errors=True)
+        return ok
 
     def _commit_rewrite(
-        self, table: str, replaced: dict[str, str | None], retain_old: bool
+        self, table: str, replaced: dict[str, str | None], retain_old: bool,
+        snap: dict, overlays: dict[str, dict | None] | None = None,
     ) -> None:
         """Commit a mutation's member rewrite (``_swap_members``) and delete
         the replaced members unless ``retain_old``.  Raises when the
         snapshot went stale: the mutation then changed nothing."""
-        if not self._swap_members(table, replaced):
-            raise RuntimeError(
-                f"members of {table!r} were replaced while the mutation "
-                "ran; nothing was changed — retry it"
-            )
+        if not self._swap_members(table, replaced, snap, overlays):
+            raise RuntimeError(_RETRY.format(table))
         if not retain_old:
             for m in replaced:
                 shutil.rmtree(
@@ -1075,9 +1124,10 @@ class Warehouse:
         the new schema without rewrite.  The metadata document is resolved
         ONCE and every step below uses that copy."""
         meta = self._meta(table)
+        man = self.load_manifest(table)
         return self._apply_computed_read(
             self._read_members(
-                table, self.load_manifest(table)["members"], meta=meta
+                table, man["members"], meta=meta, overlays=man["overlays"]
             ),
             meta,
         )
@@ -1110,7 +1160,9 @@ class Warehouse:
                 "snapshots reconstructible"
             )
         # computed columns apply to snapshots too — ALIAS/back-fill are
-        # read-time semantics, not part of the stored member set
+        # read-time semantics, not part of the stored member set — and so
+        # do the CURRENT manifest's overlays (ClickHouse lightweight
+        # mutations apply to every read)
         meta = self._meta(table)
         return self._apply_computed_read(
             self._read_members(table, man["members"], meta=meta), meta
@@ -1118,7 +1170,7 @@ class Warehouse:
 
     def _read_members(
         self, table: str, members: list[str], keep_dv_tag: bool = False,
-        meta: dict | None = None,
+        meta: dict | None = None, overlays: list[dict] | None = None,
     ) -> DataFrame:
         """Scan exactly the given member dirs — normally one fused scan
         (below); a pointer flip mid-query cannot mix generations.  Members
@@ -1126,18 +1178,20 @@ class Warehouse:
         unioned; each scan still prunes event_date partitions and pushes
         filters independently.
 
-        When the table carries deletion vectors (lightweight DELETE),
-        every scan is tagged with the parquet ``_metadata`` (file, row
-        position) BEFORE the union — the hidden column only resolves on a
-        raw scan — and the DV anti-join masks deleted rows; with
-        ``keep_dv_tag`` the position columns stay visible (the
-        delete-writer needs them).  ``meta`` is the caller's resolved
-        metadata document (resolved here when None)."""
+        When an overlay (lightweight DELETE/UPDATE) addresses a scanned
+        member, every scan is tagged with the parquet ``_metadata`` (file,
+        row position) BEFORE the union — the hidden column only resolves on
+        a raw scan — and ``_apply_overlays`` applies them; with
+        ``keep_dv_tag`` the position columns stay visible (the mutation
+        writers need them).  ``meta`` is the caller's resolved metadata
+        document and ``overlays`` the overlay entries of the caller's
+        manifest (each resolved here when None)."""
         meta = self._meta(table) if meta is None else meta
         override = meta.get("schema")
-        dv_files = self._dv_files(table)
-        patch_files = self._patch_files(table)
-        tag = bool(dv_files) or bool(patch_files) or keep_dv_tag
+        if overlays is None:
+            overlays = self.load_manifest(table)["overlays"]
+        overlays = _addressing(overlays, members)
+        tag = bool(overlays) or keep_dv_tag
         # ALTER metadata is hoisted OUT of the member loop: these are
         # per-table constants, and a scan of N members must not pay N
         # metadata lookups / schema constructions (the round-11 overhead
@@ -1191,11 +1245,7 @@ class Warehouse:
                     .parquet(*paths)
                 )
                 if tag:
-                    fused = fused.select(
-                        F.col("_metadata.file_path").alias("__dv_file"),
-                        F.col("_metadata.row_index").alias("__dv_pos"),
-                        "*",
-                    )
+                    fused = _tag_rows(fused)
                 dfs.append(fused.drop(_MEMBER_KEY))
                 live = []
         for m in live:
@@ -1266,11 +1316,7 @@ class Warehouse:
                     sel.append(expr.alias(c))
                 df = df.select(*sel)
             if tag:
-                df = df.select(
-                    F.col("_metadata.file_path").alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_pos"),
-                    "*",
-                )
+                df = _tag_rows(df)
             dfs.append(df)
         if not dfs:
             return self.spark.createDataFrame(
@@ -1283,28 +1329,66 @@ class Warehouse:
         # holds a value in pre-rename members and NULL in post-rename
         # ones, so coalesce(new, old…) is exact here, and patch rows
         # (written post-read, new names only) pass through untouched
-        out = self._apply_renames(out, ren)
-        if patch_files:
-            # lightweight UPDATE (patch parts): replace each patched row
-            # address with its LATEST patch row — the patch keeps the
+        out = self._apply_overlays(
+            table, self._apply_renames(out, ren), members, overlays
+        )
+        if tag and not keep_dv_tag:
+            out = out.drop("__dv_file", "__dv_pos")
+        if override is not None:
+            target = self.schema_for(table, meta)
+            if tag and keep_dv_tag:
+                # the delete-writer needs the position tag to survive the
+                # declared-schema projection
+                target = T.StructType(
+                    [
+                        T.StructField("__dv_file", T.StringType()),
+                        T.StructField("__dv_pos", T.LongType()),
+                        *target.fields,
+                    ]
+                )
+            out = conform_to_schema(out, target)
+        return out
+
+    # -- lightweight DELETE / UPDATE overlays ---------------------------------
+
+    def _apply_overlays(
+        self, table: str, out: DataFrame, members: list[str],
+        overlays: list[dict],
+    ) -> DataFrame:
+        """THE overlay step of every read: ``out`` scans ``members``,
+        tagged by ``_tag_rows``; ``overlays`` are manifest entries
+        addressing them.  Patches replace each patched row address with
+        its latest patch row, then the deletion vectors mask their
+        addresses.  The tag columns stay."""
+        patches = [e for e in overlays if e["kind"] == "patch"]
+        dvs = [e for e in overlays if e["kind"] == "dv"]
+        if patches:
+            # lightweight UPDATE (patch parts): a patch row keeps the
             # original (file, position), so later DVs and further patches
-            # still address it.  Patches are FILTERED to files under the
-            # scanned members (a file belongs to exactly one member), so a
-            # subset scan — tiered compaction folding only fresh members,
-            # a snapshot of an older manifest — never injects rows whose
-            # originals live outside the scan.
-            # patch dirs are immutable once renamed into place and normally
-            # share one schema (each patch writer selects the full tagged
-            # row), so one multi-path scan reads them all.  An ALTER between
-            # patches changes the patch columns or their types: then each
-            # schema group is read with its own footer schema and the
-            # groups are unioned by name (types widen in the union).
+            # still address it; the latest entry (highest ``seq``) of a
+            # row wins.  A patch addressing members outside the scan (a
+            # tiered compaction folding only fresh members) is FILTERED to
+            # files under the scanned members (a file belongs to exactly
+            # one member), so it never injects rows whose originals live
+            # outside the scan.
+            # patch dirs normally share one schema (each patch writer
+            # selects the full tagged row), so one multi-path scan reads
+            # them all.  An ALTER between patches changes the patch
+            # columns or their types: then each schema group is read with
+            # its own footer schema and the groups are unioned by name
+            # (types widen in the union).
+            src = F.col("_metadata.file_path")
+            seq = None
             by_schema: dict = {}
-            for f in patch_files:
-                pp = os.path.join(self._patch_dir(table), f)
+            for e in patches:
+                pp = self._overlay_path(table, e)
                 by_schema.setdefault(parquet_schema(pp), []).append(pp)
+                hit = src.contains(f"/{e['name']}/")
+                seq = (F.when(hit, e["seq"]) if seq is None
+                       else seq.when(hit, e["seq"]))
             pats = [
                 self.spark.read.schema(sch).parquet(*pps)
+                .select("*", seq.alias("__patch_seq"))
                 for sch, pps in by_schema.items()
             ]
             pat = pats[0]
@@ -1333,121 +1417,79 @@ class Warehouse:
                 ["__dv_file", "__dv_pos"],
                 "left_anti",
             ).unionByName(latest, allowMissingColumns=True)
-        if dv_files:
+        if dvs:
             # DV schema is FIXED by the delete-writer (the address pair) —
             # an explicit schema skips inference entirely (r14)
             dv = self.spark.read.schema(
                 "__dv_file string, __dv_pos long"
-            ).parquet(
-                *[os.path.join(self._dv_dir(table), f) for f in dv_files]
-            )
+            ).parquet(*[self._overlay_path(table, e) for e in dvs])
             out = out.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
-        if tag and not keep_dv_tag:
-            out = out.drop("__dv_file", "__dv_pos")
-        if override is not None:
-            target = self.schema_for(table, meta)
-            if tag and keep_dv_tag:
-                # the delete-writer needs the position tag to survive the
-                # declared-schema projection
-                target = T.StructType(
-                    [
-                        T.StructField("__dv_file", T.StringType()),
-                        T.StructField("__dv_pos", T.LongType()),
-                        *target.fields,
-                    ]
-                )
-            out = conform_to_schema(out, target)
         return out
 
-    # -- lightweight DELETE (deletion vectors) ------------------------------
+    def _overlay_path(self, table: str, entry: dict) -> str:
+        return os.path.join(
+            self.path(table), _OVERLAY_DIRS[entry["kind"]], entry["name"]
+        )
 
-    def _dv_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_deletes")
+    def _new_overlay(self, table: str, kind: str) -> str:
+        """A fresh, not yet listed overlay directory of ``kind``."""
+        return os.path.join(
+            self.path(table), _OVERLAY_DIRS[kind],
+            f"{kind}-{uuid.uuid4().hex[:8]}",
+        )
 
-    def _dv_files(self, table: str) -> list[str]:
-        try:
-            return sorted(
-                e for e in os.listdir(self._dv_dir(table))
-                if e.startswith("dv-")
-            )
-        except OSError:
-            return []
+    def _commit_overlay(self, table: str, kind: str, path: str) -> None:
+        """Commit the written overlay directory ``path`` as a manifest
+        entry.  Its ``members`` are read from the rows' ``__dv_file``
+        column with pyarrow (no Spark job); its ``seq`` is one above every
+        live entry's, so a later patch of a row wins.  When a member the
+        rows address was replaced since the overlay's scan (a compaction
+        or mutation flipped first), the rows would address files no read
+        scans: the directory is deleted and the write raises."""
+        members = self._overlay_members(table, path)
 
-    # -- lightweight UPDATE (patch parts) -----------------------------------
+        def add(man: dict) -> bool:
+            if not set(members) <= set(man["members"]):
+                return False
+            man["overlays"].append({
+                "name": os.path.basename(path),
+                "kind": kind,
+                "seq": 1 + max((e["seq"] for e in man["overlays"]),
+                               default=-1),
+                "members": members,
+            })
+            return True
 
-    def _patch_dir(self, table: str) -> str:
-        return os.path.join(self.path(table), "_patches")
+        if not self._flip(table, add):
+            shutil.rmtree(path, ignore_errors=True)
+            raise RuntimeError(_RETRY.format(table))
 
-    def _patch_files(self, table: str) -> list[str]:
-        try:
-            return sorted(
-                e for e in os.listdir(self._patch_dir(table))
-                if e.startswith("patch-")
-            )
-        except OSError:
-            return []
+    def _overlay_members(self, table: str, path: str) -> list[str]:
+        """The members the rows of the overlay directory ``path`` address:
+        the first component of each distinct ``__dv_file`` under the table
+        root (a file belongs to exactly one member), read with pyarrow."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-    def _next_patch_seq(self, table: str) -> int:
-        """1 + the max sequence parsed from live patch file names — NOT
-        the file count: a partial GC (tiered compaction, DROP PARTITION)
-        can remove an older patch while a newer one survives, and a
-        count-derived seq would then collide with the survivor, making
-        the latest-wins tie-break in ``_read_members`` nondeterministic."""
-        mx = -1
-        for f in self._patch_files(table):
-            m = re.match(r"patch-(\d+)", f)
-            if m:
-                mx = max(mx, int(m.group(1)))
-        return mx + 1
+        refs = pc.unique(
+            pq.read_table(path, columns=["__dv_file"])["__dv_file"]
+        ).to_pylist()
+        root = os.path.abspath(self.path(table))
+        return sorted({
+            os.path.relpath(
+                os.path.abspath(_strip_scheme(r)), root
+            ).split(os.sep)[0]
+            for r in refs
+        })
 
-    def dv_epoch(self, table: str) -> str:
-        """Stable stamp of the table's deletion-vector AND patch state —
-        derived structures (projections, skip indexes) rebuild when it
-        moves, because both change row content without changing manifest
-        membership."""
-        return ",".join(self._dv_files(table) + self._patch_files(table))
+    def _n_overlays(self, table: str, kind: str) -> int:
+        man = self.load_manifest(table)
+        return sum(e["kind"] == kind for e in man["overlays"])
 
     def overlay_files(self, table: str) -> list[str]:
-        """All live overlay (deletion-vector + patch) file names — the
-        granular form of :meth:`dv_epoch`, for derived structures that
-        invalidate per member instead of wholesale."""
-        return sorted(self._dv_files(table) + self._patch_files(table))
-
-    def overlay_member_refs(
-        self, table: str, overlay_names: list[str]
-    ) -> set[str]:
-        """Member dirs addressed by the named overlay files.  DVs and
-        patches key rows by the data file's absolute path; a file belongs
-        to exactly one member, so the member set is the path's first
-        component under the table root.  One Spark job over all named
-        overlays (``__dv_file`` column projection), distinct file paths
-        collected — bounded by the table's file count, not its rows."""
-        paths = []
-        for n in overlay_names:
-            d = (
-                self._patch_dir(table)
-                if n.startswith("patch-")
-                else self._dv_dir(table)
-            )
-            paths.append(os.path.join(d, n))
-        if not paths:
-            return set()
-        refs = (
-            self.spark.read.schema("__dv_file string")
-            .parquet(*paths)
-            .distinct()
-            .collect()
-        )
-        root = os.path.abspath(self.path(table))
-        out: set[str] = set()
-        for (r,) in refs:
-            rel = os.path.relpath(
-                os.path.abspath(_strip_scheme(r)), root
-            )
-            head = rel.split(os.sep)[0]
-            if head not in ("..", "."):
-                out.add(head)
-        return out
+        """Names of the live overlay (deletion-vector + patch) entries —
+        derived structures (projections) invalidate when it moves."""
+        return sorted(e["name"] for e in self.load_manifest(table)["overlays"])
 
     # -- mutation log (system.mutations analog) ------------------------------
 
@@ -1486,8 +1528,8 @@ class Warehouse:
         MATERIALIZED into data files (part rewrites are materialized by
         construction; a lightweight mutation materializes when a merge
         folds its overlay and GC collects it, exactly ClickHouse's
-        ``is_done``).  Metadata only: the log and a directory listing,
-        no data scan at any table size."""
+        ``is_done``).  Metadata only: the log and the manifest's overlay
+        entries, no data scan at any table size."""
         live = set(self.overlay_files(table))
         rows = []
         try:
@@ -1522,14 +1564,14 @@ class Warehouse:
     ) -> dict:
         """ClickHouse lightweight ``UPDATE … SET … WHERE`` (patch parts)
         analog: instead of rewriting members like ``update_set`` (the
-        ALTER UPDATE mutation), persist a PATCH file — the full updated
-        rows keyed by their original (file, row position) — applied on
-        every read by replacing the addressed rows.  Update cost is one
+        ALTER UPDATE mutation), persist a PATCH — the full updated rows
+        keyed by their original (file, row position) — applied on every
+        read by replacing the addressed rows.  Update cost is one
         predicate scan + a patch write proportional to the MATCHED rows,
-        no data rewrite; the commit is one atomic rename (a crash before
+        no data rewrite; the commit is one manifest flip (a crash before
         it leaves the table untouched).  ``compact()`` materializes
         patches into the new member and ``gc_deletes`` collects spent
-        patch files.
+        patches.
 
         The match runs against the CURRENT visible state (earlier patches
         applied, DV-masked rows excluded), so re-issuing an update whose
@@ -1537,10 +1579,11 @@ class Warehouse:
         compose (latest patch per row wins), and a later DELETE of
         patched rows masks them through the preserved original address."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        man = self.load_manifest(table)
         # footer-stats member pruning (VERDICT r11 #4; soundness-guarded
         # against live patches inside _prune_members_for_mutation)
         members, _ = self._prune_members_for_mutation(
-            table, self.load_manifest(table)["members"], cond
+            table, man["members"], cond, man["overlays"]
         )
         if not members:
             cols = self.read(table).columns
@@ -1553,9 +1596,11 @@ class Warehouse:
             )
             return {
                 "rows_updated": 0,
-                "patch_files": len(self._patch_files(table)),
+                "patch_files": self._n_overlays(table, "patch"),
             }
-        tagged = self._read_members(table, members, keep_dv_tag=True)
+        tagged = self._read_members(
+            table, members, keep_dv_tag=True, overlays=man["overlays"]
+        )
         data_cols = [
             c for c in tagged.columns if c not in ("__dv_file", "__dv_pos")
         ]
@@ -1576,39 +1621,16 @@ class Warehouse:
                 for c in tagged.columns
             ]
         )
-        seq = self._next_patch_seq(table)
-        hits = hits.withColumn("__patch_seq", F.lit(seq))
-        staging = os.path.join(
-            self.path(table), f".patch-staging-{uuid.uuid4().hex[:8]}"
-        )
-        # repartition(1), not coalesce(1): coalesce collapses the WHOLE
-        # predicate scan into one task (at 100 TB, one task reading every
-        # candidate member); the repartition keeps the scan parallel and
-        # shuffles only the MATCHED rows into the single patch file (r13)
-        self._writer(hits.repartition(1)).mode("overwrite").parquet(staging)
-        n = self._count_rows_parquet(staging)
         cmd = "UPDATE %s WHERE %s" % (
             ", ".join(f"{c} = {e}" for c, e in assignments.items()),
             condition,
         )
-        if n == 0:
-            shutil.rmtree(staging, ignore_errors=True)
-            self._log_mutation(
-                table, "UPDATE_LIGHTWEIGHT", cmd, rows_affected=0
-            )
-            return {"rows_updated": 0,
-                    "patch_files": len(self._patch_files(table))}
-        os.makedirs(self._patch_dir(table), exist_ok=True)
-        final = os.path.join(
-            self._patch_dir(table), f"patch-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        os.rename(staging, final)
-        self._log_mutation(
-            table, "UPDATE_LIGHTWEIGHT", cmd,
-            rows_affected=n, overlay_file=os.path.basename(final),
-        )
-        return {"rows_updated": n,
-                "patch_files": len(self._patch_files(table))}
+        return {
+            "rows_updated": self._write_overlay(
+                table, "patch", hits, "UPDATE_LIGHTWEIGHT", cmd
+            ),
+            "patch_files": self._n_overlays(table, "patch"),
+        }
 
     def delete_where_lightweight(self, table: str, condition) -> dict:
         """ClickHouse ``DELETE FROM … WHERE`` (lightweight delete) analog:
@@ -1626,86 +1648,75 @@ class Warehouse:
         the CURRENT table state: like ClickHouse lightweight deletes they
         apply to every read, including ``read_at_version`` snapshots."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        man = self.load_manifest(table)
         # footer-stats member pruning (VERDICT r11 #4): the predicate scan
         # reads only members whose parquet metadata admits a match
         members, _ = self._prune_members_for_mutation(
-            table, self.load_manifest(table)["members"], cond
+            table, man["members"], cond, man["overlays"]
         )
-        if not members:
-            self._log_mutation(
-                table, "DELETE_LIGHTWEIGHT",
-                f"DELETE WHERE {condition}", rows_affected=0,
-            )
-            return {"rows_deleted": 0, "dv_files": len(self._dv_files(table))}
-        tagged = self._read_members(table, members, keep_dv_tag=True)
-        hits = tagged.filter(cond).select("__dv_file", "__dv_pos")
-        staging = os.path.join(
-            self.path(table), f".dv-staging-{uuid.uuid4().hex[:8]}"
-        )
-        # repartition(1), not coalesce(1) — same rationale as the patch
-        # writer: keep the predicate scan parallel, shuffle only matches
-        self._writer(hits.repartition(1)).mode("overwrite").parquet(staging)
-        n = self._count_rows_parquet(staging)
         cmd = f"DELETE WHERE {condition}"
-        if n == 0:
-            shutil.rmtree(staging, ignore_errors=True)
+        n = 0
+        if members:
+            hits = self._read_members(
+                table, members, keep_dv_tag=True, overlays=man["overlays"]
+            ).filter(cond).select("__dv_file", "__dv_pos")
+            n = self._write_overlay(table, "dv", hits, "DELETE_LIGHTWEIGHT", cmd)
+        else:
             self._log_mutation(
                 table, "DELETE_LIGHTWEIGHT", cmd, rows_affected=0
             )
-            return {"rows_deleted": 0, "dv_files": len(self._dv_files(table))}
-        os.makedirs(self._dv_dir(table), exist_ok=True)
-        seq = len(self._dv_files(table))
-        final = os.path.join(
-            self._dv_dir(table), f"dv-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        os.rename(staging, final)
+        return {"rows_deleted": n, "dv_files": self._n_overlays(table, "dv")}
+
+    def _write_overlay(
+        self, table: str, kind: str, hits: DataFrame, log_kind: str, cmd: str
+    ) -> int:
+        """Write the tagged ``hits`` as a new overlay of ``kind``, commit it
+        and log the mutation; returns the rows written (0 writes nothing)."""
+        path = self._new_overlay(table, kind)
+        # repartition(1), not coalesce(1): coalesce collapses the WHOLE
+        # predicate scan into one task (at 100 TB, one task reading every
+        # candidate member); the repartition keeps the scan parallel and
+        # shuffles only the MATCHED rows into the single overlay file (r13)
+        self._writer(hits.repartition(1)).mode("overwrite").parquet(path)
+        n = self._count_rows_parquet(path)
+        if n == 0:
+            shutil.rmtree(path, ignore_errors=True)
+            self._log_mutation(table, log_kind, cmd, rows_affected=0)
+            return 0
+        self._commit_overlay(table, kind, path)
         self._log_mutation(
-            table, "DELETE_LIGHTWEIGHT", cmd,
-            rows_affected=n, overlay_file=os.path.basename(final),
+            table, log_kind, cmd,
+            rows_affected=n, overlay_file=os.path.basename(path),
         )
-        return {"rows_deleted": n, "dv_files": len(self._dv_files(table))}
+        return n
 
     def gc_deletes(self, table: str) -> int:
-        """Drop deletion-vector AND patch files whose referenced data files
-        no longer exist (they were compacted/mutated away, materializing
-        the mask/patch).  A file that still references ANY live data file
-        stays whole — its dead references are harmless no-ops in the
-        joins.  Returns the number of overlay files removed."""
-        removed = 0
-        targets = [
-            os.path.join(self._dv_dir(table), f)
-            for f in self._dv_files(table)
-        ] + [
-            os.path.join(self._patch_dir(table), f)
-            for f in self._patch_files(table)
-        ]
-        if not targets:
+        """Drop the overlay entries none of whose member directories still
+        exist (they were compacted/mutated away, materializing the
+        mask/patch) and delete their directories.  An entry addressing ANY
+        member still on disk stays — ``compact(retain_old=True)`` snapshots
+        keep masking, and its dead addresses are harmless no-ops in the
+        joins.  Manifest only, no Spark job.  Returns the number of
+        entries removed."""
+        if not self.load_manifest(table)["overlays"]:
             return 0
-        # ONE job over every overlay file (a long-uncompacted table can
-        # hold hundreds; one driver round-trip each was the old cost):
-        # distinct (source parquet, referenced data file) pairs, grouped
-        # back to overlay dirs driver-side — bounded by the table's file
-        # count, not its rows
-        pairs = (
-            self.spark.read.schema("__dv_file string")
-            .parquet(*targets)
-            .select(
-                F.input_file_name().alias("__src"), F.col("__dv_file")
+        spent: list[dict] = []
+
+        def drop(man: dict) -> bool:
+            spent.extend(
+                e for e in man["overlays"]
+                if not any(
+                    os.path.isdir(os.path.join(self.path(table), m))
+                    for m in e["members"]
+                )
             )
-            .distinct()
-            .collect()
-        )
-        by_abs = {os.path.abspath(p): p for p in targets}
-        refs_by_overlay: dict[str, set[str]] = {p: set() for p in targets}
-        for src, ref in pairs:
-            d = os.path.abspath(os.path.dirname(_strip_scheme(src)))
-            if d in by_abs:
-                refs_by_overlay[by_abs[d]].add(ref)
-        for p, refs in refs_by_overlay.items():
-            if not any(os.path.exists(_strip_scheme(r)) for r in refs):
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-        return removed
+            man["overlays"] = [e for e in man["overlays"] if e not in spent]
+            return bool(spent)
+
+        self._flip(table, drop)
+        for e in spent:
+            shutil.rmtree(self._overlay_path(table, e), ignore_errors=True)
+        return len(spent)
 
     def _count_rows_parquet(self, path: str) -> int:
         """Row count of a just-written parquet dir from the file FOOTERS —
@@ -1870,7 +1881,9 @@ class Warehouse:
         survive the flip; readers resolve the pointer once and never see a
         half-swapped table.  When a snapshot member is no longer live at
         the flip (an overwrite replaced it), the new member is discarded
-        and the manifest left as it is.  Only compactors must not run
+        and the manifest left as it is; so is it when a lightweight
+        DELETE/UPDATE addressing a folded member committed after the
+        snapshot (the rewrite never applied it).  Only compactors must not run
         concurrently with each other (one compactor + N appenders is the
         supported discipline — same as ClickHouse merges owning parts).
         With ``retain_old`` the superseded members stay on disk (set it when
@@ -1961,7 +1974,9 @@ class Warehouse:
             fresh = [m for m in snapshot if m not in gens]
             snapshot = fresh + (gens if len(gens) >= max_generations else [])
         if snapshot:
-            merged = self._read_members(table, snapshot)
+            merged = self._read_members(
+                table, snapshot, overlays=man["overlays"]
+            )
             if ttl_cond is not None:
                 merged = merged.filter(ttl_cond)
             if transform is not None:
@@ -1969,7 +1984,9 @@ class Warehouse:
             new_member = self._rewrite_member(table, merged, "compacted")
             # the new member takes the first folded member's place
             if self._swap_members(
-                table, {m: None for m in snapshot} | {snapshot[0]: new_member}
+                table,
+                {m: None for m in snapshot} | {snapshot[0]: new_member},
+                man,
             ):
                 if not retain_old:
                     for m in snapshot:
@@ -1977,9 +1994,9 @@ class Warehouse:
                             os.path.join(self.path(table), m),
                             ignore_errors=True,
                         )
-                # the rewrite materialized any deletion-vector mask for the
-                # folded members (the merged read applies DVs); DVs that now
-                # reference no live file are spent
+                # the rewrite materialized the overlays of the folded
+                # members (the merged read applies them); entries whose
+                # members are all gone are spent
                 self.gc_deletes(table)
                 # cast chains / CLEAR overlays addressed to the folded
                 # members are now physically materialized — retire spent
@@ -2107,7 +2124,8 @@ class Warehouse:
                 f"column {name!r} of {table!r} is not a stored "
                 "(DEFAULT/MATERIALIZED) computed column"
             )
-        snapshot = list(self.load_manifest(table)["members"])
+        man = self.load_manifest(table)
+        snapshot = list(man["members"])
         rewritten: dict[str, str | None] = {}
         for m in snapshot:
             if not self._computed_cols_lacking(
@@ -2117,10 +2135,12 @@ class Warehouse:
             # the member read back-fills the expression (and applies any
             # DV/patch/cast overlays, which materialize along the way)
             rewritten[m] = self._rewrite_member(
-                table, self._read_members(table, [m]), "materialized"
+                table,
+                self._read_members(table, [m], overlays=man["overlays"]),
+                "materialized",
             )
         if rewritten:
-            self._commit_rewrite(table, rewritten, retain_old=False)
+            self._commit_rewrite(table, rewritten, False, man)
             self.gc_deletes(table)
             self._gc_alter_overlays(table)
         self._log_mutation(
@@ -2245,7 +2265,8 @@ class Warehouse:
             )
 
         # rewrite ONLY affected members, flip the pointer
-        snapshot = list(self.load_manifest(table)["members"])
+        man = self.load_manifest(table)
+        snapshot = list(man["members"])
         rewritten: dict[str, str | None] = {}
         total = 0
         skipped_by_partition = 0
@@ -2264,7 +2285,7 @@ class Warehouse:
         # CH part-scoping discipline.  Conservative: unparseable
         # predicates prune nothing.
         stats_kept, skipped_by_stats = self._prune_members_for_mutation(
-            table, snapshot, cond
+            table, snapshot, cond, man["overlays"]
         )
         stats_kept_set = set(stats_kept)
         for m in snapshot:
@@ -2279,7 +2300,7 @@ class Warehouse:
                 continue
             if m not in stats_kept_set:
                 continue
-            mdf = self._read_members(table, [m])
+            mdf = self._read_members(table, [m], overlays=man["overlays"])
             n = mdf.filter(cond).count()
             if n == 0:
                 continue
@@ -2291,7 +2312,7 @@ class Warehouse:
                     "members_kept": len(snapshot),
                     "members_skipped_by_partition": skipped_by_partition,
                     "members_skipped_by_stats": skipped_by_stats}
-        self._commit_rewrite(table, rewritten, retain_old)
+        self._commit_rewrite(table, rewritten, retain_old, man)
         return {
             verb: total,
             "members_rewritten": len(rewritten),
@@ -2301,25 +2322,21 @@ class Warehouse:
         }
 
     def _remap_overlays_for_drop(
-        self, table: str, part: str, replaced: dict[str, str | None]
-    ) -> list[str]:
-        """Rewrite live deletion vectors / patches for a DROP PARTITION
-        member swap.  Overlay rows address (file, position) of the OLD
-        member paths; the hardlink clones preserve every relative path,
-        so the remap is a member-prefix substitution — without it the
-        clone resurrects DV-deleted rows and reverts patched rows in the
-        SURVIVING partitions, and the next gc_deletes then collects the
-        orphaned overlays permanently.  Rows addressing the dropped
-        partition itself are removed (their originals are gone; a stale
-        patch row would otherwise be re-injected by the patch union).
+        self, table: str, part: str, replaced: dict[str, str | None],
+        overlays: list[dict],
+    ) -> dict[str, dict | None]:
+        """Rewrite the overlay entries addressing members of a DROP
+        PARTITION member swap.  Overlay rows address (file, position) of
+        the OLD member paths; the hardlink clones preserve every relative
+        path, so the remap is a member-prefix substitution — without it
+        the clone resurrects DV-deleted rows and reverts patched rows in
+        the SURVIVING partitions.  Rows addressing the dropped partition
+        itself are removed (their originals are gone; a stale patch row
+        would otherwise be re-injected by the patch union).
 
-        Remapped overlays are written as NEW entries (same embedded seq,
-        fresh suffix) BEFORE the manifest flip; the caller deletes the
-        old entries AFTER the flip.  Every crash window is consistent:
-        pre-flip readers scan old paths (old entries apply, new ones
-        no-op outside the scan), post-flip readers scan new paths (new
-        entries apply, old ones no-op), duplicate rows for unreplaced
-        members are identical in both entries."""
+        Returns ``{old entry name: new entry (same kind and seq) or None
+        when no row survives}``; the new directories are written here and
+        swapped in by the same manifest flip as the members."""
         pairs = [
             (
                 os.path.abspath(os.path.join(self.path(table), old)) + "/",
@@ -2328,39 +2345,28 @@ class Warehouse:
             for old, new in replaced.items()
             if new is not None
         ]
-        old_paths: list[str] = []
-        for kind, names in (
-            ("dv", self._dv_files(table)),
-            ("patch", self._patch_files(table)),
-        ):
-            d = self._dv_dir(table) if kind == "dv" else self._patch_dir(table)
-            for name in names:
-                src = os.path.join(d, name)
-                old_paths.append(src)
-                df = read_parquet(self.spark, src)
-                col = F.col("__dv_file")
-                for old_p, new_p in pairs:
-                    col = F.regexp_replace(col, re.escape(old_p), new_p)
-                out = df.withColumn("__dv_file", col).filter(
-                    ~F.col("__dv_file").contains(f"/{part}/")
-                )
-                staging = os.path.join(
-                    self.path(table),
-                    f".overlay-remap-{uuid.uuid4().hex[:8]}",
-                )
-                self._writer(out.coalesce(1)).mode("overwrite").parquet(
-                    staging
-                )
-                if self._count_rows_parquet(staging) == 0:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    continue
-                m = re.match(rf"{kind}-(\d+)", name)
-                seq = int(m.group(1)) if m else 0
-                final = os.path.join(
-                    d, f"{kind}-{seq:06d}-{uuid.uuid4().hex[:8]}"
-                )
-                os.rename(staging, final)
-        return old_paths
+        remapped: dict[str, dict | None] = {}
+        for e in _addressing(overlays, replaced):
+            col = F.col("__dv_file")
+            for old_p, new_p in pairs:
+                col = F.regexp_replace(col, re.escape(old_p), new_p)
+            out = read_parquet(
+                self.spark, self._overlay_path(table, e)
+            ).withColumn("__dv_file", col).filter(
+                ~F.col("__dv_file").contains(f"/{part}/")
+            )
+            path = self._new_overlay(table, e["kind"])
+            self._writer(out.coalesce(1)).mode("overwrite").parquet(path)
+            if self._count_rows_parquet(path) == 0:
+                shutil.rmtree(path, ignore_errors=True)
+                remapped[e["name"]] = None
+                continue
+            remapped[e["name"]] = {
+                **e,
+                "name": os.path.basename(path),
+                "members": self._overlay_members(table, path),
+            }
+        return remapped
 
     def drop_partition(self, table: str, date, retain_old: bool = False) -> int:
         """``ALTER TABLE … DROP PARTITION`` analog — remove one
@@ -2389,9 +2395,9 @@ class Warehouse:
                         kept = True
             return kept
 
-        snapshot = list(self.load_manifest(table)["members"])
+        man = self.load_manifest(table)
         replaced: dict[str, str | None] = {}
-        for m in snapshot:
+        for m in man["members"]:
             src = os.path.join(self.path(table), m)
             if not os.path.isdir(os.path.join(src, part)):
                 continue
@@ -2406,7 +2412,9 @@ class Warehouse:
                 replaced[m] = new_member
         if not replaced:
             return 0
-        old_overlays = self._remap_overlays_for_drop(table, part, replaced)
+        remapped = self._remap_overlays_for_drop(
+            table, part, replaced, man["overlays"]
+        )
         # CLEAR COLUMN overlays address members BY NAME; the hardlink
         # clones carry the same (unmasked) bytes under new names, so each
         # entry's member list must follow the rename or the mask silently
@@ -2424,9 +2432,7 @@ class Warehouse:
             return remapped
 
         self._commit_meta(table, cleared=remap)
-        self._commit_rewrite(table, replaced, retain_old)
-        for p in old_overlays:
-            shutil.rmtree(p, ignore_errors=True)
+        self._commit_rewrite(table, replaced, retain_old, man, remapped)
         return len(replaced)
 
     def drop_member(self, table: str, member: str) -> bool:
@@ -2466,7 +2472,8 @@ class Warehouse:
         masked rows — compact the source first to materialize its mask.
         Returns the number of data files attached."""
         part = f"event_date={date}"
-        if self._dv_files(src_table) or self._patch_files(src_table):
+        src_man = self.load_manifest(src_table)
+        if src_man["overlays"]:
             raise ValueError(
                 f"source {src_table!r} has live deletion vectors or "
                 "patches; compact() it first so the overlay is "
@@ -2474,7 +2481,7 @@ class Warehouse:
             )
         src_roots = [
             os.path.join(self.path(src_table), m)
-            for m in self.load_manifest(src_table)["members"]
+            for m in src_man["members"]
         ]
         if replace:
             self.drop_partition(dst_table, date)
@@ -2613,29 +2620,19 @@ class Warehouse:
                     base_members.append(m)
                     continue
                 files += clone_tree(live, os.path.join(dest, m))
-            overlay_entries: dict[str, list[str]] = {}
-            base_overlays: dict[str, list[str]] = {}
-            for sub in ("_deletes", "_patches"):
-                p = os.path.join(self.path(table), sub)
-                if not os.path.isdir(p):
+            base_overlays: list[str] = []
+            for e in man["overlays"]:
+                live = self._overlay_path(table, e)
+                rel = os.path.relpath(live, self.path(table))
+                if base_abs and in_base(rel, live):
+                    base_overlays.append(e["name"])
                     continue
-                overlay_entries[sub] = sorted(os.listdir(p))
-                base_overlays[sub] = []
-                for entry in overlay_entries[sub]:
-                    live = os.path.join(p, entry)
-                    if base_abs and in_base(
-                        os.path.join(sub, entry), live
-                    ):
-                        base_overlays[sub].append(entry)
-                        continue
-                    files += clone_tree(
-                        live, os.path.join(dest, sub, entry)
-                    )
+                files += clone_tree(live, os.path.join(dest, rel))
             meta = {
                 "source_table_path": os.path.abspath(self.path(table)),
                 "members": man["members"],
-                "committed_batches": man.get("committed_batches", []),
-                "overlay_entries": overlay_entries,
+                "committed_batches": man["committed_batches"],
+                "overlays": man["overlays"],
             }
             if base_abs:
                 meta["base_backup"] = base_abs
@@ -2695,32 +2692,19 @@ class Warehouse:
                         os.link(sf, df_)
                     except OSError:
                         shutil.copy2(sf, df_)
-        # overlay set at backup time: the recorded entry list (older
-        # backups without the key fall back to what's physically in src)
-        entries_by_sub = meta.get("overlay_entries")
-        for sub in ("_deletes", "_patches"):
-            if entries_by_sub is not None:
-                entries = entries_by_sub.get(sub, [])
-            else:
-                sp0 = os.path.join(src, sub)
-                entries = (
-                    sorted(os.listdir(sp0)) if os.path.isdir(sp0) else []
-                )
-            for entry in entries:
-                sp, owner = resolve(os.path.join(sub, entry))
-                # remap from the OWNING backup's source path — chain
-                # links may have been taken from different table roots
-                old_root = owner["source_table_path"]
-                df_ = read_parquet(self.spark, sp)
-                remapped = df_.withColumn(
-                    "__dv_file",
-                    F.regexp_replace(
-                        "__dv_file", re.escape(old_root), new_root
-                    ),
-                )
-                remapped.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(new_root, sub, entry)
-                )
+        # the overlay entries committed at backup time
+        for e in meta["overlays"]:
+            dp = self._overlay_path(table, e)
+            sp, owner = resolve(os.path.relpath(dp, new_root))
+            # remap from the OWNING backup's source path — chain links
+            # may have been taken from different table roots
+            old_root = owner["source_table_path"]
+            df_ = read_parquet(self.spark, sp)
+            remapped = df_.withColumn(
+                "__dv_file",
+                F.regexp_replace("__dv_file", re.escape(old_root), new_root),
+            )
+            remapped.coalesce(1).write.mode("overwrite").parquet(dp)
         self._commit_meta(table, **meta["table_meta"])
         with self._manifest_lock(table):
             self._write_manifest(
@@ -2729,6 +2713,7 @@ class Warehouse:
                     "version": 1,
                     "members": meta["members"],
                     "committed_batches": meta["committed_batches"],
+                    "overlays": meta["overlays"],
                 },
             )
         return {"members": len(meta["members"])}
@@ -3141,36 +3126,49 @@ class Warehouse:
         return sorted(dates)
 
     def gc(self, table: str, min_age_sec: float = 3600.0) -> list[str]:
-        """Sweep data directories no RETAINED manifest version references —
-        the leftovers of (a) a writer or compactor that crashed between
-        writing its member and flipping the pointer, and (b) superseded
-        members kept by ``compact(retain_old=True)`` whose snapshots have
-        since been pruned from the version window.
+        """Sweep member and overlay directories no RETAINED manifest version
+        references — the leftovers of (a) a writer, compactor or
+        lightweight DELETE/UPDATE that crashed between writing its
+        directory and flipping the pointer, and (b) superseded members
+        kept by ``compact(retain_old=True)`` whose snapshots have since
+        been pruned from the version window.  This sweep is the one place
+        that lists the overlay directories: what it looks for is, by
+        definition, in no manifest.
 
-        ``min_age_sec`` is the in-flight guard: an append writes its data
-        dir BEFORE registering it, and a concurrent compactor's new member
-        is unreferenced until its flip — both look orphaned for a few
-        seconds.  Only dirs untouched for the window are swept, under the
-        manifest lock so no flip can race the re-check.  Returns the swept
-        directory names."""
+        ``min_age_sec`` is the in-flight guard: every writer writes its
+        directory BEFORE registering it, so each looks orphaned for a few
+        seconds.  Only directories untouched for the window are swept,
+        under the manifest lock so no flip can race the re-check.  Returns
+        the swept paths relative to the table root."""
         d = self._manifest_dir(table)
         if not os.path.isdir(d):
             return []
+        root = self.path(table)
         swept: list[str] = []
         with self._manifest_lock(table):
             referenced: set[str] = set()
             for f in os.listdir(d):
                 if f.startswith("v") and f.endswith(".json"):
                     with open(os.path.join(d, f)) as fh:
-                        referenced.update(json.load(fh)["members"])
+                        man = json.load(fh)
+                    referenced.update(man["members"])
+                    referenced.update(
+                        os.path.join(_OVERLAY_DIRS[e["kind"]], e["name"])
+                        for e in man.get("overlays", [])
+                    )
+            candidates = [
+                e for e in os.listdir(root) if e.startswith(_MEMBER_KEY + "=")
+            ]
+            for sub in _OVERLAY_DIRS.values():
+                if os.path.isdir(os.path.join(root, sub)):
+                    candidates += [
+                        os.path.join(sub, e)
+                        for e in os.listdir(os.path.join(root, sub))
+                    ]
             now = time.time()
-            for e in sorted(os.listdir(self.path(table))):
-                full = os.path.join(self.path(table), e)
-                if (
-                    not e.startswith(_MEMBER_KEY + "=")
-                    or not os.path.isdir(full)
-                    or e in referenced
-                ):
+            for e in sorted(candidates):
+                full = os.path.join(root, e)
+                if e in referenced or not os.path.isdir(full):
                     continue
                 try:
                     age = now - os.path.getmtime(full)
@@ -3467,7 +3465,8 @@ class Warehouse:
         return False
 
     def _prune_members_for_mutation(
-        self, table: str, members: list[str], cond
+        self, table: str, members: list[str], cond,
+        overlays: list[dict] | None = None,
     ) -> tuple[list[str], int]:
         """(surviving members, n skipped) for a mutation predicate: the
         footer-stats prune applied over best-effort conjuncts.  At 100 TB
@@ -3481,13 +3480,16 @@ class Warehouse:
         could match forces a full scan, since its original member is
         unknowable from metadata (DV masks only ever remove rows — they
         can't create a match — and clear/TTL overlays only NULL values,
-        which no conjunct matches)."""
+        which no conjunct matches).  ``overlays`` are the entries of the
+        caller's manifest (the current one when None)."""
         preds = self._simple_conjuncts(cond)
         if not preds:
             return members, 0
-        for pf in self._patch_files(table):
-            if self._path_matches_stats(
-                os.path.join(self._patch_dir(table), pf), preds
+        if overlays is None:
+            overlays = self.load_manifest(table)["overlays"]
+        for e in overlays:
+            if e["kind"] == "patch" and self._path_matches_stats(
+                self._overlay_path(table, e), preds
             ):
                 return members, 0
         kept = [
@@ -3626,7 +3628,8 @@ class Warehouse:
         (reference monitoring reads system.parts for part counts).  Pure
         directory metadata — no data scan at any table size."""
         rows = []
-        for m in self.load_manifest(table)["members"]:
+        man = self.load_manifest(table)
+        for m in man["members"]:
             root = os.path.join(self.path(table), m)
             n_files, n_bytes, dates = 0, 0, set()
             for r, _dirs, files in os.walk(root):
@@ -3646,26 +3649,18 @@ class Warehouse:
         # overlay rows: live deletion vectors and patches are part state an
         # operator must see (they mask/replace rows until a merge folds
         # them), exactly ClickHouse's _row_exists masks and patch parts
-        for sub, kind in (("_deletes", "deletion_vector"),
-                          ("_patches", "patch")):
-            d = os.path.join(self.path(table), sub)
-            if not os.path.isdir(d):
-                continue
-            for entry in sorted(os.listdir(d)):
-                if entry.startswith("."):
-                    continue
-                n_files, n_bytes = 0, 0
-                for r, _dirs, files in os.walk(os.path.join(d, entry)):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            n_files += 1
-                            try:
-                                n_bytes += os.path.getsize(
-                                    os.path.join(r, f)
-                                )
-                            except OSError:
-                                pass
-                rows.append((table, entry, kind, n_files, n_bytes, 0))
+        for e in man["overlays"]:
+            n_files, n_bytes = 0, 0
+            for r, _dirs, files in os.walk(self._overlay_path(table, e)):
+                for f in files:
+                    if f.endswith(".parquet"):
+                        n_files += 1
+                        try:
+                            n_bytes += os.path.getsize(os.path.join(r, f))
+                        except OSError:
+                            pass
+            kind = "deletion_vector" if e["kind"] == "dv" else "patch"
+            rows.append((table, e["name"], kind, n_files, n_bytes, 0))
         schema = (
             "table string, member string, kind string, n_files long,"
             " bytes long, n_partitions long"

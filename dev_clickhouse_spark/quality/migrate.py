@@ -189,7 +189,9 @@ class SchemaMigrator:
 
         probe = wh.spark.createDataFrame([], current)
         probe.select(F.col(name).cast(dtype)).schema
-        if wh._patch_files(table):
+        if any(
+            e["kind"] == "patch" for e in wh.load_manifest(table)["overlays"]
+        ):
             raise ValueError(
                 f"table {table!r} has pending lightweight-UPDATE patches "
                 "(rows stored with the old type); compact() first"

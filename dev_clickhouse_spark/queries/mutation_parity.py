@@ -86,8 +86,8 @@ GROUP BY event_type
 def lightweight_delete_mask_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse lightweight ``DELETE FROM … WHERE`` parity: two deletes
     write POSITIONAL deletion vectors instead of rewriting members
-    (asserted: the manifest version does not move, so zero data files
-    were touched), reads mask the deleted rows, and a re-issued delete
+    (asserted: the manifest's member list does not move, so zero data
+    files were touched), reads mask the deleted rows, and a re-issued delete
     is a no-op (asserted).  The oracle replays both predicates as a
     plain WHERE over the original parquet — a mask that hides the wrong
     row, double-applies, or leaks through the member union flips the
@@ -102,15 +102,15 @@ def lightweight_delete_mask_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = "lwd_events"
     for b in range(3):
         wh.append(t, ev.filter(F.col("event_id") % 3 == b), batch_id=b)
-    v0 = wh.load_manifest(t)["version"]
+    members0 = wh.load_manifest(t)["members"]
     wh.delete_where_lightweight(t, "event_type = 'error'")
     again = wh.delete_where_lightweight(t, "event_type = 'error'")
     if again["rows_deleted"] != 0:
         raise RuntimeError(f"re-delete was not idempotent: {again!r}")
     wh.delete_where_lightweight(t, "value > 250.0")
-    if wh.load_manifest(t)["version"] != v0:
+    if wh.load_manifest(t)["members"] != members0:
         raise RuntimeError("lightweight delete rewrote members")
-    if len(wh._dv_files(t)) != 2:
+    if [o[:3] for o in wh.overlay_files(t)] != ["dv-", "dv-"]:
         raise RuntimeError("expected exactly two deletion vectors")
     return (
         wh.read(t)
@@ -152,7 +152,8 @@ def lightweight_update_patch_read(
 ) -> DataFrame:
     """ClickHouse lightweight ``UPDATE … SET … WHERE`` (patch parts)
     parity: stacked updates write PATCH files applied on read instead of
-    rewriting members (asserted: the manifest version does not move), a
+    rewriting members (asserted: the manifest's member list does not
+    move), a
     re-issued update whose predicate no longer matches is a no-op
     (asserted), later patches win over earlier ones on the same rows,
     and a lightweight DELETE composes with the patched view.  The oracle
@@ -173,7 +174,7 @@ def lightweight_update_patch_read(
     t = "lwu_events"
     for b in range(3):
         wh.append(t, ev.filter(F.col("event_id") % 3 == b), batch_id=b)
-    v0 = wh.load_manifest(t)["version"]
+    members0 = wh.load_manifest(t)["members"]
     wh.update_where_lightweight(
         t, {"value": "value * 2"}, "event_type = 'purchase'"
     )
@@ -190,9 +191,9 @@ def lightweight_update_patch_read(
         t, {"value": "value * 1.5"}, "event_type = 'purchase'"
     )
     wh.delete_where_lightweight(t, "event_type = 'error'")
-    if wh.load_manifest(t)["version"] != v0:
+    if wh.load_manifest(t)["members"] != members0:
         raise RuntimeError("lightweight update rewrote members")
-    if len(wh._patch_files(t)) != 3:
+    if sum(o.startswith("patch-") for o in wh.overlay_files(t)) != 3:
         raise RuntimeError("expected exactly three patch files")
     return (
         wh.read(t)
@@ -261,7 +262,7 @@ def drop_partition_overlay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = wh.read(t).agg(F.min("event_date")).first()[0]
     if wh.drop_partition(t, cutoff) == 0:
         raise RuntimeError("drop_partition affected no member")
-    if not wh._dv_files(t) or not wh._patch_files(t):
+    if {o.split("-")[0] for o in wh.overlay_files(t)} != {"dv", "patch"}:
         raise RuntimeError(
             "overlays should survive the drop (remapped to cloned members)"
         )

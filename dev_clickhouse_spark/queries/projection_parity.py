@@ -299,7 +299,7 @@ def projection_refold_after_delete(
     ``event_id % 4 = 2``) writes a deletion vector, and the next answer
     must (a) re-fold EXACTLY the one member the DV addresses — not
     rebuild, not re-fold the table (asserted via ``rep.refolded`` /
-    ``rep.folded_now``), (b) leave the base manifest version unmoved
+    ``rep.folded_now``), (b) leave the base manifest's members unmoved
     (zero data files rewritten), and (c) still serve ENTIRELY from
     projection files.  The oracle replays the delete declaratively over
     the raw parquet — stale states (the r9 wholesale-rebuild bug class),
@@ -309,13 +309,13 @@ def projection_refold_after_delete(
     first = ps.ensure()
     if first.folded_now != 4 or first.rebuilt:
         raise RuntimeError(f"unexpected initial fold: {first!r}")
-    v0 = wh.load_manifest(t)["version"]
+    members0 = wh.load_manifest(t)["members"]
     res = wh.delete_where_lightweight(
         t, "event_id % 4 = 2 AND event_type = 'error'"
     )
     if res["rows_deleted"] == 0:
         raise RuntimeError("delete matched nothing; predicate is dead")
-    if wh.load_manifest(t)["version"] != v0:
+    if wh.load_manifest(t)["members"] != members0:
         raise RuntimeError("lightweight delete rewrote members")
     df, rep = ps.answer(
         ["event_type", "event_date"], _METRICS, require_projection=True

@@ -33,6 +33,10 @@ def wh(spark, tmp_path):
     return w
 
 
+def _kinds(w, table):
+    return [e["kind"] for e in w.load_manifest(table)["overlays"]]
+
+
 def _member_files(w, table):
     out = []
     root = w.path(table)
@@ -85,7 +89,7 @@ def test_full_compaction_materializes_and_gcs(spark, wh):
     wh.delete_where_lightweight("ev", "event_type = 'error'")
     kept = wh.read("ev").count()
     wh.compact("ev")
-    assert wh._dv_files("ev") == []
+    assert _kinds(wh, "ev") == []
     assert wh.read("ev").count() == kept
     assert wh.read("ev").filter("event_type = 'error'").count() == 0
 
@@ -105,10 +109,10 @@ def test_tiered_compaction_keeps_dvs_for_untouched_generations(spark, wh):
     )
     kept = wh.read("ev").count()
     wh.compact("ev", mode="tiered")  # folds only batch 9
-    assert len(wh._dv_files("ev")) == 1  # still referencing generation 1
+    assert _kinds(wh, "ev") == ["dv"]  # still addressing generation 1
     assert wh.read("ev").count() == kept
     wh.compact("ev")  # major merge materializes the mask
-    assert wh._dv_files("ev") == []
+    assert _kinds(wh, "ev") == []
     assert wh.read("ev").count() == kept
 
 

@@ -159,12 +159,12 @@ def test_footer_schema_matches_inference_on_warehouse_layouts(
         "batch_ev", {"event_type": F.lit("tap")}, "event_type = 'click'"
     )
     member = wh.load_manifest("batch_ev")["members"][0]
-    patch = wh._patch_files("batch_ev")[0]
+    (patch,) = wh.load_manifest("batch_ev")["overlays"]
     for path, partition_cols in (
         (wh.path("plain_ev"), ["member", "event_date"]),
         (wh.path("batch_ev"), ["member", "event_date"]),
         (os.path.join(wh.path("batch_ev"), member), ["event_date"]),
-        (os.path.join(wh._patch_dir("batch_ev"), patch), []),
+        (wh._overlay_path("batch_ev", patch), []),
     ):
         got = _assert_footer_read_matches_inference(spark, path)
         # partition columns come from directory discovery, not the footer

@@ -26,6 +26,10 @@ def wh(spark, tmp_path):
     return w
 
 
+def _kinds(w, table):
+    return [e["kind"] for e in w.load_manifest(table)["overlays"]]
+
+
 def _member_files(w, table):
     out = []
     root = w.path(table)
@@ -42,7 +46,7 @@ def _member_files(w, table):
 
 def test_update_touches_no_data_file(spark, wh):
     before_files = _member_files(wh, "ev")
-    v0 = wh.load_manifest("ev")["version"]
+    members0 = wh.load_manifest("ev")["members"]
     n = wh.read("ev").count()
     n_click = wh.read("ev").filter("event_type = 'click'").count()
     r = wh.update_where_lightweight(
@@ -50,7 +54,9 @@ def test_update_touches_no_data_file(spark, wh):
     )
     assert r["rows_updated"] == n_click > 0
     assert _member_files(wh, "ev") == before_files  # zero rewrite
-    assert wh.load_manifest("ev")["version"] == v0  # membership untouched
+    # membership untouched: the commit lists one patch entry
+    assert wh.load_manifest("ev")["members"] == members0
+    assert _kinds(wh, "ev") == ["patch"]
     got = wh.read("ev")
     assert got.count() == n  # row count preserved
     assert got.filter("event_type = 'click'").count() == 0
@@ -99,9 +105,9 @@ def test_compaction_materializes_patches(spark, wh):
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(19,4)")).alias("s"),
     ).first()
-    assert len(wh._patch_files("ev")) == 1
+    assert _kinds(wh, "ev") == ["patch"]
     wh.compact("ev")
-    assert wh._patch_files("ev") == []  # spent patch collected
+    assert _kinds(wh, "ev") == []  # spent patch collected
     after = wh.read("ev").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(19,4)")).alias("s"),
@@ -127,12 +133,12 @@ def test_tiered_compaction_keeps_patch_scope(spark, wh):
     n_patched = wh.read("ev").filter("event_type = 'patched'").count()
     assert n_patched > 0
     wh.compact("ev", mode="tiered")  # folds only batch 9
-    assert len(wh._patch_files("ev")) == 1  # still referencing gen 1
+    assert _kinds(wh, "ev") == ["patch"]  # still addressing gen 1
     got = wh.read("ev")
     assert got.count() == n
     assert got.filter("event_type = 'patched'").count() == n_patched
     wh.compact("ev")  # major merge materializes
-    assert wh._patch_files("ev") == []
+    assert _kinds(wh, "ev") == []
     assert wh.read("ev").filter("event_type = 'patched'").count() == n_patched
 
 
@@ -208,7 +214,7 @@ def test_patches_across_a_widening_modify_read_with_own_schemas(
     w.update_where_lightweight(
         "nums", {"n": F.lit(5_000_000_000)}, "event_id = 2"
     )
-    assert len(w._patch_files("nums")) == 2
+    assert _kinds(w, "nums") == ["patch", "patch"]
     got = w.read("nums")
     assert dict(got.dtypes) == {"event_id": "bigint", "n": "bigint"}
     assert sorted(map(tuple, got.collect())) == [

@@ -356,27 +356,30 @@ def test_drop_partition_overlay_noop_when_no_overlays(spark, wh):
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 4, 2: 4}), batch_id=1)
     assert wh.drop_partition(t, "2024-01-02") == 1
-    assert wh._dv_files(t) == [] and wh._patch_files(t) == []
+    assert wh.load_manifest(t)["overlays"] == []
     assert wh.read(t).count() == 4
 
 
 def test_patch_seq_survives_partial_gc(spark, wh):
-    """ADVICE r9 (medium): __patch_seq derived from the file COUNT reuses
+    """ADVICE r9 (medium): a patch seq derived from the entry COUNT reuses
     a live sequence after a partial GC removes an older patch while a
     newer one survives — two patches with equal seq make latest-wins
-    nondeterministic.  Seq must come from the max embedded sequence."""
-    import shutil as _sh
-
+    nondeterministic.  Seq must come from the max live sequence."""
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 4}), batch_id=1)
     wh.update_where_lightweight(t, {"alert_action": "'p0'"}, "dest_port = 443")
     wh.update_where_lightweight(t, {"alert_action": "'p1'"}, "dest_port = 443")
-    files = wh._patch_files(t)
-    assert [f.split("-")[1] for f in files] == ["000000", "000001"]
-    # simulate a partial GC: the older patch dies, the newer survives
-    _sh.rmtree(os.path.join(wh._patch_dir(t), files[0]))
+    entries = wh.load_manifest(t)["overlays"]
+    assert [e["seq"] for e in entries] == [0, 1]
+
+    # simulate a partial GC: the older patch retires, the newer survives
+    def retire(man):
+        man["overlays"] = man["overlays"][1:]
+        return True
+
+    wh._flip(t, retire)
     wh.update_where_lightweight(t, {"alert_action": "'p2'"}, "dest_port = 443")
-    seqs = sorted(int(f.split("-")[1]) for f in wh._patch_files(t))
+    seqs = sorted(e["seq"] for e in wh.load_manifest(t)["overlays"])
     assert seqs == [1, 2]  # no collision with the survivor
     got = wh.read(t).filter("dest_port = 443").select("alert_action").collect()
     assert {r.alert_action for r in got} == {"p2"}  # latest wins, deterministic

@@ -154,7 +154,7 @@ def main() -> None:
         return int(row.n), str(row.s)
 
     def overlay_count(table: str = probe) -> int:
-        return len(wh._dv_files(table)) + len(wh._patch_files(table))
+        return len(wh.overlay_files(table))
 
     # static sideload table in the SAME warehouse (attach_partition is a
     # same-warehouse hardlink op): one later event_date, no overlays
@@ -370,7 +370,7 @@ def main() -> None:
 
             from dev_clickhouse_spark.quality import SchemaMigrator
 
-            if wh._patch_files(probe):
+            if any(o.startswith("patch-") for o in wh.overlay_files(probe)):
                 wh.compact(probe, mode="full")
                 wh.gc_deletes(probe)
             pre_n = wh.read(probe).count()
@@ -395,7 +395,7 @@ def main() -> None:
             clr_date = next(
                 d for d in wh._partition_dates(probe) if d != side_date
             )
-            if wh._patch_files(probe):
+            if any(o.startswith("patch-") for o in wh.overlay_files(probe)):
                 wh.compact(probe, mode="full")
                 wh.gc_deletes(probe)
             t0 = time.time()
