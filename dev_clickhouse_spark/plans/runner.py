@@ -177,9 +177,23 @@ class PipelineRunner:
                 BRONZE_SCHEMAS, pool.map(materialize, BRONZE_SCHEMAS)
             ):
                 cache[t] = df
+
+        def windows(start: dt.datetime) -> dict[str, DataFrame]:
+            # a pipeline with a narrower window filters the in-memory copy
+            # (no new scan); one starting with the cache reads it as it
+            # is: Spark inlines timestamp literals into the generated code,
+            # so a redundant filter would compile new classes every tick
+            if start == cache_start:
+                return cache
+            return {
+                t: df.filter(F.col("event_ts") >= F.lit(start))
+                for t, df in cache.items()
+            }
+
         # run-scoped input-dim reads, shared by the pipelines that read the
         # same dim (dim_tag by all three bridges, sensor/protocol/event by
-        # two facts each; each read costs ~100 ms of driver-side listing).
+        # two facts each; one read of a warm gold dim builds its relation on
+        # the driver in ~25 ms, 4 cores).
         # Every table rd() reads is a declared depends_on edge, so it is
         # first read after its writer has finished.  Both dicts are threaded
         # explicitly (not stashed on self): two overlapping run_window calls
@@ -190,7 +204,8 @@ class PipelineRunner:
             run_metrics = self._schedule(
                 order,
                 lambda s: self._run_one(
-                    s, starts[s.pipeline_id], end_ts, cache=cache, reads=reads
+                    s, starts[s.pipeline_id], end_ts,
+                    cache=windows(starts[s.pipeline_id]), reads=reads,
                 ),
             )
         finally:
@@ -408,12 +423,10 @@ class PipelineRunner:
         reads: dict[str, DataFrame] | None = None,
     ) -> tuple[DataFrame, str]:
         cache = cache or {}
-        # the cache holds the WIDEST window of the run; a pipeline with a
-        # narrower window filters the in-memory copy (no new scan)
+        # ``cache`` holds the run's bronze windows, already narrowed to
+        # [start_ts, end_ts)
         win = lambda t: (  # noqa: E731
-            cache[t].filter(F.col("event_ts") >= F.lit(start_ts))
-            if t in cache
-            else self.wh.read_window(t, start_ts, end_ts)
+            cache[t] if t in cache else self.wh.read_window(t, start_ts, end_ts)
         )
         cur = lambda t: (self.wh.read(t) if self.wh.exists(t) else None)  # noqa: E731
         # run-scoped INPUT-dim read sharing (never used for cur(): a

@@ -1074,8 +1074,10 @@ class Warehouse:
         snap: dict, overlays: dict[str, dict | None] | None = None,
     ) -> None:
         """Commit a mutation's member rewrite (``_swap_members``) and delete
-        the replaced members unless ``retain_old``.  Raises when the
-        snapshot went stale: the mutation then changed nothing."""
+        the replaced members unless ``retain_old``; the overlay entries
+        that addressed only those members are then spent and dropped
+        (``gc_deletes``).  Raises when the snapshot went stale: the
+        mutation then changed nothing."""
         if not self._swap_members(table, replaced, snap, overlays):
             raise RuntimeError(_RETRY.format(table))
         if not retain_old:
@@ -1083,6 +1085,7 @@ class Warehouse:
                 shutil.rmtree(
                     os.path.join(self.path(table), m), ignore_errors=True
                 )
+            self.gc_deletes(table)
 
     def _write_member(self, table: str, df: DataFrame, member: str) -> int:
         """Write ``df`` as the (not yet listed) member directory ``member``
@@ -2141,7 +2144,6 @@ class Warehouse:
             )
         if rewritten:
             self._commit_rewrite(table, rewritten, False, man)
-            self.gc_deletes(table)
             self._gc_alter_overlays(table)
         self._log_mutation(
             table, "materialize_column", f"MATERIALIZE COLUMN {name}",

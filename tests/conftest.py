@@ -3,13 +3,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
-from dev_clickhouse_spark.session import tune
+from dev_clickhouse_spark.session import STATIC_CONF, tune
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = (
         SparkSession.builder.master("local[4]")
+        # the production static confs (the codegen cache size among them)
+        .config(map=STATIC_CONF)
         .appName("dev-clickhouse-spark-tests")
         # local mode = executors AND driver bookkeeping in ONE JVM; the 1g
         # default survives the unit suite but the corpus-soak integration

@@ -215,13 +215,20 @@ def test_overlay_bookkeeping_starts_no_spark_job(spark, wh):
     assert [f["members"] for f in folds] == [
         ["member=batch-0"], ["member=batch-2"]
     ]
-    # an ALTER rewrite of batch 1 deletes the member the DV addresses
+    # an ALTER rewrite of batch 1 deletes the member the DV addresses, and
+    # its commit drops the then spent DV entry
     wh.delete_where("ev", "event_id % 3 = 1 AND event_type = 'view'")
-    assert _kinds(wh, "ev") == ["dv"]
-    removed, jobs = _jobs(spark, lambda: wh.gc_deletes("ev"))
-    assert (removed, jobs) == (1, 0)
     assert _kinds(wh, "ev") == []
     assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == []
+    assert wh.parts("ev").filter("kind = 'deletion_vector'").count() == 0
+    assert all(
+        r.is_materialized for r in wh.mutations("ev").collect()
+    )
+    # no longer refused as an ATTACH source (``ev`` stores no
+    # ``event_date=`` directories, so nothing is linked)
+    assert wh.attach_partition("ev", "ev_copy", "2024-01-01") == 0
+    removed, jobs = _jobs(spark, lambda: wh.gc_deletes("ev"))
+    assert (removed, jobs) == (0, 0)
 
 
 def test_maintenance_tick_compacts_appended_gold_tables(spark, tmp_path):
