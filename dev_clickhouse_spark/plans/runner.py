@@ -320,13 +320,15 @@ class PipelineRunner:
         gc_min_age_sec: float = 3600.0,
         now: dt.datetime | None = None,
     ) -> dict[str, int]:
-        """One background-merge cycle over the bronze tables and the gold
-        tables the pipelines append to (SCD1 dims, facts, bridges; an SCD2
-        snapshot is overwritten to one member each run) — the work
-        ClickHouse's merge scheduler owns: tiered compaction (folding the
-        members appended since the last cycle), orphan GC, deletion-vector
-        GC, and any DECLARED table TTL (``set_table_ttl``), which the
-        compact enforces in the same pass.  Returns {table: n_files}.
+        """One background-merge cycle over the tables the runner writes —
+        the work ClickHouse's merge scheduler owns.  The bronze tables and
+        the gold tables the pipelines append to (SCD1 dims, facts,
+        bridges) get a tiered compaction (folding the members appended
+        since the last cycle), which also enforces any DECLARED table TTL
+        (``set_table_ttl``) in the same pass.  Every table, the SCD2
+        snapshots (overwritten to one member each run) included, then gets
+        ``gc``: the members and overlays that no retained manifest version
+        lists leave the disk.  Returns {compacted table: n_files}.
 
         Single-compactor discipline applies: call this from ONE place (the
         scheduled tick or the stream's cadence), never concurrently with
@@ -334,17 +336,20 @@ class PipelineRunner:
         cadence can be aggressive without rewriting the table."""
         from ..schemas import BRONZE_SCHEMAS
 
+        snapshots = [
+            s.target_table for s in self.pipelines if s.mode != "append"
+        ]
         if tables is None:
             tables = list(BRONZE_SCHEMAS) + [
-                s.target_table for s in self.pipelines if s.mode == "append"
+                s.target_table for s in self.pipelines
             ]
         out: dict[str, int] = {}
         for table in tables:
             if not self.wh.exists(table):
                 continue
-            out[table] = self.wh.compact(table, mode=mode, now=now)
+            if table not in snapshots:
+                out[table] = self.wh.compact(table, mode=mode, now=now)
             self.wh.gc(table, min_age_sec=gc_min_age_sec)
-            self.wh.gc_deletes(table)
             # DECLARED projections fold in the same cycle — CH updates
             # projections at part-merge time; ensure() is incremental
             # (only members the fold hasn't seen), so the cadence cost

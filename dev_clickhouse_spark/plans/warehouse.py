@@ -178,6 +178,17 @@ def _addressing(overlays: list[dict], members) -> list[dict]:
     return [e for e in overlays if ms.intersection(e["members"])]
 
 
+def _drop_spent(man: dict) -> int:
+    """Drop the overlay entries of ``man`` none of whose ``members`` it
+    still lists — the rewrite or overwrite that replaced those members
+    spent them.  Returns the number dropped."""
+    live = set(man["members"])
+    kept = [e for e in man["overlays"] if live.intersection(e["members"])]
+    n = len(man["overlays"]) - len(kept)
+    man["overlays"] = kept
+    return n
+
+
 def _tag_rows(df: DataFrame) -> DataFrame:
     """Prefix a raw member scan with the (file, row position) address
     every overlay row keys on."""
@@ -200,7 +211,10 @@ class Warehouse:
     pointer WHILE appends land and readers run — the ClickHouse-parts/
     Iceberg-snapshot discipline instead of a single-writer maintenance
     window.  A member is never rewritten in place, and a zero-row write
-    lists no member.  On a real deployment the pointer flip maps to a
+    lists no member.  A member or overlay directory that some manifest
+    version listed leaves the disk only through :meth:`gc`, once no
+    retained version lists it, so a plan built over any retained version
+    stays readable.  On a real deployment the pointer flip maps to a
     metastore row or an object-store conditional PUT; here it is a rename
     on the local filesystem.
 
@@ -213,7 +227,8 @@ class Warehouse:
     it into place with ``os.replace``, so one ALTER is one atomic commit
     and a read resolves one consistent set of declarations."""
 
-    #: version files kept after a flip (debugging/undo); older ones pruned
+    #: version files kept after a flip (snapshot reads, readers holding a
+    #: plan); older ones are pruned and ``gc`` may then sweep their dirs
     _MANIFEST_KEEP = 10
 
     def __init__(
@@ -362,10 +377,9 @@ class Warehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.exists(p) and any(
-            not f.startswith((".", "_")) for f in os.listdir(p)
-        )
+        """True when the CURRENT manifest lists a member; superseded
+        directories waiting for ``gc`` do not count."""
+        return bool(self.load_manifest(table)["members"])
 
     # -- DETACH / ATTACH TABLE ----------------------------------------------
 
@@ -1028,13 +1042,16 @@ class Warehouse:
         for its value (None = removed) — the commit of a compaction,
         mutation or partition drop, whose rewrite read the manifest
         ``snap``.  ``overlays`` swaps overlay entries by name the same way
-        (DROP PARTITION's remapped overlays).  All or nothing: when a
-        replaced member is no longer live (an overwrite or another rewrite
-        replaced it since the snapshot), or an overlay committed after the
-        snapshot addresses a replaced member (the rewrite never applied
-        it), the manifest is left unchanged, the new members and overlay
-        entries are deleted and False returned — swapping the rewrite in
-        would resurrect the rows it replaced or lose the overlay."""
+        (DROP PARTITION's remapped overlays), and the same version drops
+        the entries the swap spent (``_drop_spent``).  The replaced
+        members stay on disk for the versions that list them.  All or
+        nothing: when a replaced member is no longer live (an overwrite or
+        another rewrite replaced it since the snapshot), or an overlay
+        committed after the snapshot addresses a replaced member (the
+        rewrite never applied it), the manifest is left unchanged, the
+        never-listed new members and overlay directories are deleted and
+        False returned — swapping the rewrite in would resurrect the rows
+        it replaced or lose the overlay."""
         seen = {e["name"] for e in snap["overlays"]}
         overlays = overlays or {}
 
@@ -1052,40 +1069,29 @@ class Warehouse:
                 r for r in (overlays.get(e["name"], e) for e in man["overlays"])
                 if r is not None
             ]
+            _drop_spent(man)
             return True
 
-        ok = self._flip(table, edit)
-        if ok:
-            # the swapped-out overlay entries are spent
-            doomed = [e for e in snap["overlays"] if e["name"] in overlays]
-        else:
-            doomed = [e for e in overlays.values() if e is not None]
-            for m in replaced.values():
-                if m is not None:
-                    shutil.rmtree(
-                        os.path.join(self.path(table), m), ignore_errors=True
-                    )
-        for e in doomed:
-            shutil.rmtree(self._overlay_path(table, e), ignore_errors=True)
-        return ok
-
-    def _commit_rewrite(
-        self, table: str, replaced: dict[str, str | None], retain_old: bool,
-        snap: dict, overlays: dict[str, dict | None] | None = None,
-    ) -> None:
-        """Commit a mutation's member rewrite (``_swap_members``) and delete
-        the replaced members unless ``retain_old``; the overlay entries
-        that addressed only those members are then spent and dropped
-        (``gc_deletes``).  Raises when the snapshot went stale: the
-        mutation then changed nothing."""
-        if not self._swap_members(table, replaced, snap, overlays):
-            raise RuntimeError(_RETRY.format(table))
-        if not retain_old:
-            for m in replaced:
+        if self._flip(table, edit):
+            return True
+        for m in replaced.values():
+            if m is not None:
                 shutil.rmtree(
                     os.path.join(self.path(table), m), ignore_errors=True
                 )
-            self.gc_deletes(table)
+        for e in overlays.values():
+            if e is not None:
+                shutil.rmtree(self._overlay_path(table, e), ignore_errors=True)
+        return False
+
+    def _commit_rewrite(
+        self, table: str, replaced: dict[str, str | None], snap: dict,
+        overlays: dict[str, dict | None] | None = None,
+    ) -> None:
+        """Commit a mutation's member rewrite (``_swap_members``).  Raises
+        when the snapshot went stale: the mutation then changed nothing."""
+        if not self._swap_members(table, replaced, snap, overlays):
+            raise RuntimeError(_RETRY.format(table))
 
     def _write_member(self, table: str, df: DataFrame, member: str) -> int:
         """Write ``df`` as the (not yet listed) member directory ``member``
@@ -1126,25 +1132,18 @@ class Warehouse:
         columns, casts for widened ones) — old members are served through
         the new schema without rewrite.  The metadata document is resolved
         ONCE and every step below uses that copy."""
-        meta = self._meta(table)
-        man = self.load_manifest(table)
-        return self._apply_computed_read(
-            self._read_members(
-                table, man["members"], meta=meta, overlays=man["overlays"]
-            ),
-            meta,
-        )
+        return self._read_manifest(table, self.load_manifest(table))
 
     def read_at_version(self, table: str, version: int) -> DataFrame:
         """Snapshot read: the table EXACTLY as manifest version ``version``
-        listed it — the Iceberg-style time travel the version-pointer layout
-        gives for free.  Valid for the retained version window
-        (``_MANIFEST_KEEP`` flips back); raises ``LookupError`` for pruned
-        or unknown versions, and ``ValueError`` when a superseded member
-        has already been deleted by a non-``retain_old`` compaction (the
-        snapshot is no longer reconstructible)."""
-        d = self._manifest_dir(table)
-        path = os.path.join(d, f"v{version:08d}.json")
+        listed it — its members masked and patched by its own overlay
+        entries, the Iceberg-style time travel the version-pointer layout
+        gives for free.  Every retained version (``_MANIFEST_KEEP`` flips
+        back) stays readable, because ``gc`` deletes only what no retained
+        version lists; raises ``LookupError`` for pruned or unknown
+        versions.  Computed columns apply as in ``read`` — they are
+        read-time semantics of the table, not part of a version."""
+        path = os.path.join(self._manifest_dir(table), f"v{version:08d}.json")
         try:
             with open(path) as fh:
                 man = json.load(fh)
@@ -1152,23 +1151,18 @@ class Warehouse:
             raise LookupError(
                 f"no retained manifest version {version} for {table!r}"
             ) from None
-        missing = [
-            m for m in man["members"]
-            if not os.path.isdir(os.path.join(self.path(table), m))
-        ]
-        if missing:
-            raise ValueError(
-                f"snapshot v{version} of {table!r} references deleted "
-                f"members {missing}; compact with retain_old=True to keep "
-                "snapshots reconstructible"
-            )
-        # computed columns apply to snapshots too — ALIAS/back-fill are
-        # read-time semantics, not part of the stored member set — and so
-        # do the CURRENT manifest's overlays (ClickHouse lightweight
-        # mutations apply to every read)
+        man.setdefault("overlays", [])
+        return self._read_manifest(table, man)
+
+    def _read_manifest(self, table: str, man: dict) -> DataFrame:
+        """The rows manifest ``man`` lists: its members through its
+        overlays, with the computed columns applied."""
         meta = self._meta(table)
         return self._apply_computed_read(
-            self._read_members(table, man["members"], meta=meta), meta
+            self._read_members(
+                table, man["members"], meta=meta, overlays=man["overlays"]
+            ),
+            meta,
         )
 
     def _read_members(
@@ -1573,8 +1567,8 @@ class Warehouse:
         predicate scan + a patch write proportional to the MATCHED rows,
         no data rewrite; the commit is one manifest flip (a crash before
         it leaves the table untouched).  ``compact()`` materializes
-        patches into the new member and ``gc_deletes`` collects spent
-        patches.
+        patches into the new member, and its commit drops the spent
+        entries; ``gc`` later deletes their directories.
 
         The match runs against the CURRENT visible state (earlier patches
         applied, DV-masked rows excluded), so re-issuing an update whose
@@ -1642,14 +1636,14 @@ class Warehouse:
         (file, row_index) set of matched rows — and mask it on every
         read.  Delete cost is one predicate scan + a tiny DV write, no
         data rewrite; ``compact()`` materializes the mask into the new
-        member and garbage-collects spent DVs (exactly ClickHouse's
+        member and its commit drops the spent DVs (exactly ClickHouse's
         ``_row_exists`` mask folded by background merges, and the
         Iceberg/Delta deletion-vector design at lake scale).
 
         Matches against rows ALREADY masked by earlier DVs are excluded,
-        so re-issuing a delete is idempotent (0 new rows).  DVs overlay
-        the CURRENT table state: like ClickHouse lightweight deletes they
-        apply to every read, including ``read_at_version`` snapshots."""
+        so re-issuing a delete is idempotent (0 new rows).  A DV is part
+        of the versions from its commit on: ``read_at_version`` of an
+        earlier version does not apply it."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         man = self.load_manifest(table)
         # footer-stats member pruning (VERDICT r11 #4): the predicate scan
@@ -1694,32 +1688,22 @@ class Warehouse:
         return n
 
     def gc_deletes(self, table: str) -> int:
-        """Drop the overlay entries none of whose member directories still
-        exist (they were compacted/mutated away, materializing the
-        mask/patch) and delete their directories.  An entry addressing ANY
-        member still on disk stays — ``compact(retain_old=True)`` snapshots
-        keep masking, and its dead addresses are harmless no-ops in the
-        joins.  Manifest only, no Spark job.  Returns the number of
-        entries removed."""
-        if not self.load_manifest(table)["overlays"]:
-            return 0
-        spent: list[dict] = []
+        """Drop the overlay entries none of whose members the CURRENT
+        manifest lists (``_drop_spent``), as one new version.  Every
+        rewrite and overwrite already applies this rule in its own commit,
+        so this standalone form is idempotent and normally drops nothing.
+        The directories stay for the versions that list them; ``gc``
+        deletes them.  Manifest only, no Spark job.  Returns the number of
+        entries dropped."""
+        dropped = 0
 
         def drop(man: dict) -> bool:
-            spent.extend(
-                e for e in man["overlays"]
-                if not any(
-                    os.path.isdir(os.path.join(self.path(table), m))
-                    for m in e["members"]
-                )
-            )
-            man["overlays"] = [e for e in man["overlays"] if e not in spent]
-            return bool(spent)
+            nonlocal dropped
+            dropped = _drop_spent(man)
+            return dropped > 0
 
         self._flip(table, drop)
-        for e in spent:
-            shutil.rmtree(self._overlay_path(table, e), ignore_errors=True)
-        return len(spent)
+        return dropped
 
     def _count_rows_parquet(self, path: str) -> int:
         """Row count of a just-written parquet dir from the file FOOTERS —
@@ -1818,8 +1802,8 @@ class Warehouse:
     def batch_committed(self, table: str, batch_id: int) -> bool:
         """True when ``append(..., batch_id=...)`` has fully committed for
         this id (the replay-skip marker of the streaming sink).  The
-        manifest ledger is the only record — it survives compaction deleting
-        the batch member, so a late replay cannot re-append rows that now
+        manifest ledger is the only record — it survives compaction folding
+        the batch member away, so a late replay cannot re-append rows that now
         live inside a compacted member, and files of a write that crashed
         before its commit never count."""
         return batch_id in self.load_manifest(table)["committed_batches"]
@@ -1828,8 +1812,9 @@ class Warehouse:
         """Full-snapshot replace (SCD2 dims, refreshable views); returns the
         number of rows written.  The new member is written from the lazy
         plan first, then the manifest flips to it alone (to no member for a
-        0-row snapshot) and the superseded members are deleted — so the
-        input may read the table it replaces, with no checkpoint."""
+        0-row snapshot) and drops the overlay entries — so the input may
+        read the table it replaces, with no checkpoint.  The superseded
+        members stay on disk until ``gc``."""
         return self._replace(
             table, self._prep(table, self._apply_computed_write(table, df))
         )
@@ -1838,26 +1823,20 @@ class Warehouse:
         """``overwrite`` of rows already in the stored shape."""
         member = _new_member("insert")
         n = self._write_member(table, df, member)
-        old: list[str] = []
 
         def replace(man: dict) -> bool:
-            old.extend(man["members"])
             man["members"] = [member] if n else []
+            _drop_spent(man)
             return True
 
         self._flip(table, replace)
-        for m in old:
-            shutil.rmtree(os.path.join(self.path(table), m), ignore_errors=True)
-        # overlays and CLEAR entries addressed to the replaced members are
-        # spent
-        self.gc_deletes(table)
+        # CLEAR entries addressed to the replaced members are spent
         self._gc_alter_overlays(table)
         return n
 
     def compact(
         self,
         table: str,
-        retain_old: bool = False,
         ttl_older_than=None,
         mode: str = "full",
         max_generations: int = 4,
@@ -1889,15 +1868,16 @@ class Warehouse:
         snapshot (the rewrite never applied it).  Only compactors must not run
         concurrently with each other (one compactor + N appenders is the
         supported discipline — same as ClickHouse merges owning parts).
-        With ``retain_old`` the superseded members stay on disk (set it when
-        long-running readers may still hold a pre-flip plan; a later compact
-        run prunes them once unreferenced)."""
+        The flip drops the overlay entries the merge materialized; the
+        folded members and those overlays' directories stay on disk for
+        readers holding an older version, until ``gc`` finds no retained
+        version listing them (ClickHouse's ``old_parts_lifetime``)."""
         if not self.exists(table):
             return 0
         if self.merges_stopped(table):
             # SYSTEM STOP MERGES: the background merge is a no-op until
             # START MERGES; appends/reads/mutations continue unaffected
-            return self._count_parquet(self.path(table))
+            return self._listed_files(table)
         ttl_cond = None
         if ttl_older_than is not None:
             # TTL folded into the merge — ClickHouse applies TTL exactly
@@ -1985,34 +1965,31 @@ class Warehouse:
             if transform is not None:
                 merged = transform(merged)
             new_member = self._rewrite_member(table, merged, "compacted")
-            # the new member takes the first folded member's place
+            # the new member takes the first folded member's place; the
+            # merged read applied the folded members' overlays, so the
+            # flip drops the entries it spent
             if self._swap_members(
                 table,
                 {m: None for m in snapshot} | {snapshot[0]: new_member},
                 man,
             ):
-                if not retain_old:
-                    for m in snapshot:
-                        shutil.rmtree(
-                            os.path.join(self.path(table), m),
-                            ignore_errors=True,
-                        )
-                # the rewrite materialized the overlays of the folded
-                # members (the merged read applies them); entries whose
-                # members are all gone are spent
-                self.gc_deletes(table)
                 # cast chains / CLEAR overlays addressed to the folded
                 # members are now physically materialized — retire spent
                 # entries (footer metadata only, no data scan)
                 self._gc_alter_overlays(table)
+        return self._listed_files(table)
+
+    def _listed_files(self, table: str) -> int:
+        """Data files of the members the CURRENT manifest lists."""
         return sum(
-            self._count_parquet(os.path.join(self.path(table), m))
+            f.endswith(".parquet")
             for m in self.load_manifest(table)["members"]
+            for _r, _d, fs in os.walk(os.path.join(self.path(table), m))
+            for f in fs
         )
 
     def optimize_deduplicate(
-        self, table: str, by: list[str] | None = None,
-        retain_old: bool = False,
+        self, table: str, by: list[str] | None = None
     ) -> dict:
         """``OPTIMIZE TABLE … FINAL DEDUPLICATE [BY col, …]`` analog: a
         full merge that removes duplicate rows.  Without ``by``, rows
@@ -2043,7 +2020,7 @@ class Warehouse:
                     .drop("__rn")
                 )
 
-        self.compact(table, retain_old=retain_old, transform=transform)
+        self.compact(table, transform=transform)
         after = self.read(table).count()
         return {
             "rows_before": before,
@@ -2143,7 +2120,7 @@ class Warehouse:
                 "materialized",
             )
         if rewritten:
-            self._commit_rewrite(table, rewritten, False, man)
+            self._commit_rewrite(table, rewritten, man)
             self._gc_alter_overlays(table)
         self._log_mutation(
             table, "materialize_column", f"MATERIALIZE COLUMN {name}",
@@ -2168,10 +2145,7 @@ class Warehouse:
     # compaction) at a time — the same discipline ClickHouse applies to
     # merges/mutations owning parts.
 
-    def delete_where(
-        self, table: str, condition, retain_old: bool = False,
-        partition=None,
-    ) -> dict:
+    def delete_where(self, table: str, condition, partition=None) -> dict:
         """``ALTER TABLE … DELETE [IN PARTITION p] WHERE condition``
         analog.  ``condition`` is a SQL expression string or Column
         selecting rows to DELETE.  Members with no matching rows are kept
@@ -2182,8 +2156,7 @@ class Warehouse:
         CH IN PARTITION mutation-scoping.  Returns ``{"rows_deleted",
         "members_rewritten", "members_kept"}``."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        res = self._mutate(table, cond, None, retain_old,
-                           partition=partition)
+        res = self._mutate(table, cond, None, partition=partition)
         self._log_mutation(
             table, "ALTER_DELETE",
             "ALTER DELETE"
@@ -2199,7 +2172,6 @@ class Warehouse:
         table: str,
         assignments: dict[str, object],
         condition,
-        retain_old: bool = False,
         partition=None,
     ) -> dict:
         """``ALTER TABLE … UPDATE col = expr, … [IN PARTITION p] WHERE
@@ -2210,8 +2182,7 @@ class Warehouse:
         never probed).  Returns ``{"rows_updated", "members_rewritten",
         "members_kept"}``."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        res = self._mutate(table, cond, assignments, retain_old,
-                           partition=partition)
+        res = self._mutate(table, cond, assignments, partition=partition)
         self._log_mutation(
             table, "ALTER_UPDATE",
             "ALTER UPDATE %s%s WHERE %s" % (
@@ -2229,7 +2200,6 @@ class Warehouse:
         table: str,
         cond,
         assignments: dict[str, object] | None,
-        retain_old: bool,
         partition=None,
     ) -> dict:
         verb = "rows_updated" if assignments is not None else "rows_deleted"
@@ -2314,7 +2284,7 @@ class Warehouse:
                     "members_kept": len(snapshot),
                     "members_skipped_by_partition": skipped_by_partition,
                     "members_skipped_by_stats": skipped_by_stats}
-        self._commit_rewrite(table, rewritten, retain_old, man)
+        self._commit_rewrite(table, rewritten, man)
         return {
             verb: total,
             "members_rewritten": len(rewritten),
@@ -2370,7 +2340,7 @@ class Warehouse:
             }
         return remapped
 
-    def drop_partition(self, table: str, date, retain_old: bool = False) -> int:
+    def drop_partition(self, table: str, date) -> int:
         """``ALTER TABLE … DROP PARTITION`` analog — remove one
         ``event_date`` partition WITHOUT scanning or rewriting rows.  Each
         affected member is replaced by a hardlink clone excluding the
@@ -2434,29 +2404,25 @@ class Warehouse:
             return remapped
 
         self._commit_meta(table, cleared=remap)
-        self._commit_rewrite(table, replaced, retain_old, man, remapped)
+        self._commit_rewrite(table, replaced, man, remapped)
         return len(replaced)
 
     def drop_member(self, table: str, member: str) -> bool:
-        """Remove one manifest member (pointer flip + dir delete) —
-        the primitive behind member-scoped invalidation of derived
-        tables (a projection dropping exactly the fold batches whose
-        base members a lightweight mutation touched).  Idempotent: a
-        member already gone (a crashed earlier attempt) returns False
-        without a version bump.  The replay ledger is left untouched —
-        callers mint monotonically increasing batch ids, so a dropped
-        batch id is never reused."""
+        """Remove one manifest member (a pointer flip; ``gc`` deletes the
+        directory) — the primitive behind member-scoped invalidation of
+        derived tables (a projection dropping exactly the fold batches
+        whose base members a lightweight mutation touched).  Idempotent: a
+        member no longer listed returns False without a version bump.  The
+        replay ledger is left untouched — callers mint monotonically
+        increasing batch ids, so a dropped batch id is never reused."""
         def remove(man: dict) -> bool:
             if member not in man["members"]:
                 return False
             man["members"].remove(member)
+            _drop_spent(man)
             return True
 
-        changed = self._flip(table, remove)
-        shutil.rmtree(
-            os.path.join(self.path(table), member), ignore_errors=True
-        )
-        return changed
+        return self._flip(table, remove)
 
     def attach_partition(
         self, src_table: str, dst_table: str, date, replace: bool = False
@@ -3131,11 +3097,14 @@ class Warehouse:
         """Sweep member and overlay directories no RETAINED manifest version
         references — the leftovers of (a) a writer, compactor or
         lightweight DELETE/UPDATE that crashed between writing its
-        directory and flipping the pointer, and (b) superseded members
-        kept by ``compact(retain_old=True)`` whose snapshots have since
-        been pruned from the version window.  This sweep is the one place
-        that lists the overlay directories: what it looks for is, by
-        definition, in no manifest.
+        directory and flipping the pointer, and (b) members and overlays
+        that a compaction, mutation, partition drop, overwrite or
+        ``drop_member`` superseded, once every version listing them has
+        been pruned from the ``_MANIFEST_KEEP`` window.  This is the ONE
+        place that deletes a directory some manifest version listed, so a
+        reader's snapshot stays on disk while any retained version names
+        it.  It is also the one place that lists the overlay directories:
+        what it looks for is, by definition, in no manifest.
 
         ``min_age_sec`` is the in-flight guard: every writer writes its
         directory BEFORE registering it, so each looks orphaned for a few
@@ -3671,10 +3640,12 @@ class Warehouse:
 
     def tables(self) -> DataFrame:
         """``system.tables`` analog: one row per warehouse table with its
-        live manifest version, member count, replay-ledger size, file count
-        and on-disk bytes — directory metadata only, no data scan
-        (reference admins join system.tables to system.parts for merge
-        health; same shape here)."""
+        live manifest version, member count, replay-ledger size, and the
+        file count and bytes of the members and overlays the CURRENT
+        manifest lists (superseded directories ``gc`` has yet to sweep do
+        not count) — directory metadata only, no data scan (reference
+        admins join system.tables to system.parts for merge health; same
+        shape here)."""
         rows = []
         try:
             names = sorted(
@@ -3685,18 +3656,21 @@ class Warehouse:
         except OSError:
             names = []
         for t in names:
-            if not self.exists(t):
-                continue
             man = self.load_manifest(t)
-            n_files, n_bytes = 0, 0
-            for r, _dirs, files in os.walk(self.path(t)):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        n_files += 1
-                        try:
-                            n_bytes += os.path.getsize(os.path.join(r, f))
-                        except OSError:
-                            pass
+            if not man["members"]:
+                continue
+            files = [
+                os.path.join(r, f)
+                for d in [
+                    *(os.path.join(self.path(t), m) for m in man["members"]),
+                    *(self._overlay_path(t, e) for e in man["overlays"]),
+                ]
+                for r, _dirs, fs in os.walk(d)
+                for f in fs
+                if f.endswith(".parquet")
+            ]
+            n_files = len(files)
+            n_bytes = sum(os.path.getsize(f) for f in files)
             rows.append((
                 t,
                 man["version"],
@@ -3727,13 +3701,6 @@ class Warehouse:
             "table string, column string, type string, nullable boolean,"
             " position long",
         )
-
-    @staticmethod
-    def _count_parquet(path: str) -> int:
-        n = 0
-        for _root, _dirs, files in os.walk(path):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
 
     def _prep(self, table: str, df: DataFrame) -> DataFrame:
         # conform insert TYPES to the declared schema (ClickHouse inserts

@@ -75,14 +75,24 @@ def test_masked_rows_are_excluded_from_rematch(spark, wh):
     assert r["rows_deleted"] == views
 
 
-def test_snapshot_reads_see_current_deletes(spark, wh):
-    """DVs overlay the CURRENT table state (ClickHouse lightweight-delete
-    semantics): a time-travel read of an older manifest version still
-    masks the deleted rows."""
+def test_snapshot_reads_apply_their_own_deletes(spark, wh):
+    """A snapshot read serves exactly what its manifest version listed: a
+    DV committed after ``v0`` does not mask ``v0``, and a version whose
+    own DV a full compaction later materialized still masks with it."""
+    n = wh.read("ev").count()
     v0 = wh.load_manifest("ev")["version"]
     wh.delete_where_lightweight("ev", "event_type = 'error'")
-    snap = wh.read_at_version("ev", v0)
+    v1 = wh.load_manifest("ev")["version"]
+    assert wh.read_at_version("ev", v0).count() == n
+    errors = wh.read_at_version("ev", v0).filter("event_type = 'error'")
+    assert errors.count() > 0
+    kept = wh.read("ev").count()
+    wh.compact("ev")
+    assert _kinds(wh, "ev") == []
+    snap = wh.read_at_version("ev", v1)
+    assert snap.count() == kept
     assert snap.filter("event_type = 'error'").count() == 0
+    assert wh.read_at_version("ev", v0).count() == n
 
 
 def test_full_compaction_materializes_and_gcs(spark, wh):

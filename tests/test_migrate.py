@@ -451,7 +451,8 @@ def test_drop_column_metadata_only(spark, tmp_path):
     wh.compact("dc")
     member_files = [
         os.path.join(dp, f)
-        for dp, _d, fs in os.walk(wh.path("dc")) for f in fs
+        for m in wh.load_manifest("dc")["members"]
+        for dp, _d, fs in os.walk(os.path.join(wh.path("dc"), m)) for f in fs
         if f.endswith(".parquet")
     ]
     assert all(

@@ -251,11 +251,11 @@ def test_parts_reports_member_inventory(spark, wh):
     assert batch["n_partitions"] == 1
 
 
-def test_mutation_preserves_time_travel_with_retain_old(spark, wh):
+def test_mutation_preserves_time_travel(spark, wh):
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 5}), batch_id=1)
     v_before = wh.load_manifest(t)["version"]
-    wh.delete_where(t, "severity = 'high'", retain_old=True)
+    wh.delete_where(t, "severity = 'high'")
     # pre-mutation snapshot still serves its exact member set
     assert wh.read_at_version(t, v_before).count() == 5
     assert wh.read(t).count() == 3
@@ -264,8 +264,8 @@ def test_mutation_preserves_time_travel_with_retain_old(spark, wh):
 def test_gc_sweeps_superseded_mutated_members(spark, wh):
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 5}), batch_id=1)
-    wh.delete_where(t, "severity = 'high'", retain_old=True)
-    wh.delete_where(t, "severity = 'low'", retain_old=True)
+    wh.delete_where(t, "severity = 'high'")
+    wh.delete_where(t, "severity = 'low'")
     # age out: prune retained versions by forcing flips past the keep window
     with wh._manifest_lock(t):
         man = wh.load_manifest(t)
@@ -295,6 +295,14 @@ def test_tables_reports_warehouse_inventory(spark, wh):
     assert row["n_committed_batches"] == 2
     assert row["n_files"] >= 2 and row["bytes"] > 0
     assert row["version"] == wh.load_manifest(t)["version"]
+    # the folded batch members stay on disk until gc: the inventory counts
+    # only the member the manifest lists
+    wh.compact(t)
+    assert len(os.listdir(wh.path(t))) > 2
+    (row,) = [r for r in wh.tables().collect() if r["table"] == t]
+    (part,) = wh.parts(t).collect()
+    assert row["n_members"] == 1
+    assert (row["n_files"], row["bytes"]) == (part["n_files"], part["bytes"])
 
 
 def test_table_columns_reports_schema(spark, wh):

@@ -16,12 +16,6 @@ from pyspark.sql import functions as F
 from dev_clickhouse_spark.plans.warehouse import Warehouse, member_kind
 
 
-def _parquet_files(root: str) -> int:
-    return sum(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(root) for f in fs
-    )
-
-
 def _member_dirs(wh: Warehouse, table: str) -> list[str]:
     return sorted(e for e in os.listdir(wh.path(table)) if "=" in e)
 
@@ -102,10 +96,9 @@ def test_scd2_overwrite_reads_what_it_replaces(spark, tmp_path):
     runner = _gold_runner(spark, tmp_path)
     wh = runner.wh
     # window 2's SCD2 snapshot was built from window 1's (cur) and replaced
-    # it: one member, none left behind, both versions present
-    assert _member_dirs(wh, "dim_agent") == wh.load_manifest("dim_agent")[
-        "members"]
-    assert len(_member_dirs(wh, "dim_agent")) == 1
+    # it: one member listed; window 1's stays on disk until gc
+    (member,) = wh.load_manifest("dim_agent")["members"]
+    assert member in _member_dirs(wh, "dim_agent")
     assert sorted(r.agent_ip for r in wh.read("dim_agent").collect()) == [
         "10.1.0.1", "10.1.0.9"
     ]
@@ -116,11 +109,13 @@ def test_scd2_overwrite_reads_what_it_replaces(spark, tmp_path):
         cur.unionByName(cur.withColumn("agent_key", F.col("agent_key") + 100)),
     )
     assert n == 4 and wh.read("dim_agent").count() == 4
-    assert len(_member_dirs(wh, "dim_agent")) == 1
-    # a 0-row snapshot flips to no member
+    assert len(wh.load_manifest("dim_agent")["members"]) == 1
+    # a 0-row snapshot flips to no member and writes no directory
+    dirs = _member_dirs(wh, "dim_agent")
     assert wh.overwrite("dim_agent", cur.limit(0)) == 0
     assert wh.load_manifest("dim_agent")["members"] == []
-    assert _member_dirs(wh, "dim_agent") == []
+    assert _member_dirs(wh, "dim_agent") == dirs
+    assert not wh.exists("dim_agent")  # the superseded dirs do not count
     assert wh.read("dim_agent").count() == 0
 
 
@@ -132,7 +127,11 @@ def test_rerun_of_refreshed_window_adds_no_parquet_file(spark, tmp_path):
     wh = runner.wh
 
     def gold_files() -> int:
-        return sum(_parquet_files(wh.path(t)) for t in GOLD_SCHEMAS)
+        # the files the manifests list: a rerun's superseded snapshots stay
+        # on disk until gc
+        return sum(
+            r.n_files for r in wh.tables().collect() if r.table in GOLD_SCHEMAS
+        )
 
     before = gold_files()
     runs = runner.run_window(*W2)
@@ -174,4 +173,7 @@ def test_compaction_flip_does_not_resurrect_overwritten_rows(
     assert [r.v for r in wh.read(t).collect()] == [9]
     members = wh.load_manifest(t)["members"]
     assert [member_kind(m) for m in members] == ["insert"]
-    assert _member_dirs(wh, t) == members  # the rewrite was discarded
+    # the rewrite was discarded; the replaced batch members stay until gc
+    assert _member_dirs(wh, t) == sorted(
+        members + ["member=batch-0", "member=batch-1"]
+    )

@@ -215,11 +215,14 @@ def test_overlay_bookkeeping_starts_no_spark_job(spark, wh):
     assert [f["members"] for f in folds] == [
         ["member=batch-0"], ["member=batch-2"]
     ]
-    # an ALTER rewrite of batch 1 deletes the member the DV addresses, and
-    # its commit drops the then spent DV entry
+    # an ALTER rewrite of batch 1 replaces the member the DV addresses, and
+    # its commit drops the then spent DV entry; the DV directory stays for
+    # the versions that list it, until gc
     wh.delete_where("ev", "event_id % 3 = 1 AND event_type = 'view'")
     assert _kinds(wh, "ev") == []
-    assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == []
+    assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == [
+        entry["name"]
+    ]
     assert wh.parts("ev").filter("kind = 'deletion_vector'").count() == 0
     assert all(
         r.is_materialized for r in wh.mutations("ev").collect()
@@ -274,9 +277,9 @@ def test_maintenance_tick_compacts_appended_gold_tables(spark, tmp_path):
 def test_concurrent_deletes_and_compactions_lose_no_delete(spark, wh):
     """Stress: lightweight DELETEs race repeated compactions on threads.
     A write whose snapshot went stale raises and is retried; every delete
-    that reported success stays applied.  The compactions keep the old
-    members on disk (``retain_old``), as they must while readers — here
-    the deletes' scans — may hold a plan over them."""
+    that reported success stays applied.  The compactions leave the old
+    members on disk for ``gc``, as they must while readers — here the
+    deletes' scans — may hold a plan over them."""
     import sys
     import threading
 
@@ -304,7 +307,7 @@ def test_concurrent_deletes_and_compactions_lose_no_delete(spark, wh):
     def compactor():
         try:
             for _ in range(3):
-                wh.compact("ev", retain_old=True)
+                wh.compact("ev")
         except BaseException as e:
             errors.append(e)
 

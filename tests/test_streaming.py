@@ -327,13 +327,12 @@ def test_compact_overlaps_appends_via_manifest(spark, tmp_path):
     assert got == {"a0", "a1", "b0", "c0", "c1"}
     assert n_files >= 2  # compacted file + batch-2 file
 
-    # the replay-skip ledger SURVIVES compaction: batches 0/1's dirs are
-    # gone, but a late replay of them must still skip, not re-append
-    import os
-
+    # the replay-skip ledger SURVIVES compaction: batches 0/1 are no
+    # longer listed, but a late replay of them must still skip, not
+    # re-append
     for b in (0, 1):
         assert wh.batch_committed(t, b)
-        assert not os.path.exists(os.path.join(wh.path(t), f"member=batch-{b}"))
+        assert f"member=batch-{b}" not in wh.load_manifest(t)["members"]
     assert wh.batch_committed(t, 2)
 
     # a second compact folds the straggler in; data unchanged
@@ -441,9 +440,7 @@ def test_partial_bronze_write_failure_replays_exactly_once(
 def test_read_at_version_time_travel(spark, tmp_path):
     """Snapshot reads off the retained manifest versions: each append is a
     version; an old version keeps serving its exact row set after later
-    appends, and pruned/unknown versions fail loudly.  After a default
-    (deleting) compaction, pre-compaction snapshots correctly refuse
-    instead of silently serving partial data."""
+    appends and compactions, and pruned/unknown versions fail loudly."""
     import pytest
 
     from dev_clickhouse_spark.plans.warehouse import Warehouse
@@ -462,27 +459,27 @@ def test_read_at_version_time_travel(spark, tmp_path):
     with pytest.raises(LookupError, match="no retained manifest"):
         wh.read_at_version(t, 999)
 
-    # retain_old compaction keeps prior snapshots reconstructible
-    wh.compact(t, retain_old=True)
+    # a compaction keeps prior snapshots readable: the folded members stay
+    # on disk while a retained version lists them
+    wh.compact(t)
     v3 = wh.load_manifest(t)["version"]
     assert {r.event_id for r in wh.read_at_version(t, v1).collect()} == {"a0"}
-    # a deleting compaction removes v3's compacted member: v3 then refuses
-    # LOUDLY instead of serving partial data; v1's retained batch dirs
-    # still serve, and the current read is intact
+    # a later compaction folds v3's compacted member away: v3 still reads
+    # its exact rows, and the current read is intact
     wh.append(t, _wazuh_bronze_df(spark, wh, ["c0"]), batch_id=2)
     wh.compact(t)
     assert {r.event_id for r in wh.read(t).collect()} == {
         "a0", "b0", "b1", "c0"
     }
-    with pytest.raises(ValueError, match="references deleted"):
-        wh.read_at_version(t, v3)
+    assert {r.event_id for r in wh.read_at_version(t, v3).collect()} == {
+        "a0", "b0", "b1"
+    }
     assert {r.event_id for r in wh.read_at_version(t, v1).collect()} == {"a0"}
 
 
 def test_gc_sweeps_only_unreferenced_members(spark, tmp_path):
-    """gc() removes a crashed compactor's orphaned member and pruned
-    retain_old leftovers, but never a referenced member or a young
-    (possibly in-flight) directory."""
+    """gc() removes a crashed compactor's orphaned member, but never a
+    referenced member or a young (possibly in-flight) directory."""
     import os as _os
     import time as _time
 

@@ -93,17 +93,22 @@ def test_stop_start_merges(spark, tmp_path):
     for b in range(3):
         wh.append("sys_events", _batch(spark, b * 100, b * 100 + 100),
                   batch_id=b)
+    # the folded batch members stay on disk until gc
+    wh.compact("sys_events")
+    wh.append("sys_events", _batch(spark, 300, 400), batch_id=3)
+    n_files = sum(r.n_files for r in wh.parts("sys_events").collect())
     wh.stop_merges("sys_events")
     assert wh.merges_stopped("sys_events")
     members_before = list(wh.load_manifest("sys_events")["members"])
-    wh.compact("sys_events")   # no-op while stopped
+    # no-op while stopped; it counts the files of the listed members only
+    assert wh.compact("sys_events") == n_files
     assert wh.load_manifest("sys_events")["members"] == members_before
     # appends and mutations continue while merges are stopped
     wh.append("sys_events", _batch(spark, 900, 950), batch_id=9)
     wh.delete_where_lightweight("sys_events", "event_id = 0")
-    assert wh.read("sys_events").count() == 349
+    assert wh.read("sys_events").count() == 449
     wh.start_merges("sys_events")
     assert not wh.merges_stopped("sys_events")
     wh.compact("sys_events")
     assert len(wh.load_manifest("sys_events")["members"]) == 1
-    assert wh.read("sys_events").count() == 349
+    assert wh.read("sys_events").count() == 449

@@ -13,7 +13,7 @@ The soak: ≥100 micro-batches through the real streaming path — payload
 synth → ``with_parsed`` → ``extract_all`` 1→3 fan-out → idempotent
 ``Warehouse.append(batch_id=…)`` batch members (the same commit
 protocol the foreachBatch sink uses, ``streaming/bronze_stream.py``) — with
-``compact(retain_old=False)`` + ``gc(min_age_sec=0)`` every
+``compact()`` + ``gc(min_age_sec=0)`` every
 ``--compact-every`` batches on the busiest table, exactly the
 one-compactor-N-appenders discipline ``Warehouse.compact`` documents.
 

@@ -10,7 +10,8 @@ the full maintenance mix interleaved:
 - every ``--mutate-every`` batches: a lightweight DELETE of one
   event_id-hash slice + a lightweight UPDATE of another (fresh slices per
   cycle, so every cycle writes a real overlay);
-- every ``--compact-every`` batches: compaction + gc + gc_deletes;
+- every ``--compact-every`` batches: compaction + gc + gc_deletes (the
+  bytes on disk of the live tables are recorded after each cycle);
   every second cycle a FULL compaction materializes all overlays
   (overlay count must reset to 0), the others run the tiered cadence
   (overlays referencing untouched generations must survive and keep
@@ -155,6 +156,16 @@ def main() -> None:
 
     def overlay_count(table: str = probe) -> int:
         return len(wh.overlay_files(table))
+
+    def bytes_on_disk() -> int:
+        """Bytes of every file under the live tables' directories —
+        listed and superseded members, overlays and manifests alike."""
+        return sum(
+            os.path.getsize(os.path.join(r, f))
+            for t in tables
+            for r, _dirs, files in os.walk(wh.path(t))
+            for f in files
+        )
 
     # static sideload table in the SAME warehouse (attach_partition is a
     # same-warehouse hardlink op): one later event_date, no overlays
@@ -619,6 +630,7 @@ def main() -> None:
                 sec=round(time.time() - t0, 3),
                 rows_stable=pre_rows == post_rows,
                 overlay_files_after=oc,
+                bytes_on_disk=bytes_on_disk(),
                 full_reset_ok=(not full) or stopped or oc == 0,
                 window_events_per_sec=round(args.events_per_batch / med, 1))
             rv.run_pending()
@@ -755,6 +767,9 @@ def main() -> None:
         "stop_merges": stop_state,
         "n_deleted_ids_tracked": len(deleted_ids),
         "overlay_files_max": overlay_max,
+        "bytes_on_disk_after_last_compact": [
+            e["bytes_on_disk"] for e in events if e["kind"] == "compact"
+        ][-1],
         "steady_state_events_per_sec": steady,
         "checks": checks,
         "quiet": quiet,
