@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from ..functions.ch_compat import round_half_up as rnd
 from ..io import load_table
 from ..queries.registry import register
+from ..session import spread
 
 MINHASH_K = 12
 LSH_BANDS = 6
@@ -115,10 +116,7 @@ def minhash_signatures(
 
     # single-file tables arrive as one partition — spread the CPU-bound
     # signature hashing across cores (at real scale input is already split)
-    inp = docs.select(F.col(id_col), F.col(text_col))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if inp.rdd.getNumPartitions() < par:
-        inp = inp.repartition(par)
+    inp = spread(docs.select(F.col(id_col), F.col(text_col)))
     return inp.mapInPandas(compute, schema=_SIG_SCHEMA)
 
 
@@ -329,10 +327,7 @@ def simhash_signatures(
     def sh(texts: pd.Series) -> pd.Series:
         return texts.map(simhash_hex)
 
-    inp = docs.select(F.col(id_col), F.col(text_col))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if inp.rdd.getNumPartitions() < par:
-        inp = inp.repartition(par)
+    inp = spread(docs.select(F.col(id_col), F.col(text_col)))
     return inp.select(F.col(id_col), sh(F.col(text_col)).alias("simhash"))
 
 
@@ -417,12 +412,9 @@ def _hashed_doc_shingles(docs: DataFrame, id_col: str = "doc_id",
     # single-file tables arrive as one partition — spread the CPU-bound
     # shingle build + hashing across cores (same note as minhash_signatures;
     # at real scale the input is already split)
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    t = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks")).filter(
-        F.size("toks") >= SHINGLE_N
-    )
+    t = spread(docs).select(
+        F.col(id_col).alias("doc_id"), toks.alias("toks")
+    ).filter(F.size("toks") >= SHINGLE_N)
     # hash BEFORE dedup: array_distinct then compares 8-byte longs, not
     # ~30-byte strings (measured ~2.5x on the per-doc stage at sf0.1)
     shingle = _shingle_tokens("toks")

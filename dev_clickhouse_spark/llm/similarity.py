@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.ch_compat import round_half_up as rnd
 from ..io import load_table
 from ..queries.registry import register
+from ..session import spread
 from .centroids import _coarse_index, nearest, top_p
 
 N_PLANES = 8
@@ -37,16 +38,6 @@ def _norm(a):
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a single-partition input across cores — a one-file corpus
-    otherwise runs the whole (interpreted HOF) scoring stage as ONE task
-    (r13, guide §2.6; at real scale the input is already split)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def cosine_topk(
@@ -66,7 +57,7 @@ def cosine_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     ).select("query_id", "qv", _norm(F.col("qv")).alias("qn"))
-    c = _spread(corpus.select(
+    c = spread(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )).select("neighbor_id", "cv", _norm(F.col("cv")).alias("cn"))
@@ -124,7 +115,7 @@ def lsh_bucket_topk(
     At 100 TB the bucketed self-join replaces the full cross product; recall
     is tunable via n_planes (fewer planes → bigger buckets → higher recall)."""
     # r13: spread + per-vector norms, same rationale as cosine_topk
-    c = _spread(corpus.select(
+    c = spread(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )).select(
@@ -552,7 +543,7 @@ def ivf_topk(
     )
 
     # r13: per-vector norms hoisted out of the pair projection (same double
-    # arithmetic — bit-identical rounded scores).  No _spread here: the
+    # arithmetic — bit-identical rounded scores).  No spread here: the
     # assignment join already re-partitions the candidate side, and a
     # measured attempt at spreading the scan REGRESSED this query (extra
     # exchange ahead of a join that reshuffles anyway).

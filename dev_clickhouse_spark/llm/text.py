@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.ch_compat import round_half_up as rnd
 from ..io import load_table
 from ..queries.registry import register
+from ..session import spread
 
 #: BPE-ish pre-tokenizer: letter runs, single digits, punctuation runs —
 #: the shape GPT-style byte-pair pre-tokenization produces on ASCII text.
@@ -494,10 +495,7 @@ def _char_trigram_rows(
     runs the whole corpus explode as ONE task (at real scale the input is
     already split).  Emits exactly the same row multiset, docs under 3 chars
     drop out (they contribute no trigrams either way)."""
-    inp = docs.select(F.col(id_col), F.col(text_col))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if inp.rdd.getNumPartitions() < par:
-        inp = inp.repartition(par)
+    inp = spread(docs.select(F.col(id_col), F.col(text_col)))
     return (
         inp.select(F.col(id_col), F.lower(F.col(text_col)).alias("__s"))
         .filter(F.length("__s") >= 3)

@@ -22,8 +22,26 @@ from pyspark.sql import functions as F
 
 from ..sources.json_events import extract_all
 from ..gold import bridges, dims, facts
+from ..operators.dedupe import replacing_dedupe
 from .spec import PIPELINES, PipelineSpec, topo_sorted_waves
 from .warehouse import Warehouse
+
+#: a bronze event's identity — the reference's facts are
+#: ``ReplacingMergeTree`` on (event_id, event_ts), fed at-least-once
+_EVENT_KEY = ["event_id", "event_ts"]
+
+
+def _one_per_event(df: DataFrame) -> DataFrame:
+    """``df`` with one row per (event_id, event_ts): a redelivered event
+    collapses to its greatest row under the remaining columns in schema
+    order, a pick no partitioning can change.  Gold reads bronze through
+    this; the bronze table keeps every delivered copy for audit."""
+    others = [c for c in df.columns if c not in _EVENT_KEY]
+    # the shuffle keeps the input's partition count (one for an empty
+    # window, which has none): every pipeline scans the result, and
+    # shuffle.partitions tasks per scan cost more than the dedup itself
+    df = df.repartition(max(1, df.rdd.getNumPartitions()), *_EVENT_KEY)
+    return replacing_dedupe(df, _EVENT_KEY, others[0], others[1:])
 
 
 class PipelineRunner:
@@ -139,11 +157,13 @@ class PipelineRunner:
         called directly) applies to every pipeline as given.
 
         The three bronze windows are materialized ONCE up front (persist +
-        eager count, released at the end) over the WIDEST requested window
-        and shared by every pipeline (narrower windows filter the cached
-        copy in memory): without this the 16 pipelines issue ~30 separate
-        scan+filter jobs (ClickHouse gets the sharing for free from its
-        page cache; Spark needs the explicit materialization).  A trailing
+        eager count, released at the end) over the WIDEST requested window,
+        one row per event (``_one_per_event``: a redelivery inside the
+        window does not reach gold twice), and shared by every pipeline
+        (narrower windows filter the cached copy in memory): without this
+        the 16 pipelines issue ~30 separate scan+filter jobs (ClickHouse
+        gets the sharing for free from its page cache; Spark needs the
+        explicit materialization).  A trailing
         window is small by construction (~200k events at the reference
         envelope), so pinning it is safe even when the table is 100 TB."""
         from ..schemas import BRONZE_SCHEMAS
@@ -167,7 +187,9 @@ class PipelineRunner:
             # persisted blocks, while a localCheckpoint's blocks only go
             # away when the RDD is GC'd — per-tick streaming calls must
             # release promptly, and the lineage here is a cheap pruned scan
-            df = self.wh.read_window(t, cache_start, end_ts).persist()
+            df = _one_per_event(
+                self.wh.read_window(t, cache_start, end_ts)
+            ).persist()
             df.count()
             return df
 
@@ -328,7 +350,10 @@ class PipelineRunner:
         (``set_table_ttl``) in the same pass.  Every table, the SCD2
         snapshots (overwritten to one member each run) included, then gets
         ``gc``: the members and overlays that no retained manifest version
-        lists leave the disk.  Returns {compacted table: n_files}.
+        lists leave the disk.  A table's declared projections then fold
+        its new members, and each fold table (``<base>__proj__<name>``)
+        gets the same ``gc``: the fold members an invalidation dropped
+        leave the disk too.  Returns {compacted table: n_files}.
 
         Single-compactor discipline applies: call this from ONE place (the
         scheduled tick or the stream's cadence), never concurrently with
@@ -357,6 +382,10 @@ class PipelineRunner:
             ps = self.wh.projection_set_for(table)
             if ps is not None:
                 ps.ensure()
+                for spec in ps.specs:
+                    self.wh.gc(
+                        ps._proj_table(spec), min_age_sec=gc_min_age_sec
+                    )
         return out
 
     def monitor_tick(
@@ -431,7 +460,8 @@ class PipelineRunner:
         # ``cache`` holds the run's bronze windows, already narrowed to
         # [start_ts, end_ts)
         win = lambda t: (  # noqa: E731
-            cache[t] if t in cache else self.wh.read_window(t, start_ts, end_ts)
+            cache[t] if t in cache
+            else _one_per_event(self.wh.read_window(t, start_ts, end_ts))
         )
         cur = lambda t: (self.wh.read(t) if self.wh.exists(t) else None)  # noqa: E731
         # run-scoped INPUT-dim read sharing (never used for cur(): a

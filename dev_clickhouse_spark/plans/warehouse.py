@@ -25,15 +25,6 @@ from ..io import first_parquet, parquet_schema, read_parquet
 from ..schemas import BRONZE_SCHEMAS, CORPUS_SCHEMAS, GOLD_SCHEMAS
 
 
-def _strip_scheme(p: str) -> str:
-    """Local filesystem path of a Spark ``_metadata.file_path`` URI."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
-
-
 def _move_file(src: str, dst: str) -> None:
     """Rename ``src`` to ``dst`` (creating ``dst``'s directory) when it
     exists — how a table's metadata document follows its data."""
@@ -72,6 +63,44 @@ def _rename_exchange(p1: str, p2: str) -> None:
     os.rename(p1, tmp)
     os.rename(p2, p1)
     os.rename(tmp, p2)
+
+
+def _link_tree(src: str, dst: str, skip: str | None = None) -> int:
+    """Hardlink every file under ``src`` to the same relative path under
+    ``dst`` (a copy across filesystems), leaving out each directory named
+    ``skip``; returns the number of files linked."""
+    n = 0
+    for dirpath, dirs, files in os.walk(src):
+        dirs[:] = [d for d in dirs if d != skip]
+        od = os.path.normpath(os.path.join(dst, os.path.relpath(dirpath, src)))
+        os.makedirs(od, exist_ok=True)
+        for f in files:
+            sf, df_ = os.path.join(dirpath, f), os.path.join(od, f)
+            try:
+                os.link(sf, df_)
+            except OSError:
+                shutil.copy2(sf, df_)
+            n += 1
+    return n
+
+
+def _backup_chain(backup: str) -> list[str]:
+    """``backup`` and the base backups it was taken against (each
+    ``backup.json``'s ``base_backup``), nearest first."""
+    chain: list[str] = []
+    cur = os.path.abspath(backup)
+    while cur and cur not in chain:
+        chain.append(cur)
+        with open(os.path.join(cur, "backup.json")) as fh:
+            cur = json.load(fh).get("base_backup")
+    return chain
+
+
+def _holder(chain: list[str], rel: str) -> str | None:
+    """The nearest backup of ``chain`` that physically holds ``rel``."""
+    return next(
+        (d for d in chain if os.path.isdir(os.path.join(d, rel))), None
+    )
 
 
 @contextlib.contextmanager
@@ -168,6 +197,11 @@ def member_kind(member: str) -> str:
 _OVERLAY_DIRS = {"dv": "_deletes", "patch": "_patches"}
 
 
+def _overlay_rel(entry: dict) -> str:
+    """An overlay entry's directory relative to the table root."""
+    return os.path.join(_OVERLAY_DIRS[entry["kind"]], entry["name"])
+
+
 _RETRY = ("members of {!r} were replaced while the mutation ran; "
           "nothing was changed — retry it")
 
@@ -190,13 +224,40 @@ def _drop_spent(man: dict) -> int:
 
 
 def _tag_rows(df: DataFrame) -> DataFrame:
-    """Prefix a raw member scan with the (file, row position) address
-    every overlay row keys on."""
+    """Prefix a raw member scan with the address every overlay row keys
+    on: ``__dv_file``, the parquet file's path RELATIVE TO THE TABLE ROOT
+    (``member=<kind>-<id>/[event_date=…/]part-….parquet``, the text after
+    the last ``/member=`` of ``_metadata.file_path``), and ``__dv_pos``,
+    the row's position in that file.  The address names no location, so
+    a table directory that is moved, swapped (EXCHANGE) or cloned
+    (BACKUP/RESTORE) keeps every overlay valid as written; its first
+    component is the member the row lives in."""
+    under_member = F.substring_index(
+        F.col("_metadata.file_path"), f"/{_MEMBER_KEY}=", -1
+    )
     return df.select(
-        F.col("_metadata.file_path").alias("__dv_file"),
+        F.concat(F.lit(f"{_MEMBER_KEY}="), under_member).alias("__dv_file"),
         F.col("_metadata.row_index").alias("__dv_pos"),
         "*",
     )
+
+
+#: address-form marker of every overlay entry: its rows key on the
+#: table-relative file path of ``_tag_rows``
+_ADDRESS = "relative"
+
+
+def _check_addresses(overlays: list[dict], where: str) -> None:
+    """Raise, naming the entry, when an overlay entry lacks the address
+    marker: it was committed when rows were keyed on absolute file paths,
+    which no read matches any more (it would mask and patch nothing)."""
+    for e in overlays:
+        if e.get("address") != _ADDRESS:
+            raise ValueError(
+                f"overlay entry {e['name']!r} of {where} keys its rows on "
+                "absolute file paths, which reads no longer match; "
+                "materialize it with compact() on the release that wrote it"
+            )
 
 
 class Warehouse:
@@ -945,7 +1006,7 @@ class Warehouse:
         version-0 manifest.
 
         {"version": K, "members": [dir, ...], "committed_batches": [id, ...],
-         "overlays": [{"name", "kind", "seq", "members"}, ...]}
+         "overlays": [{"name", "kind", "seq", "members", "address"}, ...]}
 
         ``members`` are the live data directories (scanned by read());
         ``committed_batches`` is the replay-skip ledger of
@@ -956,7 +1017,10 @@ class Warehouse:
         ``dv`` (deletion vector, ``_deletes/<name>``) or ``patch`` (updated
         rows, ``_patches/<name>``) each, ``seq`` their commit order and
         ``members`` the members their rows address; an overlay directory
-        no manifest lists is invisible, and ``gc()`` sweeps it."""
+        no manifest lists is invisible, and ``gc()`` sweeps it.  Overlay
+        rows address (file path relative to the table root, row
+        position), marked ``"address": "relative"``; an entry without the
+        marker (absolute file paths) raises, naming the entry."""
         cur = os.path.join(self._manifest_dir(table), "CURRENT")
         # EXCHANGE TABLES swaps the whole table directory between the
         # CURRENT read and the version-file open — the resolved v<K>.json
@@ -979,7 +1043,9 @@ class Warehouse:
             except OSError:
                 continue
             # a manifest written before overlays were committed lists none
-            man.setdefault("overlays", [])
+            _check_addresses(
+                man.setdefault("overlays", []), f"table {table!r}"
+            )
             return man
         raise FileNotFoundError(
             f"manifest {version_file!r} of {table!r} unreadable after "
@@ -1131,8 +1197,20 @@ class Warehouse:
         the read conforms to the ALTERed schema (typed NULLs for added
         columns, casts for widened ones) — old members are served through
         the new schema without rewrite.  The metadata document is resolved
-        ONCE and every step below uses that copy."""
-        return self._read_manifest(table, self.load_manifest(table))
+        ONCE and every step below uses that copy.
+
+        A listed member or overlay that is missing while the plan is built
+        (``exchange_tables`` swapped the directory after the manifest was
+        resolved) re-resolves the manifest once: a changed manifest is
+        read, an unchanged one re-raises."""
+        man = self.load_manifest(table)
+        try:
+            return self._read_manifest(table, man)
+        except FileNotFoundError:
+            fresh = self.load_manifest(table)
+            if fresh == man:
+                raise
+            return self._read_manifest(table, fresh)
 
     def read_at_version(self, table: str, version: int) -> DataFrame:
         """Snapshot read: the table EXACTLY as manifest version ``version``
@@ -1151,7 +1229,9 @@ class Warehouse:
             raise LookupError(
                 f"no retained manifest version {version} for {table!r}"
             ) from None
-        man.setdefault("overlays", [])
+        _check_addresses(
+            man.setdefault("overlays", []), f"{table!r} v{version}"
+        )
         return self._read_manifest(table, man)
 
     def _read_manifest(self, table: str, man: dict) -> DataFrame:
@@ -1176,8 +1256,9 @@ class Warehouse:
         filters independently.
 
         When an overlay (lightweight DELETE/UPDATE) addresses a scanned
-        member, every scan is tagged with the parquet ``_metadata`` (file,
-        row position) BEFORE the union — the hidden column only resolves on
+        member, every scan is tagged by ``_tag_rows`` with the (file under
+        the table root, row position) address from the parquet
+        ``_metadata`` BEFORE the union — the hidden column only resolves on
         a raw scan — and ``_apply_overlays`` applies them; with
         ``keep_dv_tag`` the position columns stay visible (the mutation
         writers need them).  ``meta`` is the caller's resolved metadata
@@ -1365,8 +1446,8 @@ class Warehouse:
             # still address it; the latest entry (highest ``seq``) of a
             # row wins.  A patch addressing members outside the scan (a
             # tiered compaction folding only fresh members) is FILTERED to
-            # files under the scanned members (a file belongs to exactly
-            # one member), so it never injects rows whose originals live
+            # rows whose address's member (its first component) is
+            # scanned, so it never injects rows whose originals live
             # outside the scan.
             # patch dirs normally share one schema (each patch writer
             # selects the full tagged row), so one multi-path scan reads
@@ -1391,16 +1472,9 @@ class Warehouse:
             pat = pats[0]
             for more in pats[1:]:
                 pat = pat.unionByName(more, allowMissingColumns=True)
-            in_scan = F.lit(False)
-            for m in members:
-                # scheme-agnostic ('file:/x' vs 'file:///x'): match on the
-                # absolute member path; the trailing '/' stops a member
-                # name prefixing another ('member=insert-ab' vs '…-abc')
-                frag = os.path.abspath(
-                    os.path.join(self.path(table), m)
-                ) + "/"
-                in_scan = in_scan | F.col("__dv_file").contains(frag)
-            pat = pat.filter(in_scan)
+            pat = pat.filter(
+                F.substring_index("__dv_file", "/", 1).isin(members)
+            )
             w = Window.partitionBy("__dv_file", "__dv_pos").orderBy(
                 F.col("__patch_seq").desc()
             )
@@ -1424,9 +1498,7 @@ class Warehouse:
         return out
 
     def _overlay_path(self, table: str, entry: dict) -> str:
-        return os.path.join(
-            self.path(table), _OVERLAY_DIRS[entry["kind"]], entry["name"]
-        )
+        return os.path.join(self.path(table), _overlay_rel(entry))
 
     def _new_overlay(self, table: str, kind: str) -> str:
         """A fresh, not yet listed overlay directory of ``kind``."""
@@ -1439,11 +1511,12 @@ class Warehouse:
         """Commit the written overlay directory ``path`` as a manifest
         entry.  Its ``members`` are read from the rows' ``__dv_file``
         column with pyarrow (no Spark job); its ``seq`` is one above every
-        live entry's, so a later patch of a row wins.  When a member the
+        live entry's, so a later patch of a row wins; ``address`` marks
+        its rows' table-relative addresses.  When a member the
         rows address was replaced since the overlay's scan (a compaction
         or mutation flipped first), the rows would address files no read
         scans: the directory is deleted and the write raises."""
-        members = self._overlay_members(table, path)
+        members = self._overlay_members(path)
 
         def add(man: dict) -> bool:
             if not set(members) <= set(man["members"]):
@@ -1454,6 +1527,7 @@ class Warehouse:
                 "seq": 1 + max((e["seq"] for e in man["overlays"]),
                                default=-1),
                 "members": members,
+                "address": _ADDRESS,
             })
             return True
 
@@ -1461,23 +1535,18 @@ class Warehouse:
             shutil.rmtree(path, ignore_errors=True)
             raise RuntimeError(_RETRY.format(table))
 
-    def _overlay_members(self, table: str, path: str) -> list[str]:
+    @staticmethod
+    def _overlay_members(path: str) -> list[str]:
         """The members the rows of the overlay directory ``path`` address:
-        the first component of each distinct ``__dv_file`` under the table
-        root (a file belongs to exactly one member), read with pyarrow."""
+        the first component of each distinct ``__dv_file``, read with
+        pyarrow."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         refs = pc.unique(
             pq.read_table(path, columns=["__dv_file"])["__dv_file"]
         ).to_pylist()
-        root = os.path.abspath(self.path(table))
-        return sorted({
-            os.path.relpath(
-                os.path.abspath(_strip_scheme(r)), root
-            ).split(os.sep)[0]
-            for r in refs
-        })
+        return sorted({r.split("/", 1)[0] for r in refs})
 
     def _n_overlays(self, table: str, kind: str) -> int:
         man = self.load_manifest(table)
@@ -1562,7 +1631,8 @@ class Warehouse:
         """ClickHouse lightweight ``UPDATE … SET … WHERE`` (patch parts)
         analog: instead of rewriting members like ``update_set`` (the
         ALTER UPDATE mutation), persist a PATCH — the full updated rows
-        keyed by their original (file, row position) — applied on every
+        keyed by their original (table-relative file, row position) address
+        (``_tag_rows``) — applied on every
         read by replacing the addressed rows.  Update cost is one
         predicate scan + a patch write proportional to the MATCHED rows,
         no data rewrite; the commit is one manifest flip (a crash before
@@ -1633,7 +1703,8 @@ class Warehouse:
         """ClickHouse ``DELETE FROM … WHERE`` (lightweight delete) analog:
         instead of rewriting members like ``delete_where`` (the ALTER
         DELETE mutation), persist a POSITIONAL deletion vector — the
-        (file, row_index) set of matched rows — and mask it on every
+        (table-relative file, row_index) addresses of matched rows
+        (``_tag_rows``) — and mask it on every
         read.  Delete cost is one predicate scan + a tiny DV write, no
         data rewrite; ``compact()`` materializes the mask into the new
         member and its commit drops the spent DVs (exactly ClickHouse's
@@ -2298,35 +2369,29 @@ class Warehouse:
         overlays: list[dict],
     ) -> dict[str, dict | None]:
         """Rewrite the overlay entries addressing members of a DROP
-        PARTITION member swap.  Overlay rows address (file, position) of
-        the OLD member paths; the hardlink clones preserve every relative
-        path, so the remap is a member-prefix substitution — without it
-        the clone resurrects DV-deleted rows and reverts patched rows in
-        the SURVIVING partitions.  Rows addressing the dropped partition
-        itself are removed (their originals are gone; a stale patch row
-        would otherwise be re-injected by the patch union).
+        PARTITION member swap.  Overlay rows address ``member=<old>/…``;
+        the hardlink clones keep every path under the member, so the
+        remap swaps the ``member=<old>/`` prefix for ``member=<new>/`` —
+        without it the clone resurrects DV-deleted rows and reverts
+        patched rows in the SURVIVING partitions.  Rows addressing the
+        dropped partition itself are removed (their originals are gone; a
+        stale patch row would otherwise be re-injected by the patch
+        union).
 
         Returns ``{old entry name: new entry (same kind and seq) or None
         when no row survives}``; the new directories are written here and
         swapped in by the same manifest flip as the members."""
-        pairs = [
-            (
-                os.path.abspath(os.path.join(self.path(table), old)) + "/",
-                os.path.abspath(os.path.join(self.path(table), new)) + "/",
-            )
-            for old, new in replaced.items()
-            if new is not None
-        ]
+        addr = F.col("__dv_file")
+        for old, new in replaced.items():
+            if new is not None:
+                addr = F.regexp_replace(addr, f"^{re.escape(old)}/", f"{new}/")
         remapped: dict[str, dict | None] = {}
         for e in _addressing(overlays, replaced):
-            col = F.col("__dv_file")
-            for old_p, new_p in pairs:
-                col = F.regexp_replace(col, re.escape(old_p), new_p)
             out = read_parquet(
                 self.spark, self._overlay_path(table, e)
-            ).withColumn("__dv_file", col).filter(
+            ).filter(
                 ~F.col("__dv_file").contains(f"/{part}/")
-            )
+            ).withColumn("__dv_file", addr)
             path = self._new_overlay(table, e["kind"])
             self._writer(out.coalesce(1)).mode("overwrite").parquet(path)
             if self._count_rows_parquet(path) == 0:
@@ -2336,7 +2401,7 @@ class Warehouse:
             remapped[e["name"]] = {
                 **e,
                 "name": os.path.basename(path),
-                "members": self._overlay_members(table, path),
+                "members": self._overlay_members(path),
             }
         return remapped
 
@@ -2346,27 +2411,11 @@ class Warehouse:
         affected member is replaced by a hardlink clone excluding the
         dropped partition directory (metadata-only, O(files) not O(rows) —
         the reason ClickHouse DROP PARTITION is instant at any size), and
-        the pointer flips.  Returns the number of members affected."""
+        the pointer flips.  The overlay entries addressing an affected
+        member are rewritten by ``_remap_overlays_for_drop`` (a member-prefix
+        swap of their table-relative addresses) in the same flip.  Returns
+        the number of members affected."""
         part = f"event_date={date}"
-
-        def clone_excluding(src: str, dst: str) -> bool:
-            """Hardlink every data file of ``src`` into ``dst`` except those
-            under the dropped partition.  True when dst has any data."""
-            kept = False
-            for root, _dirs, files in os.walk(src):
-                rel = os.path.relpath(root, src)
-                if part in rel.split(os.sep):
-                    continue
-                for f in files:
-                    if f.startswith("."):
-                        continue
-                    d = os.path.join(dst, rel)
-                    os.makedirs(d, exist_ok=True)
-                    os.link(os.path.join(root, f), os.path.join(d, f))
-                    if f.endswith(".parquet"):
-                        kept = True
-            return kept
-
         man = self.load_manifest(table)
         replaced: dict[str, str | None] = {}
         for m in man["members"]:
@@ -2375,9 +2424,8 @@ class Warehouse:
                 continue
             new_member = _new_member("mutated")
             dst = os.path.join(self.path(table), new_member)
-            os.makedirs(dst, exist_ok=True)
-            has_data = clone_excluding(src, dst)
-            if not has_data:
+            _link_tree(src, dst, skip=part)
+            if first_parquet(dst) is None:
                 shutil.rmtree(dst, ignore_errors=True)
                 replaced[m] = None  # member was entirely the dropped partition
             else:
@@ -2435,8 +2483,8 @@ class Warehouse:
         drops the destination's existing partition first (REPLACE
         PARTITION); the source is never modified.
 
-        Refused when the source carries deletion vectors: DVs reference
-        the SOURCE file paths, so hardlinked clones would resurrect
+        Refused when the source carries deletion vectors: DVs address
+        the SOURCE's members, so hardlinked clones would resurrect
         masked rows — compact the source first to materialize its mask.
         Returns the number of data files attached."""
         part = f"event_date={date}"
@@ -2496,9 +2544,10 @@ class Warehouse:
         overlays, engine, TTLs) — hardlink-cloned
         (copy across filesystems).  Taken under the manifest lock so a
         concurrent append/compaction pointer flip cannot tear it;
-        O(files) + O(overlay bytes), zero data rows rewritten.  Restore
-        with :meth:`restore_table`, which remaps the overlay file
-        addresses to the restored location.
+        O(files), zero rows rewritten.  Overlay rows address files
+        relative to the table root, so the backup records no source
+        location and :meth:`restore_table` installs the overlays as they
+        are.
 
         ``base`` = a previous backup of the same table → INCREMENTAL
         backup (CH ``SETTINGS base_backup = Disk(…)``): members and
@@ -2512,21 +2561,6 @@ class Warehouse:
         if os.path.exists(dest) and os.listdir(dest):
             raise ValueError(f"backup destination {dest!r} is not empty")
         os.makedirs(dest, exist_ok=True)
-
-        def clone_tree(src: str, dst: str) -> int:
-            n = 0
-            for dirpath, _dirs, files in os.walk(src):
-                rel = os.path.relpath(dirpath, src)
-                od = os.path.join(dst, rel) if rel != "." else dst
-                os.makedirs(od, exist_ok=True)
-                for f in files:
-                    sf, df_ = os.path.join(dirpath, f), os.path.join(od, f)
-                    try:
-                        os.link(sf, df_)
-                    except OSError:
-                        shutil.copy2(sf, df_)
-                    n += 1
-            return n
 
         def same_tree(live: str, backed: str) -> bool:
             """Every file under ``live`` is the SAME inode as the base
@@ -2561,22 +2595,13 @@ class Warehouse:
         # the base may itself be incremental: an entry it RECORDED from
         # its own base has no physical copy there — resolve the check
         # through the whole base chain
-        base_chain: list[str] = []
-        cur = base_abs
-        while cur and cur not in base_chain:
-            base_chain.append(cur)
-            try:
-                with open(os.path.join(cur, "backup.json")) as fh:
-                    cur = json.load(fh).get("base_backup")
-            except OSError:
-                break
+        base_chain = _backup_chain(base_abs) if base_abs else []
 
         def in_base(rel: str, live: str) -> bool:
-            for d in base_chain:
-                cand = os.path.join(d, rel)
-                if os.path.isdir(cand):
-                    return same_tree(live, cand)
-            return False
+            held = _holder(base_chain, rel)
+            return held is not None and same_tree(
+                live, os.path.join(held, rel)
+            )
 
         with self._manifest_lock(table):
             man = self.load_manifest(table)
@@ -2587,17 +2612,16 @@ class Warehouse:
                 if base_abs and in_base(m, live):
                     base_members.append(m)
                     continue
-                files += clone_tree(live, os.path.join(dest, m))
+                files += _link_tree(live, os.path.join(dest, m))
             base_overlays: list[str] = []
             for e in man["overlays"]:
-                live = self._overlay_path(table, e)
-                rel = os.path.relpath(live, self.path(table))
+                rel = _overlay_rel(e)
+                live = os.path.join(self.path(table), rel)
                 if base_abs and in_base(rel, live):
                     base_overlays.append(e["name"])
                     continue
-                files += clone_tree(live, os.path.join(dest, rel))
+                files += _link_tree(live, os.path.join(dest, rel))
             meta = {
-                "source_table_path": os.path.abspath(self.path(table)),
                 "members": man["members"],
                 "committed_batches": man["committed_batches"],
                 "overlays": man["overlays"],
@@ -2617,62 +2641,30 @@ class Warehouse:
 
     def restore_table(self, src: str, table: str) -> dict:
         """``RESTORE TABLE`` analog: install a :meth:`backup_table`
-        snapshot as ``table``.  Data files hardlink/copy back; deletion
-        vectors and patches have their stored (file, position) addresses
-        REWRITTEN from the backed-up table's path to the restored one —
-        without this the overlays would reference dead paths and
-        silently mask nothing.  Refuses to overwrite an existing
-        table."""
+        snapshot as ``table``.  Member and overlay directories alike
+        hardlink back (copy across filesystems) unchanged: deletion-vector
+        and patch rows address (file relative to the table root,
+        position), which holds under any root.  A backup whose overlay
+        entries key on absolute file paths raises, naming the entry.
+        Refuses to overwrite an existing table."""
         if self.exists(table):
             raise ValueError(f"table {table!r} already exists")
-        # incremental chains (backup_table base=…): walk base_backup
-        # pointers; a member / overlay entry restores from the NEAREST
-        # backup in the chain that physically holds it
-        chain: list[tuple[str, dict]] = []
-        cur, seen = os.path.abspath(src), set()
-        while cur and cur not in seen:
-            seen.add(cur)
-            with open(os.path.join(cur, "backup.json")) as fh:
-                m_ = json.load(fh)
-            chain.append((cur, m_))
-            cur = m_.get("base_backup")
-        meta = chain[0][1]
-
-        def resolve(rel: str) -> tuple[str, dict]:
-            for d, m_ in chain:
-                if os.path.isdir(os.path.join(d, rel)):
-                    return os.path.join(d, rel), m_
-            raise FileNotFoundError(
-                f"backup chain from {src!r} holds no entry {rel!r}"
+        with open(os.path.join(src, "backup.json")) as fh:
+            meta = json.load(fh)
+        _check_addresses(meta["overlays"], f"backup {src!r}")
+        # incremental chains (backup_table base=…): a member / overlay
+        # entry restores from the NEAREST backup in the chain that
+        # physically holds it
+        chain = _backup_chain(src)
+        for rel in [*meta["members"], *map(_overlay_rel, meta["overlays"])]:
+            held = _holder(chain, rel)
+            if held is None:
+                raise FileNotFoundError(
+                    f"backup chain from {src!r} holds no entry {rel!r}"
+                )
+            _link_tree(
+                os.path.join(held, rel), os.path.join(self.path(table), rel)
             )
-
-        new_root = os.path.abspath(self.path(table))
-        for m in meta["members"]:
-            sp, _owner = resolve(m)
-            dp = os.path.join(new_root, m)
-            for dirpath, _dirs, files in os.walk(sp):
-                rel = os.path.relpath(dirpath, sp)
-                od = os.path.join(dp, rel) if rel != "." else dp
-                os.makedirs(od, exist_ok=True)
-                for f in files:
-                    sf, df_ = os.path.join(dirpath, f), os.path.join(od, f)
-                    try:
-                        os.link(sf, df_)
-                    except OSError:
-                        shutil.copy2(sf, df_)
-        # the overlay entries committed at backup time
-        for e in meta["overlays"]:
-            dp = self._overlay_path(table, e)
-            sp, owner = resolve(os.path.relpath(dp, new_root))
-            # remap from the OWNING backup's source path — chain links
-            # may have been taken from different table roots
-            old_root = owner["source_table_path"]
-            df_ = read_parquet(self.spark, sp)
-            remapped = df_.withColumn(
-                "__dv_file",
-                F.regexp_replace("__dv_file", re.escape(old_root), new_root),
-            )
-            remapped.coalesce(1).write.mode("overwrite").parquet(dp)
         self._commit_meta(table, **meta["table_meta"])
         with self._manifest_lock(table):
             self._write_manifest(
@@ -3124,8 +3116,7 @@ class Warehouse:
                         man = json.load(fh)
                     referenced.update(man["members"])
                     referenced.update(
-                        os.path.join(_OVERLAY_DIRS[e["kind"]], e["name"])
-                        for e in man.get("overlays", [])
+                        map(_overlay_rel, man.get("overlays", []))
                     )
             candidates = [
                 e for e in os.listdir(root) if e.startswith(_MEMBER_KEY + "=")
@@ -3229,21 +3220,21 @@ class Warehouse:
         their metadata documents (the blue/green cutover primitive; CH
         does this atomically in the Atomic database engine).  Here it is
         one exchange of the directories and one of the documents under
-        the single-maintenance-writer discipline — readers resolve
-        manifests per query, and
+        the single-maintenance-writer discipline.  A table directory is
+        self-contained — overlay rows address files relative to the
+        table root — so committed lightweight DELETEs and UPDATEs move
+        with their rows.  Readers resolve manifests per query:
         ``load_manifest`` re-resolves when the swap lands between its
-        CURRENT read and the version-file open (the r12 soak's
-        readers-active drill caught that crash).  Residual window,
-        documented: a reader that resolved a manifest BEFORE the swap
-        lists member paths under the swapped directory — missing members
-        are skipped and a same-named member (``member=batch-<id>`` names
-        can collide across tables) would serve the OTHER side's rows for
-        that member.  The supported concurrent-reader pattern is the
-        blue/green cutover this op exists for — the green side is a
-        rebuilt CONTENT-EQUIVALENT of blue, so any interleaving reads
-        equivalent rows (soak-verified); swapping two tables with
-        DIFFERENT content wants a reader quiesce, as in CH non-Atomic
-        RENAME-based swaps."""
+        CURRENT read and the version-file open, and ``read`` re-resolves
+        once when a member the resolved manifest lists is missing (the
+        swap landed after the resolve).  Residual window, documented: a
+        member named in both tables (``member=batch-<id>`` names can
+        collide) is read from whichever directory holds it when the scan
+        runs.  The supported concurrent-reader pattern is the blue/green
+        cutover this op exists for — the green side is a rebuilt
+        CONTENT-EQUIVALENT of blue, so any interleaving reads equivalent
+        rows (soak-verified); swapping two tables with DIFFERENT content
+        wants a reader quiesce, as in CH non-Atomic RENAME-based swaps."""
         if not self.exists(a) or not self.exists(b):
             raise ValueError(f"EXCHANGE needs both tables ({a!r}, {b!r})")
         _rename_exchange(self.path(a), self.path(b))

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Timezone every reference table is declared in (01_bronze_tables.sql:3).
 JAKARTA_TZ = "Asia/Jakarta"
@@ -75,6 +75,16 @@ def partitions_for_factor(factor: float, cpus: int | None = None) -> int:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return min(1024, max(cpus, round(cpus * factor / 4)))
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` round-robined over ``defaultParallelism`` partitions when it
+    has fewer: a one-file input otherwise runs a CPU-bound stage as ONE
+    task (at real scale the input is already split)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
 
 
 def get_spark(

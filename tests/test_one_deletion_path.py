@@ -111,3 +111,27 @@ def test_maintenance_tick_gcs_scd2_snapshots(spark, tmp_path):
         assert _member_dirs(wh, t) == _retained_members(wh, t)
         assert not set(first[t]) & set(_member_dirs(wh, t))
         assert sorted(map(tuple, wh.read(t).collect())) == rows[t]
+
+
+def test_maintenance_tick_gcs_projection_fold_tables(spark, tmp_path):
+    from dev_clickhouse_spark.plans import PipelineRunner
+
+    runner = PipelineRunner(spark, str(tmp_path / "wh"), pipelines=[])
+    wh = runner.wh
+    t = "suricata_events_raw"
+    for b, days in enumerate([{1: 4}, {2: 4}, {3: 4}]):
+        wh.append(t, _mk_events(spark, days), batch_id=b)
+    wh.declare_projection(t, "by_sev", ["severity"], [("count", None)])
+    fold = f"{t}__proj__by_sev"
+    runner.maintenance_tick(tables=[t], gc_min_age_sec=0.0)
+    folded = wh.load_manifest(fold)["members"]
+    assert folded
+    # a lightweight DELETE invalidates the fold batch of the member it
+    # addresses: ensure() drops that fold member and folds it again
+    wh.delete_where_lightweight(t, "event_id = 'ev-2-0'")
+    wh.projection_set_for(t).ensure()
+    assert set(folded) - set(wh.load_manifest(fold)["members"])
+    for _ in range(Warehouse._MANIFEST_KEEP):
+        wh._flip(fold, lambda man: True)
+    runner.maintenance_tick(tables=[t], gc_min_age_sec=0.0)
+    assert _member_dirs(wh, fold) == sorted(wh.load_manifest(fold)["members"])

@@ -354,3 +354,39 @@ def test_topo_waves():
     assert order["dim_tag"] < order["bridge_wazuh_event_tag"]
     assert order["fact_wazuh_events"] < order["bridge_wazuh_event_tag"]
     assert order["dim_agent_scd2"] < order["fact_wazuh_events"]
+
+
+# ---------------------------------------------------------------------------
+# At-least-once input: an event delivered twice inside one window reaches
+# gold once (the reference's facts are ReplacingMergeTree on
+# (event_id, event_ts)); bronze keeps both delivered copies for audit.
+# ---------------------------------------------------------------------------
+
+def _redelivered(spark, tmp_path, payloads, twice):
+    runner = PipelineRunner(spark, str(tmp_path / "wh"), max_active_tasks=4)
+    runner.ingest_raw(raw_df(spark, [*payloads, twice]))
+    runner.run_window(*W1)
+    return runner
+
+
+def test_redelivered_wazuh_line_reaches_gold_once(spark, tmp_path):
+    w1 = wazuh_payload("w1", "10.1.0.1", "2026-01-08T09:10:00.000Z")
+    runner = _redelivered(spark, tmp_path, [
+        w1, wazuh_payload("w2", "10.1.0.1", "2026-01-08T09:20:00.000Z"),
+    ], twice=w1)
+    assert runner.wh.read("wazuh_events_raw").count() == 3
+    fact = runner.wh.read("fact_wazuh_events")
+    assert sorted(r.event_id for r in fact.collect()) == ["w1", "w2"]
+    assert runner.wh.read("bridge_wazuh_event_tag").filter(
+        "event_id = 'w1'"
+    ).count() == 2  # the payload's two tags, once each
+
+
+def test_redelivered_suricata_line_reaches_gold_once(spark, tmp_path):
+    s1 = suricata_payload("s1", "2026-01-08T09:15:00.000Z")
+    runner = _redelivered(spark, tmp_path, [
+        s1, suricata_payload("s2", "2026-01-08T09:25:00.000Z"),
+    ], twice=s1)
+    assert runner.wh.read("suricata_events_raw").count() == 3
+    fact = runner.wh.read("fact_suricata_events")
+    assert sorted(r.event_id for r in fact.collect()) == ["s1", "s2"]

@@ -25,7 +25,7 @@ the full maintenance mix interleaved:
   END — after further appends, mutations, the drop, and compactions hit
   the source — RESTORE into a SECOND warehouse and assert the restored
   table's checksum equals the at-backup checksum (row-level equivalence
-  at the backup's manifest version, overlay addresses remapped).
+  at the backup's manifest version, overlays restored as written).
 
 Round 11 (VERDICT r10 #6) adds the remaining maintenance surface under
 the same live ingest:
