@@ -28,9 +28,13 @@ Design:
   → token guaranteed absent).  The residual predicate is ALWAYS applied
   to the surviving scan, so a missing/stale sidecar can only cost
   speed, never correctness — the member is scanned in full.
-- Reads go through per-member ``basePath`` parquet reads over the
-  surviving file lists, so hive-style partition columns inside a member
-  (``event_date=``) survive exactly as in ``Warehouse._read_members``.
+- Reads hand the surviving file lists to ``Warehouse._read_members``,
+  the one member-scan path of ``Warehouse.read``: the same footer-grouped
+  scans, ALTER projection (RENAME, MODIFY cast, DEFAULT back-fill, CLEAR
+  COLUMN), overlays and declared schema, so a pruned read equals
+  ``wh.read(t).filter(pred)`` by construction.  A CLEAR COLUMN entry
+  makes the stats of the members it addresses no evidence on the cleared
+  column (``warehouse._stats_blind``, shared with the mutation pruner).
 
 At 100 TB: the sidecars are driver-side metadata a few KB per member
 (bloom: m/8 bytes per file), the prune is a pure-metadata loop — no task
@@ -50,8 +54,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import parquet_schema, read_parquet
-from .warehouse import Warehouse, _addressing, _tag_rows
+from ..io import read_parquet
+from .warehouse import Warehouse, _stats_blind
 
 #: tokenizer shared by index build and query: lowercase, split on
 #: non-alphanumeric runs — mirrors ClickHouse tokenbf_v1's "split by
@@ -114,16 +118,13 @@ class SkipIndex:
     def _sidecar_path(self, member: str) -> str:
         return os.path.join(self._sidecar_dir(), f"{member}.json")
 
-    def _live_members(self) -> list[str]:
-        return list(self.wh.load_manifest(self.table)["members"])
-
     def ensure(self) -> int:
         """Build sidecars for live members that lack one.  Returns the
         number built.  Safe to call any time — after appends, compactions
         or mutations — because rewritten members carry new names."""
         os.makedirs(self._sidecar_dir(), exist_ok=True)
         built = 0
-        for member in self._live_members():
+        for member in self.wh.load_manifest(self.table)["members"]:
             if os.path.exists(self._sidecar_path(member)):
                 continue
             self._build_member(member)
@@ -244,10 +245,21 @@ class SkipIndex:
 
         Returns {member: [surviving relative file paths]} plus counters
         under the ``"__stats__"`` key."""
+        return self._prune(
+            predicates, self.wh.load_manifest(self.table)["members"],
+            self.wh._meta(self.table),
+        )
+
+    def _prune(
+        self, predicates: list[tuple], members: list[str], meta: dict
+    ) -> dict:
+        """``prune`` over ``members`` with the metadata document ``meta``:
+        a member's predicates on a ``_stats_blind`` column (CLEAR COLUMN
+        addressed it) prune none of its files."""
         self._bits_cache: dict[str, tuple[int, ...]] = {}
         survivors: dict[str, list[str]] = {}
         total = kept = 0
-        for member in self._live_members():
+        for member in members:
             try:
                 with open(self._sidecar_path(member)) as fh:
                     side = json.load(fh)
@@ -255,10 +267,15 @@ class SkipIndex:
                 # unindexed member: scan it whole (conservative)
                 survivors[member] = ["*"]
                 continue
+            blind = _stats_blind(meta, member)
+            preds = [
+                p for p in predicates
+                if (self.token_col if p[0] == "token" else p[1]) not in blind
+            ]
             keep = [
                 f
                 for f, entry in side["files"].items()
-                if self._file_survives(entry, predicates)
+                if self._file_survives(entry, preds)
             ]
             total += len(side["files"])
             kept += len(keep)
@@ -267,19 +284,19 @@ class SkipIndex:
         survivors["__stats__"] = {
             "files_total": total,
             "files_scanned": kept,
-            "members_total": len(self._live_members()),
-            "members_scanned": sum(
-                1 for m in survivors if m != "__stats__"
-            ),
+            "members_total": len(members),
+            "members_scanned": len(survivors),
         }
         return survivors
 
     def read(self, predicates: list[tuple]) -> DataFrame:
         """Pruned scan with the residual predicate applied — always equal
         to ``wh.read(table).filter(<predicates>)``, just touching fewer
-        files."""
-        overlays = self.wh.load_manifest(self.table)["overlays"]
-        if any(e["kind"] == "patch" for e in overlays):
+        files: the survivors go through ``Warehouse._read_members``, the
+        read path of ``wh.read`` itself, with the overlays of the manifest
+        the prune ran on."""
+        man = self.wh.load_manifest(self.table)
+        if any(e["kind"] == "patch" for e in man["overlays"]):
             # lightweight UPDATEs overlay new column values the per-file
             # minmax/bloom sidecars don't know about — a patched row could
             # enter the predicate range inside a pruned-away file.  Fall
@@ -292,32 +309,18 @@ class SkipIndex:
                 "fallback": "patches_present",
             }
             return df.filter(self._residual(predicates, df))
-        surv = self.prune(predicates)
-        stats = surv.pop("__stats__")
-        self.last_stats = stats
-        # lightweight deletes mask rows by (file, position): the pruned
-        # scan goes through the same overlay step as Warehouse.read
-        dvs = _addressing(overlays, surv)
-        parts = []
-        for member, files in surv.items():
-            mpath = os.path.join(self.wh.path(self.table), member)
-            reader = self.wh.spark.read.option("basePath", mpath).schema(
-                parquet_schema(mpath)
-            )
-            if files == ["*"]:
-                part = reader.parquet(mpath)
-            else:
-                part = reader.parquet(*[os.path.join(mpath, f) for f in files])
-            parts.append(_tag_rows(part) if dvs else part)
-        if not parts:
+        meta = self.wh._meta(self.table)
+        surv = self._prune(predicates, man["members"], meta)
+        self.last_stats = surv.pop("__stats__")
+        if not surv:
             return self.wh.read(self.table).limit(0)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        if dvs:
-            df = self.wh._apply_overlays(
-                self.table, df, list(surv), dvs
-            ).drop("__dv_file", "__dv_pos")
+        df = self.wh._apply_computed_read(
+            self.wh._read_members(
+                self.table, list(surv), meta=meta, overlays=man["overlays"],
+                files={m: fs for m, fs in surv.items() if fs != ["*"]},
+            ),
+            meta,
+        )
         return df.filter(self._residual(predicates, df))
 
     def _residual(self, predicates: list[tuple], df: DataFrame):

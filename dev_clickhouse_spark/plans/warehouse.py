@@ -212,6 +212,26 @@ def _addressing(overlays: list[dict], members) -> list[dict]:
     return [e for e in overlays if ms.intersection(e["members"])]
 
 
+def _by_footer(footers: dict) -> dict:
+    """Group a footer map (``Warehouse._footers``) by schema:
+    ``{schema: [rel, …]}`` in the map's order."""
+    groups: dict = {}
+    for rel, schema in footers.items():
+        groups.setdefault(schema, []).append(rel)
+    return groups
+
+
+def _stats_blind(meta: dict, member: str) -> set[str]:
+    """Columns on which ``member``'s stored statistics (parquet footer
+    min/max, skip-index sidecars) are no evidence of what a read returns:
+    a CLEAR COLUMN entry addressing the member resets the column on read,
+    to its DEFAULT when one is declared, a value the stored statistics
+    never saw.  Both stats pruners skip their predicates on these."""
+    return {
+        e["col"] for e in meta.get("cleared", []) if member in e["members"]
+    }
+
+
 def _drop_spent(man: dict) -> int:
     """Drop the overlay entries of ``man`` none of whose ``members`` it
     still lists — the rewrite or overwrite that replaced those members
@@ -644,16 +664,16 @@ class Warehouse:
         ``quality/migrate.SchemaMigrator.add_computed_column``."""
         return self._meta(table).get("computed", {})
 
-    @staticmethod
-    def _computed_cols_lacking(member_root: str, names: list) -> set:
-        """Which of ``names`` the member's parquet footer lacks.  A file
-        that physically lacks the column predates the ALTER and must serve
-        the computed expression; a file that has it serves the stored value
-        VERBATIM — including an explicitly inserted NULL (the ClickHouse
-        per-part contract).  A member is ONE write generation (one job
-        wrote every file), so its first footer answers for it — O(1)
-        metadata per member per read, not O(files)."""
-        return set(names) - set(parquet_schema(member_root).names)
+    def _footers(self, table: str, rels) -> dict[str, T.StructType]:
+        """The footer map: ``{rel: schema}`` of the first parquet footer
+        under each table-relative directory in ``rels`` (members or
+        overlay directories).  A member or overlay is ONE write generation
+        (one job wrote every file), so its first footer answers for it —
+        O(1) metadata per directory per read, not O(files).  Every
+        footer-driven decision (scan groups, cast-on-read, DEFAULT
+        back-fill, MATERIALIZE targets, cast-chain retirement) reads it."""
+        root = self.path(table)
+        return {r: parquet_schema(os.path.join(root, r)) for r in rels}
 
     @staticmethod
     def _stored_computed(meta: dict) -> dict:
@@ -661,28 +681,6 @@ class Warehouse:
             n: m for n, m in meta.get("computed", {}).items()
             if m["kind"] != "alias"
         }
-
-    def _backfill_member_computed(
-        self, member_root: str, df: DataFrame, stored: dict
-    ) -> DataFrame:
-        """Per-member read-side back-fill of DEFAULT/MATERIALIZED columns:
-        only members whose files PREDATE the ALTER (footer lacks the
-        column) compute the expression; post-ALTER members serve stored
-        values verbatim, preserving explicitly inserted NULLs.  ONE
-        projection per member (see ``_apply_renames``)."""
-        if not stored:
-            return df
-        lacking = self._computed_cols_lacking(member_root, list(stored))
-        if not lacking:
-            return df
-        exprs = {
-            n: F.expr(stored[n]["expr"]).cast(stored[n]["type"]).alias(n)
-            for n in lacking
-        }
-        cols = [
-            exprs.pop(c) if c in exprs else F.col(c) for c in df.columns
-        ]
-        return df.select(*cols, *exprs.values())
 
     # -- column renames (ALTER TABLE … RENAME COLUMN) ------------------------
 
@@ -718,9 +716,8 @@ class Warehouse:
         """Fold legacy columns into their renamed successor and drop
         them.  A file carries a value under exactly ONE of the chain's
         names, so the coalesce is a disjoint merge, not a preference.
-        ONE projection, not a withColumn chain — reads apply this per
-        member, and N members × chained analysis passes is real driver
-        latency."""
+        ONE projection over the union of the member scans, not a
+        withColumn chain."""
         if not ren:
             return df
         repl, drops = {}, set()
@@ -803,8 +800,8 @@ class Warehouse:
         """Live ``ALTER TABLE … MODIFY COLUMN col type`` retype chains:
         ``{col: declared_type_ddl}``.  Old parquet files keep the
         pre-ALTER physical type in their footers; reads scan each such
-        member with the footer's type and fold ONE ``cast(declared)``
-        projection before the union — metadata-only at any table size.
+        footer group with the footer's type and fold ``cast(declared)``
+        into the group's projection — metadata-only at any table size.
         ClickHouse rewrites parts eagerly for MODIFY COLUMN; here the
         new type materializes as merges rewrite members (the same lazy
         discipline as RENAME COLUMN), and entries retire once no live
@@ -966,10 +963,10 @@ class Warehouse:
         - ALIAS is never stored — always computed here.
         - DEFAULT/MATERIALIZED values ARE stored for rows written after
           the ALTER; members that predate the column serve the expression.
-          ``_read_members`` decides that per member from the parquet footer
-          (the column is physically absent pre-ALTER), so an explicitly
-          inserted NULL in a post-ALTER member is preserved, as ClickHouse
-          preserves it; here only a column no member stores is computed.
+          ``_read_members`` decides that per footer group (the column is
+          physically absent pre-ALTER), so an explicitly inserted NULL in a
+          post-ALTER member is preserved, as ClickHouse preserves it; here
+          only a column no member stores is computed.
         """
         for name, cc in meta.get("computed", {}).items():
             if cc["kind"] == "alias" or name not in df.columns:
@@ -1248,12 +1245,28 @@ class Warehouse:
     def _read_members(
         self, table: str, members: list[str], keep_dv_tag: bool = False,
         meta: dict | None = None, overlays: list[dict] | None = None,
+        files: dict[str, list[str]] | None = None,
     ) -> DataFrame:
-        """Scan exactly the given member dirs — normally one fused scan
-        (below); a pointer flip mid-query cannot mix generations.  Members
-        that need a per-member transform are scanned one by one and
-        unioned; each scan still prunes event_date partitions and pushes
-        filters independently.
+        """Scan exactly the given member dirs; a pointer flip mid-query
+        cannot mix generations.  The ONE member-scan path of every table
+        read: each member's first footer is read once (``_footers``), the
+        members are grouped by footer schema, and each group is ONE
+        multi-path scan rooted at the table (``basePath`` = the table root,
+        so partition discovery sees ``member=…/event_date=…``, prunes
+        event_date as a per-member read would, and the discovered
+        ``member`` column names each row's member).  A table with uniform
+        footers is one scan node — one shared file index, one split
+        planning pass, however many members.
+
+        The metadata-only ALTERs apply as ONE projection over each group's
+        scan: MODIFY COLUMN cast-on-read where the group's footer type
+        differs from the declared type; DEFAULT/MATERIALIZED back-fill
+        where the group's footer lacks the column (a footer that has it
+        serves stored values verbatim, explicit NULLs included — the
+        ClickHouse per-part contract); the CLEAR COLUMN mask on the
+        addressed members' rows of the cleared partition.  The groups are
+        unioned by name; the rename fold, the overlays and the declared
+        schema then apply over the union.
 
         When an overlay (lightweight DELETE/UPDATE) addresses a scanned
         member, every scan is tagged by ``_tag_rows`` with the (file under
@@ -1263,139 +1276,97 @@ class Warehouse:
         ``keep_dv_tag`` the position columns stay visible (the mutation
         writers need them).  ``meta`` is the caller's resolved metadata
         document and ``overlays`` the overlay entries of the caller's
-        manifest (each resolved here when None)."""
+        manifest (each resolved here when None).  ``files`` narrows a
+        member's scan to the listed files (paths relative to the member
+        dir; the skip index's survivors); an unlisted member is scanned
+        whole."""
         meta = self._meta(table) if meta is None else meta
         override = meta.get("schema")
         if overlays is None:
             overlays = self.load_manifest(table)["overlays"]
         overlays = _addressing(overlays, members)
         tag = bool(overlays) or keep_dv_tag
-        # ALTER metadata is hoisted OUT of the member loop: these are
-        # per-table constants, and a scan of N members must not pay N
-        # metadata lookups / schema constructions (the round-11 overhead
-        # probe measured the chained per-member build at ~1.3 s driver
-        # time for 30 members before this hoist)
-        legacy_schema = (
+        files = files or {}
+        root = self.path(table)
+        # the declared schema carries legacy (pre-rename) names, so old
+        # files' values surface; folded ONCE after the union (the
+        # coalesce is disjoint-correct across mixed members)
+        legacy = (
             self._legacy_read_schema(table, meta)
             if override is not None else None
         )
-        ren = meta.get("renames", {})
         stored = self._stored_computed(meta)
-        # MODIFY COLUMN cast-on-read + CLEAR COLUMN overlays (both
-        # member-addressed, both metadata-only until merges materialize
-        # them).  The cast decision is taken per member from the parquet
-        # FOOTER against the declared type — not from the cast-chain
-        # registry — so reads stay correct even for old-type files minted
-        # after the chain retired (or by writers that bypassed _prep).
-        check_casts = override is not None
-        declared_types = (
-            {f.name: f.dataType for f in legacy_schema.fields}
-            if legacy_schema is not None
-            else {}
-        )
         cleared = meta.get("cleared", [])
-        clear_resets = {
+        resets = {
             e["col"]: self._reset_value(table, e["col"], meta)
             for e in cleared
         }
-        # FUSED member scan: when no per-member transform applies — no
-        # ALTER override, no stored computed columns, no CLEAR overlays —
-        # and every member's parquet footer carries the same (name, type)
-        # set, the N member scans are ONE multi-path scan.  Members are all
-        # named ``member=<kind>-<id>``, so the table root is the basePath:
-        # partition discovery sees ``member=…/event_date=…`` and prunes
-        # event_date as a per-member read would; the discovered key column
-        # is dropped.  The overlay-read profile showed the 3-5× patch/DV
-        # read penalty was ~95% driver-side plan analysis/optimization of
-        # the member-union tree; one scan node is also the right shape at
-        # scale (one shared file index, one split planning pass).  Row
-        # multiset and _metadata tags are identical to the union by
-        # construction; footer disagreement of any kind falls back.
-        live = list(members)
         dfs = []
-        if override is None and not stored and not cleared and live:
-            paths = [os.path.join(self.path(table), m) for m in live]
-            schemas = [parquet_schema(p) for p in paths]
-            if all(sch == schemas[0] for sch in schemas):
-                fused = (
-                    self.spark.read.schema(schemas[0])
-                    .option("basePath", self.path(table))
-                    .parquet(*paths)
+        for footer, group in _by_footer(self._footers(table, members)).items():
+            paths = [
+                p for m in group
+                for p in (
+                    [os.path.join(root, m, f) for f in files[m]]
+                    if m in files else [os.path.join(root, m)]
                 )
-                if tag:
-                    fused = _tag_rows(fused)
-                dfs.append(fused.drop(_MEMBER_KEY))
-                live = []
-        for m in live:
-            p = os.path.join(self.path(table), m)
-            read_schema = legacy_schema
-            member_casts: dict = {}
-            if check_casts:
-                ftypes = {f.name: f.dataType for f in parquet_schema(p).fields}
-                for fld in legacy_schema.fields:
-                    ft = ftypes.get(fld.name)
-                    if ft is not None and (
-                        ft.simpleString() != fld.dataType.simpleString()
-                    ):
-                        member_casts[fld.name] = ft
-                if member_casts:
-                    # old-type member: scan with the footer's physical
-                    # type, fold cast(declared) below — one projection
-                    read_schema = T.StructType([
-                        T.StructField(f.name, member_casts[f.name], True)
-                        if f.name in member_casts else f
-                        for f in legacy_schema.fields
-                    ])
-            if override is None:
-                df = read_parquet(self.spark, p)
-            elif read_schema is not legacy_schema:
-                df = self.spark.read.schema(read_schema).parquet(p)
-            else:
-                # declared-schema read: mixed pre/post-ALTER members must not
-                # adopt one file's footer and hide the added column; the
-                # schema carries legacy (pre-rename) names so old files'
-                # values surface — folded ONCE after the union (the
-                # coalesce is disjoint-correct across mixed members, and
-                # per-member folds cost N analysis passes)
-                df = self.spark.read.schema(legacy_schema).parquet(p)
-            # DEFAULT/MATERIALIZED back-fill is decided per member from
-            # parquet footers: only pre-ALTER members (column physically
-            # absent) compute the expression; post-ALTER members serve
-            # stored values verbatim, explicit NULLs included.  Doing it
-            # here — before the union and any DV/patch join — keeps the
-            # decision on the member scan where file lineage is exact.
-            df = self._backfill_member_computed(p, df, stored)
-            # CLEAR COLUMN overlays addressed to this member (mask rows of
-            # the cleared partition to the column DEFAULT/NULL) + MODIFY
-            # COLUMN casts — folded as ONE projection per affected member,
-            # BEFORE the union so member frames stay type-uniform
-            member_clears: dict[str, list] = {}
-            for e in cleared:
-                if m in e["members"] and e["col"] in df.columns:
-                    member_clears.setdefault(e["col"], []).append(e["date"])
-            if member_casts or member_clears:
-                sel = []
-                for c in df.columns:
-                    expr = F.col(c)
-                    if c in member_casts:
-                        expr = expr.cast(declared_types[c])
-                    if c in member_clears and "event_date" in df.columns:
-                        # reset value is declared-typed (matches the
-                        # post-cast branch); the mask applies only to the
-                        # cleared partitions' rows of THIS member
-                        in_cleared = F.lit(False)
-                        for d in member_clears[c]:
-                            in_cleared = in_cleared | (
-                                F.col("event_date") == F.to_date(F.lit(d))
-                            )
-                        expr = F.when(
-                            in_cleared, clear_resets[c]
-                        ).otherwise(expr)
-                    sel.append(expr.alias(c))
-                df = df.select(*sel)
+            ]
+            have = {f.name: f.dataType for f in footer.fields}
+            # MODIFY COLUMN: the cast decision is taken from the FOOTER
+            # against the declared type — not from the cast-chain
+            # registry — so reads stay correct even for old-type files
+            # minted after the chain retired (or by writers that bypassed
+            # _prep); such a group scans with the footer's type
+            casts = {
+                f.name: f.dataType for f in (legacy.fields if legacy else ())
+                if f.name in have
+                and have[f.name].simpleString() != f.dataType.simpleString()
+            }
+            schema = footer if legacy is None else T.StructType([
+                T.StructField(f.name, have[f.name], True)
+                if f.name in casts else f
+                for f in legacy.fields
+            ])
+            df = (
+                self.spark.read.schema(schema)
+                .option("basePath", root)
+                .parquet(*paths)
+            )
             if tag:
                 df = _tag_rows(df)
-            dfs.append(df)
+            fill = {
+                n: F.expr(cc["expr"]).cast(cc["type"])
+                for n, cc in stored.items() if n not in have
+            }
+            masks: dict = {}
+            for e in cleared:
+                hit = [m for m in group if m in e["members"]]
+                if not hit or "event_date" not in df.columns or (
+                    e["col"] not in df.columns and e["col"] not in fill
+                ):
+                    continue
+                cond = F.col("event_date") == F.to_date(F.lit(e["date"]))
+                if len(hit) < len(group):
+                    cond = cond & F.col(_MEMBER_KEY).isin(
+                        [m.split("=", 1)[1] for m in hit]
+                    )
+                masks[e["col"]] = (
+                    cond if e["col"] not in masks else masks[e["col"]] | cond
+                )
+            if casts or fill or masks:
+
+                def value(c: str):
+                    expr = fill[c] if c in fill else F.col(c)
+                    if c in casts:
+                        expr = expr.cast(legacy[c].dataType)
+                    if c in masks:
+                        expr = F.when(masks[c], resets[c]).otherwise(expr)
+                    return expr.alias(c)
+
+                df = df.select(
+                    *[value(c) for c in df.columns],
+                    *[value(n) for n in fill if n not in df.columns],
+                )
+            dfs.append(df.drop(_MEMBER_KEY))
         if not dfs:
             return self.spark.createDataFrame(
                 [], self.schema_for(table, meta)
@@ -1408,7 +1379,8 @@ class Warehouse:
         # ones, so coalesce(new, old…) is exact here, and patch rows
         # (written post-read, new names only) pass through untouched
         out = self._apply_overlays(
-            table, self._apply_renames(out, ren), members, overlays
+            table, self._apply_renames(out, meta.get("renames", {})),
+            members, overlays,
         )
         if tag and not keep_dv_tag:
             out = out.drop("__dv_file", "__dv_pos")
@@ -1457,17 +1429,18 @@ class Warehouse:
             # (types widen in the union).
             src = F.col("_metadata.file_path")
             seq = None
-            by_schema: dict = {}
             for e in patches:
-                pp = self._overlay_path(table, e)
-                by_schema.setdefault(parquet_schema(pp), []).append(pp)
                 hit = src.contains(f"/{e['name']}/")
                 seq = (F.when(hit, e["seq"]) if seq is None
                        else seq.when(hit, e["seq"]))
+            by_schema = _by_footer(
+                self._footers(table, [_overlay_rel(e) for e in patches])
+            )
             pats = [
-                self.spark.read.schema(sch).parquet(*pps)
+                self.spark.read.schema(sch)
+                .parquet(*[os.path.join(self.path(table), r) for r in rels])
                 .select("*", seq.alias("__patch_seq"))
-                for sch, pps in by_schema.items()
+                for sch, rels in by_schema.items()
             ]
             pat = pats[0]
             for more in pats[1:]:
@@ -2141,11 +2114,8 @@ class Warehouse:
         if not casts and not meta.get("cleared"):
             return
         stale: set = set()
-        for m in live if casts else ():
-            fp = first_parquet(os.path.join(self.path(table), m))
-            if fp is None:
-                continue
-            ftypes = {f.name: f.dataType for f in parquet_schema(fp).fields}
+        for footer in self._footers(table, live if casts else ()).values():
+            ftypes = {f.name: f.dataType for f in footer.fields}
             for c, ddl in casts.items():
                 if c in ftypes and ftypes[c].simpleString() != ddl:
                     stale.add(c)
@@ -2178,10 +2148,8 @@ class Warehouse:
         man = self.load_manifest(table)
         snapshot = list(man["members"])
         rewritten: dict[str, str | None] = {}
-        for m in snapshot:
-            if not self._computed_cols_lacking(
-                os.path.join(self.path(table), m), [name]
-            ):
+        for m, footer in self._footers(table, snapshot).items():
+            if name in footer.names:
                 continue  # column already stored in this member
             # the member read back-fills the expression (and applies any
             # DV/patch/cast overlays, which materialize along the way)
@@ -3367,21 +3335,14 @@ class Warehouse:
             return []
         return out
 
-    def _member_matches_stats(
-        self, table: str, member: str, preds: list[tuple]
-    ) -> bool:
-        """True unless EVERY row group of the member is provably disjoint
+    def _path_matches_stats(self, root: str, preds: list[tuple]) -> bool:
+        """True unless EVERY row group under ``root`` is provably disjoint
         from ``preds`` per parquet footer min/max — the driver-side
         metadata check that lets a mutation skip a member without
         launching a probe job (the EXPLAIN ESTIMATE machinery, short-
         circuited on the first surviving row group).  Conservative: a
         missing column, absent stats, or type mismatch counts as a
         match."""
-        return self._path_matches_stats(
-            os.path.join(self.path(table), member), preds
-        )
-
-    def _path_matches_stats(self, root: str, preds: list[tuple]) -> bool:
         import pyarrow.parquet as pq
 
         for r, _dirs, files in os.walk(root):
@@ -3441,9 +3402,11 @@ class Warehouse:
         the PATCH FILES' own stats are checked first — a patch row that
         could match forces a full scan, since its original member is
         unknowable from metadata (DV masks only ever remove rows — they
-        can't create a match — and clear/TTL overlays only NULL values,
-        which no conjunct matches).  ``overlays`` are the entries of the
-        caller's manifest (the current one when None)."""
+        can't create a match).  A CLEAR COLUMN entry resets its column to
+        the DEFAULT, which a conjunct may match where the stored values
+        did not: ``_stats_blind`` drops those conjuncts for the members
+        it addresses.  ``overlays`` are the entries of the caller's
+        manifest (the current one when None)."""
         preds = self._simple_conjuncts(cond)
         if not preds:
             return members, 0
@@ -3454,9 +3417,13 @@ class Warehouse:
                 self._overlay_path(table, e), preds
             ):
                 return members, 0
+        meta = self._meta(table)
         kept = [
             m for m in members
-            if self._member_matches_stats(table, m, preds)
+            if self._path_matches_stats(
+                os.path.join(self.path(table), m),
+                [p for p in preds if p[0] not in _stats_blind(meta, m)],
+            )
         ]
         return kept, len(members) - len(kept)
 

@@ -394,3 +394,78 @@ def test_alter_metadata_travels_through_detach_attach(spark, tmp_path):
     out = {r["event_id"]: (r["user_id"], r["value"])
            for r in wh.read("alt_events").collect()}
     assert out == {1: ("10", None), 2: ("20", 2.0)}
+
+
+def test_clear_to_default_defeats_stats_pruning(spark, tmp_path):
+    """CLEAR COLUMN resets a column to its DEFAULT, a value the stored
+    footer and sidecar stats never saw: neither the mutation pruner nor
+    the skip index may use those stats to skip the addressed members."""
+    from dev_clickhouse_spark.plans.skip_index import SkipIndex
+
+    wh = _wh(spark, tmp_path)
+    SchemaMigrator(wh).add_computed_column(
+        "alt_events", "zone", T.StringType(), "'dmz'", kind="default",
+    )
+    zoned = T.StructType([*_SCHEMA.fields,
+                          T.StructField("zone", T.StringType())])
+    for b, days in enumerate([(_D1, _D2), (_D1, _D3)]):
+        wh.append("alt_events", spark.createDataFrame(
+            [(b * 10 + i, d, i, float(i), d.date(), "lan")
+             for i, d in enumerate(days)], zoned), batch_id=b)
+    wh.clear_column_in_partition("alt_events", "zone", _D1.date())
+    dmz = F.col("zone") == "dmz"
+    assert wh.read("alt_events").filter(dmz).count() == 2
+    idx = SkipIndex(wh, "alt_events", minmax_cols=("zone",))
+    idx.ensure()
+    got = idx.read([("eq", "zone", "dmz")])
+    assert sorted(r["event_id"] for r in got.collect()) == [0, 10]
+    res = wh.delete_where("alt_events", dmz)
+    assert res["rows_deleted"] == 2
+    assert wh.read("alt_events").filter(dmz).count() == 0
+    assert wh.read("alt_events").count() == 2
+
+
+def test_one_scan_node_per_footer_group(spark, tmp_path):
+    """Six members written under three footers (pre-ALTER, after ADD
+    COLUMN DEFAULT, after MODIFY COLUMN) read as exactly three parquet
+    scans, and the mixed read equals a pandas model of the ALTERs."""
+    import pandas as pd
+
+    wh = _wh(spark, tmp_path)
+    mig = SchemaMigrator(wh)
+    rows = []
+    for b in range(2):
+        ids = [(b * 2 + 1, _D1), (b * 2 + 2, _D2)]
+        wh.append("alt_events", _rows(spark, ids), batch_id=b)
+        rows += [(i, str(i * 10), float(i), "pos") for i, _ in ids]
+    mig.add_computed_column(
+        "alt_events", "bucket", T.StringType(),
+        "CASE WHEN value >= 0 THEN 'pos' ELSE 'neg' END", kind="default",
+    )
+    bucketed = T.StructType([*_SCHEMA.fields,
+                             T.StructField("bucket", T.StringType())])
+    for b in (2, 3):
+        wh.append("alt_events", spark.createDataFrame(
+            [(b * 2 + 1, _D3, b, -1.0, _D3.date(), "stored")], bucketed),
+            batch_id=b)
+        rows.append((b * 2 + 1, str(b), -1.0, "stored"))
+    mig.modify_column_type("alt_events", "user_id", T.StringType())
+    retyped = T.StructType([
+        T.StructField("user_id", T.StringType()) if f.name == "user_id"
+        else f for f in bucketed.fields
+    ])
+    for b in (4, 5):
+        wh.append("alt_events", spark.createDataFrame(
+            [(b * 2 + 1, _D1, f"u{b}", 5.0, _D1.date(), None)], retyped),
+            batch_id=b)
+        rows.append((b * 2 + 1, f"u{b}", 5.0, None))
+    assert len(wh.load_manifest("alt_events")["members"]) == 6
+    df = wh.read("alt_events")
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("FileScan parquet") == 3
+    cols = ["event_id", "user_id", "value", "bucket"]
+    got = (df.select(*cols).toPandas().sort_values("event_id")
+           .reset_index(drop=True))
+    want = pd.DataFrame(rows, columns=cols).sort_values(
+        "event_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -14,9 +14,12 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pyspark.sql import types as T
+
 from dev_clickhouse_spark.io import load_table
 from dev_clickhouse_spark.plans.skip_index import SkipIndex
 from dev_clickhouse_spark.plans.warehouse import Warehouse
+from dev_clickhouse_spark.quality import SchemaMigrator
 
 SF = "/root/testdata/sf0.001"
 
@@ -168,8 +171,8 @@ def test_token_bloom_skips_files_without_token(spark, scratch):
 
 def test_partitioned_member_keeps_partition_column(spark, scratch):
     """Date-partitioned tables (event_date= dirs inside each member): the
-    per-member basePath read must keep the partition column, same as
-    Warehouse._read_members."""
+    pruned read goes through Warehouse._read_members, whose table-rooted
+    scan keeps the partition column."""
     wh = Warehouse(spark, scratch)
     ev = load_table(spark, SF, "events").limit(200)
     base = ev.select(
@@ -194,3 +197,52 @@ def test_partitioned_member_keeps_partition_column(spark, scratch):
         r["event_id"] for r in want.collect()
     )
     assert idx.last_stats["members_scanned"] == 1
+
+
+def _alter_rename(wh, t, day):
+    SchemaMigrator(wh).rename_column(t, "value", "amount")
+
+
+def _alter_default(wh, t, day):
+    SchemaMigrator(wh).add_computed_column(
+        t, "v2", T.DoubleType(), "value * 2", kind="default"
+    )
+
+
+def _alter_clear(wh, t, day):
+    wh.clear_column_in_partition(t, "props", day)
+
+
+@pytest.mark.parametrize(
+    "alter", [_alter_rename, _alter_default, _alter_clear],
+    ids=["rename", "add_default", "clear_column"],
+)
+def test_pruned_read_applies_alter_metadata(spark, scratch, alter):
+    """A pruned read of an ALTERed table equals ``wh.read(t).filter(pred)``
+    in columns and rows: RENAME serves the new name, ADD COLUMN DEFAULT
+    back-fills the pre-ALTER members, CLEAR COLUMN masks the addressed
+    members' partition."""
+    wh = Warehouse(spark, scratch)
+    ev = load_table(spark, SF, "events").withColumnRenamed("ts", "event_ts")
+    t = "alt_skip"
+    wh.set_partitioning(t, ["event_ts", "event_id"])
+    wh.save_schema_override(t, T.StructType(
+        [*ev.schema.fields, T.StructField("event_date", T.DateType())]
+    ))
+    hi = ev.agg(F.max("user_id")).first()[0]
+    step = hi // 3 + 1
+    for b in range(3):
+        wh.append(t, ev.filter(F.col("user_id").between(
+            b * step, (b + 1) * step - 1)), batch_id=b)
+    idx = SkipIndex(wh, t, minmax_cols=("user_id",))
+    idx.ensure()
+    day = wh.read(t).agg(F.min("event_date")).first()[0]
+    alter(wh, t, day)
+    pred = [("between", "user_id", 0, 2 * step - 1)]
+    got = idx.read(pred)
+    want = wh.read(t).filter(F.col("user_id").between(0, 2 * step - 1))
+    assert got.columns == want.columns
+    assert sorted(got.collect(), key=repr) == sorted(
+        want.collect(), key=repr
+    )
+    assert idx.last_stats["members_scanned"] == 2

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Read-overhead probe for the round-11 metadata-only ALTER surface.
 
-RENAME COLUMN adds a legacy-name schema extension + a coalesce fold per
-member scan; DEFAULT-column back-fill adds ONE parquet-footer read per
-member per read (uncached); metadata DROP COLUMN narrows the
-projection.  All three must be ~free: the fold is whole-stage-codegen
+RENAME COLUMN adds a legacy-name schema extension + a coalesce fold over
+the union; DEFAULT-column back-fill is one expression in each footer
+group's projection (the footers are read once per member per read,
+uncached); metadata DROP COLUMN narrows the projection.  All three must be ~free: the fold is whole-stage-codegen
 expressions, the footer check is O(members) driver-side metadata.  This
 probe builds a many-member manifest table, measures a full-scan
 aggregate before any ALTER and again after rename+default+drop, and
@@ -50,8 +50,9 @@ def main() -> None:
 
     settle()
     quiet = quiet_stamp()
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{cores}]",
         shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -142,6 +143,8 @@ def main() -> None:
     ratio_after = compacted / base
     artifact = {
         "metric": "alter_read_overhead",
+        "cpus": len(os.sched_getaffinity(0)),
+        "spark_cores": cores,
         "members": args.members,
         "rows": args.members * args.rows_per_member,
         "baseline_sec": round(base, 3),
