@@ -43,7 +43,7 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 def first_parquet(*paths: str) -> str | None:
     """The first parquet data file under ``paths`` (a file path is its own
     first file).  Hidden ``_``/``.`` entries are skipped, as Spark's file
-    index skips them (``_SUCCESS``, a table's ``_deletes``/``_patches``)."""
+    index skips them (``_SUCCESS``, a table's ``_deletes``)."""
     for root in paths:
         if os.path.isfile(root):
             return root

@@ -29,10 +29,11 @@ Spark-first translation on the manifest Warehouse:
   parts OF THE MERGED PARTS, and this is that analog, so a tiered
   compaction refolds one generation, not the table; a lightweight
   DELETE/UPDATE drops exactly the fold batches whose members the new
-  DV/patch entries address (overlays key (file, position); a file
-  belongs to one member) — at 100 TB a one-row delete re-folds one
-  member.  The wholesale rebuild survives only for legacy sidecars and
-  a compacted projection table;
+  deletion vectors address (overlays key (file, position); a file
+  belongs to one member), and an UPDATE's appended member folds as a
+  new member — at 100 TB a one-row delete re-folds one member.  The
+  wholesale rebuild survives only for legacy sidecars and a compacted
+  projection table;
 - selection is automatic: ``answer()`` takes the query's group keys and
   metrics, picks the first fresh projection whose dims cover the keys
   and whose states derive every metric, and re-aggregates the partial
@@ -167,7 +168,7 @@ def _plan_folds(
       the projection parts OF THE MERGED PARTS, and this is that: before
       round 10 EVERY compaction wholesale-rebuilt every projection.
     - lightweight DELETE/UPDATE: drop exactly the fold batches whose
-      members the new DV/patch entries of the base manifest
+      members the new deletion vectors of the base manifest
       (``overlays``) address — a one-row delete re-folds one member, not
       the table.  Manifest metadata only, no Spark job.
 

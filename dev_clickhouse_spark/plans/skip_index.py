@@ -32,9 +32,14 @@ Design:
   the one member-scan path of ``Warehouse.read``: the same footer-grouped
   scans, ALTER projection (RENAME, MODIFY cast, DEFAULT back-fill, CLEAR
   COLUMN), overlays and declared schema, so a pruned read equals
-  ``wh.read(t).filter(pred)`` by construction.  A CLEAR COLUMN entry
-  makes the stats of the members it addresses no evidence on the cleared
-  column (``warehouse._stats_blind``, shared with the mutation pruner).
+  ``wh.read(t).filter(pred)`` by construction.  A lightweight UPDATE's
+  rows live in the member it appended (indexed like any other), and a
+  deletion vector only removes rows, so live overlays never defeat the
+  prune.  A CLEAR COLUMN entry, or a member footer whose type for a
+  column differs from the declared one (MODIFY COLUMN), makes the
+  member's stats no evidence on that column (``warehouse._stats_blind``,
+  shared with the mutation pruner); a column a member's footer lacks
+  (ADD COLUMN) has no stats in its sidecar and prunes nothing.
 
 At 100 TB: the sidecars are driver-side metadata a few KB per member
 (bloom: m/8 bytes per file), the prune is a pure-metadata loop — no task
@@ -132,16 +137,22 @@ class SkipIndex:
         return built
 
     def _build_member(self, member: str) -> None:
+        """Sidecar of ``member``'s raw files: min/max/nulls of the minmax
+        columns its raw scan has, and the bloom when it has the token
+        column.  A column the member predates (ADD COLUMN) gets no stats,
+        so it prunes none of the member's files."""
         mpath = os.path.join(self.wh.path(self.table), member)
         df = read_parquet(self.wh.spark, mpath)
+        cols = [c for c in self.minmax_cols if c in df.columns]
+        bloom = self.token_col in df.columns
         aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in self.minmax_cols:
+        for c in cols:
             aggs += [
                 F.min(c).alias(f"__min_{c}"),
                 F.max(c).alias(f"__max_{c}"),
                 F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{c}"),
             ]
-        if self.token_col is not None:
+        if bloom:
             aggs.append(
                 F.array_distinct(
                     F.flatten(
@@ -161,13 +172,13 @@ class SkipIndex:
         files = {}
         for r in rows:
             entry: dict = {"rows": r["__rows"], "cols": {}}
-            for c in self.minmax_cols:
+            for c in cols:
                 entry["cols"][c] = [
                     _js(r[f"__min_{c}"]),
                     _js(r[f"__max_{c}"]),
                     r[f"__nulls_{c}"],
                 ]
-            if self.token_col is not None:
+            if bloom:
                 bits = bytearray(self.m // 8)
                 for pos in r["__bloom"] or []:
                     bits[pos >> 3] |= 1 << (pos & 7)
@@ -255,7 +266,8 @@ class SkipIndex:
     ) -> dict:
         """``prune`` over ``members`` with the metadata document ``meta``:
         a member's predicates on a ``_stats_blind`` column (CLEAR COLUMN
-        addressed it) prune none of its files."""
+        addressed it, or its footer type is not the declared one) prune
+        none of its files."""
         self._bits_cache: dict[str, tuple[int, ...]] = {}
         survivors: dict[str, list[str]] = {}
         total = kept = 0
@@ -267,7 +279,9 @@ class SkipIndex:
                 # unindexed member: scan it whole (conservative)
                 survivors[member] = ["*"]
                 continue
-            blind = _stats_blind(meta, member)
+            blind = _stats_blind(
+                meta, member, self.wh._footers(self.table, [member])[member]
+            )
             preds = [
                 p for p in predicates
                 if (self.token_col if p[0] == "token" else p[1]) not in blind
@@ -296,19 +310,6 @@ class SkipIndex:
         read path of ``wh.read`` itself, with the overlays of the manifest
         the prune ran on."""
         man = self.wh.load_manifest(self.table)
-        if any(e["kind"] == "patch" for e in man["overlays"]):
-            # lightweight UPDATEs overlay new column values the per-file
-            # minmax/bloom sidecars don't know about — a patched row could
-            # enter the predicate range inside a pruned-away file.  Fall
-            # back to the full masked scan until compact() materializes
-            # the patches (ensure() then rebuilds the sidecars).
-            df = self.wh.read(self.table)
-            self.last_stats = {
-                "files_total": None, "files_scanned": None,
-                "members_total": None, "members_scanned": None,
-                "fallback": "patches_present",
-            }
-            return df.filter(self._residual(predicates, df))
         meta = self.wh._meta(self.table)
         surv = self._prune(predicates, man["members"], meta)
         self.last_stats = surv.pop("__stats__")

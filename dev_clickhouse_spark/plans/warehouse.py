@@ -183,8 +183,8 @@ def batch_member(batch_id: int) -> str:
 
 def _new_member(kind: str) -> str:
     """A fresh member directory name: ``insert`` (append without a batch id,
-    overwrite), ``compacted``, ``mutated``, ``materialized`` or
-    ``attached``."""
+    overwrite), ``compacted``, ``mutated``, ``materialized``, ``attached``
+    or ``updated`` (the rows of a lightweight UPDATE)."""
     return f"{_MEMBER_KEY}={kind}-{uuid.uuid4().hex[:8]}"
 
 
@@ -193,17 +193,17 @@ def member_kind(member: str) -> str:
     return member.split("=", 1)[1].split("-", 1)[0]
 
 
-#: directory (under the table root) of each overlay kind's entries
-_OVERLAY_DIRS = {"dv": "_deletes", "patch": "_patches"}
+#: directory (under the table root) of the deletion-vector overlays
+_DV_DIR = "_deletes"
 
 
 def _overlay_rel(entry: dict) -> str:
     """An overlay entry's directory relative to the table root."""
-    return os.path.join(_OVERLAY_DIRS[entry["kind"]], entry["name"])
+    return os.path.join(_DV_DIR, entry["name"])
 
 
-_RETRY = ("members of {!r} were replaced while the mutation ran; "
-          "nothing was changed — retry it")
+_RETRY = ("members of {!r} were replaced or addressed by another "
+          "mutation while this one ran; nothing was changed — retry it")
 
 
 def _addressing(overlays: list[dict], members) -> list[dict]:
@@ -221,15 +221,57 @@ def _by_footer(footers: dict) -> dict:
     return groups
 
 
-def _stats_blind(meta: dict, member: str) -> set[str]:
+def _stats_blind(
+    meta: dict, member: str, footer: T.StructType
+) -> set[str]:
     """Columns on which ``member``'s stored statistics (parquet footer
     min/max, skip-index sidecars) are no evidence of what a read returns:
     a CLEAR COLUMN entry addressing the member resets the column on read,
     to its DEFAULT when one is declared, a value the stored statistics
-    never saw.  Both stats pruners skip their predicates on these."""
+    never saw; and a column whose type in the member's ``footer``
+    differs from the declared type (MODIFY COLUMN) is cast on read, so
+    its statistics are values of another type.  Both stats pruners skip
+    their predicates on these."""
+    declared = _declared_schema(meta)
+    types = {
+        f.name: f.dataType.simpleString()
+        for f in (declared.fields if declared else ())
+    }
     return {
         e["col"] for e in meta.get("cleared", []) if member in e["members"]
+    } | {
+        f.name for f in footer.fields
+        if types.get(f.name, f.dataType.simpleString())
+        != f.dataType.simpleString()
     }
+
+
+def _rg_survives(rg, names: list[str], preds: list[tuple]) -> bool:
+    """False when the parquet row group ``rg`` (of a file whose columns are
+    ``names``) is provably disjoint from one ``(col, op, value)``
+    predicate, op in ``= == < <= > >=``, by its footer min/max.
+    Conservative: a column the file lacks (partition or virtual), absent
+    stats, or stats the value does not compare with (a pre-retype file
+    after MODIFY COLUMN) keep the row group."""
+    for col, op, val in preds:
+        if col not in names:
+            continue
+        st = rg.column(names.index(col)).statistics
+        if st is None or not st.has_min_max:
+            continue
+        lo, hi = st.min, st.max
+        try:
+            if (
+                op in ("=", "==") and not lo <= val <= hi
+                or op == "<" and not lo < val
+                or op == "<=" and not lo <= val
+                or op == ">" and not hi > val
+                or op == ">=" and not hi >= val
+            ):
+                return False
+        except TypeError:
+            continue
+    return True
 
 
 def _drop_spent(man: dict) -> int:
@@ -267,11 +309,19 @@ def _tag_rows(df: DataFrame) -> DataFrame:
 _ADDRESS = "relative"
 
 
-def _check_addresses(overlays: list[dict], where: str) -> None:
-    """Raise, naming the entry, when an overlay entry lacks the address
-    marker: it was committed when rows were keyed on absolute file paths,
-    which no read matches any more (it would mask and patch nothing)."""
+def _check_overlays(overlays: list[dict], where: str) -> None:
+    """Raise, naming the entry, when an overlay entry is not a deletion
+    vector (a ``patch`` entry of a release whose lightweight UPDATE wrote
+    updated rows under their original address, which no read applies any
+    more) or lacks the address marker (committed when rows were keyed on
+    absolute file paths, which no read matches any more)."""
     for e in overlays:
+        if e["kind"] != "dv":
+            raise ValueError(
+                f"overlay entry {e['name']!r} of {where} is a "
+                f"{e['kind']!r} overlay, which reads no longer apply; "
+                "materialize it with compact() on the release that wrote it"
+            )
         if e.get("address") != _ADDRESS:
             raise ValueError(
                 f"overlay entry {e['name']!r} of {where} keys its rows on "
@@ -829,9 +879,8 @@ class Warehouse:
         ClickHouse applies the mutation (reference evolves live bronze
         tables with point ALTERs, scripts/alter_bronze_timezone_asia_
         jakarta.sql:1-16).  The live member snapshot IS the mutation
-        address.  Requires no pending patch overlays (a lightweight
-        UPDATE's rows would escape a member-scoped mask — compact first,
-        as ClickHouse serializes mutations)."""
+        address; a lightweight UPDATE's rows live in the member it
+        appended, so the snapshot addresses them like any other row."""
         schema = self.schema_for(table)
         names = {f.name for f in schema.fields}
         if col not in names:
@@ -845,13 +894,10 @@ class Warehouse:
                 f"CLEAR COLUMN IN PARTITION needs a date-partitioned "
                 f"table; {table!r} has no event_date column"
             )
-        man = self.load_manifest(table)
-        if any(e["kind"] == "patch" for e in man["overlays"]):
-            raise ValueError(
-                f"table {table!r} has pending lightweight-UPDATE patches; "
-                "compact() to materialize them before CLEAR COLUMN"
-            )
-        entry = {"col": col, "date": str(date), "members": man["members"]}
+        entry = {
+            "col": col, "date": str(date),
+            "members": self.load_manifest(table)["members"],
+        }
         self._commit_meta(table, cleared=lambda es: [*(es or []), entry])
         self._log_mutation(
             table, "clear_column",
@@ -1003,21 +1049,23 @@ class Warehouse:
         version-0 manifest.
 
         {"version": K, "members": [dir, ...], "committed_batches": [id, ...],
-         "overlays": [{"name", "kind", "seq", "members", "address"}, ...]}
+         "overlays": [{"name", "kind", "members", "address"[, "adds"]}, ...]}
 
         ``members`` are the live data directories (scanned by read());
         ``committed_batches`` is the replay-skip ledger of
         ``append(..., batch_id=)`` — it SURVIVES compaction, so a replayed
         micro-batch whose member was long since compacted away still skips
         instead of re-appending rows that now live inside a compacted
-        member.  ``overlays`` are the committed lightweight mutations, a
-        ``dv`` (deletion vector, ``_deletes/<name>``) or ``patch`` (updated
-        rows, ``_patches/<name>``) each, ``seq`` their commit order and
-        ``members`` the members their rows address; an overlay directory
-        no manifest lists is invisible, and ``gc()`` sweeps it.  Overlay
-        rows address (file path relative to the table root, row
-        position), marked ``"address": "relative"``; an entry without the
-        marker (absolute file paths) raises, naming the entry."""
+        member.  ``overlays`` are the committed lightweight mutations, one
+        deletion vector (kind ``dv``, ``_deletes/<name>``) each, with
+        ``members`` the members its rows address; a lightweight UPDATE's
+        entry also names the member it appended in the same flip
+        (``adds``).  An overlay directory no manifest lists is invisible,
+        and ``gc()`` sweeps it.  Overlay rows address (file path relative
+        to the table root, row position), marked ``"address":
+        "relative"``; an entry of another kind (a ``patch`` of an older
+        release) or without the marker (absolute file paths) raises,
+        naming the entry."""
         cur = os.path.join(self._manifest_dir(table), "CURRENT")
         # EXCHANGE TABLES swaps the whole table directory between the
         # CURRENT read and the version-file open — the resolved v<K>.json
@@ -1040,7 +1088,7 @@ class Warehouse:
             except OSError:
                 continue
             # a manifest written before overlays were committed lists none
-            _check_addresses(
+            _check_overlays(
                 man.setdefault("overlays", []), f"table {table!r}"
             )
             return man
@@ -1211,9 +1259,9 @@ class Warehouse:
 
     def read_at_version(self, table: str, version: int) -> DataFrame:
         """Snapshot read: the table EXACTLY as manifest version ``version``
-        listed it — its members masked and patched by its own overlay
-        entries, the Iceberg-style time travel the version-pointer layout
-        gives for free.  Every retained version (``_MANIFEST_KEEP`` flips
+        listed it — its members masked by its own overlay entries, the
+        Iceberg-style time travel the version-pointer layout gives for
+        free.  Every retained version (``_MANIFEST_KEEP`` flips
         back) stays readable, because ``gc`` deletes only what no retained
         version lists; raises ``LookupError`` for pruned or unknown
         versions.  Computed columns apply as in ``read`` — they are
@@ -1226,7 +1274,7 @@ class Warehouse:
             raise LookupError(
                 f"no retained manifest version {version} for {table!r}"
             ) from None
-        _check_addresses(
+        _check_overlays(
             man.setdefault("overlays", []), f"{table!r} v{version}"
         )
         return self._read_manifest(table, man)
@@ -1376,11 +1424,9 @@ class Warehouse:
             out = out.unionByName(df, allowMissingColumns=True)
         # rename fold: ONE projection over the union — a legacy column
         # holds a value in pre-rename members and NULL in post-rename
-        # ones, so coalesce(new, old…) is exact here, and patch rows
-        # (written post-read, new names only) pass through untouched
+        # ones, so coalesce(new, old…) is exact here
         out = self._apply_overlays(
-            table, self._apply_renames(out, meta.get("renames", {})),
-            members, overlays,
+            table, self._apply_renames(out, meta.get("renames", {})), overlays
         )
         if tag and not keep_dv_tag:
             out = out.drop("__dv_file", "__dv_pos")
@@ -1402,110 +1448,82 @@ class Warehouse:
     # -- lightweight DELETE / UPDATE overlays ---------------------------------
 
     def _apply_overlays(
-        self, table: str, out: DataFrame, members: list[str],
-        overlays: list[dict],
+        self, table: str, out: DataFrame, overlays: list[dict]
     ) -> DataFrame:
-        """THE overlay step of every read: ``out`` scans ``members``,
-        tagged by ``_tag_rows``; ``overlays`` are manifest entries
-        addressing them.  Patches replace each patched row address with
-        its latest patch row, then the deletion vectors mask their
-        addresses.  The tag columns stay."""
-        patches = [e for e in overlays if e["kind"] == "patch"]
-        dvs = [e for e in overlays if e["kind"] == "dv"]
-        if patches:
-            # lightweight UPDATE (patch parts): a patch row keeps the
-            # original (file, position), so later DVs and further patches
-            # still address it; the latest entry (highest ``seq``) of a
-            # row wins.  A patch addressing members outside the scan (a
-            # tiered compaction folding only fresh members) is FILTERED to
-            # rows whose address's member (its first component) is
-            # scanned, so it never injects rows whose originals live
-            # outside the scan.
-            # patch dirs normally share one schema (each patch writer
-            # selects the full tagged row), so one multi-path scan reads
-            # them all.  An ALTER between patches changes the patch
-            # columns or their types: then each schema group is read with
-            # its own footer schema and the groups are unioned by name
-            # (types widen in the union).
-            src = F.col("_metadata.file_path")
-            seq = None
-            for e in patches:
-                hit = src.contains(f"/{e['name']}/")
-                seq = (F.when(hit, e["seq"]) if seq is None
-                       else seq.when(hit, e["seq"]))
-            by_schema = _by_footer(
-                self._footers(table, [_overlay_rel(e) for e in patches])
-            )
-            pats = [
-                self.spark.read.schema(sch)
-                .parquet(*[os.path.join(self.path(table), r) for r in rels])
-                .select("*", seq.alias("__patch_seq"))
-                for sch, rels in by_schema.items()
-            ]
-            pat = pats[0]
-            for more in pats[1:]:
-                pat = pat.unionByName(more, allowMissingColumns=True)
-            pat = pat.filter(
-                F.substring_index("__dv_file", "/", 1).isin(members)
-            )
-            w = Window.partitionBy("__dv_file", "__dv_pos").orderBy(
-                F.col("__patch_seq").desc()
-            )
-            latest = (
-                pat.withColumn("__prn", F.row_number().over(w))
-                .filter(F.col("__prn") == 1)
-                .drop("__prn", "__patch_seq")
-            )
-            out = out.join(
-                latest.select("__dv_file", "__dv_pos"),
-                ["__dv_file", "__dv_pos"],
-                "left_anti",
-            ).unionByName(latest, allowMissingColumns=True)
-        if dvs:
-            # DV schema is FIXED by the delete-writer (the address pair) —
-            # an explicit schema skips inference entirely (r14)
-            dv = self.spark.read.schema(
-                "__dv_file string, __dv_pos long"
-            ).parquet(*[self._overlay_path(table, e) for e in dvs])
-            out = out.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
-        return out
+        """THE overlay step of every read: ``out`` scans members tagged by
+        ``_tag_rows``; ``overlays`` are the manifest entries addressing
+        them.  One anti-join masks every address the deletion vectors
+        list.  A lightweight UPDATE is a deletion vector plus the member
+        it appended, so its rows arrive through the member scan and no
+        overlay carries rows.  The tag columns stay."""
+        if not overlays:
+            return out
+        # DV schema is FIXED by the delete-writer (the address pair) —
+        # an explicit schema skips inference entirely (r14)
+        dv = self.spark.read.schema(
+            "__dv_file string, __dv_pos long"
+        ).parquet(*[self._overlay_path(table, e) for e in overlays])
+        return out.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
 
     def _overlay_path(self, table: str, entry: dict) -> str:
         return os.path.join(self.path(table), _overlay_rel(entry))
 
-    def _new_overlay(self, table: str, kind: str) -> str:
-        """A fresh, not yet listed overlay directory of ``kind``."""
+    def _new_overlay(self, table: str) -> str:
+        """A fresh, not yet listed deletion-vector directory."""
         return os.path.join(
-            self.path(table), _OVERLAY_DIRS[kind],
-            f"{kind}-{uuid.uuid4().hex[:8]}",
+            self.path(table), _DV_DIR, f"dv-{uuid.uuid4().hex[:8]}"
         )
 
-    def _commit_overlay(self, table: str, kind: str, path: str) -> None:
-        """Commit the written overlay directory ``path`` as a manifest
-        entry.  Its ``members`` are read from the rows' ``__dv_file``
-        column with pyarrow (no Spark job); its ``seq`` is one above every
-        live entry's, so a later patch of a row wins; ``address`` marks
-        its rows' table-relative addresses.  When a member the
-        rows address was replaced since the overlay's scan (a compaction
-        or mutation flipped first), the rows would address files no read
-        scans: the directory is deleted and the write raises."""
+    def _commit_overlay(
+        self, table: str, path: str, snap: dict, adds: str | None = None
+    ) -> None:
+        """Commit the written deletion vector ``path`` — with ``adds``,
+        the not yet listed member a lightweight UPDATE wrote its rows to —
+        as ONE manifest flip; ``snap`` is the manifest the mutation
+        matched against.  The entry's ``members`` are read from the rows'
+        ``__dv_file`` column with pyarrow (no Spark job); ``address``
+        marks its rows' table-relative addresses.  The flip is refused,
+        both directories are deleted and the write raises when:
+
+        - a member the rows address was replaced since the snapshot (a
+          compaction or mutation flipped first): the rows would address
+          files no read scans;
+        - an UPDATE committed since the snapshot addresses one of those
+          members: it may have moved a matched row to its own member,
+          where this mask would miss it;
+        - for an UPDATE, any overlay committed since the snapshot
+          addresses one of those members: it may have deleted or moved a
+          matched row, and the appended copy would resurrect or
+          duplicate it.
+
+        Two DELETEs never conflict: both masks apply."""
         members = self._overlay_members(path)
+        seen = {e["name"] for e in snap["overlays"]}
 
         def add(man: dict) -> bool:
-            if not set(members) <= set(man["members"]):
+            if not set(members) <= set(man["members"]) or any(
+                e["name"] not in seen and (adds or "adds" in e)
+                for e in _addressing(man["overlays"], members)
+            ):
                 return False
-            man["overlays"].append({
+            entry = {
                 "name": os.path.basename(path),
-                "kind": kind,
-                "seq": 1 + max((e["seq"] for e in man["overlays"]),
-                               default=-1),
+                "kind": "dv",
                 "members": members,
                 "address": _ADDRESS,
-            })
+            }
+            if adds is not None:
+                entry["adds"] = adds
+                man["members"].append(adds)
+            man["overlays"].append(entry)
             return True
 
         if not self._flip(table, add):
             shutil.rmtree(path, ignore_errors=True)
+            if adds is not None:
+                shutil.rmtree(
+                    os.path.join(self.path(table), adds), ignore_errors=True
+                )
             raise RuntimeError(_RETRY.format(table))
 
     @staticmethod
@@ -1521,12 +1539,8 @@ class Warehouse:
         ).to_pylist()
         return sorted({r.split("/", 1)[0] for r in refs})
 
-    def _n_overlays(self, table: str, kind: str) -> int:
-        man = self.load_manifest(table)
-        return sum(e["kind"] == kind for e in man["overlays"])
-
     def overlay_files(self, table: str) -> list[str]:
-        """Names of the live overlay (deletion-vector + patch) entries —
+        """Names of the live overlay (deletion-vector) entries —
         derived structures (projections) invalidate when it moves."""
         return sorted(e["name"] for e in self.load_manifest(table)["overlays"])
 
@@ -1601,29 +1615,34 @@ class Warehouse:
     def update_where_lightweight(
         self, table: str, assignments: dict[str, object], condition
     ) -> dict:
-        """ClickHouse lightweight ``UPDATE … SET … WHERE`` (patch parts)
-        analog: instead of rewriting members like ``update_set`` (the
-        ALTER UPDATE mutation), persist a PATCH — the full updated rows
-        keyed by their original (table-relative file, row position) address
-        (``_tag_rows``) — applied on every
-        read by replacing the addressed rows.  Update cost is one
-        predicate scan + a patch write proportional to the MATCHED rows,
-        no data rewrite; the commit is one manifest flip (a crash before
-        it leaves the table untouched).  ``compact()`` materializes
-        patches into the new member, and its commit drops the spent
-        entries; ``gc`` later deletes their directories.
+        """Lightweight ``UPDATE … SET … WHERE`` analog, the Delta/Iceberg
+        shape of an update: instead of rewriting members like
+        ``update_set`` (the ALTER UPDATE mutation), the matched rows are
+        re-assigned and materialized ONCE, then written twice — their
+        (table-relative file, row position) addresses (``_tag_rows``) as
+        a deletion vector, and the rows themselves as a new ``updated``
+        member in the merge layout (``_rewrite_member``).  ONE manifest
+        flip commits both (a crash before it leaves the table untouched),
+        so a read sees the old rows or the new ones, never both.  Update
+        cost is one predicate scan + writes proportional to the MATCHED
+        rows, no rewrite of the members they came from.  ``compact()``
+        folds the mask and the new member like any other; ``gc`` later
+        deletes the superseded directories.
 
-        The match runs against the CURRENT visible state (earlier patches
-        applied, DV-masked rows excluded), so re-issuing an update whose
-        predicate no longer matches is idempotent, stacked updates
-        compose (latest patch per row wins), and a later DELETE of
-        patched rows masks them through the preserved original address."""
+        The match runs against the CURRENT visible state (earlier
+        updates' members included, DV-masked rows excluded), so
+        re-issuing an update whose predicate no longer matches is
+        idempotent, and each logical row has exactly one live copy: a
+        later DELETE or UPDATE of updated rows addresses them in the
+        member the update appended, so the latest update wins with no
+        ordering on read.  A concurrent mutation addressing the same
+        members makes the commit refuse (``_commit_overlay``)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         man = self.load_manifest(table)
-        # footer-stats member pruning (VERDICT r11 #4; soundness-guarded
-        # against live patches inside _prune_members_for_mutation)
+        # footer-stats member pruning (VERDICT r11 #4): the predicate scan
+        # reads only members whose parquet metadata admits a match
         members, _ = self._prune_members_for_mutation(
-            table, man["members"], cond, man["overlays"]
+            table, man["members"], cond
         )
         if not members:
             cols = self.read(table).columns
@@ -1634,10 +1653,7 @@ class Warehouse:
                 table, "UPDATE_LIGHTWEIGHT",
                 f"UPDATE … WHERE {condition}", rows_affected=0,
             )
-            return {
-                "rows_updated": 0,
-                "patch_files": self._n_overlays(table, "patch"),
-            }
+            return {"rows_updated": 0, "dv_files": len(man["overlays"])}
         tagged = self._read_members(
             table, members, keep_dv_tag=True, overlays=man["overlays"]
         )
@@ -1660,17 +1676,19 @@ class Warehouse:
                 else F.col(c)
                 for c in tagged.columns
             ]
-        )
+        ).persist()
         cmd = "UPDATE %s WHERE %s" % (
             ", ".join(f"{c} = {e}" for c, e in assignments.items()),
             condition,
         )
-        return {
-            "rows_updated": self._write_overlay(
-                table, "patch", hits, "UPDATE_LIGHTWEIGHT", cmd
-            ),
-            "patch_files": self._n_overlays(table, "patch"),
-        }
+        try:
+            n = self._write_overlay(
+                table, hits, man, "UPDATE_LIGHTWEIGHT", cmd,
+                rows=hits.drop("__dv_file", "__dv_pos"),
+            )
+        finally:
+            hits.unpersist()
+        return {"rows_updated": n, "dv_files": len(self.overlay_files(table))}
 
     def delete_where_lightweight(self, table: str, condition) -> dict:
         """ClickHouse ``DELETE FROM … WHERE`` (lightweight delete) analog:
@@ -1693,38 +1711,49 @@ class Warehouse:
         # footer-stats member pruning (VERDICT r11 #4): the predicate scan
         # reads only members whose parquet metadata admits a match
         members, _ = self._prune_members_for_mutation(
-            table, man["members"], cond, man["overlays"]
+            table, man["members"], cond
         )
         cmd = f"DELETE WHERE {condition}"
         n = 0
         if members:
             hits = self._read_members(
                 table, members, keep_dv_tag=True, overlays=man["overlays"]
-            ).filter(cond).select("__dv_file", "__dv_pos")
-            n = self._write_overlay(table, "dv", hits, "DELETE_LIGHTWEIGHT", cmd)
+            ).filter(cond)
+            n = self._write_overlay(
+                table, hits, man, "DELETE_LIGHTWEIGHT", cmd
+            )
         else:
             self._log_mutation(
                 table, "DELETE_LIGHTWEIGHT", cmd, rows_affected=0
             )
-        return {"rows_deleted": n, "dv_files": self._n_overlays(table, "dv")}
+        return {"rows_deleted": n, "dv_files": len(self.overlay_files(table))}
 
     def _write_overlay(
-        self, table: str, kind: str, hits: DataFrame, log_kind: str, cmd: str
+        self, table: str, hits: DataFrame, snap: dict, log_kind: str,
+        cmd: str, rows: DataFrame | None = None,
     ) -> int:
-        """Write the tagged ``hits`` as a new overlay of ``kind``, commit it
-        and log the mutation; returns the rows written (0 writes nothing)."""
-        path = self._new_overlay(table, kind)
+        """Write the addresses of the tagged ``hits`` as a new deletion
+        vector and, for an UPDATE, ``rows`` (the re-assigned hits) as a
+        new member; commit both in one flip against the manifest ``snap``
+        the match read, and log the mutation.  Returns the rows masked
+        (0 writes nothing)."""
+        path = self._new_overlay(table)
         # repartition(1), not coalesce(1): coalesce collapses the WHOLE
         # predicate scan into one task (at 100 TB, one task reading every
         # candidate member); the repartition keeps the scan parallel and
         # shuffles only the MATCHED rows into the single overlay file (r13)
-        self._writer(hits.repartition(1)).mode("overwrite").parquet(path)
+        self._writer(
+            hits.select("__dv_file", "__dv_pos").repartition(1)
+        ).mode("overwrite").parquet(path)
         n = self._count_rows_parquet(path)
         if n == 0:
             shutil.rmtree(path, ignore_errors=True)
             self._log_mutation(table, log_kind, cmd, rows_affected=0)
             return 0
-        self._commit_overlay(table, kind, path)
+        adds = None if rows is None else self._rewrite_member(
+            table, rows, "updated"
+        )
+        self._commit_overlay(table, path, snap, adds)
         self._log_mutation(
             table, log_kind, cmd,
             rows_affected=n, overlay_file=os.path.basename(path),
@@ -2152,7 +2181,7 @@ class Warehouse:
             if name in footer.names:
                 continue  # column already stored in this member
             # the member read back-fills the expression (and applies any
-            # DV/patch/cast overlays, which materialize along the way)
+            # DV/cast overlays, which materialize along the way)
             rewritten[m] = self._rewrite_member(
                 table,
                 self._read_members(table, [m], overlays=man["overlays"]),
@@ -2296,7 +2325,7 @@ class Warehouse:
         # CH part-scoping discipline.  Conservative: unparseable
         # predicates prune nothing.
         stats_kept, skipped_by_stats = self._prune_members_for_mutation(
-            table, snapshot, cond, man["overlays"]
+            table, snapshot, cond
         )
         stats_kept_set = set(stats_kept)
         for m in snapshot:
@@ -2340,15 +2369,14 @@ class Warehouse:
         PARTITION member swap.  Overlay rows address ``member=<old>/…``;
         the hardlink clones keep every path under the member, so the
         remap swaps the ``member=<old>/`` prefix for ``member=<new>/`` —
-        without it the clone resurrects DV-deleted rows and reverts
-        patched rows in the SURVIVING partitions.  Rows addressing the
-        dropped partition itself are removed (their originals are gone; a
-        stale patch row would otherwise be re-injected by the patch
-        union).
+        without it the clone resurrects DV-deleted rows (and the original
+        of every row a lightweight UPDATE moved) in the SURVIVING
+        partitions.  Rows addressing the dropped partition itself are
+        removed: their originals are gone.
 
-        Returns ``{old entry name: new entry (same kind and seq) or None
-        when no row survives}``; the new directories are written here and
-        swapped in by the same manifest flip as the members."""
+        Returns ``{old entry name: new entry or None when no row
+        survives}``; the new directories are written here and swapped in
+        by the same manifest flip as the members."""
         addr = F.col("__dv_file")
         for old, new in replaced.items():
             if new is not None:
@@ -2360,7 +2388,7 @@ class Warehouse:
             ).filter(
                 ~F.col("__dv_file").contains(f"/{part}/")
             ).withColumn("__dv_file", addr)
-            path = self._new_overlay(table, e["kind"])
+            path = self._new_overlay(table)
             self._writer(out.coalesce(1)).mode("overwrite").parquet(path)
             if self._count_rows_parquet(path) == 0:
                 shutil.rmtree(path, ignore_errors=True)
@@ -2459,9 +2487,8 @@ class Warehouse:
         src_man = self.load_manifest(src_table)
         if src_man["overlays"]:
             raise ValueError(
-                f"source {src_table!r} has live deletion vectors or "
-                "patches; compact() it first so the overlay is "
-                "materialized"
+                f"source {src_table!r} has live deletion vectors; "
+                "compact() it first so the overlay is materialized"
             )
         src_roots = [
             os.path.join(self.path(src_table), m)
@@ -2507,7 +2534,7 @@ class Warehouse:
     ) -> dict:
         """``BACKUP TABLE … TO Disk(…)`` analog: a CONSISTENT snapshot of
         the current manifest state — live members, deletion vectors,
-        patches, the replay ledger and the table's whole metadata
+        the replay ledger and the table's whole metadata
         document (schema, rename/cast chains, computed columns, CLEAR
         overlays, engine, TTLs) — hardlink-cloned
         (copy across filesystems).  Taken under the manifest lock so a
@@ -2611,15 +2638,15 @@ class Warehouse:
         """``RESTORE TABLE`` analog: install a :meth:`backup_table`
         snapshot as ``table``.  Member and overlay directories alike
         hardlink back (copy across filesystems) unchanged: deletion-vector
-        and patch rows address (file relative to the table root,
-        position), which holds under any root.  A backup whose overlay
-        entries key on absolute file paths raises, naming the entry.
-        Refuses to overwrite an existing table."""
+        rows address (file relative to the table root, position), which
+        holds under any root.  A backup whose overlay entries key on
+        absolute file paths, or that lists a ``patch`` entry, raises,
+        naming the entry.  Refuses to overwrite an existing table."""
         if self.exists(table):
             raise ValueError(f"table {table!r} already exists")
         with open(os.path.join(src, "backup.json")) as fh:
             meta = json.load(fh)
-        _check_addresses(meta["overlays"], f"backup {src!r}")
+        _check_overlays(meta["overlays"], f"backup {src!r}")
         # incremental chains (backup_table base=…): a member / overlay
         # entry restores from the NEAREST backup in the chain that
         # physically holds it
@@ -2803,10 +2830,12 @@ class Warehouse:
         immune to subsequent mutations/compactions because those mint NEW
         member files rather than rewriting linked ones.  Returns the
         shadow directory.  Unlike :meth:`backup_table` this is partition-
-        scoped and overlay-free by design: live DV/patch overlays address
+        scoped and overlay-free by design: live deletion vectors address
         row positions, so a frozen partition with pending lightweight
-        mutations reflects the ON-DISK (pre-overlay) rows — the exact CH
-        FREEZE contract (mutations-in-flight are not applied to parts)."""
+        mutations holds the ON-DISK rows — masked rows included, and a
+        lightweight UPDATE's rows both as first written and in the member
+        it appended — the exact CH FREEZE contract (mutations-in-flight
+        are not applied to parts)."""
         date_str = str(date)
         shadow_root = os.path.join(self.root, "_shadow")
         os.makedirs(shadow_root, exist_ok=True)
@@ -3089,12 +3118,11 @@ class Warehouse:
             candidates = [
                 e for e in os.listdir(root) if e.startswith(_MEMBER_KEY + "=")
             ]
-            for sub in _OVERLAY_DIRS.values():
-                if os.path.isdir(os.path.join(root, sub)):
-                    candidates += [
-                        os.path.join(sub, e)
-                        for e in os.listdir(os.path.join(root, sub))
-                    ]
+            if os.path.isdir(os.path.join(root, _DV_DIR)):
+                candidates += [
+                    os.path.join(_DV_DIR, e)
+                    for e in os.listdir(os.path.join(root, _DV_DIR))
+                ]
             now = time.time()
             for e in sorted(candidates):
                 full = os.path.join(root, e)
@@ -3337,12 +3365,10 @@ class Warehouse:
 
     def _path_matches_stats(self, root: str, preds: list[tuple]) -> bool:
         """True unless EVERY row group under ``root`` is provably disjoint
-        from ``preds`` per parquet footer min/max — the driver-side
-        metadata check that lets a mutation skip a member without
-        launching a probe job (the EXPLAIN ESTIMATE machinery, short-
-        circuited on the first surviving row group).  Conservative: a
-        missing column, absent stats, or type mismatch counts as a
-        match."""
+        from ``preds`` (``_rg_survives``) — the driver-side metadata check
+        that lets a mutation skip a member without launching a probe job
+        (the EXPLAIN ESTIMATE machinery, short-circuited on the first
+        surviving row group).  An unreadable footer counts as a match."""
         import pyarrow.parquet as pq
 
         for r, _dirs, files in os.walk(root):
@@ -3356,40 +3382,15 @@ class Warehouse:
                 names = [
                     md.schema.column(i).name for i in range(md.num_columns)
                 ]
-                for i in range(md.num_row_groups):
-                    rg = md.row_group(i)
-                    survives = True
-                    for col, op, val in preds:
-                        try:
-                            ci = names.index(col)
-                        except ValueError:
-                            continue
-                        st = rg.column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        lo, hi = st.min, st.max
-                        try:
-                            if op == "=" and not (lo <= val <= hi):
-                                survives = False
-                            elif op == "<" and not (lo < val):
-                                survives = False
-                            elif op == "<=" and not (lo <= val):
-                                survives = False
-                            elif op == ">" and not (hi > val):
-                                survives = False
-                            elif op == ">=" and not (hi >= val):
-                                survives = False
-                        except TypeError:
-                            continue
-                        if not survives:
-                            break
-                    if survives:
-                        return True
+                if any(
+                    _rg_survives(md.row_group(i), names, preds)
+                    for i in range(md.num_row_groups)
+                ):
+                    return True
         return False
 
     def _prune_members_for_mutation(
-        self, table: str, members: list[str], cond,
-        overlays: list[dict] | None = None,
+        self, table: str, members: list[str], cond
     ) -> tuple[list[str], int]:
         """(surviving members, n skipped) for a mutation predicate: the
         footer-stats prune applied over best-effort conjuncts.  At 100 TB
@@ -3397,34 +3398,24 @@ class Warehouse:
         — candidate parts are chosen from driver-side metadata before any
         scan task launches, exactly CH's part-level mutation scoping.
 
-        SOUNDNESS GUARD: a live patch overlay can rewrite a row's value
-        so it matches a predicate the ORIGINAL file's stats exclude, so
-        the PATCH FILES' own stats are checked first — a patch row that
-        could match forces a full scan, since its original member is
-        unknowable from metadata (DV masks only ever remove rows — they
-        can't create a match).  A CLEAR COLUMN entry resets its column to
-        the DEFAULT, which a conjunct may match where the stored values
-        did not: ``_stats_blind`` drops those conjuncts for the members
-        it addresses.  ``overlays`` are the entries of the caller's
-        manifest (the current one when None)."""
+        Sound under live overlays: a deletion vector only removes rows,
+        and a lightweight UPDATE's rows live in the member it appended,
+        whose own footer stats cover them.  Where a member's stats are no
+        evidence of what a read returns on a column (a CLEAR COLUMN reset
+        to the DEFAULT, a MODIFY COLUMN cast), ``_stats_blind`` drops that
+        column's conjuncts for the member."""
         preds = self._simple_conjuncts(cond)
         if not preds:
             return members, 0
-        if overlays is None:
-            overlays = self.load_manifest(table)["overlays"]
-        for e in overlays:
-            if e["kind"] == "patch" and self._path_matches_stats(
-                self._overlay_path(table, e), preds
-            ):
-                return members, 0
         meta = self._meta(table)
-        kept = [
-            m for m in members
+        kept = []
+        for m, footer in self._footers(table, members).items():
+            blind = _stats_blind(meta, m, footer)
             if self._path_matches_stats(
                 os.path.join(self.path(table), m),
-                [p for p in preds if p[0] not in _stats_blind(meta, m)],
-            )
-        ]
+                [p for p in preds if p[0] not in blind],
+            ):
+                kept.append(m)
         return kept, len(members) - len(kept)
 
     # -- EXPLAIN ESTIMATE ----------------------------------------------------
@@ -3446,36 +3437,6 @@ class Warehouse:
         total = {"parts": 0, "files": 0, "row_groups": 0, "rows": 0}
         est = {"parts": 0, "files": 0, "row_groups": 0, "rows": 0}
 
-        def rg_survives(md, rg_i: int, names: list[str]) -> tuple[bool, int]:
-            rg = md.row_group(rg_i)
-            nrows = rg.num_rows
-            for col, op, val in preds:
-                try:
-                    ci = names.index(col)
-                except ValueError:
-                    continue  # partition/virtual column: no file stats
-                st = rg.column(ci).statistics
-                if st is None or not st.has_min_max:
-                    continue  # no stats → candidate
-                lo, hi = st.min, st.max
-                try:
-                    if op in ("=", "=="):
-                        if not (lo <= val <= hi):
-                            return False, nrows
-                    elif op == "<" and not (lo < val):
-                        return False, nrows
-                    elif op == "<=" and not (lo <= val):
-                        return False, nrows
-                    elif op == ">" and not (hi > val):
-                        return False, nrows
-                    elif op == ">=" and not (hi >= val):
-                        return False, nrows
-                except TypeError:
-                    # stats type ≠ predicate type (e.g. a pre-retype file
-                    # after MODIFY COLUMN): conservative candidate
-                    continue
-            return True, nrows
-
         for m in self.load_manifest(table)["members"]:
             root = os.path.join(self.path(table), m)
             part_hit = False
@@ -3492,10 +3453,11 @@ class Warehouse:
                     total["files"] += 1
                     file_hit = False
                     for i in range(md.num_row_groups):
+                        rg = md.row_group(i)
+                        nrows = rg.num_rows
                         total["row_groups"] += 1
-                        survives, nrows = rg_survives(md, i, names)
                         total["rows"] += nrows
-                        if survives:
+                        if _rg_survives(rg, names, preds):
                             est["row_groups"] += 1
                             est["rows"] += nrows
                             file_hit = part_hit = True
@@ -3552,7 +3514,7 @@ class Warehouse:
     def parts(self, table: str) -> DataFrame:
         """``system.parts`` analog: one row per live member (part) with its
         file count, on-disk bytes, partition count, and its kind (batch,
-        insert, compacted, mutated, materialized or attached) — the
+        insert, compacted, mutated, materialized, attached or updated) — the
         operational view ClickHouse admins query to watch merge health
         (reference monitoring reads system.parts for part counts).  Pure
         directory metadata — no data scan at any table size."""
@@ -3575,9 +3537,9 @@ class Warehouse:
                             pass
             rows.append((table, m, member_kind(m), n_files, n_bytes,
                          len(dates)))
-        # overlay rows: live deletion vectors and patches are part state an
-        # operator must see (they mask/replace rows until a merge folds
-        # them), exactly ClickHouse's _row_exists masks and patch parts
+        # overlay rows: live deletion vectors are part state an operator
+        # must see (they mask rows until a merge folds them), exactly
+        # ClickHouse's _row_exists masks
         for e in man["overlays"]:
             n_files, n_bytes = 0, 0
             for r, _dirs, files in os.walk(self._overlay_path(table, e)):
@@ -3588,8 +3550,9 @@ class Warehouse:
                             n_bytes += os.path.getsize(os.path.join(r, f))
                         except OSError:
                             pass
-            kind = "deletion_vector" if e["kind"] == "dv" else "patch"
-            rows.append((table, e["name"], kind, n_files, n_bytes, 0))
+            rows.append(
+                (table, e["name"], "deletion_vector", n_files, n_bytes, 0)
+            )
         schema = (
             "table string, member string, kind string, n_files long,"
             " bytes long, n_partitions long"

@@ -158,9 +158,9 @@ class SchemaMigrator:
           ALTER to live bronze tables,
           scripts/alter_bronze_timezone_asia_jakarta.sql:1-16).
 
-        The per-member footer decides the scan type.  Non-widening
-        retypes need no pending lightweight-UPDATE patches (their rows
-        carry the old type — compact first)."""
+        The per-member footer decides the scan type, so a lightweight
+        UPDATE's member written before the ALTER serves through the cast
+        like any other pre-ALTER member."""
         wh = self.wh
         current = wh.schema_for(table)
         cur = {f.name: f for f in current.fields}
@@ -189,13 +189,6 @@ class SchemaMigrator:
 
         probe = wh.spark.createDataFrame([], current)
         probe.select(F.col(name).cast(dtype)).schema
-        if any(
-            e["kind"] == "patch" for e in wh.load_manifest(table)["overlays"]
-        ):
-            raise ValueError(
-                f"table {table!r} has pending lightweight-UPDATE patches "
-                "(rows stored with the old type); compact() first"
-            )
         casts = {**wh.column_casts(table), name: dtype.simpleString()}
         wh._commit_meta(table, schema=target.jsonValue(), casts=casts)
         if wh.exists(table):

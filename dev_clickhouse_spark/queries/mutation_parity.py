@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.ch_compat import round_half_up as rnd
 from ..io import load_table
-from ..plans.warehouse import Warehouse
+from ..plans.warehouse import Warehouse, member_kind
 from .registry import register
 
 
@@ -145,21 +145,23 @@ SELECT event_type,
              * 100 + 0.5) / 100 AS sum_value
 FROM mutated GROUP BY event_type
 """,
-    tags=["clickhouse-parity", "mutations", "patch-parts"],
+    tags=["clickhouse-parity", "mutations", "lightweight-update"],
 )
 def lightweight_update_patch_read(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """ClickHouse lightweight ``UPDATE … SET … WHERE`` (patch parts)
-    parity: stacked updates write PATCH files applied on read instead of
-    rewriting members (asserted: the manifest's member list does not
-    move), a
-    re-issued update whose predicate no longer matches is a no-op
-    (asserted), later patches win over earlier ones on the same rows,
-    and a lightweight DELETE composes with the patched view.  The oracle
-    replays the whole sequence declaratively over the original parquet —
-    a patch that hits the wrong rows, loses the stacking order, or leaks
-    a deleted row flips the hash.
+    """Lightweight ``UPDATE … SET … WHERE`` parity: each update masks the
+    matched rows with a deletion vector and appends them, re-assigned,
+    as a new member in the same commit, instead of rewriting members
+    (asserted: the original members stay listed, each committed update
+    appended exactly one ``updated`` member, and the manifest holds one
+    deletion vector per committed update or delete); a re-issued update
+    whose predicate no longer matches is a no-op (asserted), a later
+    update of the same rows wins over an earlier one, and a lightweight
+    DELETE composes with the updated view.  The oracle replays the whole
+    sequence declaratively over the original parquet — an update that
+    hits the wrong rows, loses the stacking order, or leaks a deleted or
+    superseded row flips the hash.
 
     Sequence (both engines): purchases ×2; clicks renamed 'tap' with
     value+100; purchases ×1.5 AGAIN (stacks on the ×2 → net ×3); errors
@@ -191,10 +193,14 @@ def lightweight_update_patch_read(
         t, {"value": "value * 1.5"}, "event_type = 'purchase'"
     )
     wh.delete_where_lightweight(t, "event_type = 'error'")
-    if wh.load_manifest(t)["members"] != members0:
+    man = wh.load_manifest(t)
+    adds = [e["adds"] for e in man["overlays"] if "adds" in e]
+    if man["members"] != members0 + adds:
         raise RuntimeError("lightweight update rewrote members")
-    if sum(o.startswith("patch-") for o in wh.overlay_files(t)) != 3:
-        raise RuntimeError("expected exactly three patch files")
+    if len(adds) != 3 or {member_kind(m) for m in adds} != {"updated"}:
+        raise RuntimeError("expected exactly three updated members")
+    if [e["kind"] for e in man["overlays"]] != ["dv"] * 4:
+        raise RuntimeError("expected exactly four deletion vectors")
     return (
         wh.read(t)
         .groupBy("event_type")
@@ -237,9 +243,11 @@ def drop_partition_overlay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving members under new names and REMAPS the overlay addresses
     (plans/warehouse.py::_remap_overlays_for_drop) — before round 10 the
     clone orphaned the overlays, silently resurrecting deleted rows and
-    reverting patches in the surviving partitions.  Asserted here: the
-    overlays survive the drop (remapped, still referencing live files)
-    and no deleted row reappears; the oracle replays delete + patch +
+    the originals of updated rows in the surviving partitions.  Asserted
+    here: before the drop, the original members stay listed beside the
+    one member the update appended, under two deletion vectors; both
+    vectors survive the drop (remapped, still referencing live files)
+    and no deleted row reappears; the oracle replays delete + update +
     partition filter declaratively, so a resurrected or reverted row
     flips the hash."""
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -255,14 +263,21 @@ def drop_partition_overlay_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh.set_partitioning(t, ["ts", "event_id"])
     for b in range(3):
         wh.append(t, ev.filter(F.col("event_id") % 3 == b), batch_id=b)
+    members0 = wh.load_manifest(t)["members"]
     wh.delete_where_lightweight(t, "event_type = 'error'")
     wh.update_where_lightweight(
         t, {"value": "value + 100"}, "event_type = 'click'"
     )
+    man = wh.load_manifest(t)
+    adds = [e["adds"] for e in man["overlays"] if "adds" in e]
+    if man["members"] != members0 + adds or len(adds) != 1:
+        raise RuntimeError("expected the originals plus one updated member")
+    if [e["kind"] for e in man["overlays"]] != ["dv", "dv"]:
+        raise RuntimeError("expected exactly two deletion vectors")
     cutoff = wh.read(t).agg(F.min("event_date")).first()[0]
     if wh.drop_partition(t, cutoff) == 0:
         raise RuntimeError("drop_partition affected no member")
-    if {o.split("-")[0] for o in wh.overlay_files(t)} != {"dv", "patch"}:
+    if len(wh.overlay_files(t)) != 2:
         raise RuntimeError(
             "overlays should survive the drop (remapped to cloned members)"
         )

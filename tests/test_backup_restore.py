@@ -34,15 +34,16 @@ def _snapshot(w, table):
 def test_backup_restore_roundtrip_with_overlays(spark, wh, tmp_path):
     at_backup = _snapshot(wh, "ev")
     r = wh.backup_table("ev", str(tmp_path / "bak"))
-    assert r["files"] > 0 and r["members"] == 2
+    # two batches and the member the lightweight UPDATE appended
+    assert r["files"] > 0 and r["members"] == 3
     # mutate the source AFTER the backup — the snapshot must not follow
     wh.delete_where_lightweight("ev", "event_type = 'tap'")
     wh.compact("ev")
     rr = wh.restore_table(str(tmp_path / "bak"), "ev_restored")
-    assert rr["members"] == 2
+    assert rr["members"] == 3
     got = _snapshot(wh, "ev_restored")
     assert got == at_backup
-    # deleted/patched state specifically: no errors, clicks renamed
+    # deleted/updated state specifically: no errors, clicks renamed
     restored = wh.read("ev_restored")
     assert restored.filter("event_type = 'error'").count() == 0
     assert restored.filter("event_type = 'click'").count() == 0

@@ -342,9 +342,10 @@ def test_drop_partition_preserves_lightweight_deletes(spark, wh):
 
 
 def test_drop_partition_preserves_patches_and_kills_dropped_ones(spark, wh):
-    """Patched rows of surviving partitions keep their patch; patch rows
-    addressing the dropped partition must NOT be re-injected by the
-    patch union after their originals vanish."""
+    """Updated rows of surviving partitions keep their update; the update
+    member's rows in the dropped partition go with it (the member is
+    cloned without the partition like any other), and the remapped
+    deletion vector keeps the surviving originals masked."""
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 6, 2: 6}), batch_id=1)
     r = wh.update_where_lightweight(
@@ -356,6 +357,9 @@ def test_drop_partition_preserves_patches_and_kills_dropped_ones(spark, wh):
     assert got.count() == 6  # day-1 rows (incl. its patched ones) gone
     assert got.filter("event_date = DATE'2024-01-01'").count() == 0
     assert got.filter("alert_action = 'patched'").count() == 3
+    (entry,) = wh.load_manifest(t)["overlays"]
+    assert len(wh.load_manifest(t)["members"]) == 2
+    assert set(entry["members"]) < set(wh.load_manifest(t)["members"])
     wh.gc_deletes(t)
     assert wh.read(t).filter("alert_action = 'patched'").count() == 3
 
@@ -368,29 +372,26 @@ def test_drop_partition_overlay_noop_when_no_overlays(spark, wh):
     assert wh.read(t).count() == 4
 
 
-def test_patch_seq_survives_partial_gc(spark, wh):
-    """ADVICE r9 (medium): a patch seq derived from the entry COUNT reuses
-    a live sequence after a partial GC removes an older patch while a
-    newer one survives — two patches with equal seq make latest-wins
-    nondeterministic.  Seq must come from the max live sequence."""
+def test_stacked_updates_latest_wins(spark, wh):
+    """Updates of the same rows stack: each one's deletion vector masks
+    the copy the previous one appended, so exactly one copy per row stays
+    live and it carries the latest value — with no ordering on read."""
     t = "suricata_events_raw"
     wh.append(t, _mk_events(spark, {1: 4}), batch_id=1)
-    wh.update_where_lightweight(t, {"alert_action": "'p0'"}, "dest_port = 443")
-    wh.update_where_lightweight(t, {"alert_action": "'p1'"}, "dest_port = 443")
+    n443 = wh.read(t).filter("dest_port = 443").count()
+    for tag in ("p0", "p1", "p2"):
+        wh.update_where_lightweight(
+            t, {"alert_action": f"'{tag}'"}, "dest_port = 443"
+        )
     entries = wh.load_manifest(t)["overlays"]
-    assert [e["seq"] for e in entries] == [0, 1]
-
-    # simulate a partial GC: the older patch retires, the newer survives
-    def retire(man):
-        man["overlays"] = man["overlays"][1:]
-        return True
-
-    wh._flip(t, retire)
-    wh.update_where_lightweight(t, {"alert_action": "'p2'"}, "dest_port = 443")
-    seqs = sorted(e["seq"] for e in wh.load_manifest(t)["overlays"])
-    assert seqs == [1, 2]  # no collision with the survivor
+    # each later update addresses the member the one before appended
+    assert [e["members"] for e in entries[1:]] == [
+        [e["adds"]] for e in entries[:-1]
+    ]
     got = wh.read(t).filter("dest_port = 443").select("alert_action").collect()
-    assert {r.alert_action for r in got} == {"p2"}  # latest wins, deterministic
+    assert {r.alert_action for r in got} == {"p2"}  # latest wins
+    assert len(got) == n443 > 0
+    assert wh.read(t).count() == 4
 
 
 def test_lightweight_update_assignments_see_pre_update_row(spark, wh):
@@ -685,9 +686,10 @@ def test_mutation_member_pruning_by_footer_stats(spark, tmp_path):
 
 
 def test_mutation_pruning_sound_under_live_patches(spark, tmp_path):
-    """A live patch can rewrite a row so it matches a predicate its
-    ORIGINAL file's stats exclude — the prune consults the patch files'
-    own stats and stands down when any patch row could match."""
+    """A live lightweight UPDATE can rewrite a row so it matches a
+    predicate its ORIGINAL file's stats exclude — the updated row lives in
+    the member the update appended, whose own stats admit it, so the
+    prune keeps skipping every other member."""
     import datetime as dt
 
     from dev_clickhouse_spark.plans.warehouse import Warehouse
@@ -700,16 +702,17 @@ def test_mutation_pruning_sound_under_live_patches(spark, tmp_path):
             schema), batch_id=b)
     wh.update_where_lightweight("t", {"v": "v + 1000"}, "k = 105")
     members = wh.load_manifest("t")["members"]
+    added = members[-1]
 
-    # k untouched by the patch: k-pruning still fully active
+    # k untouched by the update: k-pruning still fully active
     kept, skipped = wh._prune_members_for_mutation(
         "t", members, F.expr("k > 100000"))
-    assert kept == [] and skipped == 4
-    # v REWRITTEN by the patch into the predicate's range: no pruning
+    assert kept == [] and skipped == 5
+    # v REWRITTEN into the predicate's range: only the update's member
     kept, skipped = wh._prune_members_for_mutation(
         "t", members, F.expr("v >= 1000"))
-    assert len(kept) == 4 and skipped == 0
-    # and the patched row is actually found by the current-state delete
+    assert kept == [added] and skipped == 4
+    # and the updated row is actually found by the current-state delete
     res = wh.delete_where_lightweight("t", "v >= 1000")
     assert res["rows_deleted"] == 1
     assert wh.read("t").count() == 39

@@ -22,12 +22,8 @@ def _member_dirs(wh: Warehouse, table: str) -> list[str]:
 
 
 def _overlay_dirs(wh: Warehouse, table: str) -> list[str]:
-    return sorted(
-        e
-        for sub in ("_deletes", "_patches")
-        if os.path.isdir(os.path.join(wh.path(table), sub))
-        for e in os.listdir(os.path.join(wh.path(table), sub))
-    )
+    d = os.path.join(wh.path(table), "_deletes")
+    return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
 def _retained_members(wh: Warehouse, table: str) -> list[str]:
@@ -67,6 +63,10 @@ def test_held_plans_survive_every_commit(spark, tmp_path):
         (lambda: wh.compact(t), lambda ids: ids),
         (lambda: wh.delete_where_lightweight(t, "event_id = 'ev-2-2'"),
          lambda ids: ids - {"ev-2-2"}),
+        # one live copy per row: the update's mask hides the original
+        (lambda: wh.update_where_lightweight(
+            t, {"alert_action": "'updated'"}, "event_id = 'ev-2-3'"),
+         lambda ids: ids),
         (lambda: wh.delete_where(t, "severity = 'high'"),
          lambda ids: {i for i in ids if int(i.rsplit("-", 1)[1]) % 2 == 0}),
         (lambda: wh.drop_partition(t, "2024-01-03"),

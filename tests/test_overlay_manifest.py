@@ -1,8 +1,11 @@
 """Lightweight DELETE/UPDATE overlays are manifest entries.
 
-A deletion vector or patch is visible only once the manifest lists it,
-every rewrite (compaction, ALTER mutation) refuses to flip over an overlay
-committed after its snapshot, an overlay never committed is swept by
+A deletion vector — a lightweight DELETE's, or a lightweight UPDATE's
+together with the member it appended — is visible only once the manifest
+lists it, every rewrite (compaction, ALTER mutation) refuses to flip over
+an overlay committed after its snapshot, an UPDATE refuses to commit over
+an overlay addressing its members committed after its snapshot (and a
+DELETE over such an UPDATE), an overlay never committed is swept by
 ``gc()``, and the overlay bookkeeping (``gc_deletes``, projection
 invalidation) reads the manifest instead of running Spark jobs.
 """
@@ -46,15 +49,17 @@ def _member_dirs(w, table):
 
 
 def _inside_rewrite(monkeypatch, w, write):
-    """Run ``write()`` once, right after the first member a rewrite writes
-    (before its manifest flip); returns the list its result lands in."""
+    """Run ``write()`` once, right after the first member a rewrite (or a
+    lightweight UPDATE) writes, before its manifest flip; returns the list
+    its result lands in."""
     orig = w._rewrite_member
     got: list = []
 
     def racing(table, df, kind):
         member = orig(table, df, kind)
         if not got:
-            got.append(write())
+            got.append(None)  # ``write`` may itself write a member
+            got[0] = write()
         return member
 
     monkeypatch.setattr(w, "_rewrite_member", racing)
@@ -99,7 +104,7 @@ def test_update_committed_inside_compaction_stays_updated(
     wh.compact("ev")
     updated = got[0]["rows_updated"]
     assert updated > 0
-    for kinds in (["patch"], []):  # then the next merge materializes it
+    for kinds in (["dv"], []):  # then the next merge materializes it
         clicks = wh.read("ev").filter("event_type = 'click'")
         assert clicks.filter("value >= 1000").count() == updated
         assert clicks.count() == updated
@@ -107,6 +112,96 @@ def test_update_committed_inside_compaction_stays_updated(
         assert _kinds(wh, "ev") == kinds
         monkeypatch.undo()
         wh.compact("ev")
+
+
+@pytest.mark.parametrize("racer", ["delete", "update"])
+def test_update_racing_an_overlapping_mutation_retries(
+    spark, wh, monkeypatch, racer
+):
+    """An UPDATE whose matched rows another lightweight mutation
+    addressed after the UPDATE's snapshot would resurrect the deleted
+    rows or duplicate the moved ones: its commit refuses, lists nothing
+    and removes both its deletion vector and its member."""
+    n = wh.read("ev").count()
+    n_click = wh.read("ev").filter("event_type = 'click'").count()
+    members = wh.load_manifest("ev")["members"]
+    race = {
+        "delete": lambda: wh.delete_where_lightweight(
+            "ev", "event_type = 'click'"),
+        "update": lambda: wh.update_where_lightweight(
+            "ev", {"value": "value + 1000"}, "event_type = 'click'"),
+    }[racer]
+    got = _inside_rewrite(monkeypatch, wh, race)
+    with pytest.raises(RuntimeError, match="retry"):
+        wh.update_where_lightweight(
+            "ev", {"event_type": F.lit("tap")}, "event_type = 'click'"
+        )
+    monkeypatch.undo()
+    verb = "rows_deleted" if racer == "delete" else "rows_updated"
+    assert got[0][verb] == n_click > 0
+    man = wh.load_manifest("ev")
+    (entry,) = man["overlays"]  # the racer's alone
+    assert man["members"] == members + ([entry["adds"]] if "adds" in entry
+                                        else [])
+    assert _member_dirs(wh, "ev") == sorted(man["members"])
+    assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == [
+        entry["name"]
+    ]
+    got = wh.read("ev")
+    assert got.filter("event_type = 'tap'").count() == 0
+    if racer == "delete":
+        assert got.filter("event_type = 'click'").count() == 0
+        assert got.count() == n - n_click
+    else:
+        clicks = got.filter("event_type = 'click'")
+        assert clicks.filter("value >= 1000").count() == n_click
+        assert clicks.count() == n_click and got.count() == n
+
+
+def _commit_after(monkeypatch, w, write):
+    """Run ``write()`` once, right before the next lightweight mutation's
+    commit flip (after its scan and writes)."""
+    orig = w._commit_overlay
+
+    def late(*args):
+        monkeypatch.setattr(w, "_commit_overlay", orig)
+        write()
+        return orig(*args)
+
+    monkeypatch.setattr(w, "_commit_overlay", late)
+
+
+def test_delete_racing_an_overlapping_update_retries(spark, wh, monkeypatch):
+    """The UPDATE moved the rows the DELETE matched to its own member,
+    where the DELETE's mask would miss them: the DELETE refuses."""
+    n = wh.read("ev").count()
+    n_click = wh.read("ev").filter("event_type = 'click'").count()
+    _commit_after(monkeypatch, wh, lambda: wh.update_where_lightweight(
+        "ev", {"value": "value + 1000"}, "event_type = 'click'"))
+    with pytest.raises(RuntimeError, match="retry"):
+        wh.delete_where_lightweight("ev", "event_type = 'click'")
+    (entry,) = wh.load_manifest("ev")["overlays"]
+    assert "adds" in entry
+    assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == [
+        entry["name"]
+    ]
+    clicks = wh.read("ev").filter("event_type = 'click'")
+    assert clicks.filter("value >= 1000").count() == n_click
+    assert wh.read("ev").count() == n
+
+
+def test_concurrent_deletes_both_apply(spark, wh, monkeypatch):
+    n = wh.read("ev").count()
+    n_gone = wh.read("ev").filter(
+        "event_type IN ('click', 'view')").count()
+    _commit_after(monkeypatch, wh, lambda: wh.delete_where_lightweight(
+        "ev", "event_type = 'view'"))
+    assert wh.delete_where_lightweight("ev", "event_type = 'click'")[
+        "rows_deleted"] > 0
+    assert _kinds(wh, "ev") == ["dv", "dv"]
+    assert wh.read("ev").filter(
+        "event_type IN ('click', 'view')").count() == 0
+    assert wh.read("ev").count() == n - n_gone
 
 
 def test_alter_delete_raises_when_a_delete_commits_inside_it(
@@ -137,9 +232,9 @@ def test_delete_scanned_before_a_compaction_flip_raises(
     n = wh.read("ev").count()
     orig = wh._commit_overlay
 
-    def late(table, kind, path):
+    def late(*args):
         wh.compact("ev")
-        return orig(table, kind, path)
+        return orig(*args)
 
     monkeypatch.setattr(wh, "_commit_overlay", late)
     with pytest.raises(RuntimeError, match="retry"):
@@ -149,7 +244,7 @@ def test_delete_scanned_before_a_compaction_flip_raises(
     assert wh.read("ev").count() == n
 
 
-@pytest.mark.parametrize("kind", ["dv", "patch"])
+@pytest.mark.parametrize("kind", ["dv", "update"])
 def test_uncommitted_overlay_is_invisible_and_swept(
     spark, wh, monkeypatch, kind
 ):
@@ -161,6 +256,7 @@ def test_uncommitted_overlay_is_invisible_and_swept(
 
     n_click = wh.read("ev").filter("event_type = 'click'").count()
     version = wh.load_manifest("ev")["version"]
+    members = _member_dirs(wh, "ev")
     monkeypatch.setattr(wh, "_flip", crash)
     with pytest.raises(Crash):
         if kind == "dv":
@@ -170,14 +266,21 @@ def test_uncommitted_overlay_is_invisible_and_swept(
                 "ev", {"event_type": F.lit("tap")}, "event_type = 'click'"
             )
     monkeypatch.undo()
-    sub = {"dv": "_deletes", "patch": "_patches"}[kind]
-    (left,) = os.listdir(os.path.join(wh.path("ev"), sub))
+    (left,) = os.listdir(os.path.join(wh.path("ev"), "_deletes"))
+    # the UPDATE's member was written too, and is no more listed than its
+    # deletion vector
+    added = sorted(set(_member_dirs(wh, "ev")) - set(members))
+    assert len(added) == (kind == "update")
     assert wh.load_manifest("ev")["version"] == version
+    assert wh.load_manifest("ev")["members"] == members
     assert wh.overlay_files("ev") == []
     assert wh.read("ev").filter("event_type = 'click'").count() == n_click
     assert wh.gc("ev", min_age_sec=3600) == []  # in-flight guard
-    assert wh.gc("ev", min_age_sec=0) == [os.path.join(sub, left)]
-    assert os.listdir(os.path.join(wh.path("ev"), sub)) == []
+    assert wh.gc("ev", min_age_sec=0) == sorted(
+        added + [os.path.join("_deletes", left)]
+    )
+    assert os.listdir(os.path.join(wh.path("ev"), "_deletes")) == []
+    assert _member_dirs(wh, "ev") == members
 
 
 def _jobs(spark, fn):

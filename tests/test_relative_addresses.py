@@ -111,7 +111,9 @@ def test_restore_links_overlays_unchanged(spark, blue_green, tmp_path):
     other.restore_table(bak, "blue")
     assert _rows(other.read("blue")) == _model_rows(blue)
     overlays = other.load_manifest("blue")["overlays"]
-    assert sorted(e["kind"] for e in overlays) == ["dv", "patch"]
+    assert [e["kind"] for e in overlays] == ["dv", "dv"]
+    # the update's entry names the member it appended, restored with it
+    assert overlays[1]["adds"] in other.load_manifest("blue")["members"]
     linked = 0
     for e in overlays:
         restored = other._overlay_path("blue", e)
@@ -153,4 +155,35 @@ def test_absolute_address_entries_raise(spark, blue_green, tmp_path):
     with pytest.raises(ValueError, match=name):
         wh.read("blue")
     with pytest.raises(ValueError, match=name):
+        wh.read_at_version("blue", version)
+
+
+def test_legacy_patch_entry_raises(spark, blue_green, tmp_path):
+    """A manifest or backup still listing a ``patch`` entry (an older
+    release's lightweight UPDATE, whose rows no read applies any more)
+    raises, naming the entry — there is no compatibility path."""
+    wh, _blue, _green = blue_green
+
+    def to_patch(path: str) -> str:
+        with open(path) as fh:
+            doc = json.load(fh)
+        doc["overlays"][-1]["kind"] = "patch"
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
+        return doc["overlays"][-1]["name"]
+
+    bak = str(tmp_path / "bak")
+    wh.backup_table("blue", bak)
+    name = to_patch(os.path.join(bak, "backup.json"))
+    with pytest.raises(ValueError, match=f"{name}.*'patch'"):
+        wh.restore_table(bak, "restored")
+    assert not wh.exists("restored")
+
+    d = os.path.join(wh.path("blue"), "_manifest")
+    version = wh.load_manifest("blue")["version"]
+    with open(os.path.join(d, "CURRENT")) as fh:
+        name = to_patch(os.path.join(d, fh.read()))
+    with pytest.raises(ValueError, match=f"{name}.*'patch'"):
+        wh.read("blue")
+    with pytest.raises(ValueError, match=f"{name}.*'patch'"):
         wh.read_at_version("blue", version)

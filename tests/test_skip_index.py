@@ -246,3 +246,40 @@ def test_pruned_read_applies_alter_metadata(spark, scratch, alter):
         want.collect(), key=repr
     )
     assert idx.last_stats["members_scanned"] == 2
+
+
+def test_stats_of_a_retyped_column_are_no_evidence(spark, scratch):
+    """After MODIFY COLUMN user_id bigint → string, a member written before
+    the ALTER keeps bigint min/max in its footer and sidecar: values of
+    another type, so they prune none of its files (compared with the
+    string literal, they raised) — in the skip index and the mutation
+    pruner alike — while members written after the ALTER still prune by
+    their string stats."""
+    wh = Warehouse(spark, scratch)
+    t = "retyped"
+    narrow = T.StructType([
+        T.StructField("event_id", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+    ])
+    wh.save_schema_override(t, narrow)
+    wh.append(t, spark.createDataFrame([(1, 101), (2, 5)], narrow),
+              batch_id=0)
+    idx = SkipIndex(wh, t, minmax_cols=("user_id",))
+    idx.ensure()
+    SchemaMigrator(wh).modify_column_type(t, "user_id", T.StringType())
+    wide = T.StructType([
+        T.StructField("event_id", T.LongType()),
+        T.StructField("user_id", T.StringType()),
+    ])
+    wh.append(t, spark.createDataFrame([(3, "101"), (4, "7")], wide),
+              batch_id=1)
+    wh.append(t, spark.createDataFrame([(5, "x")], wide), batch_id=2)
+    assert idx.ensure() == 2
+    got = idx.read([("eq", "user_id", "101")])
+    want = wh.read(t).filter(F.col("user_id") == "101")
+    assert _rows(got) == _rows(want) == [(1, "101"), (3, "101")]
+    assert idx.last_stats["members_scanned"] == 2
+    members = wh.load_manifest(t)["members"]
+    assert wh._prune_members_for_mutation(
+        t, members, F.col("user_id") == "101"
+    ) == (members[:2], 1)

@@ -63,7 +63,7 @@ HEADLINE = [
     "projection_auto_rewrite_rollup",  # round 9: projection-served rollup
     "sort_projection_pruned_scan",    # round 9: re-sorted copy, minmax prune
     "lightweight_delete_mask_read",   # round 9: DV anti-join masked scan
-    "lightweight_update_patch_read",  # round 9: latest-patch replace on read
+    "lightweight_update_patch_read",  # DV anti-join over updated members
     "bitmap_segment_overlap",         # round 9: distinct + user self-join
     "any_left_join_customer_order",   # round 9: min_by pre-agg, 1:<=1 join
     "recursive_cte_part_hierarchy",   # round 10: pointer-doubling fold

@@ -2,7 +2,7 @@
 """Concurrent-maintenance soak (VERDICT r9 #4).
 
 SOAK_INGEST covers append + tiered compaction + gc on cadence.  Round 9
-added lightweight DELETE/UPDATE (DV/patch overlays), ATTACH PARTITION,
+added lightweight DELETE/UPDATE (deletion-vector overlays), ATTACH PARTITION,
 DROP PARTITION, and BACKUP/RESTORE — none exercised against a LIVE
 stream.  This soak runs the same exactly-once streaming append loop with
 the full maintenance mix interleaved:
@@ -19,7 +19,7 @@ the full maintenance mix interleaved:
 - mid-stream: ATTACH PARTITION from a static sideload table (a second
   event_date enters the live table), later DROP PARTITION of that date
   WHILE overlays are live (the r10 remap path — surviving partitions'
-  masks and patches must keep applying);
+  masks and updates must keep applying);
 - mid-stream: BACKUP the live table (under the manifest lock, overlays
   included), with a content checksum captured at the backup point; at the
   END — after further appends, mutations, the drop, and compactions hit
@@ -96,7 +96,8 @@ def main() -> None:
     ap.add_argument("--mutate-every", type=int, default=6)
     ap.add_argument("--compact-every", type=int, default=15)
     ap.add_argument("--overlay-bound", type=int, default=12,
-                    help="max live overlay (DV+patch) files at any point")
+                    help="max live overlay (deletion-vector) entries at "
+                         "any point")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
     out_path = args.out or os.path.join(
@@ -381,9 +382,6 @@ def main() -> None:
 
             from dev_clickhouse_spark.quality import SchemaMigrator
 
-            if any(o.startswith("patch-") for o in wh.overlay_files(probe)):
-                wh.compact(probe, mode="full")
-                wh.gc_deletes(probe)
             pre_n = wh.read(probe).count()
             t0 = time.time()
             SchemaMigrator(wh).modify_column_type(
@@ -406,9 +404,6 @@ def main() -> None:
             clr_date = next(
                 d for d in wh._partition_dates(probe) if d != side_date
             )
-            if any(o.startswith("patch-") for o in wh.overlay_files(probe)):
-                wh.compact(probe, mode="full")
-                wh.gc_deletes(probe)
             t0 = time.time()
             entry = wh.clear_column_in_partition(probe, "dest_ip", clr_date)
             cleared_now = wh.read(probe).filter(

@@ -6,8 +6,9 @@ table: ClickHouse scopes ``ALTER … DELETE/UPDATE`` to candidate parts via
 the primary-key/minmax index before touching rows.  This engine now does
 the same — ``_prune_members_for_mutation`` extracts simple conjuncts from
 the predicate and drops members whose parquet footer min/max provably
-can't match, BEFORE any probe job launches (soundness-guarded against
-live patch overlays, whose own stats are consulted).
+can't match, BEFORE any probe job launches (sound under live overlays: a
+lightweight UPDATE's rows live in the member it appended, whose own
+footer stats cover them).
 
 The probe: tables at ×1/×10/×100 member counts (members carry disjoint
 key ranges — the natural layout of time/batch-keyed appends), a CONSTANT
@@ -15,7 +16,8 @@ matched set confined to one member, and three mutation families timed:
 
 - heavy ``delete_where``  (ALTER DELETE: probe + rewrite matched members)
 - ``delete_where_lightweight``  (DV write: probe scan + vector persist)
-- ``update_where_lightweight``  (patch write: probe scan + patch persist)
+- ``update_where_lightweight``  (probe scan + DV persist + the updated
+  rows written as one new member, one commit)
 
 PASS = each family's ×100/×1 wall-time ratio stays under the envelope
 (default 3.0 — flat modulo the driver-side O(files) footer-metadata loop

@@ -197,8 +197,8 @@ INVARIANT_QUERIES = [
 ]
 
 #: round 10 (VERDICT r9 #2): the storage-overlay and substring families —
-#: exactly the queries whose read path is an overlay join (DV anti-join,
-#: latest-patch window, projection-state merge) that must stay
+#: exactly the queries whose read path is an overlay join (DV anti-join
+#: over original and updated members, projection-state merge) that must stay
 #: broadcast/linear-shaped as data grows.  Each row RAISES internally when
 #: its overlay invariant breaks (manifest version moved, projection not
 #: served, no files pruned), so a scale point is also an invariant check.
